@@ -9,6 +9,13 @@ layout is byte-compatible with the reference:
     {path}/neighbor/Norder=...   (margin halo rows, written by margins.py)
     {path}/{name}_meta.json
 
+The metadata JSON is the file index: its ``hips`` map names every leaf
+directory, and (an extension to the reference) ``schema`` stores the
+Spark read schema.  Cone searches read only the leaf directories their
+pixel cover hits, with that schema, so a query neither lists the
+catalog nor infers a schema; ``Catalog.df`` discovers the whole root
+with the same stored schema.
+
 Spark-first differences (SURVEY.md §3 EP3):
 - ingest is ONE shuffle (`repartition(Norder,Npix)` + partitionBy write)
   instead of the reference's write-fragments-then-compact two-pass
@@ -34,12 +41,13 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from lsd2_spark import healpix as hpx
@@ -80,6 +88,29 @@ def _order_probes(kpix_col: Column, orders: list[int], order_k: int) -> Column:
     )
 
 
+# hive partition columns, with the types the writer gives them; pinned
+# in every read schema so a scan's types never depend on which leaf
+# directories it touches (discovery would type small pixels as int)
+PARTITION_FIELDS = (
+    StructField("Norder", IntegerType()),
+    StructField("Dir", LongType()),
+    StructField("Npix", LongType()),
+)
+PARTITION_COLS = tuple(f.name for f in PARTITION_FIELDS)
+
+
+def _read_schema(schema: StructType) -> StructType:
+    """The schema a scan of the catalog returns for rows written with
+    ``schema``: the data columns, nullable as every Parquet scan makes
+    them, followed by the pinned partition columns."""
+    data = [
+        StructField(f.name, f.dataType, True, f.metadata)
+        for f in schema.fields
+        if f.name not in PARTITION_COLS
+    ]
+    return StructType(data + list(PARTITION_FIELDS))
+
+
 @dataclass
 class CatalogMetadata:
     cat_name: str
@@ -94,6 +125,10 @@ class CatalogMetadata:
     # High-water mark for streaming ingest: the last foreachBatch batch_id
     # whose append committed.  None for catalogs never fed by a stream.
     last_batch_id: int | None = None
+    # The read schema (see _read_schema): readers pass it to Spark, so no
+    # query infers a schema from the files.  None only in metadata
+    # written before the field existed; Catalog.load infers it then.
+    schema: StructType | None = None
 
     def to_json(self) -> str:
         return json.dumps(
@@ -108,6 +143,7 @@ class CatalogMetadata:
                 "margin_threshold": self.margin_threshold,
                 "hips": {str(k): sorted(v) for k, v in self.hips.items()},
                 "last_batch_id": self.last_batch_id,
+                "schema": None if self.schema is None else self.schema.jsonValue(),
             },
             indent=2,
         )
@@ -126,6 +162,7 @@ class CatalogMetadata:
             margin_threshold=d.get("margin_threshold", DEFAULT_MARGIN_DEG),
             hips={int(k): list(v) for k, v in d["hips"].items()},
             last_batch_id=d.get("last_batch_id"),
+            schema=StructType.fromJson(d["schema"]) if d.get("schema") else None,
         )
 
 
@@ -318,6 +355,7 @@ def partition_catalog(
         order_k=order_k,
         margin_threshold=margin_threshold,
         hips=pm.hips,
+        schema=_read_schema(indexed.schema),
     )
     fs = fs or LOCAL_FS
     fs.makedirs(path)
@@ -385,6 +423,10 @@ class Catalog:
         # data plane (parquet scans/writes) goes through Spark's own
         # Hadoop FileSystem regardless (sources/fs.py)
         self._fs = fs or LOCAL_FS
+        # True when the schema came from the files, not the metadata
+        # (a catalog written before the metadata stored it); fsck's
+        # repair persists it
+        self._schema_inferred = False
 
     # -- loading ------------------------------------------------------------
 
@@ -403,16 +445,62 @@ class Catalog:
         else:
             meta_file = f"{cat_name}_meta.json"
         meta = CatalogMetadata.from_json(fs.read_text(f"{path}/{meta_file}"))
-        return Catalog(spark, path, meta, fs=fs)
+        cat = Catalog(spark, path, meta, fs=fs)
+        cat._schema()  # once per load: the catalogs its mutations return carry it
+        return cat
+
+    def _schema(self) -> StructType:
+        """The stored read schema; inferred from the files (and kept on
+        this handle) for metadata written before it was stored."""
+        if self.meta.schema is None:
+            inferred = self.spark.read.parquet(f"{self.path}/catalog").schema
+            self.meta = replace(self.meta, schema=_read_schema(inferred))
+            self._schema_inferred = True
+        return self.meta.schema
+
+    def _leaf_dir(self, order: int, pix: int) -> str:
+        return f"{self.path}/catalog/Norder={order}/Dir={_dir_value(pix)}/Npix={pix}"
+
+    def _scan(self, leaves: list[tuple[int, int]] | None = None) -> DataFrame:
+        """The one catalog reader, always with the stored schema (no
+        schema-inference job).  ``leaves=None`` discovers every leaf
+        under the root; otherwise exactly the listed ``(Norder, Npix)``
+        leaf directories are read and nothing else is listed."""
+        root = f"{self.path}/catalog"
+        schema = self._schema()
+        reader = self.spark.read.schema(schema).option("basePath", root)
+        if leaves is None:
+            return reader.parquet(root)
+        if not leaves:
+            # the always-false filter folds to an empty local relation,
+            # which collects without a Spark job
+            return self.spark.createDataFrame([], schema).filter(F.lit(False))
+        dirs = [self._leaf_dir(o, p) for o, p in leaves]
+        try:
+            return reader.parquet(*dirs)
+        except AnalysisException as e:
+            missing = [lf for lf, d in zip(leaves, dirs) if not self._fs.isdir(d)]
+            if not missing:
+                raise
+            raise FileNotFoundError(
+                f"catalog '{self.meta.cat_name}': the metadata lists leaf "
+                f"(Norder, Npix) {missing[0]} but {self._leaf_dir(*missing[0])} "
+                f"is missing ({len(missing)} missing leaf dir(s) in this read); "
+                "run Catalog.fsck() to compare the metadata with the disk, "
+                "fsck(repair=True) to rewrite it from the disk"
+            ) from e
+
+    def _project(self, df: DataFrame, columns: list[str] | None) -> DataFrame:
+        return df if columns is None else df.select(*self._with_required(columns))
 
     def df(self, columns: list[str] | None = None) -> DataFrame:
-        """The catalog as a lazy DataFrame; Norder/Dir/Npix are hive
-        partition columns so filters on them prune at the file level."""
-        df = self.spark.read.parquet(f"{self.path}/catalog")
-        if columns is not None:
-            cols = self._with_required(columns)
-            df = df.select(*cols)
-        return df
+        """The catalog as a lazy DataFrame over every leaf on disk (root
+        discovery, so cells the metadata does not list are visible —
+        :meth:`fsck` relies on that).  The schema is the one the
+        metadata stores: data columns, then the hive partition columns
+        ``Norder`` int, ``Dir`` long, ``Npix`` long, on which filters
+        prune at the file level."""
+        return self._project(self._scan(), columns)
 
     def margin_df(self) -> DataFrame | None:
         p = f"{self.path}/neighbor"
@@ -446,10 +534,17 @@ class Catalog:
         append is NOT snapshot-isolated — its next action either fails
         on the deleted files or observes post-append state (never a
         duplicated/partial mix; the overwrite is cell-atomic per
-        partition directory).  Re-resolve via :meth:`Catalog.load` /
-        :meth:`df` after appends; for true snapshot isolation under
-        concurrent writers at scale, layer a transactional table
-        format over the same layout.
+        partition directory).  A cone search resolves its leaf set
+        from the metadata its Catalog handle was loaded with: a
+        pre-append handle never sees the append's NEW leaves (rows
+        landing in existing leaves it does see).  Re-resolve via
+        :meth:`Catalog.load` / the returned catalog after appends; for
+        true snapshot isolation under concurrent writers at scale,
+        layer a transactional table format over the same layout.
+
+        Reads: the schema check uses the stored schema, and only the
+        touched leaves that already exist are read (before the write)
+        and recounted (after it) — the catalog is never listed.
 
         ``batch_id`` (streaming ingest): Structured Streaming's
         ``foreachBatch`` re-delivers the last uncommitted batch after a
@@ -494,7 +589,8 @@ class Catalog:
         # every rewritten cell, and an extra column fails later with a
         # cryptic resolve error.  Additive evolution is a re-import.
         cat_cols = [
-            c for c in self.df().columns if c not in ("Norder", "Dir", "Npix", "_ID")
+            f.name for f in self._schema().fields
+            if f.name not in (*PARTITION_COLS, "_ID")
         ]
         missing = [c for c in cat_cols if c not in df.columns]
         extra = [c for c in df.columns if c not in cat_cols]
@@ -595,29 +691,22 @@ class Catalog:
         cell_counts = assigned.groupBy("Norder", "Npix").count().collect()
         touched = [(int(r["Norder"]), int(r["Npix"])) for r in cell_counts]
         n_new = int(sum(r["count"] for r in cell_counts))
-        new_leaves = [
-            (o, p) for o, p in touched
-            if p not in set(meta.hips.get(o, []))
-        ]
+        known = {(o, p) for o, pixs in meta.hips.items() for p in pixs}
+        new_leaves = [c for c in touched if c not in known]
+        new_set = set(new_leaves)
 
-        # merge touched cells' existing rows (pruned read) with the new
-        # ones; the encoded (order, pixel) key is a deterministic
-        # expression over partition columns, so pruning still applies
+        # merge touched cells' existing rows with the new ones: read
+        # exactly the touched leaves already on disk, never list the
+        # catalog.  A new leaf normally has no directory yet; one that
+        # does holds rows appended through a newer handle of this
+        # catalog (or a torn attempt of this batch), which the merge
+        # must keep.
         data_cols = list(df.columns)
-        cell_key = F.col("Norder").cast("long") * F.lit(1 << 40) + F.col("Npix").cast(
-            "long"
-        )
-        touched_pred = cell_key.isin([(o << 40) + p for o, p in touched])
-        existing = (
-            self.df()
-            .filter(touched_pred)
-            .select(
-                *data_cols,
-                F.col("Norder").cast("int").alias("Norder"),
-                F.col("Npix").cast("long").alias("Npix"),
-                F.col("Dir").cast("long").alias("Dir"),
-            )
-        )
+        on_disk = [
+            c for c in touched
+            if c not in new_set or self._fs.isdir(self._leaf_dir(*c))
+        ]
+        existing = self._scan(on_disk).select(*data_cols, "Norder", "Npix", "Dir")
         # Row-level idempotence: drop any existing rows that share an id
         # with the batch (a broadcast anti-join — the batch id set is
         # small relative to the catalog).  Under the globally-unique-id
@@ -677,22 +766,15 @@ class Catalog:
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-        hips = {o: sorted(ps) for o, ps in meta.hips.items()}
-        for o, p in new_leaves:
-            hips.setdefault(o, [])
-            if p not in hips[o]:
-                hips[o] = sorted(set(hips[o]) | {p})
+        hips = {o: list(ps) for o, ps in meta.hips.items()}
+        for o, p in new_leaves:  # distinct, and none of them known
+            hips.setdefault(o, []).append(p)
+        hips = {o: sorted(ps) for o, ps in hips.items()}
         # rows now on disk in the touched cells = (existing - replaced) + new
         n_after_touched = disk_touched - n_replaced + n_new
-        new_meta = CatalogMetadata(
-            cat_name=meta.cat_name,
-            ra_kw=meta.ra_kw,
-            dec_kw=meta.dec_kw,
-            id_kw=meta.id_kw,
+        new_meta = replace(
+            meta,
             n_sources=meta.n_sources + n_after_touched - pre_touched,
-            pix_threshold=meta.pix_threshold,
-            order_k=order_k,
-            margin_threshold=meta.margin_threshold,
             hips=hips,
             last_batch_id=batch_id if batch_id is not None else meta.last_batch_id,
         )
@@ -736,8 +818,7 @@ class Catalog:
                 pass
 
         over = (
-            cat.df()
-            .filter(touched_pred)
+            cat._scan(touched)
             .groupBy("Norder", "Npix")
             .count()
             .filter(F.col("count") > meta.pix_threshold)
@@ -867,26 +948,14 @@ class Catalog:
         for o, p in touched:
             if (o, p) in survivors:
                 continue
-            d = int(_dir_value(p))
-            self._fs.rmtree(
-                f"{self.path}/catalog/Norder={o}/Dir={d}/Npix={p}"
-            )
+            self._fs.rmtree(self._leaf_dir(o, p))
             if o in hips and p in hips[o]:
                 hips[o] = [x for x in hips[o] if x != p]
                 if not hips[o]:
                     del hips[o]
 
-        new_meta = CatalogMetadata(
-            cat_name=meta.cat_name,
-            ra_kw=meta.ra_kw,
-            dec_kw=meta.dec_kw,
-            id_kw=meta.id_kw,
-            n_sources=committed + after_touched - pre_touched,
-            pix_threshold=meta.pix_threshold,
-            order_k=meta.order_k,
-            margin_threshold=meta.margin_threshold,
-            hips=hips,
-            last_batch_id=meta.last_batch_id,
+        new_meta = replace(
+            meta, n_sources=committed + after_touched - pre_touched, hips=hips
         )
         cat = Catalog(spark, self.path, new_meta, fs=self._fs)
         cat._purge_halo_orphans()
@@ -1003,10 +1072,7 @@ class Catalog:
         for o, p in touched:
             if (o, p) in survivors:
                 continue
-            d = int(_dir_value(p))
-            self._fs.rmtree(
-                f"{self.path}/catalog/Norder={o}/Dir={d}/Npix={p}"
-            )
+            self._fs.rmtree(self._leaf_dir(o, p))
             if o in hips and p in hips[o]:
                 hips[o] = [x for x in hips[o] if x != p]
                 if not hips[o]:
@@ -1066,18 +1132,7 @@ class Catalog:
                 # fall back to the live-id anti-join (correct, heavier)
                 Catalog(spark, self.path, meta, fs=self._fs)._purge_halo_orphans()
 
-        new_meta = CatalogMetadata(
-            cat_name=meta.cat_name,
-            ra_kw=meta.ra_kw,
-            dec_kw=meta.dec_kw,
-            id_kw=meta.id_kw,
-            n_sources=meta.n_sources - n_deleted,
-            pix_threshold=meta.pix_threshold,
-            order_k=meta.order_k,
-            margin_threshold=meta.margin_threshold,
-            hips=hips,
-            last_batch_id=meta.last_batch_id,
-        )
+        new_meta = replace(meta, n_sources=meta.n_sources - n_deleted, hips=hips)
         self._commit_meta(new_meta)
         try:
             self._fs.remove(intent_path)
@@ -1122,10 +1177,7 @@ class Catalog:
             # all strict descendants of the over parents, so they can
             # never collide with a pre-existing cell directory
             for o2, cp in planned:
-                d = int(_dir_value(cp))
-                self._fs.rmtree(
-                    f"{self.path}/catalog/Norder={o2}/Dir={d}/Npix={cp}"
-                )
+                self._fs.rmtree(self._leaf_dir(o2, cp))
             self._fs.remove(path)
             return Catalog(spark, self.path, meta, fs=self._fs)
 
@@ -1142,13 +1194,7 @@ class Catalog:
             hips.setdefault(o2, [])
             if cp not in hips[o2]:
                 hips[o2] = sorted(hips[o2] + [cp])
-        new_meta = CatalogMetadata(
-            cat_name=meta.cat_name, ra_kw=meta.ra_kw, dec_kw=meta.dec_kw,
-            id_kw=meta.id_kw, n_sources=meta.n_sources,
-            pix_threshold=meta.pix_threshold, order_k=meta.order_k,
-            margin_threshold=meta.margin_threshold, hips=hips,
-            last_batch_id=meta.last_batch_id,
-        )
+        new_meta = replace(meta, hips=hips)
         self._commit_meta(new_meta)
         try:
             self._fs.remove(path)
@@ -1165,10 +1211,7 @@ class Catalog:
         # but candidates need the parent halo rows which live in
         # neighbor/, not catalog/ — so parent DATA dirs can go first.
         for o, p in splits:
-            d = int(_dir_value(p))
-            self._fs.rmtree(
-                f"{self.path}/catalog/Norder={o}/Dir={d}/Npix={p}"
-            )
+            self._fs.rmtree(self._leaf_dir(o, p))
         if not self._fs.exists(f"{self.path}/neighbor") or not child_cells:
             return
         # halo material: the rewritten child rows (same physical rows)
@@ -1238,14 +1281,7 @@ class Catalog:
             child_hips.setdefault(o2, []).append(cp)
         restricted = Catalog(
             spark, self.path,
-            CatalogMetadata(
-                cat_name=meta.cat_name, ra_kw=meta.ra_kw, dec_kw=meta.dec_kw,
-                id_kw=meta.id_kw, n_sources=meta.n_sources,
-                pix_threshold=meta.pix_threshold, order_k=meta.order_k,
-                margin_threshold=meta.margin_threshold,
-                hips={o: sorted(ps) for o, ps in child_hips.items()},
-                last_batch_id=meta.last_batch_id,
-            ),
+            replace(meta, hips={o: sorted(ps) for o, ps in child_hips.items()}),
             fs=self._fs,
         )
         rows = margin_rows(cands, restricted, ra_col=meta.ra_kw, dec_col=meta.dec_kw)
@@ -1460,13 +1496,7 @@ class Catalog:
             hips.setdefault(o2, [])
             if cp not in hips[o2]:
                 hips[o2] = sorted(hips[o2] + [cp])
-        new_meta = CatalogMetadata(
-            cat_name=meta.cat_name, ra_kw=meta.ra_kw, dec_kw=meta.dec_kw,
-            id_kw=meta.id_kw, n_sources=meta.n_sources,
-            pix_threshold=meta.pix_threshold, order_k=meta.order_k,
-            margin_threshold=meta.margin_threshold, hips=hips,
-            last_batch_id=meta.last_batch_id,
-        )
+        new_meta = replace(meta, hips=hips)
         self._commit_meta(new_meta)
         try:
             self._fs.remove(intent_path)
@@ -1733,13 +1763,17 @@ class Catalog:
         - duplicate ids;
         - spatial-index integrity (``_ID`` ranks contiguous from 0
           within every order-19 pixel);
-        - orphaned halo rows (``neighbor/`` ids with no catalog row).
+        - orphaned halo rows (``neighbor/`` ids with no catalog row);
+        - whether the metadata stores the read schema (``schema_inferred``:
+          metadata written before it did; reads then infer it once per
+          :meth:`load`).
 
         Everything driver-side is plan-sized (cell lists, scalar
         counts).  ``repair=True`` rewrites the metadata (atomic
-        rename) so ``n_sources`` and the coverage map match the disk,
-        purges orphaned halo rows, and clears a stale delete-intent
-        marker — live catalog rows are never modified.  Returns the report dict; after a
+        rename) so ``n_sources`` and the coverage map match the disk
+        and the schema is stored, purges orphaned halo rows, and clears
+        a stale delete-intent marker — live catalog rows are never
+        modified.  Returns the report dict; after a
         repair the report reflects the PRE-repair state plus
         ``repaired=True``.
         """
@@ -1809,6 +1843,7 @@ class Catalog:
                 self._rebalance_intent_path()
             ),
             "stale_compact_intent": self._fs.exists(self._compact_intent_path()),
+            "schema_inferred": self._schema_inferred,
             "consistent": (
                 meta.n_sources == n_rows
                 and meta_cells == disk_cells
@@ -1839,26 +1874,18 @@ class Catalog:
                 pass
             report["repaired"] = True
         if repair and (
-            meta.n_sources != n_rows or meta_cells != disk_cells
+            meta.n_sources != n_rows
+            or meta_cells != disk_cells
+            or self._schema_inferred
         ):
             hips: dict[int, list[int]] = {}
             for o, p in sorted(disk_cells):
                 hips.setdefault(o, []).append(p)
-            new_meta = CatalogMetadata(
-                cat_name=meta.cat_name,
-                ra_kw=meta.ra_kw,
-                dec_kw=meta.dec_kw,
-                id_kw=meta.id_kw,
-                n_sources=n_rows,
-                pix_threshold=meta.pix_threshold,
-                order_k=meta.order_k,
-                margin_threshold=meta.margin_threshold,
-                hips=hips,
-                last_batch_id=meta.last_batch_id,
-            )
+            new_meta = replace(meta, n_sources=n_rows, hips=hips)
             meta_path = f"{self.path}/{meta.cat_name}_meta.json"
             self._fs.publish(meta_path, new_meta.to_json())
             self.meta = new_meta
+            self._schema_inferred = False
             report["repaired"] = True
         return report
 
@@ -1936,18 +1963,26 @@ class Catalog:
 
     # -- cone search (reference catalog.py:65-141, EP1) ----------------------
 
-    def cone_pruning_predicate(self, ra: float, dec: float, radius: float) -> Column | None:
+    def cone_pruning_predicate(
+        self,
+        ra: float,
+        dec: float,
+        radius: float,
+        _hit: list[tuple[int, int]] | None = None,
+    ) -> Column | None:
         """Pixel-IN-list predicate on the (Norder, Npix) partition
         columns — Catalyst turns it into static partition pruning.
-        Returns None when the cone misses the catalog entirely."""
+        Returns None when the cone misses the catalog entirely.  The
+        leaves the cover hits are appended to ``_hit`` when given, so
+        :meth:`cone_search` reads them without computing the cover twice."""
         clauses = []
         for order, pixels in self.meta.hips.items():
             cover = hpx.cone_cover(order, ra, dec, radius)
-            hit = np.intersect1d(cover, np.array(pixels, dtype=np.int64))
-            if hit.size:
-                clauses.append(
-                    (F.col("Norder") == order) & F.col("Npix").isin([int(p) for p in hit])
-                )
+            hit = [int(p) for p in np.intersect1d(cover, np.array(pixels, dtype=np.int64))]
+            if hit:
+                clauses.append((F.col("Norder") == order) & F.col("Npix").isin(hit))
+                if _hit is not None:
+                    _hit.extend((order, p) for p in hit)
         if not clauses:
             return None
         pred = clauses[0]
@@ -1963,16 +1998,25 @@ class Catalog:
         columns: list[str] | None = None,
     ) -> DataFrame:
         """All rows within ``radius`` deg of (ra, dec), with ``_DIST``
-        appended.  Driver computes the pixel cover; Catalyst prunes
-        partitions; the exact distance filter runs as a Column
-        expression in whole-stage codegen."""
-        base = self.df(columns)
-        pred = self.cone_pruning_predicate(ra, dec, radius)
-        if pred is None:
-            empty = base.withColumn("_DIST", F.lit(0.0)).filter(F.lit(False))
-            return empty
+        appended.  The driver computes the pixel cover against the
+        metadata's leaves and the scan reads only the hit leaf
+        directories with the stored schema — no listing of the catalog,
+        no schema inference, so one Spark job per collected cone (none
+        for a cone that hits no leaf).  The (Norder, Npix) predicate
+        stays on the scan; the exact distance filter runs as a Column
+        expression in whole-stage codegen.
+
+        Cells on disk that the metadata does not list are never read; a
+        listed leaf whose directory is missing raises FileNotFoundError
+        naming it (see :meth:`fsck`).  The leaf set is resolved from the
+        metadata this handle was loaded with."""
+        hit: list[tuple[int, int]] = []
+        pred = self.cone_pruning_predicate(ra, dec, radius, _hit=hit)
+        base = self._project(self._scan(hit), columns)
+        if pred is not None:
+            base = base.filter(pred)
         dist = gc_dist(F.col(self.meta.ra_kw), F.col(self.meta.dec_kw), ra, dec)
-        return base.filter(pred).withColumn("_DIST", dist).filter(F.col("_DIST") < radius)
+        return base.withColumn("_DIST", dist).filter(F.col("_DIST") < radius)
 
     # -- cross-match --------------------------------------------------------
 

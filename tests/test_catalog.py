@@ -4,11 +4,15 @@ oracle (FIXTURES.md F1/F2/F5-style synthetic catalogs)."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
 import pytest
 
 import lsd2_spark.healpix as hpx
+from pyspark.sql.types import StructType
+
 from lsd2_spark.catalog import Catalog, partition_catalog
 
 RNG = np.random.default_rng(7)
@@ -109,16 +113,16 @@ def test_reload_roundtrip(cats, spark):
     assert re.df().count() == c1.df().count()
 
 
-@pytest.mark.parametrize(
-    "cra,cdec,radius",
-    [
-        (56.0, 20.0, 10.0),   # hotspot (tutorial query, notebook cell 16)
-        (0.05, 0.0, 0.5),     # RA wrap
-        (0.0, 89.5, 1.0),     # pole
-        (180.0, -45.0, 0.01), # tiny radius
-        (300.0, -70.0, 3.0),  # sparse region
-    ],
-)
+BRUTEFORCE_CONES = [
+    (56.0, 20.0, 10.0),   # hotspot (tutorial query, notebook cell 16)
+    (0.05, 0.0, 0.5),     # RA wrap
+    (0.0, 89.5, 1.0),     # pole
+    (180.0, -45.0, 0.01), # tiny radius
+    (300.0, -70.0, 3.0),  # sparse region
+]
+
+
+@pytest.mark.parametrize("cra,cdec,radius", BRUTEFORCE_CONES)
 def test_cone_search_matches_bruteforce(cats, cra, cdec, radius):
     base, _, c1, _ = cats
     got = c1.cone_search(cra, cdec, radius).toPandas()
@@ -155,6 +159,213 @@ def test_cone_search_empty_region(cats):
     # cat2 covers ra 30-90 only; a far-away cone must return empty fast
     out = c2.cone_search(200.0, -50.0, 1.0)
     assert out.count() == 0
+
+
+@pytest.mark.parametrize("cra,cdec,radius", BRUTEFORCE_CONES)
+def test_cone_search_equals_root_scan_then_filter(cats, cra, cdec, radius):
+    """Reading only the hit leaf directories returns exactly what a scan
+    of the whole catalog root followed by the distance filter returns."""
+    from lsd2_spark.functions.spherical import gc_dist
+    from pyspark.sql import functions as F
+
+    _, _, c1, _ = cats
+    got = c1.cone_search(cra, cdec, radius).toPandas()
+    want = (
+        c1.df()
+        .withColumn("_DIST", gc_dist(F.col("ra"), F.col("dec"), cra, cdec))
+        .filter(F.col("_DIST") < radius)
+        .toPandas()
+    )
+    assert list(got.columns) == list(want.columns)
+    key = ["source_id"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+    )
+
+
+def _leaf_centre_cone(order, pix, radius=0.01):
+    ra, dec = hpx.pix2ang(order, np.array([pix]))
+    return float(ra[0]), float(dec[0]), radius
+
+
+def test_cone_schema_is_the_stored_schema_whatever_leaves_it_hits(cats):
+    """The read schema is the metadata's, so it does not depend on which
+    leaves a cone touches; the partition columns are pinned to the
+    writer's types (Norder int, Dir and Npix long)."""
+    _, _, c1, _ = cats
+    lo, hi = min(c1.meta.hips), max(c1.meta.hips)
+    assert lo < hi
+    cones = [
+        _leaf_centre_cone(lo, c1.meta.hips[lo][0]),
+        _leaf_centre_cone(hi, c1.meta.hips[hi][-1]),
+        (56.0, 20.0, 10.0),
+    ]
+    hits = []
+    for q in cones:
+        hit = []
+        c1.cone_pruning_predicate(*q, _hit=hit)
+        hits.append(set(hit))
+    assert hits[0] and hits[1] and not hits[0] & hits[1]
+    assert {o for o, _ in hits[0]} != {o for o, _ in hits[1]}
+
+    full = c1.df().schema
+    types = {f.name: f.dataType.simpleString() for f in full.fields}
+    assert (types["Norder"], types["Dir"], types["Npix"]) == ("int", "bigint", "bigint")
+    assert full == c1.meta.schema
+    schemas = [c1.cone_search(*q).schema for q in cones]
+    no_leaves = Catalog(c1.spark, c1.path, replace(c1.meta, hips={}))
+    schemas.append(no_leaves.cone_search(56.0, 20.0, 2.0).schema)  # empty cover
+    for sch in schemas:
+        assert sch == schemas[0]
+        assert StructType([f for f in sch.fields if f.name != "_DIST"]) == full
+
+
+def _jobs_in_group(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cone_runs_one_spark_job_and_an_empty_cover_none(cats, spark):
+    """No listing job and no schema-inference job: one job collects an
+    ordinary cone, and a cone that hits no leaf collects without any."""
+    _, _, c1, c2 = cats
+    rows, n_jobs = _jobs_in_group(
+        spark, "cone-one-job", lambda: c1.cone_search(56.0, 20.0, 2.0).collect()
+    )
+    assert rows and n_jobs == 1, n_jobs
+    hit = []
+    assert c2.cone_pruning_predicate(200.0, -50.0, 1.0, _hit=hit) is None and not hit
+    rows, n_jobs = _jobs_in_group(
+        spark, "cone-empty-cover", lambda: c2.cone_search(200.0, -50.0, 1.0).collect()
+    )
+    assert rows == [] and n_jobs == 0, n_jobs
+
+
+def _copy_catalog(spark, cat, dst):
+    import shutil
+
+    shutil.copytree(cat.path, dst)
+    return Catalog.load(spark, str(dst), cat.meta.cat_name)
+
+
+def test_cone_never_reads_cells_the_metadata_does_not_list(cats, spark, tmp_path):
+    """A cell directory on disk that the metadata does not name (here a
+    finer-order copy of a hit leaf's rows) is invisible to cone_search,
+    though a root scan sees it."""
+    import glob
+    import os
+    import shutil
+
+    base, _, c1, _ = cats
+    cat = _copy_catalog(spark, c1, tmp_path / "stray")
+    q = (56.0, 20.0, 2.0)
+    hit = []
+    cat.cone_pruning_predicate(*q, _hit=hit)
+    o, p = hit[0]
+    child = p << 2
+    stray = f"{cat.path}/catalog/Norder={o + 1}/Dir={child // 10000 * 10000}/Npix={child}"
+    os.makedirs(stray)
+    for f in glob.glob(f"{cat._leaf_dir(o, p)}/*.parquet"):
+        shutil.copy(f, stray)
+    assert cat.df().count() > len(base)  # the stray rows are on disk
+
+    got = cat.cone_search(*q).select("source_id").toPandas()["source_id"]
+    d = hpx.gc_dist_deg(base["ra"].to_numpy(), base["dec"].to_numpy(), q[0], q[1])
+    assert got.is_unique
+    assert set(got) == set(base.loc[d < q[2], "source_id"])
+
+
+def test_cone_over_missing_leaf_dir_names_it_and_points_to_fsck(cats, spark, tmp_path):
+    """A metadata leaf whose directory is gone is an error, not fewer
+    rows."""
+    import shutil
+
+    _, _, c1, _ = cats
+    cat = _copy_catalog(spark, c1, tmp_path / "missing")
+    q = (56.0, 20.0, 2.0)
+    hit = []
+    cat.cone_pruning_predicate(*q, _hit=hit)
+    o, p = hit[-1]
+    shutil.rmtree(cat._leaf_dir(o, p))
+    with pytest.raises(FileNotFoundError, match=rf"\({o}, {p}\).*fsck"):
+        cat.cone_search(*q).collect()
+    assert (o, p) in [tuple(c) for c in cat.fsck()["cells_meta_only"]]
+
+
+def test_metadata_without_schema_is_inferred_once_and_persisted_by_fsck(
+    cats, spark, tmp_path
+):
+    """Catalogs written before the metadata stored the schema still load:
+    the schema is inferred once at load, and fsck(repair=True) stores it."""
+    import json
+
+    _, _, c1, _ = cats
+    cat = _copy_catalog(spark, c1, tmp_path / "legacy")
+    meta_path = f"{cat.path}/{cat.meta.cat_name}_meta.json"
+    d = json.loads(open(meta_path).read())
+    del d["schema"]
+    open(meta_path, "w").write(json.dumps(d))
+
+    legacy = Catalog.load(spark, cat.path)
+    assert legacy.meta.schema == c1.meta.schema
+    q = (56.0, 20.0, 2.0)
+    assert legacy.cone_search(*q).count() == c1.cone_search(*q).count()
+    rep = legacy.fsck(repair=True)
+    assert rep["schema_inferred"] and rep["consistent"] and rep["repaired"]
+    assert json.loads(open(meta_path).read())["schema"] is not None
+    again = Catalog.load(spark, cat.path)
+    assert again.meta.schema == c1.meta.schema
+    assert not again.fsck()["schema_inferred"]
+
+
+def test_mutations_keep_the_stored_schema(spark, tmp_path):
+    """append and delete commit metadata that still carries the schema."""
+    pdf = _make_catalog_pdf(1500)
+    cat = partition_catalog(
+        spark.createDataFrame(pdf), str(tmp_path / "cat"), "keep",
+        ra_col="ra", dec_col="dec", id_col="source_id",
+        threshold=400, order_k=4, write_margins=False,
+    )
+    schema = cat.meta.schema
+    batch = _make_catalog_pdf(100)
+    batch["source_id"] += 1_000_000
+    cat2 = cat.append(spark.createDataFrame(batch))
+    cat3 = cat2.delete("source_id < 100")
+    for c in (cat2, cat3, Catalog.load(spark, cat.path)):
+        assert c.meta.schema == schema
+    assert cat3.df().count() == 1500
+    assert cat3.fsck()["consistent"]
+
+
+def test_append_through_stale_handle_keeps_rows_of_new_leaves(spark, tmp_path):
+    """append reads only touched leaves; a leaf that a newer handle's
+    append opened is not in a stale handle's metadata, but its rows are
+    on disk and must survive the stale handle's rewrite of that cell."""
+    rng = np.random.default_rng(5)
+
+    def rows(lo, n, ra0, dec0):
+        return spark.createDataFrame(pd.DataFrame({
+            "sid": np.arange(lo, lo + n, dtype=np.int64),
+            "ra": ra0 + rng.uniform(-1, 1, n),
+            "dec": dec0 + rng.uniform(-1, 1, n),
+        }))
+
+    cat = partition_catalog(
+        rows(0, 500, 40.0, 10.0), str(tmp_path / "stale"), "stale",
+        ra_col="ra", dec_col="dec", id_col="sid",
+        threshold=1000, order_k=3, write_margins=False,
+    )
+    cat2 = cat.append(rows(1000, 50, 200.0, -40.0))  # opens a new leaf
+    assert cat2.meta.hips != cat.meta.hips
+    cat.append(rows(2000, 50, 200.0, -40.0))  # same leaf, stale metadata
+    ids = {r["sid"] for r in cat.df().select("sid").collect()}
+    assert ids == set(range(500)) | set(range(1000, 1050)) | set(range(2000, 2050))
 
 
 def _brute_knn(lpdf, rpdf, k, dthresh):
