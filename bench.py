@@ -257,16 +257,14 @@ def main() -> None:
             t0 = time.perf_counter()
             writer.run_available(f"{tmp}/ckpt{i}")
             stream_walls.append(time.perf_counter() - t0)
-            # catalog-side work is append + any auto rebalance/compact
-            # the writer ran; summing all three keeps the overhead
-            # split honest if a benched writer ever enables them
-            # (today's defaults leave rebalance_sec/compact_sec at 0)
+            # catalog-side work is append + any auto rebalance the
+            # writer ran; summing both keeps the overhead split honest
+            # if a benched writer ever enables it (today's default
+            # leaves rebalance_sec at 0)
             stream_append_secs.append(
                 round(
                     sum(
-                        b["append_sec"]
-                        + b.get("rebalance_sec", 0.0)
-                        + b.get("compact_sec", 0.0)
+                        b["append_sec"] + b.get("rebalance_sec", 0.0)
                         for b in writer.batch_stats
                     ),
                     3,

@@ -6,7 +6,7 @@ partitioner.py (ingest), hipscat/lsd2_io.py:110-125 (layout).  The
 layout is byte-compatible with the reference:
 
     {path}/catalog/Norder={k}/Dir={pix//10000*10000}/Npix={pix}/...parquet
-    {path}/neighbor/Norder=...   (margin halo rows, written by margins.py)
+    {path}/neighbor/Norder=...   (margin export, written by margins.py)
     {path}/{name}_meta.json
 
 The metadata JSON is the file index: its ``hips`` map names every leaf
@@ -15,6 +15,14 @@ Spark read schema.  Cone searches read only the leaf directories their
 pixel cover hits, with that schema, so a query neither lists the
 catalog nor infers a schema; ``Catalog.df`` discovers the whole root
 with the same stored schema.
+
+Margins are an export, not maintained state: no query reads
+``neighbor/`` (cross-match builds its halos at query time).  Ingest
+with ``write_margins=True`` or :meth:`Catalog.export_margins` writes it
+and sets ``margins_exported`` in the metadata; ``append``, ``delete``
+and ``rebalance`` clear that flag before their first data write and
+remove the directory, and :meth:`Catalog.margin_df` serves the export
+only while the committed metadata vouches for it.
 
 Spark-first differences (SURVEY.md §3 EP3):
 - ingest is ONE shuffle (`repartition(Norder,Npix)` + partitionBy write)
@@ -129,6 +137,10 @@ class CatalogMetadata:
     # query infers a schema from the files.  None only in metadata
     # written before the field existed; Catalog.load infers it then.
     schema: StructType | None = None
+    # True while neighbor/ holds the margin export of exactly these
+    # rows and leaves; a row- or leaf-changing mutation clears it.
+    # Metadata written before the field existed reads as not exported.
+    margins_exported: bool = False
 
     def to_json(self) -> str:
         return json.dumps(
@@ -144,6 +156,7 @@ class CatalogMetadata:
                 "hips": {str(k): sorted(v) for k, v in self.hips.items()},
                 "last_batch_id": self.last_batch_id,
                 "schema": None if self.schema is None else self.schema.jsonValue(),
+                "margins_exported": self.margins_exported,
             },
             indent=2,
         )
@@ -163,6 +176,7 @@ class CatalogMetadata:
             hips={int(k): list(v) for k, v in d["hips"].items()},
             last_batch_id=d.get("last_batch_id"),
             schema=StructType.fromJson(d["schema"]) if d.get("schema") else None,
+            margins_exported=d.get("margins_exported", False),
         )
 
 
@@ -237,14 +251,15 @@ def partition_catalog(
     threshold: int = DEFAULT_THRESHOLD,
     order_k: int = DEFAULT_ORDER_K,
     margin_threshold: float = DEFAULT_MARGIN_DEG,
-    write_margins: bool = True,
+    write_margins: bool = False,
     dtype_overrides: dict[str, str] | None = None,
     fs: "LifecycleFS | None" = None,
 ) -> "Catalog":
     """Ingest: adaptively partition ``df`` by source density and write
-    the hive-layout catalog (+ margin ``neighbor/`` dataset + JSON
-    metadata).  ``dtype_overrides`` casts columns before ingest
-    (reference ``dtypes=`` parameter, partitioner.py:26-37;
+    the hive-layout catalog and its JSON metadata (plus, with
+    ``write_margins=True``, the ``neighbor/`` margin export — see
+    :meth:`Catalog.export_margins`).  ``dtype_overrides`` casts columns
+    before ingest (reference ``dtypes=`` parameter, partitioner.py:26-37;
     e.g. ``{"libname_gspphot": "string"}``).  One histogram pass +
     one shuffled write
     (vs the reference's cache/write/compact pipeline, EP3 in SURVEY §3).
@@ -363,9 +378,7 @@ def partition_catalog(
 
     cat = Catalog(spark, path, meta, fs=fs)
     if write_margins:
-        from lsd2_spark.operators.margins import write_margin_dataset
-
-        write_margin_dataset(df, cat, ra_col=ra_col, dec_col=dec_col)
+        cat = cat._export_margins(df)
     return cat
 
 
@@ -502,11 +515,67 @@ class Catalog:
         prune at the file level."""
         return self._project(self._scan(), columns)
 
+    def _meta_path(self) -> str:
+        return f"{self.path}/{self.meta.cat_name}_meta.json"
+
+    def _committed_meta(self) -> "CatalogMetadata":
+        """The metadata on disk, which may be newer than this handle's."""
+        return CatalogMetadata.from_json(self._fs.read_text(self._meta_path()))
+
     def margin_df(self) -> DataFrame | None:
+        """The ``neighbor/`` margin export, or None unless the committed
+        metadata vouches for it: an append, delete or rebalance since
+        the last export withdrew it (re-export with
+        :meth:`export_margins`)."""
         p = f"{self.path}/neighbor"
-        if not self._fs.exists(p):
+        if not self._committed_meta().margins_exported or not self._fs.exists(p):
             return None
         return self.spark.read.parquet(p)
+
+    def export_margins(self) -> "Catalog":
+        """Write the ``neighbor/`` margin dataset (reference sink S8,
+        dask_utils.py:246-318) from the catalog's current rows and
+        vouch for it in the metadata.  Nothing keeps the export up to
+        date: ``append``, ``delete`` and ``rebalance`` withdraw it, so
+        call this again after them when a consumer needs the halos.
+        ``compact`` leaves a valid export alone (rows and leaves do not
+        change).  Returns the catalog with the flag set."""
+        if self._fs.exists(self._rebalance_intent_path()):
+            return self._reconcile_rebalance_intent().export_margins()
+        if self._fs.exists(self._delete_intent_path()):
+            return self._reconcile_delete_intent().export_margins()
+        if self._fs.exists(self._compact_intent_path()):
+            return self._reconcile_compact_intent().export_margins()
+        return self._export_margins(self.df().drop(*PARTITION_COLS, "_ID"))
+
+    def _export_margins(self, src: DataFrame) -> "Catalog":
+        """Export the halos of the source rows ``src`` (the bare input
+        columns): withdraw any previous export, write the new one, and
+        only then publish the flag, so a crash mid-write never leaves a
+        vouched partial export."""
+        from lsd2_spark.operators.margins import write_margin_dataset
+
+        meta = self._invalidate_margins(self.meta)
+        write_margin_dataset(src, self, ra_col=meta.ra_kw, dec_col=meta.dec_kw)
+        meta = replace(meta, margins_exported=True)
+        self._commit_meta(meta)
+        return Catalog(self.spark, self.path, meta, fs=self._fs)
+
+    def _invalidate_margins(self, meta: "CatalogMetadata") -> "CatalogMetadata":
+        """Withdraw the margin export before a write that changes rows
+        or leaves: clear the flag in the committed metadata (nothing
+        else in it changes), then remove ``neighbor/``.  A crash in
+        between leaves a directory no metadata vouches for, which
+        :meth:`margin_df` ignores and ``fsck(repair=True)`` removes.
+        Returns ``meta`` with the flag cleared, for the final commit."""
+        committed = self._committed_meta()
+        if committed.margins_exported:
+            self._fs.publish(
+                self._meta_path(),
+                replace(committed, margins_exported=False).to_json(),
+            )
+        self._fs.rmtree(f"{self.path}/neighbor")
+        return replace(meta, margins_exported=False)
 
     def append(self, df: DataFrame, batch_id: int | None = None) -> "Catalog":
         """Incremental ingest (extension — the reference can only
@@ -521,7 +590,9 @@ class Catalog:
           re-read pruned, merged, and re-indexed so ``_ID`` stays the
           global rank-within-pixel) and rewritten with DYNAMIC partition
           overwrite — untouched cells are never read or written;
-        - new halo rows append to ``neighbor/`` if margins exist.
+        - a margin export is withdrawn before the first data write
+          (see :meth:`export_margins`): the committed metadata stops
+          vouching for it and ``neighbor/`` is removed.
 
         Leaves are NOT re-split: a cell pushed past ``pix_threshold``
         warns (re-import to re-balance), matching the density contract.
@@ -559,12 +630,10 @@ class Catalog:
         high-water mark in place and the replayed batch re-runs the
         same dynamic partition overwrite — the touched cells are
         rewritten from (untouched existing ∪ batch), which converges to
-        the same bytes.  The halo append happens BEFORE the metadata
-        commit (a torn halo write is retried idempotently on replay;
-        after the commit it could never be retried), and a write-ahead
-        intent marker records the pre-batch touched-cell row count so
-        ``n_sources`` stays exact even when the replay recounts cells
-        that already contain the torn-written batch.
+        the same bytes.  A write-ahead intent marker records the
+        pre-batch touched-cell row count so ``n_sources`` stays exact
+        even when the replay recounts cells that already contain the
+        torn-written batch.
         """
         # Converge any crashed delete/rebalance FIRST, exactly as
         # delete() and rebalance() do at entry: in the window after a
@@ -735,6 +804,7 @@ class Catalog:
         # (possibly torn) disk state, and
         #   n_sources = committed + rows_after_touched - rows_before_touched
         # is exact in every crash window.
+        meta = self._invalidate_margins(meta)
         pre_touched = disk_touched
         intent_path = f"{self.path}/{meta.cat_name}_append_intent.json"
         if batch_id is not None:
@@ -780,36 +850,10 @@ class Catalog:
         )
         cat = Catalog(spark, self.path, new_meta, fs=self._fs)
 
-        # The halo append must land BEFORE the metadata commit: once the
-        # high-water mark is committed a replay no-ops, so margin rows
-        # written after it would be lost forever on a crash in between.
-        # Written before, a torn halo write is simply retried on replay —
-        # the (id, Norder, Npix) anti-join makes the retry idempotent.
-        if self._fs.exists(f"{self.path}/neighbor"):
-            from lsd2_spark.operators.margins import margin_rows
-
-            halo = margin_rows(df, cat, ra_col=meta.ra_kw, dec_col=meta.dec_kw)
-            if halo is not None:
-                prev_halo = spark.read.parquet(f"{self.path}/neighbor").select(
-                    meta.id_kw, "Norder", "Npix"
-                )
-                halo = halo.join(
-                    prev_halo.join(batch_ids, meta.id_kw, "left_semi"),
-                    [meta.id_kw, "Norder", "Npix"],
-                    "left_anti",
-                )
-                (
-                    halo.withColumn("Dir", _dir_of(F.col("Npix")))
-                    .repartition("Norder", "Npix")
-                    .write.mode("append")
-                    .partitionBy("Norder", "Dir", "Npix")
-                    .parquet(f"{self.path}/neighbor")
-                )
-
         # Atomic rename: the metadata file IS the commit record (it carries
         # the streaming high-water mark), so it must never be observable
-        # half-written.  Everything above (data overwrite, halo append) is
-        # idempotent under replay; this rename is the commit point.
+        # half-written.  Everything above is idempotent under replay; this
+        # rename is the commit point.
         self._commit_meta(new_meta)
         if batch_id is not None:
             try:
@@ -839,69 +883,9 @@ class Catalog:
     def _delete_intent_path(self) -> str:
         return f"{self.path}/{self.meta.cat_name}_delete_intent.json"
 
-    def _purge_halo_orphans(self) -> None:
-        """Remove ``neighbor/`` rows whose source id no longer exists in
-        the catalog (full live-id ``left_anti`` join — the fallback and
-        crash-recovery path; the common case predicate-pushes instead,
-        see :meth:`delete`)."""
-        spark, meta = self.spark, self.meta
-        if not self._fs.exists(f"{self.path}/neighbor"):
-            return
-        neigh = spark.read.parquet(f"{self.path}/neighbor")
-        live_ids = self.df([meta.id_kw]).select(meta.id_kw)
-        halo_touched = [
-            (int(r["Norder"]), int(r["Npix"]))
-            for r in neigh.join(live_ids, meta.id_kw, "left_anti")
-            .select("Norder", "Npix")
-            .distinct()
-            .collect()
-        ]
-        if not halo_touched:
-            return
-        hk = F.col("Norder").cast("long") * F.lit(1 << 40) + F.col(
-            "Npix"
-        ).cast("long")
-        hpred = hk.isin([(o << 40) + p for o, p in halo_touched])
-        halo_keep = (
-            neigh.filter(hpred)
-            .join(live_ids, meta.id_kw, "left_semi")
-            .withColumn("Dir", F.col("Dir").cast("long"))
-        )
-        self._overwrite_halo_cells(halo_keep, halo_touched)
-
-    def _overwrite_halo_cells(self, halo_keep, halo_touched) -> None:
-        """Dynamic-overwrite the kept halo rows and remove emptied halo
-        partition directories."""
-        spark = self.spark
-        halo_survivors = {
-            (int(r["Norder"]), int(r["Npix"]))
-            for r in halo_keep.groupBy("Norder", "Npix").count().collect()
-        }
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                halo_keep.write.mode("overwrite")
-                .partitionBy("Norder", "Dir", "Npix")
-                .parquet(f"{self.path}/neighbor")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-        for o, p in halo_touched:
-            if (o, p) not in halo_survivors:
-                d = int(_dir_value(p))
-                self._fs.rmtree(
-                    f"{self.path}/neighbor/Norder={o}/Dir={d}/Npix={p}"
-                )
-
     def _commit_meta(self, new_meta: "CatalogMetadata") -> None:
         """Atomic-rename metadata commit (the commit point)."""
-        meta_path = f"{self.path}/{new_meta.cat_name}_meta.json"
-        self._fs.publish(meta_path, new_meta.to_json())
+        self._fs.publish(self._meta_path(), new_meta.to_json())
 
     def _reconcile_delete_intent(self) -> "Catalog":
         """Converge a crashed delete.  The write-ahead intent marker
@@ -912,10 +896,11 @@ class Catalog:
 
             n_sources = committed + rows_now_in_cells - pre_touched
 
-        exactly — the same accounting append uses.  Emptied directories,
-        the coverage map, and orphaned halo rows are re-derived from the
-        disk state; every step is idempotent, so a crash during
-        reconciliation just reconciles again."""
+        exactly — the same accounting append uses.  Emptied directories
+        and the coverage map are re-derived from the disk state; every
+        step is idempotent, so a crash during reconciliation just
+        reconciles again.  The crashed delete withdrew any margin export
+        before writing, so the commit keeps it withdrawn."""
         spark, meta = self.spark, self.meta
         intent_path = self._delete_intent_path()
         try:
@@ -955,10 +940,12 @@ class Catalog:
                     del hips[o]
 
         new_meta = replace(
-            meta, n_sources=committed + after_touched - pre_touched, hips=hips
+            meta,
+            n_sources=committed + after_touched - pre_touched,
+            hips=hips,
+            margins_exported=False,
         )
         cat = Catalog(spark, self.path, new_meta, fs=self._fs)
-        cat._purge_halo_orphans()
         cat._commit_meta(new_meta)
         try:
             self._fs.remove(intent_path)
@@ -973,13 +960,10 @@ class Catalog:
         re-ranked, and rewritten via dynamic partition overwrite;
         fully-emptied cells have their partition directories removed
         (dynamic overwrite cannot clear a partition it emits no rows
-        for) and leave the coverage map.  Matching sources' halo rows
-        are purged from ``neighbor/`` the same way — by pushing the
-        SAME predicate down to the halo scan when its columns exist in
-        the halo schema (halo rows carry the source columns, so this is
-        the common case and touches only matching halo cells); only a
-        predicate over columns the halo lacks falls back to the
-        full-catalog live-id anti-join.
+        for) and leave the coverage map.  The kept rows are read from
+        exactly the touched leaves.  A delete that matches rows
+        withdraws any margin export before its first write (see
+        :meth:`export_margins`).
 
         NULL predicate rows are KEPT (a predicate that cannot decide a
         row must not delete it): match accounting counts only
@@ -993,8 +977,7 @@ class Catalog:
         point; a crash anywhere before it leaves the marker in place,
         and the next ``delete`` (or ``fsck(repair=True)``) replays it —
         recounting the marker cells makes ``n_sources``, the coverage
-        map, emptied directories, and halo orphans converge in every
-        crash window.
+        map and emptied directories converge in every crash window.
         """
         spark = self.spark
         # a stale marker from EITHER crashed mutation must converge
@@ -1020,21 +1003,8 @@ class Catalog:
             return self
         touched = [(int(r["Norder"]), int(r["Npix"])) for r in match_counts]
         n_deleted = int(sum(r["count"] for r in match_counts))
-
-        cell_key = F.col("Norder").cast("long") * F.lit(1 << 40) + F.col(
-            "Npix"
-        ).cast("long")
-        touched_pred = cell_key.isin([(o << 40) + p for o, p in touched])
-        keep = self.df().filter(touched_pred).filter(~pred_true)
-        data_cols = [
-            c for c in keep.columns if c not in ("Norder", "Dir", "Npix", "_ID")
-        ]
-        keep = keep.select(
-            *data_cols,
-            F.col("Norder").cast("int").alias("Norder"),
-            F.col("Npix").cast("long").alias("Npix"),
-            F.col("Dir").cast("long").alias("Dir"),
-        )
+        keep = self._scan(touched).filter(~pred_true).drop("_ID")
+        meta = self._invalidate_margins(meta)
 
         # write-ahead intent: BEFORE the first mutation, so any crash
         # below is replayable (pre_touched = keep + deleted, counted
@@ -1078,60 +1048,6 @@ class Catalog:
                 if not hips[o]:
                     del hips[o]
 
-        # purge halo rows of deleted sources.  Fast path: halo rows
-        # carry the source columns, so when the predicate analyzes
-        # against the halo schema, filter neighbor/ directly — a
-        # predicate-pushed scan touching only matching halo cells, no
-        # full-catalog id scan, no catalog-sized shuffle join.
-        if self._fs.exists(f"{self.path}/neighbor"):
-            neigh = spark.read.parquet(f"{self.path}/neighbor")
-            # pushdown is safe ONLY for predicates over source data
-            # columns: Norder/Dir/Npix/_ID in neighbor/ are the HALO
-            # cell's coordinates, not the source's home cell, so a
-            # predicate touching them means something different there.
-            # Probe analysis against the stripped (source-columns-only)
-            # view; failure -> structural/unknown reference -> fallback.
-            halo_pred = None
-            from pyspark.sql.types import StructType as _ST
-
-            src_schema = _ST(
-                [f for f in neigh.schema.fields
-                 if f.name not in ("Norder", "Dir", "Npix", "_ID")]
-            )
-            # probe against a lineage-free empty relation: a projection
-            # of neigh would NOT fail analysis (Spark resolves missing
-            # filter references through a Project), but a LocalRelation
-            # only exposes its own schema
-            probe = spark.createDataFrame([], src_schema)
-            try:
-                halo_pred = F.coalesce(pred, F.lit(False))
-                probe.filter(halo_pred).schema  # force analysis
-            except Exception:
-                halo_pred = None
-            if halo_pred is not None:
-                halo_touched = [
-                    (int(r["Norder"]), int(r["Npix"]))
-                    for r in neigh.filter(halo_pred)
-                    .select("Norder", "Npix")
-                    .distinct()
-                    .collect()
-                ]
-                if halo_touched:
-                    hk = F.col("Norder").cast("long") * F.lit(1 << 40) + F.col(
-                        "Npix"
-                    ).cast("long")
-                    hcells = hk.isin([(o << 40) + p for o, p in halo_touched])
-                    halo_keep = (
-                        neigh.filter(hcells)
-                        .filter(~halo_pred)
-                        .withColumn("Dir", F.col("Dir").cast("long"))
-                    )
-                    self._overwrite_halo_cells(halo_keep, halo_touched)
-            else:
-                # predicate references columns the halo schema lacks:
-                # fall back to the live-id anti-join (correct, heavier)
-                Catalog(spark, self.path, meta, fs=self._fs)._purge_halo_orphans()
-
         new_meta = replace(meta, n_sources=meta.n_sources - n_deleted, hips=hips)
         self._commit_meta(new_meta)
         try:
@@ -1157,8 +1073,8 @@ class Catalog:
           drop the marker.
         - phase ``done`` (written only after the child rewrite fully
           committed): ROLL FORWARD: remove parent data directories,
-          rebuild the children's halos where the parent halo source
-          material still exists, commit the recorded coverage, drop the
+          commit the recorded coverage (with the margin export still
+          withdrawn, as the crashed rebalance left it), drop the
           marker.  Every step is idempotent."""
         spark, meta = self.spark, self.meta
         path = self._rebalance_intent_path()
@@ -1182,19 +1098,18 @@ class Catalog:
             return Catalog(spark, self.path, meta, fs=self._fs)
 
         # phase == done: roll forward
-        child_cells = planned
-        self._rebalance_finish(splits, child_cells)
+        self._rebalance_finish(splits)
         hips = {o: sorted(ps) for o, ps in meta.hips.items()}
         for o, p in splits:
             if o in hips and p in hips[o]:
                 hips[o] = [x for x in hips[o] if x != p]
                 if not hips[o]:
                     del hips[o]
-        for o2, cp in child_cells:
+        for o2, cp in planned:
             hips.setdefault(o2, [])
             if cp not in hips[o2]:
                 hips[o2] = sorted(hips[o2] + [cp])
-        new_meta = replace(meta, hips=hips)
+        new_meta = replace(meta, hips=hips, margins_exported=False)
         self._commit_meta(new_meta)
         try:
             self._fs.remove(path)
@@ -1202,112 +1117,11 @@ class Catalog:
             pass
         return Catalog(spark, self.path, new_meta, fs=self._fs)
 
-    def _rebalance_finish(self, splits, child_cells) -> None:
-        """Post-done-marker work (idempotent): remove parent data dirs,
-        rebuild child halos where parent halo material remains, remove
-        parent halo dirs."""
-        spark, meta = self.spark, self.meta
-        # child halo rebuild BEFORE parent-dir removals would be ideal,
-        # but candidates need the parent halo rows which live in
-        # neighbor/, not catalog/ — so parent DATA dirs can go first.
+    def _rebalance_finish(self, splits) -> None:
+        """Post-done-marker work (idempotent): remove the split parents'
+        data directories."""
         for o, p in splits:
             self._fs.rmtree(self._leaf_dir(o, p))
-        if not self._fs.exists(f"{self.path}/neighbor") or not child_cells:
-            return
-        # halo material: the rewritten child rows (same physical rows)
-        # plus the old parent halo rows — any row within the margin of a
-        # child boundary is either inside the parent (now a child row)
-        # or inside the parent's halo, by containment of the child
-        # region in the parent region.  For IDEMPOTENCE across a crash
-        # mid-way through the parent-halo removal loop below, any
-        # already-written child halo rows also join the candidate set:
-        # a partially-removed parent can no longer contribute its
-        # external margin rows directly, but the previous attempt's
-        # child halos (written before any removal) carry them.
-        halo_parents = [
-            (o, p) for o, p in splits
-            if self._fs.isdir(
-                f"{self.path}/neighbor/Norder={o}/Dir={int(_dir_value(p))}/Npix={p}"
-            )
-        ]
-        halo_children = [
-            (o, p) for o, p in child_cells
-            if self._fs.isdir(
-                f"{self.path}/neighbor/Norder={o}/Dir={int(_dir_value(p))}/Npix={p}"
-            )
-        ]
-        from lsd2_spark.operators.margins import margin_rows
-
-        cell_key = F.col("Norder").cast("long") * F.lit(1 << 40) + F.col(
-            "Npix"
-        ).cast("long")
-        child_pred = cell_key.isin([(o << 40) + p for o, p in child_cells])
-        data_cols = [
-            c for c in self.df().columns
-            if c not in ("Norder", "Dir", "Npix", "_ID")
-        ]
-        cands = self.df().filter(child_pred).select(*data_cols)
-        halo_paths = [
-            f"{self.path}/neighbor/Norder={o}/Dir={int(_dir_value(p))}/Npix={p}"
-            for o, p in halo_parents + halo_children
-        ]
-        if halo_paths:
-            old_halo = spark.read.parquet(*halo_paths).select(*data_cols)
-            cands = cands.unionByName(old_halo)
-        # lineage cut: the dynamic overwrite below writes into the
-        # same neighbor/ tree some candidates were read from — truncate
-        # the lineage so the write doesn't read its own output path.
-        # Flavor from the session conf ("auto": reliable iff a
-        # checkpoint dir is set — see operators/common.cut_lineage);
-        # the cut is consumed entirely by this halo rewrite, so a
-        # reliable checkpoint is deleted once the rewrite lands (a
-        # stream with auto_rebalance would otherwise leave one
-        # snapshot per rebalance in the job store).
-        from lsd2_spark.operators.common import (
-            checkpoint_file_of,
-            cut_lineage,
-            remove_checkpoint_file,
-            resolve_cut_mode,
-        )
-
-        halo_cut_mode = resolve_cut_mode(spark)
-        cands = cut_lineage(cands.dropDuplicates([meta.id_kw]), mode=halo_cut_mode)
-        halo_ckpt = checkpoint_file_of(
-            cands, expect_reliable=(halo_cut_mode == "reliable")
-        )
-
-        child_hips: dict[int, list[int]] = {}
-        for o2, cp in child_cells:
-            child_hips.setdefault(o2, []).append(cp)
-        restricted = Catalog(
-            spark, self.path,
-            replace(meta, hips={o: sorted(ps) for o, ps in child_hips.items()}),
-            fs=self._fs,
-        )
-        rows = margin_rows(cands, restricted, ra_col=meta.ra_kw, dec_col=meta.dec_kw)
-        if rows is not None:
-            out = rows.withColumn("Dir", _dir_of(F.col("Npix")))
-            prev_mode = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    out.repartition("Norder", "Npix")
-                    .write.mode("overwrite")
-                    .partitionBy("Norder", "Dir", "Npix")
-                    .parquet(f"{self.path}/neighbor")
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
-        for o, p in halo_parents:
-            self._fs.rmtree(
-                f"{self.path}/neighbor/Norder={o}/Dir={int(_dir_value(p))}/Npix={p}"
-            )
-        if halo_ckpt is not None:  # rewrite landed; the cut is dead
-            remove_checkpoint_file(spark, halo_ckpt)
 
     def rebalance(
         self, threshold: int | None = None, max_order: int = 11
@@ -1318,19 +1132,18 @@ class Catalog:
         read, re-planned with the SAME top-down adaptive sweep ingest
         uses (dense sub-regions go to fine orders, sparse siblings stay
         coarse, capped at ``max_order``), re-ranked,
-        and rewritten; the rest of the catalog is untouched.  Margins
-        for the new child cells are rebuilt from the parent's rows plus
-        the parent's old halo — a guaranteed superset of every child's
-        margin set, so boundary-correct cross-match is preserved
-        without touching any neighboring cell.
+        and rewritten; the rest of the catalog is untouched.
+        Cross-match stays boundary-correct because it builds its halos
+        at query time; a margin export is withdrawn before the first
+        write (see :meth:`export_margins`), since its cells are the
+        old leaves.
 
         Crash safety: a two-phase write-ahead marker.  ``pre`` is
         written before any mutation — a crash during the child rewrite
         ROLLS BACK (partial child dirs removed, parents untouched) on
         the next rebalance/fsck.  ``done`` is written only after the
         child rewrite committed — a later crash ROLLS FORWARD
-        (parent removal, halo rebuild, coverage commit are all
-        idempotent).  ``n_sources`` never changes, so there is no
+        (parent removal and coverage commit are both idempotent).  ``n_sources`` never changes, so there is no
         accounting window at all.
 
         Returns the rebalanced catalog (``self`` if nothing is over).
@@ -1380,15 +1193,8 @@ class Catalog:
         # descendants of the over parents by construction, because
         # every ancestor of an over parent carries that parent's full
         # over-threshold count and therefore keeps splitting
-        cell_key = F.col("Norder").cast("long") * F.lit(1 << 40) + F.col(
-            "Npix"
-        ).cast("long")
-        over_pred = cell_key.isin([(o << 40) + p for o, p in splits])
-        data_cols = [
-            c for c in self.df().columns
-            if c not in ("Norder", "Dir", "Npix", "_ID")
-        ]
-        rows = self.df().filter(over_pred).select(*data_cols)
+        rows = self._scan(splits).drop(*PARTITION_COLS, "_ID")
+        data_cols = rows.columns
         hist = (
             rows.select(
                 ang2pix_udf(
@@ -1415,6 +1221,7 @@ class Catalog:
                         stacklevel=2,
                     )
 
+        meta = self._invalidate_margins(meta)
         intent_path = self._rebalance_intent_path()
         self._fs.publish(
             intent_path,
@@ -1457,8 +1264,6 @@ class Catalog:
             )
             .join(leaf_tbl, ["Norder", "Npix"])
             .withColumn("Dir", _dir_of(F.col("Npix")))
-            .withColumn("Norder", F.col("Norder").cast("int"))
-            .withColumn("Npix", F.col("Npix").cast("long"))
         )
         indexed = _with_spatial_index(
             rewritten, meta.ra_kw, meta.dec_kw, p19_col="_p19"
@@ -1484,7 +1289,7 @@ class Catalog:
             ),
         )
 
-        self._rebalance_finish(splits, child_cells)
+        self._rebalance_finish(splits)
 
         hips = {o: sorted(ps) for o, ps in meta.hips.items()}
         for o, p in splits:
@@ -1569,7 +1374,7 @@ class Catalog:
 
     def _compact_stage_dir(self, root: str) -> str:
         # sibling of the table root, never under it: readers of
-        # catalog/ and neighbor/ cannot see staged files
+        # catalog/ cannot see staged files
         return f"{self.path}/{root}__compactstage"
 
     def _write_compact_marker(self, payload: dict) -> None:
@@ -1643,8 +1448,7 @@ class Catalog:
         except (OSError, ValueError, KeyError):
             intent = None
         if intent is None or phase != "done":
-            for root in ("catalog", "neighbor"):
-                self._fs.rmtree(self._compact_stage_dir(root))
+            self._fs.rmtree(self._compact_stage_dir("catalog"))
         else:
             self._compact_roll_forward(roots, staged)
         try:
@@ -1654,18 +1458,14 @@ class Catalog:
         return Catalog(self.spark, self.path, self.meta, fs=self._fs)
 
     def compact(self, max_files: int = 1) -> "Catalog":
-        """Merge the small files incremental ingest leaves behind.  The
-        engine's own cell rewrites are one-file-per-cell (the rank
-        kernel's per-cell shuffle guarantees it), but the ``neighbor/``
-        halo table APPENDS one file per batch to every halo cell it
-        touches (catalog.py halo append: ``mode("append")``) — under
-        streaming ingest that grows without bound, and at 100 TB
-        per-cell file count is what governs open/seek cost for every
-        margin-union read.  The main table is covered too, for cells
-        fragmented by external bulk loaders writing the hive layout
-        directly.
+        """Merge the small files of cells fragmented by external bulk
+        loaders writing the hive layout directly (the engine's own cell
+        rewrites are one file per cell: the rank window's per-cell
+        shuffle guarantees it).  At 100 TB per-cell file count governs
+        open/seek cost for every read.  Rows and leaves do not change,
+        so a margin export stays valid and ``neighbor/`` is not touched.
 
-        Only cells (catalog AND neighbor halos) holding more than
+        Only cells holding more than
         ``max_files`` parquet files are read — the merge scan targets
         exactly those files, the rest of the catalog is never opened —
         re-sorted by ``_ID`` (the storage-order contract) and coalesced
@@ -1702,48 +1502,41 @@ class Catalog:
         if self._fs.exists(self._compact_intent_path()):
             return self._reconcile_compact_intent().compact(max_files)
         spark = self.spark
-        plan = {
-            root: census
-            for root in ("catalog", "neighbor")
-            if (census := self._compact_file_census(root, max_files))
-        }
-        if not plan:
+        census = self._compact_file_census("catalog", max_files)
+        if not census:
             return self
+        # the marker keeps the per-root layout _compact_roll_forward reads
+        plan = {"catalog": census}
         self._write_compact_marker({"phase": "pre", "roots": plan})
 
-        staged: dict = {}
-        for root, census in plan.items():
-            base = f"{self.path}/{root}"
-            stage = self._compact_stage_dir(root)
-            self._fs.rmtree(stage)
-            old_paths = [
-                os.path.join(base, cell_rel, fname)
-                for cell_rel, files in census.items()
-                for fname in files
-            ]
-            # read EXACTLY the recorded old files (basePath keeps the
-            # hive partition columns): concurrent external files are
-            # neither read nor replaced, and a replay never
-            # double-reads merged rows
-            df = spark.read.option("basePath", base).parquet(*old_paths)
-            sort_tail = ["_ID"] if "_ID" in df.columns else []
-            (
-                df.repartition("Norder", "Dir", "Npix")
-                .sortWithinPartitions("Norder", "Dir", "Npix", *sort_tail)
-                .write.mode("overwrite")
-                .partitionBy("Norder", "Dir", "Npix")
-                .parquet(stage)
+        base = f"{self.path}/catalog"
+        stage = self._compact_stage_dir("catalog")
+        self._fs.rmtree(stage)
+        old_paths = [
+            os.path.join(base, cell_rel, fname)
+            for cell_rel, files in census.items()
+            for fname in files
+        ]
+        # read EXACTLY the recorded old files (basePath keeps the hive
+        # partition columns): concurrent external files are neither
+        # read nor replaced, and a replay never double-reads merged rows
+        (
+            spark.read.option("basePath", base)
+            .parquet(*old_paths)
+            .repartition("Norder", "Dir", "Npix")
+            .sortWithinPartitions("Norder", "Dir", "Npix", "_ID")
+            .write.mode("overwrite")
+            .partitionBy("Norder", "Dir", "Npix")
+            .parquet(stage)
+        )
+        staged = {"catalog": {}}
+        for cell_rel in census:
+            sdir = os.path.join(stage, cell_rel)
+            staged["catalog"][cell_rel] = (
+                sorted(f for f in self._fs.listdir(sdir) if f.endswith(".parquet"))
+                if self._fs.isdir(sdir)
+                else []
             )
-            staged[root] = {}
-            for cell_rel in census:
-                sdir = os.path.join(stage, cell_rel)
-                staged[root][cell_rel] = (
-                    sorted(
-                        f for f in self._fs.listdir(sdir) if f.endswith(".parquet")
-                    )
-                    if self._fs.isdir(sdir)
-                    else []
-                )
         self._compact_checkpoint("staged")
         self._write_compact_marker(
             {"phase": "done", "roots": plan, "staged": staged}
@@ -1763,7 +1556,9 @@ class Catalog:
         - duplicate ids;
         - spatial-index integrity (``_ID`` ranks contiguous from 0
           within every order-19 pixel);
-        - orphaned halo rows (``neighbor/`` ids with no catalog row);
+        - a ``neighbor/`` directory the committed metadata does not
+          vouch for (``unvouched_margins``: left by a crash between a
+          mutation's withdrawal publish and its removal, or by hand);
         - whether the metadata stores the read schema (``schema_inferred``:
           metadata written before it did; reads then infer it once per
           :meth:`load`).
@@ -1771,9 +1566,9 @@ class Catalog:
         Everything driver-side is plan-sized (cell lists, scalar
         counts).  ``repair=True`` rewrites the metadata (atomic
         rename) so ``n_sources`` and the coverage map match the disk
-        and the schema is stored, purges orphaned halo rows, and clears
-        a stale delete-intent marker — live catalog rows are never
-        modified.  Returns the report dict; after a
+        and the schema is stored, removes an unvouched ``neighbor/``,
+        and clears a stale delete-intent marker — live catalog rows are
+        never modified.  Returns the report dict; after a
         repair the report reflects the PRE-repair state plus
         ``repaired=True``.
         """
@@ -1819,16 +1614,8 @@ class Catalog:
             .filter((F.col("mx") != F.col("n") - 1) | (F.col("mn") != 0))
             .count()
         )
-        orphan_halo = 0
-        if self._fs.exists(f"{self.path}/neighbor"):
-            neigh = self.spark.read.parquet(f"{self.path}/neighbor")
-            orphan_halo = int(
-                neigh.join(
-                    self.df([meta.id_kw]).select(meta.id_kw),
-                    meta.id_kw,
-                    "left_anti",
-                ).count()
-            )
+        vouched = self._committed_meta().margins_exported
+        unvouched = not vouched and self._fs.exists(f"{self.path}/neighbor")
 
         report = {
             "n_sources_meta": meta.n_sources,
@@ -1837,7 +1624,7 @@ class Catalog:
             "cells_disk_only": sorted(disk_cells - meta_cells),
             "duplicate_ids": dup_ids,
             "bad_rank_pixels": rank_bad,
-            "orphan_halo_rows": orphan_halo,
+            "unvouched_margins": unvouched,
             "stale_delete_intent": self._fs.exists(self._delete_intent_path()),
             "stale_rebalance_intent": self._fs.exists(
                 self._rebalance_intent_path()
@@ -1849,19 +1636,17 @@ class Catalog:
                 and meta_cells == disk_cells
                 and dup_ids == 0
                 and rank_bad == 0
-                and orphan_halo == 0
+                and not unvouched
                 and not self._fs.exists(self._delete_intent_path())
                 and not self._fs.exists(self._rebalance_intent_path())
                 and not self._fs.exists(self._compact_intent_path())
             ),
             "repaired": False,
         }
-        if repair and orphan_halo:
-            # a crashed delete can leave halo rows whose source ids are
-            # gone; purging them is part of restoring consistency (the
-            # only data files repair touches — live rows are never
-            # modified, only orphaned halo copies removed)
-            self._purge_halo_orphans()
+        if repair and unvouched:
+            # the only files repair removes: an export no metadata
+            # vouches for describes some other state of the rows
+            self._fs.rmtree(f"{self.path}/neighbor")
             report["repaired"] = True
         if repair and report["stale_delete_intent"]:
             # a crashed delete left its write-ahead marker: the disk
@@ -1881,9 +1666,10 @@ class Catalog:
             hips: dict[int, list[int]] = {}
             for o, p in sorted(disk_cells):
                 hips.setdefault(o, []).append(p)
-            new_meta = replace(meta, n_sources=n_rows, hips=hips)
-            meta_path = f"{self.path}/{meta.cat_name}_meta.json"
-            self._fs.publish(meta_path, new_meta.to_json())
+            new_meta = replace(
+                meta, n_sources=n_rows, hips=hips, margins_exported=vouched
+            )
+            self._fs.publish(self._meta_path(), new_meta.to_json())
             self.meta = new_meta
             self._schema_inferred = False
             report["repaired"] = True

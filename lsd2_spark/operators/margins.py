@@ -227,7 +227,9 @@ def margin_rows(
 
 def write_margin_dataset(df: DataFrame, cat, ra_col: str, dec_col: str) -> None:
     """Materialize {path}/neighbor/ with the catalog's hive layout
-    (reference sink S8, dask_utils.py:246-318)."""
+    (reference sink S8, dask_utils.py:246-318).  Only the export is
+    written here; ``Catalog.export_margins`` and ingest publish the
+    metadata flag that vouches for it."""
     rows = margin_rows(df, cat, ra_col=ra_col, dec_col=dec_col)
     if rows is None:
         return

@@ -233,9 +233,10 @@ def _probe_dim_and_init(
     init = df.filter(col.isNotNull() & (_norm(col) > 0) & (F.size(col) > 0))
     if sample_stride > 1:
         init = init.filter(F.col(id_col) % sample_stride == 0)
-    # ordered by the RAW id column (same sort key, same type semantics
-    # as the k-means init collect); the sorted-limit branch is a
-    # TakeOrdered, so its collected rows arrive in id order
+    # the first rows by the RAW id column (same sort key, same type
+    # semantics as the k-means init collect); Spark keeps no row order
+    # through a Union, so the id rides along and the driver re-sorts
+    # (nulls first, as Spark's ascending sort puts them)
     init = (
         init.select(
             F.lit(1).alias("_part"),
@@ -245,14 +246,16 @@ def _probe_dim_and_init(
         )
         .orderBy(F.col("_oid").asc())
         .limit(n_lists + _INIT_SLACK)
-        .drop("_oid")
     )
-    rows = probe.unionByName(init).collect()
+    rows = probe.unionByName(init, allowMissingColumns=True).collect()
     probe_rows = [r for r in rows if r["_part"] == 0]
     if not probe_rows:
         return None, None
     dim = int(probe_rows[0]["_d"])
-    init_rows = [r for r in rows if r["_part"] == 1]
+    init_rows = sorted(
+        (r for r in rows if r["_part"] == 1),
+        key=lambda r: (r["_oid"] is not None, r["_oid"]),
+    )
     valid = [r for r in init_rows if int(r["_d"]) == dim][:n_lists]
     if len(valid) < n_lists and len(init_rows) >= n_lists + _INIT_SLACK:
         # more rows may exist past the slack window — fall back
@@ -376,6 +379,20 @@ def _bucket_udf(
     return buckets_of
 
 
+def _check_tag_bits(n_bits: int, n_tables: int) -> None:
+    """Bucket ids pack ``(table << n_bits) | code`` into an int32; past
+    31 bits the tags of different tables alias, and the first-match
+    dedup (``array_min(array_intersect(...))``) then emits a pair once
+    per aliased table."""
+    tag_bits = (max(n_tables, 1) - 1).bit_length()  # ceil(log2(n_tables))
+    if n_bits + tag_bits > 31:
+        raise ValueError(
+            f"n_bits={n_bits} with n_tables={n_tables} needs "
+            f"{n_bits + tag_bits} bits of bucket id; at most 31 fit the "
+            "int32 bucket tag (n_bits + ceil(log2(n_tables)) <= 31)"
+        )
+
+
 def hyperplane_lsh_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -395,6 +412,7 @@ def hyperplane_lsh_topk(
     bits buy selectivity.  Pair space shrinks ~2^n_bits/n_tables-fold
     vs brute force.  Recall is tested against the exact baseline.
     """
+    _check_tag_bits(n_bits, n_tables)
     qid = query_id or id_col
     spark = candidates.sparkSession
     dim = _probe_dim(candidates, vec_col)
@@ -718,6 +736,8 @@ def embedding_neardup_candidates(
     pass explicit (n_bits, n_tables) when recall is the binding
     constraint; the floor of 4 keeps small corpora at the measured
     default."""
+    if isinstance(n_bits, int):  # "auto" is capped by _auto_bits
+        _check_tag_bits(n_bits, n_tables)
     spark = df.sparkSession
     dim = _probe_dim(df, vec_col)
     if dim is None:

@@ -201,8 +201,6 @@ def stream_into_catalog(
     catalog,
     auto_rebalance: bool = False,
     rebalance_every: int = 10,
-    auto_compact: bool = False,
-    compact_every: int = 20,
 ) -> "StreamingCatalogWriter":
     """Incremental catalog ingest: each micro-batch appends to an
     existing :class:`~lsd2_spark.catalog.Catalog` via ``foreachBatch`` →
@@ -219,19 +217,9 @@ def stream_into_catalog(
     attempt (append's own replay marker is unaffected — rebalance never
     changes ``n_sources``).
 
-    ``auto_compact=True`` runs ``Catalog.compact()`` after every
-    ``compact_every``-th applied batch: each applied batch APPENDS one
-    file per touched halo cell to ``neighbor/`` (the main table's
-    per-cell rewrite does not fragment), so an unbounded stream
-    otherwise degrades every margin-union read.  compact is
-    content-identical and crash-safe via its staged two-phase intent
-    marker: a crash mid-compact leaves a marker that the NEXT
-    lifecycle-op entry (including the next batch's append) or
-    ``fsck(repair=True)`` reconciles by rolling the staged state
-    forward or discarding it — every intermediate state holds a full
-    copy, so the stream's exactly-once replay contract is unaffected
-    (append's replay marker is independent; compact never changes
-    ``n_sources``).
+    Each batch rewrites its touched cells whole, one file per cell, so
+    the stream never fragments the catalog; the first batch withdraws
+    a margin export (see ``Catalog.export_margins``).
 
     ``stream_df`` must carry the catalog's ra/dec/id columns.  Batches
     are applied serially by Structured Streaming, so metadata updates
@@ -240,7 +228,6 @@ def stream_into_catalog(
     return StreamingCatalogWriter(
         stream_df, catalog, auto_rebalance=auto_rebalance,
         rebalance_every=rebalance_every,
-        auto_compact=auto_compact, compact_every=compact_every,
     )
 
 
@@ -251,21 +238,17 @@ class StreamingCatalogWriter:
         catalog,
         auto_rebalance: bool = False,
         rebalance_every: int = 10,
-        auto_compact: bool = False,
-        compact_every: int = 20,
     ) -> None:
         self._stream_df = stream_df
         self.catalog = catalog
         self._auto_rebalance = auto_rebalance
         self._rebalance_every = max(1, int(rebalance_every))
-        self._auto_compact = auto_compact
-        self._compact_every = max(1, int(compact_every))
         self._applied = 0
         #: per-applied-batch wall breakdown, appended by ``_apply``
         #: (foreachBatch runs on the driver, so plain appends are
-        #: safe): ``{"batch_id", "append_sec", "rebalance_sec",
-        #: "compact_sec"}``.  The bench reads this to separate catalog-
-        #: append cost from Structured Streaming scheduling overhead —
+        #: safe): ``{"batch_id", "append_sec", "rebalance_sec"}``.
+        #: The bench reads this to separate catalog-append cost from
+        #: Structured Streaming scheduling overhead —
         #: without the split, round-over-round throughput drift is
         #: unattributable (VERDICT r11 "What's wrong" #4).  Bounded
         #: (last 10k batches) so a long-lived stream cannot grow driver
@@ -288,17 +271,12 @@ class StreamingCatalogWriter:
             "batch_id": int(batch_id),
             "append_sec": round(time.perf_counter() - t0, 3),
             "rebalance_sec": 0.0,
-            "compact_sec": 0.0,
         }
         self._applied += 1
         if self._auto_rebalance and self._applied % self._rebalance_every == 0:
             t0 = time.perf_counter()
             self.catalog = self.catalog.rebalance()
             stat["rebalance_sec"] = round(time.perf_counter() - t0, 3)
-        if self._auto_compact and self._applied % self._compact_every == 0:
-            t0 = time.perf_counter()
-            self.catalog = self.catalog.compact()
-            stat["compact_sec"] = round(time.perf_counter() - t0, 3)
         self.batch_stats.append(stat)
 
     def start(self, checkpoint_dir: str):

@@ -18,6 +18,7 @@ from lsd2_spark.operators.dedup import (
 from lsd2_spark.operators.similarity import (
     embedding_neardup_candidates,
     embedding_neardup_pairs,
+    hyperplane_lsh_topk,
 )
 
 
@@ -277,3 +278,25 @@ def test_auto_bits_ignores_invalid_vector_rows(spark):
         "auto bits diverged from the 5k-valid-row operating point — "
         "the density estimate is seeing filtered-out rows"
     )
+
+
+def test_lsh_entry_points_reject_aliasing_bucket_tags(spark):
+    """Bucket ids pack ``(table << n_bits) | code`` into an int32: past
+    n_bits + ceil(log2(n_tables)) = 31 the tags of different tables
+    alias and the first-match dedup emits a pair once per aliased
+    table, so both entry points refuse such a configuration."""
+    import pytest
+
+    rows = [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(20)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="<= 31"):
+        embedding_neardup_candidates(
+            df, "embedding", "vec_id", n_bits=28, n_tables=16
+        )
+    with pytest.raises(ValueError, match="<= 31"):
+        hyperplane_lsh_topk(
+            df, df, "embedding", "vec_id", n_bits=30, n_tables=3
+        )
+    # the limit itself is accepted: 27 + ceil(log2(16)) = 29 + ceil(log2(3)) = 31
+    embedding_neardup_candidates(df, "embedding", "vec_id", n_bits=27, n_tables=16)
+    hyperplane_lsh_topk(df, df, "embedding", "vec_id", n_bits=29, n_tables=3)

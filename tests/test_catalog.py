@@ -1,6 +1,6 @@
 """End-to-end catalog engine tests: adaptive ingest, pruned cone
-search vs brute force, margins, and kNN cross-match vs an O(n²)
-oracle (FIXTURES.md F1/F2/F5-style synthetic catalogs)."""
+search vs brute force, the margin export, and kNN cross-match vs an
+O(n²) oracle (FIXTURES.md F1/F2/F5-style synthetic catalogs)."""
 
 from __future__ import annotations
 
@@ -72,6 +72,7 @@ def cats(spark, tmp_path_factory):
         id_col="source_id",
         threshold=2000,
         order_k=7,
+        write_margins=True,
     )
     c2 = partition_catalog(
         spark.createDataFrame(partner),
@@ -412,8 +413,34 @@ def test_crossmatch_margins_off_undermatches(cats):
     assert nomargin <= full
 
 
-def test_margin_dataset_exists_and_is_superset_of_boundary(cats):
+@pytest.fixture(scope="module")
+def reexported(spark, cats, tmp_path_factory):
+    """c1's rows ingested in two interleaved halves: appending the second
+    half withdraws the first half's margin export, then it is exported
+    again from all the rows."""
+    base = cats[0]
+    cat = partition_catalog(
+        spark.createDataFrame(base.iloc[::2]),
+        str(tmp_path_factory.mktemp("reexport") / "cat"),
+        "reexported",
+        ra_col="ra",
+        dec_col="dec",
+        id_col="source_id",
+        threshold=2000,
+        order_k=7,
+        write_margins=True,
+    )
+    cat = cat.append(spark.createDataFrame(base.iloc[1::2]))
+    assert cat.margin_df() is None
+    return cat.export_margins()
+
+
+@pytest.mark.parametrize("which", ["ingested", "reexported"])
+def test_margin_dataset_exists_and_is_superset_of_boundary(cats, request, which):
     base, _, c1, _ = cats
+    if which == "reexported":
+        c1 = request.getfixturevalue("reexported")
+        assert c1.meta.n_sources == len(base)
     mdf = c1.margin_df()
     assert mdf is not None
     m = mdf.toPandas()
@@ -423,9 +450,7 @@ def test_margin_dataset_exists_and_is_superset_of_boundary(cats):
         assert (pix != p).all()
     # every row within margin of a foreign partition boundary is present
     margin = c1.meta.margin_threshold
-    leaves = c1.leaf_list() if hasattr(c1, "leaf_list") else [
-        (o, p) for o, ps in c1.meta.hips.items() for p in ps
-    ]
+    leaves = [(o, p) for o, ps in c1.meta.hips.items() for p in ps]
     got_pairs = set(zip(m["Norder"].astype(int), m["Npix"].astype(int), m["source_id"].astype(int)))
     for o, p in leaves:
         bra, bdec = hpx.boundary_samples(o, [p], n_per_edge=16)
@@ -512,9 +537,13 @@ def test_append_equals_single_shot_ingest(spark, tmp_path):
     assert reloaded.meta.n_sources == n + 500
 
 
-def test_append_extends_margin_dataset(spark, tmp_path):
-    """Appending to a catalog with margins adds the new rows' halo
-    memberships to neighbor/ (owner-exclusion invariant preserved)."""
+def test_append_withdraws_margin_export(spark, tmp_path):
+    """An append withdraws the margin export before it writes: the
+    committed metadata stops vouching for it, neighbor/ is removed and
+    margin_df() is None, also through a handle loaded before the
+    append.  A re-export vouches for it again."""
+    import os
+
     rng = np.random.default_rng(22)
     n = 4000
     pdf = pd.DataFrame({
@@ -527,18 +556,24 @@ def test_append_extends_margin_dataset(spark, tmp_path):
         ra_col="ra", dec_col="dec", id_col="sid",
         threshold=800, order_k=6, write_margins=True,
     )
-    before = cat.margin_df().count()
+    assert cat.meta.margins_exported and cat.margin_df() is not None
     extra = pd.DataFrame({
         "sid": np.arange(n, n + 1000, dtype=np.int64),
         "ra": rng.uniform(0, 360, 1000),
         "dec": np.degrees(np.arcsin(rng.uniform(-1, 1, 1000))),
     })
     cat2 = cat.append(spark.createDataFrame(extra))
-    m = cat2.margin_df().toPandas()
-    assert len(m) > before
-    for (o, p), grp in m.groupby(["Norder", "Npix"]):
-        pix = hpx.ang2pix(int(o), grp["ra"].to_numpy(), grp["dec"].to_numpy())
-        assert (pix != p).all()
+    assert cat2.margin_df() is None
+    assert cat.margin_df() is None  # the stale handle reads the commit
+    assert not os.path.exists(tmp_path / "m" / "neighbor")
+    assert not Catalog.load(spark, str(tmp_path / "m"), "m").meta.margins_exported
+    assert cat2.fsck()["consistent"]
+
+    cat3 = cat2.export_margins()
+    assert Catalog.load(spark, str(tmp_path / "m"), "m").meta.margins_exported
+    m = cat3.margin_df().toPandas()
+    assert (m["sid"] >= n).any()  # the appended rows have halo rows
+    assert cat3.fsck()["consistent"]
 
 
 def test_append_replay_is_exactly_once(spark, tmp_path):
@@ -559,6 +594,7 @@ def test_append_replay_is_exactly_once(spark, tmp_path):
         ra_col="ra", dec_col="dec", id_col="sid",
         threshold=800, order_k=6, write_margins=True,
     )
+    neighbor = tmp_path / "xo" / "neighbor"
     batch = pd.DataFrame({
         "sid": np.arange(n, n + 400, dtype=np.int64),
         "ra": rng.uniform(0, 360, 400),
@@ -568,15 +604,21 @@ def test_append_replay_is_exactly_once(spark, tmp_path):
 
     c1 = cat.append(bdf, batch_id=0)
     snap = c1.df().toPandas().sort_values("sid", ignore_index=True)
+    assert c1.meta.last_batch_id == 0
+    assert c1.margin_df() is None and not neighbor.exists()
+    # re-export: a replay that changes nothing must leave it valid
+    c1 = c1.export_margins()
     halo_snap = c1.margin_df().toPandas().sort_values(
         ["sid", "Norder", "Npix"], ignore_index=True)
-    assert c1.meta.last_batch_id == 0
 
-    # (a) replay with the SAME batch_id — guarded no-op
+    # (a) replay with the SAME batch_id — guarded no-op, no write
     c2 = c1.append(bdf, batch_id=0)
     assert c2.meta.n_sources == c1.meta.n_sources
     again = c2.df().toPandas().sort_values("sid", ignore_index=True)
     pd.testing.assert_frame_equal(snap, again)
+    halo_again = c2.margin_df().toPandas().sort_values(
+        ["sid", "Norder", "Npix"], ignore_index=True)
+    pd.testing.assert_frame_equal(halo_snap, halo_again)
 
     # (b) torn-commit replay: same rows arrive under a new batch_id
     # (as if the metadata commit was lost) — replace-by-id converges
@@ -585,9 +627,8 @@ def test_append_replay_is_exactly_once(spark, tmp_path):
     assert c3.meta.n_sources == c1.meta.n_sources
     final = c3.df().toPandas().sort_values("sid", ignore_index=True)
     pd.testing.assert_frame_equal(snap, final)
-    halo_final = c3.margin_df().toPandas().sort_values(
-        ["sid", "Norder", "Npix"], ignore_index=True)
-    pd.testing.assert_frame_equal(halo_snap, halo_final)
+    # the replay rewrote cells, so it withdrew the export
+    assert c3.margin_df() is None and not neighbor.exists()
 
     # a fresh writer after restart sees the durable high-water mark
     reloaded = Catalog.load(spark, str(tmp_path / "xo"), "xo")
@@ -595,12 +636,13 @@ def test_append_replay_is_exactly_once(spark, tmp_path):
 
 
 def test_genuine_torn_commit_replay_reconciles_everything(spark, tmp_path):
-    """A REAL torn commit: the append crashes at the metadata rename,
-    AFTER the data overwrite and halo append already landed.  The
-    committed metadata then predates the batch while the batch rows are
-    on disk — the case where naive recounting cancels the batch out of
-    n_sources.  Replay from the durable state must converge to exact
-    n_sources, no duplicate rows, and exactly-once halo rows."""
+    """A REAL torn commit: the append crashes at the metadata rename of
+    its commit, AFTER the data overwrite already landed.  The committed
+    metadata then predates the batch while the batch rows are on disk —
+    the case where naive recounting cancels the batch out of n_sources.
+    Replay from the durable state must converge to exact n_sources and
+    no duplicate rows, with the margin export withdrawn throughout."""
+    import json
     import os as _os
 
     import lsd2_spark.catalog as catmod
@@ -617,28 +659,23 @@ def test_genuine_torn_commit_replay_reconciles_everything(spark, tmp_path):
         ra_col="ra", dec_col="dec", id_col="sid",
         threshold=800, order_k=6, write_margins=True,
     )
-    # batch = random rows + rows AT known boundary positions (copied from
-    # the base ingest's halo rows) so the batch is guaranteed to produce
-    # margin rows — a uniform 300-row batch on coarse leaves usually
-    # produces none, which would leave the halo path unexercised
-    boundary = cat.margin_df().select("ra", "dec").toPandas().head(10)
-    n_b = 300 + len(boundary)
-    assert len(boundary) > 0
+    n_b = 310
     batch = pd.DataFrame({
         "sid": np.arange(n, n + n_b, dtype=np.int64),
-        "ra": np.concatenate([rng.uniform(0, 360, 300), boundary["ra"].to_numpy()]),
-        "dec": np.concatenate([
-            np.degrees(np.arcsin(rng.uniform(-1, 1, 300))),
-            boundary["dec"].to_numpy(),
-        ]),
+        "ra": rng.uniform(0, 360, n_b),
+        "dec": np.degrees(np.arcsin(rng.uniform(-1, 1, n_b))),
     })
     bdf = spark.createDataFrame(batch)
 
     real_replace = _os.replace
 
     def crash_at_commit(src, dst):
+        # the batch's commit, not the earlier publish that withdraws the
+        # margin export (that one still carries last_batch_id None)
         if str(dst).endswith("_meta.json"):
-            raise RuntimeError("injected crash at metadata commit")
+            with open(src) as f:
+                if json.load(f)["last_batch_id"] == 1:
+                    raise RuntimeError("injected crash at metadata commit")
         return real_replace(src, dst)
 
     catmod.os.replace = crash_at_commit
@@ -653,6 +690,7 @@ def test_genuine_torn_commit_replay_reconciles_everything(spark, tmp_path):
     assert reloaded.meta.last_batch_id is None
     assert reloaded.meta.n_sources == n  # metadata predates the batch
     assert _os.path.exists(tmp_path / "tc" / "tc_append_intent.json")
+    assert reloaded.margin_df() is None  # withdrawn before the data write
 
     # replay the SAME batch from the durable state (what foreachBatch does)
     c2 = reloaded.append(bdf, batch_id=1)
@@ -662,11 +700,8 @@ def test_genuine_torn_commit_replay_reconciles_everything(spark, tmp_path):
     assert c2.df().select("sid").distinct().count() == n + n_b
     assert not _os.path.exists(tmp_path / "tc" / "tc_append_intent.json")
 
-    # halo rows for the batch landed exactly once (the torn run already
-    # appended them; the replay's anti-join must not duplicate)
-    halo = c2.margin_df().toPandas()
-    assert not halo.duplicated(["sid", "Norder", "Npix"]).any()
-    assert (halo["sid"] >= n).any()  # batch halo rows are present
+    assert c2.margin_df() is None
+    assert not _os.path.exists(tmp_path / "tc" / "neighbor")
 
     reloaded2 = Catalog.load(spark, str(tmp_path / "tc"), "tc")
     assert reloaded2.meta.n_sources == n + n_b
@@ -746,8 +781,8 @@ def test_ingest_rejects_null_coordinates_clearly(spark, tmp_path):
 def test_delete_rows_rewrites_only_touched_cells(spark, tmp_path):
     """Catalog.delete: matching rows disappear, survivors keep valid
     contiguous _ID ranks, n_sources/coverage update, emptied cells'
-    directories vanish, halo rows of deleted ids are purged, and the
-    delete is idempotent."""
+    directories vanish, the margin export is withdrawn, and the delete
+    is idempotent."""
     import os
 
     pdf = _make_catalog_pdf(4000)
@@ -793,10 +828,9 @@ def test_delete_rows_rewrites_only_touched_cells(spark, tmp_path):
     )
     assert p not in cat2.meta.hips.get(o, [])
 
-    # halo rows of deleted sources are gone; survivors' remain
-    m = cat2.margin_df()
-    if m is not None:
-        assert m.filter("source_id < 500").count() == 0
+    # the export described the pre-delete rows: withdrawn
+    assert cat2.margin_df() is None
+    assert not os.path.exists(f"{tmp_path}/cat/neighbor")
 
     # idempotent: re-running the same predicate is a no-op
     cat3 = cat2.delete(victim_pred)
@@ -875,5 +909,6 @@ def test_fsck_detects_and_repairs_metadata_drift(spark, tmp_path):
     assert fixed.meta.n_sources == 2000
     assert 999_999 not in fixed.meta.hips.get(int(first_order), [])
     assert fixed.fsck()["consistent"]
-    # data untouched by repair
+    # data untouched by repair, and the export it vouches for kept
     assert fixed.df().count() == 2000
+    assert fixed.meta.margins_exported and fixed.margin_df() is not None

@@ -1,7 +1,7 @@
 """Catalog.compact: small-file coalescing after repeated appends —
 byte-level file counts, row/_ID/metadata preservation, partition-pruned
-reads, neighbor-halo compaction, idempotence, query parity, and stale
-lifecycle-marker convergence at entry."""
+reads, a margin export left valid, idempotence, query parity, and
+stale lifecycle-marker convergence at entry."""
 
 from __future__ import annotations
 
@@ -32,7 +32,7 @@ def _pdf(n, start=0):
     )
 
 
-def _build_appended(spark, tmp_path, name, batches=3, margins=True):
+def _build_appended(spark, tmp_path, name, batches=3, margins=False):
     cat = partition_catalog(
         spark.createDataFrame(_pdf(1500)), str(tmp_path / name), name,
         ra_col="ra", dec_col="dec", id_col="source_id",
@@ -153,22 +153,25 @@ def test_compact_reads_only_target_cell_files(spark, tmp_path):
     )
 
 
-def test_compact_covers_neighbor_halos(spark, tmp_path):
-    cat = _build_appended(spark, tmp_path, "cpn", margins=True)
+def test_compact_keeps_a_valid_margin_export(spark, tmp_path):
+    """compact changes neither rows nor leaves, so the export stays
+    vouched for and its files are not touched."""
+    cat = _build_appended(spark, tmp_path, "cpn", batches=0, margins=True)
+    assert _fragment_cells(cat)
+    halo_files = _cell_files(cat, "neighbor")
     halo_before = sorted(
         tuple(r) for r in cat.margin_df().select("source_id", "Npix").collect()
     )
-    multi = {
-        c for c, fs in _cell_files(cat, "neighbor").items() if len(fs) > 1
-    }
-    if not multi:
-        pytest.skip("appends did not fragment the neighbor table")
+    assert halo_files and halo_before
     cat2 = cat.compact()
-    assert all(len(fs) == 1 for fs in _cell_files(cat2, "neighbor").values())
+    assert all(len(fs) == 1 for fs in _cell_files(cat2).values())
+    assert cat2.meta.margins_exported
+    assert _cell_files(cat2, "neighbor") == halo_files
     halo_after = sorted(
         tuple(r) for r in cat2.margin_df().select("source_id", "Npix").collect()
     )
     assert halo_after == halo_before
+    assert cat2.fsck()["consistent"]
 
 
 def test_compact_query_parity_and_validation(spark, tmp_path):
@@ -256,9 +259,7 @@ def test_compact_crash_after_done_rolls_forward(spark, tmp_path):
     torn = Catalog.load(spark, path, name)
     # live table untouched while torn; merged copies are in staging
     assert _rows_snapshot(torn) == before
-    assert os.path.isdir(f"{path}/neighbor__compactstage") or os.path.isdir(
-        f"{path}/catalog__compactstage"
-    )
+    assert os.path.isdir(f"{path}/catalog__compactstage")
     healed = torn._reconcile_compact_intent()
     assert _rows_snapshot(healed) == before
     assert all(len(fs) == 1 for fs in _cell_files(healed).values())

@@ -1,16 +1,12 @@
 """Round-7 delete hardening:
 
-1. Predicate-pushed halo purge — a delete predicate over source data
-   columns filters ``neighbor/`` directly (predicate-pushed scan, no
-   join against the full catalog id set); structural-column predicates
-   (Norder/Npix mean the HALO cell there, not the home cell) fall back
-   to the live-id anti-join.  At 100 TB the fast path turns every
-   routine delete from a full-catalog scan + catalog-sized shuffle
-   join into a pruned halo scan.
+1. Margin export — a delete over source columns or over the structural
+   Norder/Npix columns withdraws the ``neighbor/`` export instead of
+   patching it, and a re-export holds no halo row of a deleted source.
 2. Crash-safe delete — a write-ahead intent marker (append's pattern)
-   makes ``n_sources``, the coverage map, emptied directories, and
-   halo orphans converge via the next ``delete`` call or
-   ``fsck(repair=True)``, in every crash window.
+   makes ``n_sources``, the coverage map and emptied directories
+   converge via the next ``delete`` call or ``fsck(repair=True)``, in
+   every crash window, with the export still withdrawn.
 3. NULL-predicate totality — rows where the predicate evaluates NULL
    are KEPT and never silently dropped from the count.
 """
@@ -45,87 +41,50 @@ def _pdf(n=4000):
     )
 
 
-def _build(spark, tmp_path, name, n=4000):
+def _build(spark, tmp_path, name, n=4000, margins=False):
     return partition_catalog(
         spark.createDataFrame(_pdf(n)), str(tmp_path / name), name,
         ra_col="ra", dec_col="dec", id_col="source_id",
-        threshold=800, order_k=4, write_margins=True,
+        threshold=800, order_k=4, write_margins=margins,
     )
 
 
 # ---------------------------------------------------------------------------
-# 1. predicate-pushed halo purge
+# 1. margin export
 # ---------------------------------------------------------------------------
 
 
-def test_halo_purge_pushes_down_source_column_predicate(spark, tmp_path):
-    """For a predicate on halo-present source columns the halo purge
-    must not join against the catalog id set: assert the executed halo
-    plans contain no Join at all, and the results match the fallback
-    semantics (no halo row of a deleted source survives)."""
-    cat = _build(spark, tmp_path, "push")
-    assert os.path.exists(f"{cat.path}/neighbor")
-
-    # capture every executed halo-side plan during the delete by
-    # wrapping the halo write helper
-    plans = []
-    orig = Catalog._overwrite_halo_cells
-
-    def spy(self, halo_keep, halo_touched):
-        plans.append(halo_keep._jdf.queryExecution().analyzed().toString())
-        return orig(self, halo_keep, halo_touched)
-
-    Catalog._overwrite_halo_cells = spy
-    try:
-        cat2 = cat.delete("source_id < 700")
-    finally:
-        Catalog._overwrite_halo_cells = orig
-
-    # fast path taken: the kept-halo plan is a pure filter over the
-    # neighbor scan — no Join operator anywhere
-    assert plans, "halo purge did not run"
-    for plan in plans:
-        assert "Join" not in plan, plan
-
-    # semantics identical to the fallback: no deleted id in the halo
-    m = cat2.margin_df()
-    assert m is not None
-    assert m.filter("source_id < 700").count() == 0
-    assert cat2.df().filter("source_id < 700").count() == 0
-    # and surviving halo rows are intact (superset margin property)
-    assert m.count() > 0
-
-
-def test_halo_purge_falls_back_for_structural_predicate(spark, tmp_path):
-    """Norder/Npix in neighbor/ are the halo cell's coordinates, not
-    the source's home cell — a predicate over them must use the
-    live-id anti-join fallback, and halo rows of deleted sources must
-    still disappear while halo rows merely LOCATED in the deleted cell
-    but belonging to live sources survive."""
-    cat = _build(spark, tmp_path, "fallback")
-    cells = sorted(
+def test_delete_withdraws_margin_export(spark, tmp_path):
+    """Norder/Npix in neighbor/ are the halo cell's coordinates, not the
+    source's home cell, so no predicate can be pushed into the export
+    safely.  A delete over source columns and one over the structural
+    columns each withdraw it; a re-export then holds halo rows of live
+    sources only."""
+    cat = _build(spark, tmp_path, "withdraw", margins=True)
+    o, p = sorted(
         (r["Norder"], r["Npix"])
         for r in cat.df().select("Norder", "Npix").distinct().collect()
-    )
-    o, p = cells[0]
-    victim_ids = {
-        r["source_id"]
-        for r in cat.df().filter(f"Norder = {o} AND Npix = {p}").collect()
-    }
-    assert victim_ids
+    )[0]
+    victim_ids = set()
+    for pred in ("source_id < 700", f"Norder = {o} AND Npix = {p}"):
+        assert cat.margin_df() is not None
+        victims = {r["source_id"] for r in cat.df().filter(pred).collect()}
+        assert victims
+        victim_ids |= victims
+        n0 = cat.meta.n_sources
+        cat = cat.delete(pred)
+        assert cat.margin_df() is None
+        assert not os.path.exists(f"{cat.path}/neighbor")
+        assert cat.meta.n_sources == n0 - len(victims)
+        assert cat.fsck()["consistent"]
+        cat = cat.export_margins()
 
-    cat2 = cat.delete(f"Norder = {o} AND Npix = {p}")
-    m = cat2.margin_df()
-    assert m is not None
+    m = cat.margin_df()
+    assert m.count() > 0
     halo_ids = {r["source_id"] for r in m.select("source_id").collect()}
-    # no deleted source survives in the halo...
+    live = {r["source_id"] for r in cat.df().select("source_id").collect()}
     assert not (halo_ids & victim_ids)
-    # ...but live sources' halo rows in OTHER cells are untouched, and
-    # any live-source halo row that happened to sit in cell (o,p)
-    # was not nuked by a naive structural pushdown
-    live = {r["source_id"] for r in cat2.df().select("source_id").collect()}
     assert halo_ids <= live
-    assert cat2.meta.n_sources == cat.meta.n_sources - len(victim_ids)
 
 
 # ---------------------------------------------------------------------------
@@ -138,32 +97,37 @@ class _Boom(RuntimeError):
 
 
 def _crash_delete(cat, predicate, crash_point):
-    """Run delete but raise at a chosen point: 'after_data' = after the
-    catalog dynamic overwrite, before halo purge and metadata commit;
-    'after_halo' = after the halo purge, before metadata commit."""
-    orig_halo = Catalog._overwrite_halo_cells
+    """Run delete but raise at a chosen point: 'after_data' = right after
+    the catalog dynamic overwrite lands, before the emptied directories
+    are removed and the metadata commit; 'before_commit' = at the
+    metadata commit."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    orig_parquet = DataFrameWriter.parquet
     orig_commit = Catalog._commit_meta
 
-    def halo_boom(self, *a, **k):
-        raise _Boom("crash before halo purge")
+    def parquet_then_boom(self, path, *a, **k):
+        orig_parquet(self, path, *a, **k)
+        if path == f"{cat.path}/catalog":
+            raise _Boom("crash after the data write")
 
     def commit_boom(self, *a, **k):
         raise _Boom("crash before metadata commit")
 
     if crash_point == "after_data":
-        Catalog._overwrite_halo_cells = halo_boom
+        DataFrameWriter.parquet = parquet_then_boom
     Catalog._commit_meta = commit_boom
     try:
         with pytest.raises(_Boom):
             cat.delete(predicate)
     finally:
-        Catalog._overwrite_halo_cells = orig_halo
+        DataFrameWriter.parquet = orig_parquet
         Catalog._commit_meta = orig_commit
 
 
-@pytest.mark.parametrize("crash_point", ["after_data", "after_halo"])
+@pytest.mark.parametrize("crash_point", ["after_data", "before_commit"])
 def test_crashed_delete_converges_via_fsck_repair(spark, tmp_path, crash_point):
-    cat = _build(spark, tmp_path, f"crashf_{crash_point}")
+    cat = _build(spark, tmp_path, f"crashf_{crash_point}", margins=True)
     n0 = cat.meta.n_sources
     n_victims = cat.df().filter("source_id < 600").count()
 
@@ -183,9 +147,7 @@ def test_crashed_delete_converges_via_fsck_repair(spark, tmp_path, crash_point):
     assert final["consistent"], final
     assert healed.meta.n_sources == n0 - n_victims
     assert healed.df().filter("source_id < 600").count() == 0
-    m = healed.margin_df()
-    if m is not None:
-        assert m.filter("source_id < 600").count() == 0
+    assert healed.margin_df() is None  # withdrawn before the data write
 
 
 def test_crashed_delete_converges_via_next_delete(spark, tmp_path):

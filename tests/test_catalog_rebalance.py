@@ -1,6 +1,6 @@
 """Catalog.rebalance: in-place splitting of over-threshold cells —
 row preservation, rank integrity, query parity (cone + boundary-correct
-cross-match), margin superset for the new children, idempotence, and
+cross-match), withdrawal of the margin export, idempotence, and
 two-phase crash recovery (rollback AND roll-forward)."""
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ def _pdf(n=6000):
     )
 
 
-def _build_over(spark, tmp_path, name, margins=True):
+def _build_over(spark, tmp_path, name, margins=False):
     """Catalog ingested at a coarse threshold, then rebalance-tested at
     a lower one (equivalent to appends having pushed cells over)."""
     return partition_catalog(
@@ -94,16 +94,18 @@ def test_rebalance_splits_and_preserves_everything(spark, tmp_path):
     assert _cells(rl) == after_cells
 
 
-def test_rebalance_preserves_crossmatch_and_margins(spark, tmp_path):
-    """The margin rebuild for child cells must keep kNN cross-match
-    boundary-correct: pair sets identical before and after the split."""
-    cat = _build_over(spark, tmp_path, "rbx")
+def test_rebalance_preserves_crossmatch_and_withdraws_margins(spark, tmp_path):
+    """Cross-match builds its halos at query time, so it stays
+    boundary-correct across the split: pair sets identical before and
+    after.  The margin export named the split parents, so rebalance
+    withdraws it."""
+    cat = _build_over(spark, tmp_path, "rbx", margins=True)
     other_pdf = _pdf(1200)
     other_pdf["source_id"] += 1_000_000
     other = partition_catalog(
         spark.createDataFrame(other_pdf), str(tmp_path / "other"), "other",
         ra_col="ra", dec_col="dec", id_col="source_id",
-        threshold=3000, order_k=4, write_margins=True,
+        threshold=3000, order_k=4,
     )
     before = sorted(
         (r[0], r[1])
@@ -119,15 +121,16 @@ def test_rebalance_preserves_crossmatch_and_margins(spark, tmp_path):
         .collect()
     )
     assert after == before
-    # every split-parent halo dir is gone; children have halo dirs
-    m = cat2.margin_df()
-    assert m is not None
+    assert cat2.margin_df() is None
+    assert not os.path.exists(f"{cat.path}/neighbor")
+    assert not Catalog.load(spark, cat.path, "rbx").meta.margins_exported
+    # a re-export describes the children: halos only for live cells
+    m = cat2.export_margins().margin_df()
     halo_cells = {
         (r["Norder"], r["Npix"])
         for r in m.select("Norder", "Npix").distinct().collect()
     }
-    data_cells = set(_cells(cat2))
-    assert halo_cells <= data_cells  # halos only for live cells
+    assert halo_cells and halo_cells <= set(_cells(cat2))
 
 
 class _Boom(RuntimeError):
@@ -352,10 +355,10 @@ def test_rebalance_threshold_zero_raises(spark, tmp_path):
 
 def test_rebalance_reliable_cuts_are_reclaimed(spark, tmp_path):
     """Round-12: under the "auto" lineage-cut default a session with a
-    checkpoint dir makes the halo-rebuild cut a RELIABLE checkpoint;
-    it is consumed entirely by the rewrite, so rebalance must delete
-    it — an auto_rebalance stream would otherwise leave one snapshot
-    per rebalance in the job store."""
+    checkpoint dir makes any lineage cut a RELIABLE checkpoint; an
+    auto_rebalance stream must not leave one snapshot per rebalance in
+    the job store (rebalance no longer cuts at all: it rebuilds no
+    halos)."""
     import os as _os
 
     cat = _build_over(spark, tmp_path, "rbrc")

@@ -401,11 +401,12 @@ def test_stream_into_catalog_incremental_ingest(spark, tmp_path):
 
 def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_path):
     """END-TO-END crash recovery: the foreachBatch sink dies AFTER the
-    batch's data overwrite + halo append but BEFORE the metadata
-    commit (injected exception at the metadata rename), the query
-    fails, and a fresh writer restarted from the SAME checkpoint must
-    replay the uncommitted batch and converge: exact n_sources, no
-    duplicate rows, exactly-once halo rows."""
+    batch's data overwrite but BEFORE the metadata commit (injected
+    exception at the metadata rename), the query fails, and a fresh
+    writer restarted from the SAME checkpoint must replay the
+    uncommitted batch and converge: exact n_sources, no duplicate rows,
+    and the margin export the catalog started with withdrawn."""
+    import json
     import os as _os
 
     import lsd2_spark.catalog as catmod
@@ -423,11 +424,8 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
         ra_col="ra", dec_col="dec", id_col="sid",
         threshold=700, order_k=6, write_margins=True,
     )
-    # two micro-batches; batch 1 includes rows AT known leaf-boundary
-    # positions (copied from the base halo) so it must produce margin
-    # rows — the at-risk payload for the crash window under test
-    boundary = cat.margin_df().select("ra", "dec").toPandas().head(8)
-    assert len(boundary) > 0
+    assert cat.margin_df() is not None
+    # two micro-batches
     inbox = tmp_path / "inbox"
     inbox.mkdir()
     f0 = pd.DataFrame({
@@ -435,15 +433,11 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
         "ra": rng.uniform(0, 360, 400),
         "dec": np.degrees(np.arcsin(rng.uniform(-1, 1, 400))),
     })
-    n1 = 400 + len(boundary)
+    n1 = 408
     f1 = pd.DataFrame({
         "sid": np.arange(3400, 3400 + n1, dtype=np.int64),
-        "ra": np.concatenate(
-            [rng.uniform(0, 360, 400), boundary["ra"].to_numpy()]),
-        "dec": np.concatenate([
-            np.degrees(np.arcsin(rng.uniform(-1, 1, 400))),
-            boundary["dec"].to_numpy(),
-        ]),
+        "ra": rng.uniform(0, 360, n1),
+        "dec": np.degrees(np.arcsin(rng.uniform(-1, 1, n1))),
     })
     for j, f in enumerate([f0, f1]):
         spark.createDataFrame(f).coalesce(1).write.mode("overwrite").parquet(
@@ -457,15 +451,15 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
             .parquet(str(inbox / "*.parquet"))
         )
 
-    # run 1: allow the first metadata commit, crash at the second
+    # run 1: allow batch 0's metadata commit, crash at batch 1's (the
+    # publish that withdraws the export carries no batch id)
     real_replace = _os.replace
-    commits = {"n": 0}
 
     def crash_second_commit(src, dst):
         if str(dst).endswith("_meta.json"):
-            commits["n"] += 1
-            if commits["n"] >= 2:
-                raise RuntimeError("injected crash at metadata commit")
+            with open(src) as f:
+                if json.load(f)["last_batch_id"] == 1:
+                    raise RuntimeError("injected crash at metadata commit")
         return real_replace(src, dst)
 
     ckpt = str(tmp_path / "ckpt")
@@ -491,9 +485,8 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
     assert got.meta.n_sources == total
     assert got.df().count() == total
     assert got.df().select("sid").distinct().count() == total
-    halo = got.margin_df().toPandas()
-    assert not halo.duplicated(["sid", "Norder", "Npix"]).any()
-    assert (halo["sid"] >= 3400).any()  # the at-risk batch-1 halo rows landed
+    assert got.margin_df() is None
+    assert not _os.path.exists(tmp_path / "cat" / "neighbor")
 
     # a second restart from the same checkpoint is a complete no-op
     writer3 = sev.stream_into_catalog(
@@ -908,10 +901,11 @@ def test_streaming_auto_rebalance_keeps_density_contract(spark, tmp_path):
     assert final.fsck()["consistent"]
 
 
-def test_streaming_auto_compact_bounds_halo_files(spark, tmp_path):
-    """Streaming ingest appends one file per batch to every touched
-    halo cell; with auto_compact the final neighbor/ table is back to
-    one file per cell, with the halo row set and catalog untouched."""
+def test_streaming_batches_leave_one_file_per_cell(spark, tmp_path):
+    """Each streamed batch rewrites its touched cells whole, so after N
+    batches every cell, touched or not, holds exactly one Parquet file:
+    a stream needs no compaction.  The first batch withdraws the margin
+    export the catalog was ingested with."""
     import glob
     import os
 
@@ -932,57 +926,42 @@ def test_streaming_auto_compact_bounds_halo_files(spark, tmp_path):
             }
         )
 
+    def files_per_cell(cat):
+        out: dict = {}
+        for f in glob.glob(f"{cat.path}/catalog/Norder=*/Dir=*/Npix=*/*.parquet"):
+            out.setdefault(os.path.dirname(f), set()).add(os.path.basename(f))
+        return out
+
     cat = partition_catalog(
         spark.createDataFrame(batch_pdf(300, 0)),
         str(tmp_path / "cat"), "ccat",
         ra_col="ra", dec_col="dec", id_col="sid",
         threshold=100_000, order_k=1, write_margins=True,
     )
+    before = files_per_cell(cat)
     inbox = tmp_path / "inbox"
     inbox.mkdir()
-    n_batches, per_batch = 2, 150
+    n_batches, per_batch = 3, 150
     for b in range(n_batches):
         spark.createDataFrame(
             batch_pdf(per_batch, 1000 + b * per_batch)
-        ).write.parquet(str(inbox / f"b{b}"))
+        ).coalesce(1).write.parquet(str(inbox / f"b{b}.parquet"))
 
     stream = (
         spark.readStream.schema("sid long, ra double, dec double")
         .option("maxFilesPerTrigger", 1)
-        .parquet(f"{inbox}/*")
+        .parquet(str(inbox / "*.parquet"))
     )
-    # compact on the LAST batch so fragmentation accumulates first
-    writer = sev.stream_into_catalog(
-        stream, cat, auto_compact=True, compact_every=n_batches
-    )
+    writer = sev.stream_into_catalog(stream, cat)
     writer.run_available(str(tmp_path / "ckpt"))
     final = writer.catalog
 
-    per_cell: dict = {}
-    for f in glob.glob(
-        f"{final.path}/neighbor/Norder=*/Dir=*/Npix=*/*.parquet"
-    ):
-        per_cell[os.path.dirname(f)] = per_cell.get(os.path.dirname(f), 0) + 1
-    assert per_cell and all(v == 1 for v in per_cell.values()), per_cell
+    assert len(writer.batch_stats) == n_batches
+    after = files_per_cell(final)
+    touched = [c for c, fs in after.items() if fs != before.get(c)]
+    assert touched
+    assert all(len(fs) == 1 for fs in after.values()), after
     assert final.meta.n_sources == 300 + n_batches * per_batch
+    assert final.margin_df() is None
+    assert not os.path.exists(f"{final.path}/neighbor")
     assert final.fsck()["consistent"]
-    # halo contract after compaction: still a superset of the
-    # from-scratch margin rebuild (the engine's documented guarantee)
-    from lsd2_spark.operators.margins import margin_rows
-
-    # margin_rows expects a SOURCE frame: the owner-partition columns it
-    # emits would be shadowed by the catalog's native partition columns
-    src = final.df().drop("Norder", "Dir", "Npix", "_ID")
-    want = {
-        (r["sid"], r["Norder"], r["Npix"])
-        for r in margin_rows(
-            src, final, ra_col="ra", dec_col="dec"
-        ).collect()
-    }
-    got = {
-        (r["sid"], r["Norder"], r["Npix"])
-        for r in final.margin_df()
-        .select("sid", "Norder", "Npix")
-        .collect()
-    }
-    assert want <= got, want - got
