@@ -62,6 +62,7 @@ from lsd2_spark import healpix as hpx
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist
 from lsd2_spark.plans.partition_map import PartitionMap, compute_partition_map
+from lsd2_spark.plans.tables import plan_table
 from lsd2_spark.sources.fs import LOCAL_FS, LifecycleFS
 
 SPATIAL_INDEX_ORDER = 19
@@ -78,6 +79,34 @@ def _dir_of(pix: Column) -> Column:
 def _dir_value(pix: int) -> int:
     """Scalar twin of :func:`_dir_of` for driver-side path building."""
     return (pix // 10_000) * 10_000
+
+
+def pixel_of_index(index: Column, order: int) -> Column:
+    """The nested pixel at ``order`` of rows whose spatial index is
+    ``index``.  ``_ID = pix19 << RANK_BITS | rank``, so the pixel at any
+    order up to ``SPATIAL_INDEX_ORDER`` is one shift: exact, and
+    evaluated in the JVM (no Python worker)."""
+    if not 0 <= order <= SPATIAL_INDEX_ORDER:
+        raise ValueError(
+            f"order {order} is outside [0, {SPATIAL_INDEX_ORDER}]: the "
+            f"spatial index holds pixels at order {SPATIAL_INDEX_ORDER}"
+        )
+    return F.shiftright(index, RANK_BITS + 2 * (SPATIAL_INDEX_ORDER - order))
+
+
+def _leaf_table(spark: SparkSession, hips: dict[int, list[int]]) -> DataFrame:
+    """Broadcast (Norder, Npix) plan table of the leaves in ``hips``."""
+    orders = sorted(hips)
+    return F.broadcast(
+        plan_table(
+            spark,
+            {
+                "Norder": np.repeat(orders, [len(hips[o]) for o in orders]),
+                "Npix": np.array([p for o in orders for p in hips[o]], dtype=np.int64),
+            },
+            "Norder int, Npix long",
+        )
+    )
 
 
 def _order_probes(kpix_col: Column, orders: list[int], order_k: int) -> Column:
@@ -195,7 +224,7 @@ def spatial_index_col(order: int, ra: Column, dec: Column) -> Column:
 
 
 def _with_spatial_index(
-    df: DataFrame, ra_col: str, dec_col: str, p19_col: str | None = None
+    df: DataFrame, ra_col: str, dec_col: str, p19_col: str
 ) -> DataFrame:
     """Attach ``_ID`` (pix@19 ‖ rank ordered by ra, dec — the
     reference's lexsort, util.py:32) and leave each (Norder, Npix)
@@ -205,21 +234,15 @@ def _with_spatial_index(
     partitioning on (Norder, Npix) already satisfies that clustered
     distribution, so the window shares the single write exchange —
     same shuffle count as the per-cell pandas kernel this replaces,
-    but the full row set no longer round-trips through the Python
-    boundary: the only Arrow traffic left is (ra, dec) → pix@19, and
-    callers that already carry pix@19 pass ``p19_col`` to skip even
-    that.  pix@19 never spans two cells (leaves are ≤ order
-    ``order_k`` < 19), so per-cell ranking is globally correct, and
-    the window's (cell, pix, ra, dec) sort leaves each cell's rows in
-    ``_ID`` order for the partitioned write, as the kernel's lexsort
+    and no row round-trips through the Python boundary here: every
+    caller carries pix@19 in ``p19_col`` (new rows pixelize once, at
+    ingest or append; stored rows shift it out of their ``_ID``).
+    pix@19 never spans two cells (leaves are at most order
+    ``SPATIAL_INDEX_ORDER``), so per-cell ranking is globally correct,
+    and the window's (cell, pix, ra, dec) sort leaves each cell's rows
+    in ``_ID`` order for the partitioned write, as the kernel's lexsort
     did."""
     out_cols = [c for c in df.columns if c != p19_col]
-    if p19_col is None:
-        p19_col = "_p19"
-        df = df.withColumn(
-            p19_col,
-            ang2pix_udf(SPATIAL_INDEX_ORDER, F.col(ra_col), F.col(dec_col)),
-        )
     w = Window.partitionBy("Norder", "Npix", p19_col).orderBy(
         F.col(ra_col).asc(), F.col(dec_col).asc()
     )
@@ -321,12 +344,7 @@ def partition_catalog(
     # bench scale), whose per-action re-serialization from driver
     # Python dominated ingest wall time.
     orders = sorted(pm.hips)
-    leaf_tbl = F.broadcast(
-        spark.createDataFrame(
-            [(int(o), int(p)) for o in orders for p in pm.hips[o]],
-            "Norder int, Npix long",
-        )
-    )
+    leaf_tbl = _leaf_table(spark, pm.hips)
     # spread the write-path scan too: the map side of the groupBy
     # shuffle (Arrow pixelization + probe join) otherwise runs in
     # however few tasks the input arrived as — a no-op at scale,
@@ -453,7 +471,10 @@ class Catalog:
         fs = fs or LOCAL_FS
         if cat_name is None:
             metas = [f for f in fs.listdir(path) if f.endswith("_meta.json")]
-            assert len(metas) == 1, f"ambiguous catalog dir {path}: {metas}"
+            if len(metas) != 1:
+                raise ValueError(
+                    f"ambiguous catalog dir {path}: {metas}; pass cat_name"
+                )
             meta_file = metas[0]
         else:
             meta_file = f"{cat_name}_meta.json"
@@ -581,14 +602,16 @@ class Catalog:
         """Incremental ingest (extension — the reference can only
         re-import from scratch): append rows to an existing catalog.
 
-        - new rows are assigned to the EXISTING leaves via the same
-          one-pass multi-order probe the cross-match planner uses (one
-          broadcast join, no histogram re-scan);
+        - new rows are pixelized once, at the spatial-index order, and
+          assigned to the EXISTING leaves via the same one-pass
+          multi-order probe the cross-match planner uses (one broadcast
+          join, no histogram re-scan);
         - rows outside the original sky coverage open new leaves at
           ``order_k`` (recorded in the metadata);
         - only the touched cells are re-ranked (their existing rows are
           re-read pruned, merged, and re-indexed so ``_ID`` stays the
-          global rank-within-pixel) and rewritten with DYNAMIC partition
+          global rank-within-pixel; their pixel comes out of the stored
+          ``_ID``) and rewritten with DYNAMIC partition
           overwrite — untouched cells are never read or written;
         - a margin export is withdrawn before the first data write
           (see :meth:`export_margins`): the committed metadata stops
@@ -688,17 +711,23 @@ class Catalog:
         # negative shift would be masked mod 64 into garbage and the
         # fine leaves would silently never match)
         probe_order = max([order_k, *orders])
-        leaf_tbl = F.broadcast(
-            spark.createDataFrame(
-                [(int(o), int(p)) for o in orders for p in meta.hips[o]],
-                "Norder int, Npix long",
+        leaf_tbl = _leaf_table(spark, meta.hips)
+        # pixelize each new row ONCE, at the index order: the probe
+        # pixel is a hierarchy shift of it and the spatial index below
+        # reuses it.  Cached because the hit and missed branches both
+        # read it, so the Arrow pass runs once per row, not per branch.
+        withk = (
+            df.withColumn("_p19", ang2pix_udf(SPATIAL_INDEX_ORDER, ra, dec))
+            .withColumn(
+                "_kpix",
+                F.shiftright(F.col("_p19"), 2 * (SPATIAL_INDEX_ORDER - probe_order)),
             )
+            .cache()
         )
-        withk = df.withColumn("_kpix", ang2pix_udf(probe_order, ra, dec))
         cand = withk.withColumn(
             "_pr", F.explode(_order_probes(F.col("_kpix"), orders, probe_order))
         ).select(
-            *df.columns, "_kpix", F.col("_pr.Norder").alias("Norder"),
+            *df.columns, "_p19", "_kpix", F.col("_pr.Norder").alias("Norder"),
             F.col("_pr.Npix").alias("Npix"),
         )
         hit = cand.join(leaf_tbl, ["Norder", "Npix"])  # leaves partition the
@@ -725,8 +754,9 @@ class Catalog:
         new_pix = kp_at(order_k)
         if req:
             req_tbl = F.broadcast(
-                spark.createDataFrame(
-                    [(int(a), int(o)) for a, o in req.items()],
+                plan_table(
+                    spark,
+                    {"_anc": list(req.keys()), "_req": list(req.values())},
                     "_anc long, _req int",
                 )
             )
@@ -743,7 +773,7 @@ class Catalog:
             for o2 in sorted({v for v in req.values()}):
                 new_pix = F.when(F.col("_req") == o2, kp_at(o2)).otherwise(new_pix)
         missed = missed.select(
-            *df.columns, "_kpix",
+            *df.columns, "_p19", "_kpix",
             new_order.alias("Norder"),
             new_pix.alias("Npix"),
         )
@@ -775,7 +805,10 @@ class Catalog:
             c for c in touched
             if c not in new_set or self._fs.isdir(self._leaf_dir(*c))
         ]
-        existing = self._scan(on_disk).select(*data_cols, "Norder", "Npix", "Dir")
+        existing = self._scan(on_disk).select(
+            *data_cols, "Norder", "Npix", "Dir",
+            pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER).alias("_p19"),
+        )
         # Row-level idempotence: drop any existing rows that share an id
         # with the batch (a broadcast anti-join — the batch id set is
         # small relative to the catalog).  Under the globally-unique-id
@@ -824,7 +857,7 @@ class Catalog:
                     ),
                 )
 
-        indexed = _with_spatial_index(merged, meta.ra_kw, meta.dec_kw)
+        indexed = _with_spatial_index(merged, meta.ra_kw, meta.dec_kw, p19_col="_p19")
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -878,6 +911,7 @@ class Catalog:
                 stacklevel=2,
             )
         assigned.unpersist()
+        withk.unpersist()
         return cat
 
     def _delete_intent_path(self) -> str:
@@ -1003,7 +1037,13 @@ class Catalog:
             return self
         touched = [(int(r["Norder"]), int(r["Npix"])) for r in match_counts]
         n_deleted = int(sum(r["count"] for r in match_counts))
-        keep = self._scan(touched).filter(~pred_true).drop("_ID")
+        # re-ranked below; pix@19 comes out of the stored _ID
+        keep = (
+            self._scan(touched)
+            .filter(~pred_true)
+            .withColumn("_p19", pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER))
+            .drop("_ID")
+        )
         meta = self._invalidate_margins(meta)
 
         # write-ahead intent: BEFORE the first mutation, so any crash
@@ -1023,7 +1063,7 @@ class Catalog:
             ),
         )
 
-        indexed = _with_spatial_index(keep, meta.ra_kw, meta.dec_kw)
+        indexed = _with_spatial_index(keep, meta.ra_kw, meta.dec_kw, p19_col="_p19")
         survivors = {(int(r["Norder"]), int(r["Npix"])) for r in keep_counts}
         prev_mode = spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "static"
@@ -1192,15 +1232,18 @@ class Catalog:
         # top-down sweep ingest uses): the planner's leaves are strict
         # descendants of the over parents by construction, because
         # every ancestor of an over parent carries that parent's full
-        # over-threshold count and therefore keeps splitting
-        rows = self._scan(splits).drop(*PARTITION_COLS, "_ID")
-        data_cols = rows.columns
+        # over-threshold count and therefore keeps splitting.  Stored
+        # rows are never re-pixelized: the histogram pixel and pix@19
+        # both shift out of _ID.
+        rows = (
+            self._scan(splits)
+            .withColumn("_p19", pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER))
+            .withColumn("_kpix", pixel_of_index(F.col("_ID"), max_order))
+            .drop(*PARTITION_COLS, "_ID")
+        )
+        data_cols = [c for c in rows.columns if c not in ("_p19", "_kpix")]
         hist = (
-            rows.select(
-                ang2pix_udf(
-                    max_order, F.col(meta.ra_kw), F.col(meta.dec_kw)
-                ).alias("kpix")
-            )
+            rows.select(F.col("_kpix").alias("kpix"))
             .groupBy("kpix")
             .count()
             .collect()
@@ -1234,26 +1277,9 @@ class Catalog:
         # probe ingest uses (one equi-join, each row survives exactly
         # one probe)
         orders = sorted(pm.hips)
-        leaf_tbl = F.broadcast(
-            spark.createDataFrame(
-                [(int(o), int(p)) for o in orders for p in pm.hips[o]],
-                "Norder int, Npix long",
-            )
-        )
+        leaf_tbl = _leaf_table(spark, pm.hips)
         rewritten = (
             rows.withColumn(
-                "_p19",
-                ang2pix_udf(
-                    SPATIAL_INDEX_ORDER, F.col(meta.ra_kw), F.col(meta.dec_kw)
-                ),
-            )
-            .withColumn(
-                "_kpix",
-                F.shiftright(
-                    F.col("_p19"), 2 * (SPATIAL_INDEX_ORDER - max_order)
-                ),
-            )
-            .withColumn(
                 "_pr", F.explode(_order_probes(F.col("_kpix"), orders, max_order))
             )
             .select(
@@ -1554,8 +1580,11 @@ class Catalog:
         - coverage map vs on-disk partition directories (both ways);
         - ``n_sources`` vs the actual row count;
         - duplicate ids;
-        - spatial-index integrity (``_ID`` ranks contiguous from 0
-          within every order-19 pixel);
+        - spatial-index integrity: ``_ID`` ranks contiguous from 0
+          within every order-19 pixel (``bad_rank_pixels``), and every
+          row's ``_ID`` pixel inside its leaf (``misplaced_rows``: the
+          pixel at ``Norder`` shifted out of ``_ID`` is not ``Npix``) —
+          cross-match and the mutations take cell pixels from ``_ID``;
         - a ``neighbor/`` directory the committed metadata does not
           vouch for (``unvouched_margins``: left by a crash between a
           mutation's withdrawal publish and its removal, or by hand);
@@ -1591,9 +1620,23 @@ class Catalog:
             return report
         meta = self.meta
         meta_cells = {(o, p) for o, ps in meta.hips.items() for p in ps}
-        disk = self.df().groupBy("Norder", "Npix").count().collect()
+        # the shift depends on the row's Norder, so it is a SQL
+        # expression rather than pixel_of_index's fixed shift
+        misplaced = F.expr(
+            f"shiftright(_ID, {RANK_BITS} + 2 * ({SPATIAL_INDEX_ORDER} - Norder)) != Npix"
+        )
+        disk = (
+            self.df()
+            .groupBy("Norder", "Npix")
+            .agg(
+                F.count(F.lit(1)).alias("count"),
+                F.count(F.when(misplaced, 1)).alias("misplaced"),
+            )
+            .collect()
+        )
         disk_cells = {(int(r["Norder"]), int(r["Npix"])) for r in disk}
         n_rows = int(sum(r["count"] for r in disk))
+        n_misplaced = int(sum(r["misplaced"] for r in disk))
 
         idc = F.col(meta.id_kw)
         dup_ids = int(
@@ -1624,6 +1667,7 @@ class Catalog:
             "cells_disk_only": sorted(disk_cells - meta_cells),
             "duplicate_ids": dup_ids,
             "bad_rank_pixels": rank_bad,
+            "misplaced_rows": n_misplaced,
             "unvouched_margins": unvouched,
             "stale_delete_intent": self._fs.exists(self._delete_intent_path()),
             "stale_rebalance_intent": self._fs.exists(
@@ -1636,6 +1680,7 @@ class Catalog:
                 and meta_cells == disk_cells
                 and dup_ids == 0
                 and rank_bad == 0
+                and n_misplaced == 0
                 and not unvouched
                 and not self._fs.exists(self._delete_intent_path())
                 and not self._fs.exists(self._rebalance_intent_path())
@@ -1820,8 +1865,8 @@ class Catalog:
     ) -> DataFrame:
         from lsd2_spark.operators.crossmatch import crossmatch_catalogs
 
-        if self.path == other.path:
-            assert exclude_self, (
+        if self.path == other.path and not exclude_self:
+            raise ValueError(
                 "cross-matching a catalog with itself requires "
                 "exclude_self=True (self pairs are dropped, right columns "
                 "get a _2 suffix)"

@@ -16,11 +16,19 @@ catalog.py:181-191):
    clamped so no cell is narrower than the match radius — this keeps
    boundary handling to a single neighbor ring.
 2. **Left assignment**: rows equi-join a broadcast (pixel → cell)
-   table on their pixel at the cell's order.  Left rows are never
+   table on their pixel at the cell's order.  For a catalog that pixel
+   is one ``shiftright`` of the stored spatial index
+   (``_ID = pix19 << 21 | rank``), so the map side runs in the JVM and
+   no row is pixelized again; a raw DataFrame pays one Arrow
+   pixelization pass at the finest plan order.  The table is an
+   Arrow-backed local relation (``plans.tables.plan_table``), so its
+   broadcast is a ``LocalTableScan``: no Spark job, no Python worker.
+   ``_ID`` is dropped once rows have their cell.  Left rows are never
    duplicated — each is matched exactly once (reference
    dask_utils.py:407: margins are drawn from the right side only).
-3. **Right assignment + halo duplication**: the broadcast table for the
-   right side also contains each cell's neighbor pixels, so right rows
+3. **Right assignment + halo duplication**: the same pixel source and
+   the same kind of table, which for the right side also contains
+   each cell's neighbor pixels, so right rows
    within ``dthresh`` of a cell boundary are *duplicated* into that
    cell (conservative center-distance prefilter).  This replaces the
    materialized ``neighbor/`` union (dask_utils.py:404-428) with
@@ -57,9 +65,11 @@ from pyspark.sql.types import (
 )
 
 from lsd2_spark import healpix as hpx
+from lsd2_spark.catalog import PARTITION_COLS, pixel_of_index
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist, gnomonic_xy_np
 from lsd2_spark.plans.partition_map import align_join_cells, complete_left_cover
+from lsd2_spark.plans.tables import plan_table
 
 __all__ = ["crossmatch_catalogs", "crossmatch_dataframes", "max_cell_order_for"]
 
@@ -76,73 +86,90 @@ def max_cell_order_for(dthresh: float) -> int:
     return o
 
 
-def _cell_tables(cells: list[tuple[int, int]], dthresh: float, with_halo: bool):
-    """Per-order assignment tables, built with ONE vectorized
-    neighbors/pix2ang call per order (plan-time cost stays sub-second
-    even at 10⁵ cells).
+_CELL_DDL = (
+    f"pix long, {_CELL_O} int, {_CELL_P} long, _c_ra double, _c_dec double, "
+    "_c_rad double, _primary int"
+)
+
+
+def _cell_tables(
+    cells: list[tuple[int, int]], dthresh: float, with_halo: bool
+) -> dict[str, np.ndarray]:
+    """The (pixel → cell) assignment plan table, as columns (see
+    ``_CELL_DDL``), built with ONE vectorized neighbors/pix2ang call
+    per order, so plan time stays vectorized as the cell count grows.
 
     Primary entry: (pixel == cell pixel) → cell, no distance filter.
     Halo entry (right side only): (neighbor pixel → cell) with the
     cell's center + conservative radius for the distance prefilter.
     """
-    by_order: dict[int, list[tuple[int, int, int, float, float, float, int]]] = {}
-    cells_by_order: dict[int, list[int]] = {}
-    for o, p in cells:
-        cells_by_order.setdefault(o, []).append(p)
-    for o, ps in sorted(cells_by_order.items()):
-        parr = np.array(sorted(ps), dtype=np.int64)
+    cols: dict[str, list[np.ndarray]] = {
+        k: [] for k in ("pix", _CELL_O, _CELL_P, "_c_ra", "_c_dec", "_c_rad", "_primary")
+    }
+    arr = np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
+    for o in np.unique(arr[:, 0]).tolist():
+        parr = arr[arr[:, 0] == o, 1]
         cra, cdec = hpx.pix2ang(o, parr)
-        rad = hpx.max_pixrad(o) + dthresh
-        rows = by_order.setdefault(o, [])
-        for p, a, d in zip(parr.tolist(), cra.tolist(), cdec.tolist()):
-            rows.append((p, o, p, a, d, rad, 1))
+        # row i of the table is cell idx[i]; pix is the probed pixel
+        idx, pix, primary = np.arange(len(parr)), parr, np.ones(len(parr), np.int32)
         if with_halo:
             nbs = hpx.neighbors(o, parr)
-            for p, a, d, nb in zip(parr.tolist(), cra.tolist(), cdec.tolist(), nbs):
-                rows.extend((int(n), o, p, a, d, rad, 0) for n in nb.tolist())
-    return by_order
+            halo_idx = np.repeat(idx, [len(nb) for nb in nbs])
+            pix = np.concatenate([parr, *nbs])
+            idx = np.concatenate([idx, halo_idx])
+            primary = np.concatenate([primary, np.zeros(len(halo_idx), np.int32)])
+        cols["pix"].append(pix)
+        cols[_CELL_O].append(np.full(len(idx), o, np.int32))
+        cols[_CELL_P].append(parr[idx])
+        cols["_c_ra"].append(cra[idx])
+        cols["_c_dec"].append(cdec[idx])
+        cols["_c_rad"].append(np.full(len(idx), hpx.max_pixrad(o) + dthresh))
+        cols["_primary"].append(primary)
+    return {k: np.concatenate(v) for k, v in cols.items()}
 
 
-def _assign(df: DataFrame, ra_col: str, dec_col: str, tables, dthresh: float) -> DataFrame:
+def _assign(
+    df: DataFrame, ra_col: str, dec_col: str, table: dict[str, np.ndarray],
+    index_col: str | None = None,
+) -> DataFrame:
     """Assign rows to plan cells in ONE pass over the input.
 
-    Pixelize once at the finest plan order (one Arrow UDF pass), derive
-    each coarser order's pixel with ``shiftright`` (nested-scheme
+    Take each row's pixel once at the finest plan order, derive each
+    coarser order's pixel with ``shiftright`` (nested-scheme
     hierarchy), and probe a single combined broadcast table keyed on
     (cell order, pixel).  The per-order explode multiplies rows only
     transiently inside the broadcast-hash-join stage (pipelined, no
     shuffle); the previous form re-scanned and re-pixelized the whole
     input once per distinct order — ~5 scans on adaptive catalogs.
+
+    The finest-order pixel comes from ``index_col`` when the caller
+    names one — a catalog's spatial index ``_ID``, from which it is a
+    JVM shift (:func:`~lsd2_spark.catalog.pixel_of_index`; plan cells
+    are never finer than the catalogs' leaves, so never finer than
+    the index order) — and from one Arrow pixelization pass otherwise
+    (raw DataFrames).  The index column is dropped with the other plan
+    columns.
     """
-    spark = df.sparkSession
-    orders = sorted(tables)
+    orders = np.unique(table[_CELL_O]).tolist()
     kmax = orders[-1]
-    tbl = F.broadcast(
-        spark.createDataFrame(
-            [r for o in orders for r in tables[o]],
-            f"pix long, {_CELL_O} int, {_CELL_P} long, _c_ra double, "
-            "_c_dec double, _c_rad double, _primary int",
-        )
-    )
-    # deterministic=False: the pixel feeds the broadcast-join key, and
-    # the inferred IsNotNull(pix) constraint would otherwise be pushed
-    # below this projection, running the Arrow pixelization twice per
-    # row on every assign side (observed in the q21 plan)
-    pixk = ang2pix_udf(kmax, F.col(ra_col), F.col(dec_col), deterministic=False)
+    tbl = F.broadcast(plan_table(df.sparkSession, table, _CELL_DDL))
+    plan_cols = ["pix", "_c_ra", "_c_dec", "_c_rad", "_primary"]
+    if index_col is not None:
+        pixk = pixel_of_index(F.col(index_col), kmax)
+        plan_cols.append(index_col)
+    else:
+        # deterministic=False: the pixel feeds the broadcast-join key,
+        # and the inferred IsNotNull(pix) constraint would otherwise be
+        # pushed below this projection, running the Arrow pixelization
+        # twice per row on every assign side (observed in the q21 plan)
+        pixk = ang2pix_udf(kmax, F.col(ra_col), F.col(dec_col), deterministic=False)
     if len(orders) == 1:
         # single-order plan: no probe explode, and the order column can
         # stay out of the join key (it is constant; the broadcast table
         # supplies it) — measured ~30% cheaper than the general path on
         # the q21 bench
         withpix = df.withColumn("pix", pixk)
-        j = withpix.join(tbl, "pix").filter(
-            (F.col("_primary") == 1)
-            | (
-                gc_dist(F.col(ra_col), F.col(dec_col), F.col("_c_ra"), F.col("_c_dec"))
-                <= F.col("_c_rad")
-            )
-        )
-        return j.drop("pix", "_c_ra", "_c_dec", "_c_rad", "_primary")
+        keys = ["pix"]
     else:
         probes = F.array(
             *[
@@ -160,14 +187,15 @@ def _assign(df: DataFrame, ra_col: str, dec_col: str, tables, dthresh: float) ->
             .withColumn(_CELL_O, F.col("_probe.o"))
             .drop("_pixk", "_probe")
         )
-    j = withpix.join(tbl, ["pix", _CELL_O]).filter(
+        keys = ["pix", _CELL_O]
+    j = withpix.join(tbl, keys).filter(
         (F.col("_primary") == 1)
         | (
             gc_dist(F.col(ra_col), F.col(dec_col), F.col("_c_ra"), F.col("_c_dec"))
             <= F.col("_c_rad")
         )
     )
-    return j.drop("pix", "_c_ra", "_c_dec", "_c_rad", "_primary")
+    return j.drop(*plan_cols)
 
 
 def _knn_kernel_factory(
@@ -365,13 +393,57 @@ def crossmatch_dataframes(
     are pair-set identical (bench ``crossmatch_skew`` ``auto_*``
     fields); splits never exceed ``max_cell_order_for(dthresh)``, so
     halos stay valid by the same argument as above."""
-    assert n_neighbors >= 1 and 0 < dthresh <= hpx.min_pixwidth(0), (
-        "dthresh must be positive and below the base-pixel width"
+    return _crossmatch(
+        left, right, hips_left, hips_right, l_ra, l_dec, l_id, r_ra, r_dec, r_id,
+        n_neighbors=n_neighbors, dthresh=dthresh, left_name=left_name,
+        right_name=right_name, left_cols=left_cols, right_cols=right_cols,
+        evaluate_margins=evaluate_margins, exclude_same_id=exclude_same_id,
+        max_pairs_per_cell=max_pairs_per_cell, debug=debug,
     )
+
+
+def _crossmatch(
+    left: DataFrame,
+    right: DataFrame,
+    hips_left: dict[int, list[int]],
+    hips_right: dict[int, list[int]],
+    l_ra: str,
+    l_dec: str,
+    l_id: str,
+    r_ra: str,
+    r_dec: str,
+    r_id: str,
+    *,
+    n_neighbors: int,
+    dthresh: float,
+    left_name: str,
+    right_name: str,
+    left_cols: list[str] | None,
+    right_cols: list[str] | None,
+    evaluate_margins: bool,
+    exclude_same_id: bool,
+    max_pairs_per_cell: float | None,
+    debug: bool,
+    l_index: str | None = None,
+    r_index: str | None = None,
+) -> DataFrame:
+    """:func:`crossmatch_dataframes`, where each side may name a
+    spatial-index column (``l_index``/``r_index``, a catalog's ``_ID``)
+    from which :func:`_assign` shifts the cell pixel instead of
+    pixelizing the row.  The index column is not an output column: it
+    is left out of ``left_cols``/``right_cols`` and dropped before the
+    kernel."""
+    if n_neighbors < 1:
+        raise ValueError(f"n_neighbors must be >= 1, got {n_neighbors}")
+    if not 0 < dthresh <= hpx.min_pixwidth(0):
+        raise ValueError(
+            f"dthresh must be positive and at most the base-pixel width "
+            f"{hpx.min_pixwidth(0):.4g} deg, got {dthresh}"
+        )
     left_cols = _ensure_cols(left_cols, left, [l_ra, l_dec, l_id])
     right_cols = _ensure_cols(right_cols, right, [r_ra, r_dec, r_id])
-    left = left.select(*left_cols)
-    right = right.select(*right_cols)
+    left = left.select(*left_cols, *([l_index] if l_index else []))
+    right = right.select(*right_cols, *([r_index] if r_index else []))
 
     # reference catalog.py:237-241: wide results are usually a mistake
     if len(left_cols) + len(right_cols) + 3 > 50:
@@ -412,11 +484,11 @@ def crossmatch_dataframes(
         cells = cells[:5]
     if not cells:
         schema = _prefixed_schema(left, right, left_cols, right_cols, left_name, right_name)
-        return left.sparkSession.createDataFrame([], schema)
+        return plan_table(left.sparkSession, {f.name: [] for f in schema.fields}, schema)
 
-    l_assigned = _assign(left, l_ra, l_dec, _cell_tables(cells, dthresh, False), dthresh)
+    l_assigned = _assign(left, l_ra, l_dec, _cell_tables(cells, dthresh, False), l_index)
     r_assigned = _assign(
-        right, r_ra, r_dec, _cell_tables(cells, dthresh, evaluate_margins), dthresh
+        right, r_ra, r_dec, _cell_tables(cells, dthresh, evaluate_margins), r_index
     )
 
     schema = _prefixed_schema(left, right, left_cols, right_cols, left_name, right_name)
@@ -453,11 +525,12 @@ def crossmatch_catalogs(
     refinement (see :func:`crossmatch_dataframes`).
     """
     m1, m2 = cat1.meta, cat2.meta
-    drop = ["Norder", "Dir", "Npix", "_ID"]
-    left = cat1.df(columns).drop(*drop)
-    right = cat2.df(other_columns).drop(*drop)
+    # _ID stays until the cell assignment, which shifts each row's cell
+    # pixel out of it: neither side is pixelized again
+    left = cat1.df(columns).drop(*PARTITION_COLS)
+    right = cat2.df(other_columns).drop(*PARTITION_COLS)
     rname = m2.cat_name if m2.cat_name != m1.cat_name else f"{m2.cat_name}_2"
-    return crossmatch_dataframes(
+    return _crossmatch(
         left,
         right,
         m1.hips,
@@ -468,6 +541,10 @@ def crossmatch_catalogs(
         r_ra=m2.ra_kw,
         r_dec=m2.dec_kw,
         r_id=m2.id_kw,
+        left_cols=[c for c in left.columns if c != "_ID"],
+        right_cols=[c for c in right.columns if c != "_ID"],
+        l_index="_ID",
+        r_index="_ID",
         n_neighbors=n_neighbors,
         dthresh=dthresh,
         left_name=m1.cat_name,

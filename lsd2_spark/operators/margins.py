@@ -34,12 +34,14 @@ from __future__ import annotations
 import warnings
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsd2_spark import healpix as hpx
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist
+from lsd2_spark.plans.tables import plan_table
 
 __all__ = ["margin_candidate_entries", "write_margin_dataset", "margin_ring_order"]
 
@@ -73,11 +75,19 @@ def _border_children(pix: int, depth: int) -> np.ndarray:
     return (np.int64(pix) << np.int64(2 * depth)) + local
 
 
+_RING_DDL = (
+    "ring_pix long, Norder int, Npix long, "
+    "_b_ra array<double>, _b_dec array<double>, _b_eps double"
+)
+
+
 def margin_candidate_entries(
     hips: dict[int, list[int]], margin_deg: float
-) -> dict[int, list[tuple]]:
-    """Candidate ring table with local boundary geometry:
-    ``{ring_order: [(ring_pix, Norder, Npix, b_ra, b_dec, eps), ...]}``.
+) -> dict[int, dict[str, object]]:
+    """Candidate ring table with local boundary geometry, as plan-table
+    columns per ring order (see ``_RING_DDL``):
+    ``{ring_order: {"ring_pix", "Norder", "Npix", "_b_ra", "_b_dec",
+    "_b_eps"}}``, where ``_b_ra``/``_b_dec`` are Arrow list arrays.
 
     ``b_ra``/``b_dec`` are the owner-boundary samples within reach of
     the ring pixel (dense at ~margin/2 arc spacing, but only the local
@@ -87,10 +97,10 @@ def margin_candidate_entries(
     ``margin + eps`` of some sample (triangle inequality), so row-time
     filtering at that threshold is a guaranteed superset of the exact
     margin set while dropping ring-interior rows the whole-pixel halo
-    used to keep.
+    used to keep.  Ring orders without candidates are left out.
     """
     ka = margin_ring_order(margin_deg)
-    out: dict[int, list[tuple]] = {}
+    parts: dict[int, dict[str, list[np.ndarray]]] = {}
     under_covered = False
     for o, pixels in sorted(hips.items()):
         kf = max(o + 1, ka)
@@ -109,7 +119,6 @@ def margin_candidate_entries(
         keep = (ring_pix >> (2 * (kf - o))) != ring_owner
         pairs = np.unique(np.stack([ring_pix[keep], ring_owner[keep]], 1), axis=0)
         if len(pairs) == 0:
-            out.setdefault(kf, [])
             continue
         ring_pix, ring_owner = pairs[:, 0], pairs[:, 1]
 
@@ -124,26 +133,24 @@ def margin_candidate_entries(
         cra, cdec = hpx.pix2ang(kf, ring_pix)
         window = margin_deg + hpx.max_pixrad(kf)
 
-        rows = out.setdefault(kf, [])
+        acc = parts.setdefault(
+            kf,
+            {k: [] for k in ("ring_pix", "Norder", "Npix", "_n", "_b_ra", "_b_dec", "_b_eps")},
+        )
         for i, ow in enumerate(uowners.tolist()):
             sel = np.nonzero(ring_owner == ow)[0]
             d = hpx.gc_dist_deg(
                 cra[sel][:, None], cdec[sel][:, None], bra[i][None, :], bdec[i][None, :]
             )
+            # row k of `local` marks the samples ring entry sel[k] keeps
             local = d <= window + gap_max[i]
-            eps = float(gap_max[i] / 2.0)
-            for k, idx in enumerate(sel.tolist()):
-                m = local[k]
-                rows.append(
-                    (
-                        int(ring_pix[idx]),
-                        int(o),
-                        int(ow),
-                        bra[i][m].tolist(),
-                        bdec[i][m].tolist(),
-                        eps,
-                    )
-                )
+            acc["ring_pix"].append(ring_pix[sel])
+            acc["Norder"].append(np.full(len(sel), o))
+            acc["Npix"].append(np.full(len(sel), ow))
+            acc["_n"].append(local.sum(axis=1))
+            acc["_b_ra"].append(np.broadcast_to(bra[i], local.shape)[local])
+            acc["_b_dec"].append(np.broadcast_to(bdec[i], local.shape)[local])
+            acc["_b_eps"].append(np.full(len(sel), gap_max[i] / 2.0))
     if under_covered:
         warnings.warn(
             "margin_threshold exceeds the pixel size of the deepest "
@@ -151,6 +158,13 @@ def margin_candidate_entries(
             "(the reference has the same resolution limit, "
             "partitioner.py:259-261)"
         )
+    out: dict[int, dict[str, object]] = {}
+    for kf, acc in parts.items():
+        cols = {k: np.concatenate(v) for k, v in acc.items()}
+        offsets = pa.array(np.concatenate([[0], np.cumsum(cols.pop("_n"))]), pa.int32())
+        for k in ("_b_ra", "_b_dec"):
+            cols[k] = pa.ListArray.from_arrays(offsets, pa.array(cols[k], pa.float64()))
+        out[kf] = cols
     return out
 
 
@@ -185,16 +199,8 @@ def margin_rows(
         return None
     margin = float(cat.meta.margin_threshold)
     parts = []
-    for kf, rows in entries.items():
-        if not rows:
-            continue
-        tbl = F.broadcast(
-            spark.createDataFrame(
-                rows,
-                "ring_pix long, Norder int, Npix long, "
-                "_b_ra array<double>, _b_dec array<double>, _b_eps double",
-            )
-        )
+    for kf, cols in entries.items():
+        tbl = F.broadcast(plan_table(spark, cols, _RING_DDL))
         if not refine:
             tbl = tbl.drop("_b_ra", "_b_dec", "_b_eps").dropDuplicates(
                 ["ring_pix", "Norder", "Npix"]

@@ -398,12 +398,48 @@ def test_crossmatch_matches_bruteforce(cats, k, dthresh):
         zip(got["cat1_source_id"].astype(int), got["cat2_source_id"].astype(int))
     )
     assert pairs_got == pairs_want
+    assert not [c for c in got.columns if c.endswith("_ID")]
     for (a, b), dist in zip(pairs_got, got["_DIST"]):
         pass  # distances spot-checked below
     # exact distances match the oracle
     for _, row in got.iterrows():
         key = (int(row["cat1_source_id"]), int(row["cat2_source_id"]))
         assert abs(dist_want[key] - row["_DIST"]) < 1e-9
+
+
+def test_crossmatch_with_column_subset_drops_the_index(cats):
+    """The spatial index rides through the cell assignment and is
+    dropped before the kernel: a column subset returns only the asked
+    and required columns, with the brute-force pair set."""
+    base, partner, c1, c2 = cats
+    got = c1.cross_match(
+        c2, n_neighbors=2, dthresh=0.02, columns=["mag"], other_columns=["flux"]
+    ).toPandas()
+    assert sorted(got.columns) == sorted([
+        "cat1_mag", "cat1_ra", "cat1_dec", "cat1_source_id",
+        "cat2_flux", "cat2_ra", "cat2_dec", "cat2_source_id",
+        "hips_k", "hips_pix", "_DIST",
+    ])
+    pairs_want, _ = _brute_knn(base, partner, 2, 0.02)
+    assert set(zip(got["cat1_source_id"].astype(int), got["cat2_source_id"].astype(int))) == pairs_want
+
+
+def test_catalog_crossmatch_map_side_runs_in_the_jvm(cats):
+    """A catalog cross-match takes cell pixels from _ID and broadcasts
+    Arrow-backed plan tables: no Python evaluation node, no RDD scan,
+    and every broadcast side is a local relation."""
+    _, _, c1, c2 = cats
+    out = c1.cross_match(c2, n_neighbors=1, dthresh=0.01)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD"):
+        assert node not in plan, plan
+    lines = plan.splitlines()
+    final = lines[: next(i for i, ln in enumerate(lines) if "Initial Plan" in ln)]
+    broadcasts = [i for i, ln in enumerate(final) if "BroadcastExchange" in ln]
+    assert len(broadcasts) == 2, plan
+    for i in broadcasts:
+        assert "LocalTableScan" in final[i + 1], plan
 
 
 def test_crossmatch_margins_off_undermatches(cats):
@@ -867,6 +903,42 @@ def test_append_rejects_schema_drift(spark, tmp_path):
     # conforming batch still appends
     cat2 = cat.append(spark.createDataFrame(batch))
     assert cat2.meta.n_sources == cat.meta.n_sources + 100
+
+
+def test_fsck_reports_rows_whose_index_pixel_is_outside_their_leaf(spark, tmp_path):
+    """Cross-match trusts that every row's _ID shifted to its leaf's
+    order is the leaf's Npix; fsck checks it.  One row of one leaf is
+    rewritten by hand with an _ID from another leaf (rank 0 of an empty
+    order-19 pixel, so the rank check stays clean)."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdf = _make_catalog_pdf(2000)
+    cat = partition_catalog(
+        spark.createDataFrame(pdf), str(tmp_path / "cat"), "idcat",
+        ra_col="ra", dec_col="dec", id_col="source_id",
+        threshold=800, order_k=4,
+    )
+    rep = cat.fsck()
+    assert rep["consistent"] and rep["misplaced_rows"] == 0, rep
+
+    (o, p), (o2, p2) = sorted((o, p) for o, ps in cat.meta.hips.items() for p in ps)[:2]
+    f = sorted(glob.glob(cat._leaf_dir(o, p) + "/*.parquet"))[0]
+    t = pq.read_table(f)
+    ids = t.column("_ID").to_numpy().copy()
+    # the last pixel at order 19 inside the other leaf holds no row
+    ids[0] = (((p2 + 1) << (2 * (19 - o2))) - 1) << 21
+    pq.write_table(t.set_column(t.schema.get_field_index("_ID"), "_ID", pa.array(ids)), f)
+    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+    if os.path.exists(crc):  # Hadoop's checksum of the old bytes
+        os.remove(crc)
+
+    rep2 = Catalog.load(spark, str(tmp_path / "cat"), "idcat").fsck()
+    assert rep2["misplaced_rows"] == 1 and not rep2["consistent"], rep2
+    assert rep2["bad_rank_pixels"] == 0 and rep2["n_rows_disk"] == 2000
 
 
 def test_fsck_detects_and_repairs_metadata_drift(spark, tmp_path):

@@ -85,7 +85,7 @@ def test_self_crossmatch(spark, tmp_path):
         "dec": RNG.uniform(-5, 5, n),
     })
     cat = _cat(spark, tmp_path, "selfcat", pdf)
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="exclude_self"):
         cat.cross_match(cat)  # guard still fires without the flag
     got = cat.cross_match(cat, n_neighbors=1, dthresh=0.5, exclude_self=True).toPandas()
     # suffixed right columns, and never a self pair
@@ -97,6 +97,65 @@ def test_self_crossmatch(spark, tmp_path):
                         pdf["ra"].to_numpy()[None, :], pdf["dec"].to_numpy()[None, :])
     np.fill_diagonal(d, np.inf)
     assert len(got) == (d.min(axis=1) < 0.5).sum()
+
+
+def test_bad_input_raises_value_error_not_assert(spark, tmp_path):
+    """Input checks must survive ``python -O``, which strips asserts."""
+    from lsd2_spark.operators.crossmatch import crossmatch_dataframes
+
+    df = spark.createDataFrame(pd.DataFrame({"sid": [1], "ra": [1.0], "dec": [1.0]}))
+    hips = {0: list(range(12))}
+    for bad in ({"n_neighbors": 0}, {"dthresh": 0.0}, {"dthresh": 90.0}):
+        with pytest.raises(ValueError):
+            crossmatch_dataframes(df, df, hips, hips, "ra", "dec", "sid",
+                                  "ra", "dec", "sid", **bad)
+    for name in ("a", "b"):
+        (tmp_path / f"{name}_meta.json").write_text("{}")
+    with pytest.raises(ValueError, match="ambiguous"):
+        Catalog.load(spark, str(tmp_path))
+
+
+def _pole_and_edge_rows(first_id: int, n_random: int) -> pd.DataFrame:
+    """Both poles, the polar-cap/equatorial-belt latitude, the equator,
+    face-boundary meridians and ra just below 360, plus random rows."""
+    cap = np.degrees(np.arcsin(2.0 / 3.0))
+    grid = [(ra, dec) for ra in np.arange(0.0, 360.0, 22.5)
+            for dec in (90.0, -90.0, cap, -cap, 0.0)]
+    grid += [(ra, dec) for ra in (0.0, 45.0, 90.0, 315.0, 359.9999999)
+             for dec in np.linspace(-89.9, 89.9, 7)]
+    ra = np.concatenate([[g[0] for g in grid], RNG.uniform(0, 360, n_random)])
+    dec = np.concatenate([[g[1] for g in grid],
+                          np.degrees(np.arcsin(RNG.uniform(-1, 1, n_random)))])
+    return pd.DataFrame({"sid": np.arange(len(ra), dtype=np.int64) + first_id,
+                         "ra": ra, "dec": dec})
+
+
+def _assert_index_pixels_exact(cat):
+    """Every row's _ID shifted to order k is healpix.ang2pix(k) of its
+    position, for k = 0..19, and the shift at Norder is its Npix."""
+    pdf = cat.df().select("ra", "dec", "_ID", "Norder", "Npix").toPandas()
+    ids = pdf["_ID"].to_numpy(dtype=np.int64)
+    for k in range(20):
+        want = hpx.ang2pix(k, pdf["ra"].to_numpy(), pdf["dec"].to_numpy())
+        np.testing.assert_array_equal(ids >> (21 + 2 * (19 - k)), want, err_msg=f"k={k}")
+    leaf = ids >> (21 + 2 * (19 - pdf["Norder"].to_numpy(dtype=np.int64)))
+    np.testing.assert_array_equal(leaf, pdf["Npix"].to_numpy())
+
+
+def test_index_pixel_is_exact_through_append_and_rebalance(spark, tmp_path):
+    """Cross-match, append, delete and rebalance take pixels from _ID
+    instead of pixelizing rows again: the shift must equal ang2pix at
+    every order, at poles and face edges, after each mutation that
+    re-indexes rows."""
+    cat = _cat(spark, tmp_path, "edges", _pole_and_edge_rows(0, 400), threshold=120)
+    _assert_index_pixels_exact(cat)
+    cat = cat.append(spark.createDataFrame(_pole_and_edge_rows(100_000, 400)))
+    _assert_index_pixels_exact(cat)
+    before = cat.meta.hips
+    cat = cat.rebalance(threshold=40, max_order=9)
+    assert cat.meta.hips != before  # something was split
+    _assert_index_pixels_exact(cat)
+    assert cat.fsck()["consistent"]
 
 
 def test_notebook_parity_flow(spark, tmp_path):

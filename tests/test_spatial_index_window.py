@@ -1,14 +1,14 @@
 """The round-13 JVM-window spatial index (`_with_spatial_index`) must
 compute the exact `_ID`s the per-cell pandas kernel did (the
 reference's lexsort semantics, hipscat/util.py:14-69) while keeping the
-full row set out of the Python boundary: the only Arrow traffic is the
-narrow (ra, dec) -> pix@19 pass, shared with partition assignment."""
+full row set out of the Python boundary: the helper takes pix@19 from
+its caller (ingest's and append's one (ra, dec) -> pix@19 pass for new
+rows, a shift of the stored `_ID` for rows already in the catalog)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from lsd2_spark import healpix as hpx
@@ -71,8 +71,7 @@ def test_ingest_ids_match_reference_lexsort_semantics(spark, tmp_path):
     assert max(i & ((1 << RANK_BITS) - 1) for i in got.values()) >= 63
 
 
-@pytest.mark.parametrize("pass_p19", [False, True])
-def test_window_index_plan_stays_out_of_python(spark, pass_p19):
+def test_window_index_plan_stays_out_of_python(spark):
     df = spark.createDataFrame(_pdf(400))
     df = df.withColumn("Norder", F.lit(3)).withColumn(
         "Npix",
@@ -80,19 +79,14 @@ def test_window_index_plan_stays_out_of_python(spark, pass_p19):
             F.col("sid") % F.lit(4), 0
         ).cast("long"),
     )
-    if pass_p19:
-        # any precomputed JVM long works here — the point is that the
-        # helper itself adds no Arrow pass when handed a pixel column
-        df = df.withColumn("_p19", (F.col("sid") % F.lit(1000)).cast("long"))
-        out = _with_spatial_index(df, "ra", "dec", p19_col="_p19")
-    else:
-        out = _with_spatial_index(df, "ra", "dec")
+    # any precomputed JVM long works here — the point is that the
+    # helper itself adds no Arrow pass: callers hand it pix@19
+    df = df.withColumn("_p19", (F.col("sid") % F.lit(1000)).cast("long"))
+    out = _with_spatial_index(df, "ra", "dec", p19_col="_p19")
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the full row set must not round-trip through Python: no grouped
     # pandas kernel, ranking happens in a JVM window
     assert "FlatMapGroupsInPandas" not in plan
     assert "Window" in plan
-    # only the narrow pixelization crosses the Arrow boundary, and a
-    # caller that already carries pix@19 pays no Arrow pass at all
-    assert plan.count("ArrowEvalPython") == (0 if pass_p19 else 1)
+    assert "ArrowEvalPython" not in plan
     assert "_p19" not in out.columns and "_ID" in out.columns
