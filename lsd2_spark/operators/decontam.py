@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lsd2_spark.functions.arrays import let
 from lsd2_spark.functions.portable_hash import WS
 
 
@@ -42,15 +43,20 @@ def word_ngrams(text: Column, n: int) -> Column:
     """Lower-cased whitespace-token word ``n``-grams as an array of
     space-joined strings; empty array when the document has fewer than
     ``n`` tokens (guards ``sequence``'s descending-range behavior)."""
-    t = F.split(F.lower(text), WS)
-    m = F.size(t) - F.lit(n - 1)
-    return F.when(
-        m >= 1,
-        F.transform(
-            F.sequence(F.lit(1), m),
-            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+
+    def grams(t: Column) -> Column:
+        m = F.size(t) - F.lit(n - 1)
+        return F.when(
+            m >= 1,
+            F.transform(
+                F.sequence(F.lit(1), m),
+                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    # the token array is bound once: closed over directly, it would be
+    # re-split at every n-gram position (quadratic in document length)
+    return let(F.split(F.lower(text), WS), grams)
 
 
 def decontaminate(

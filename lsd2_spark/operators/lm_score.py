@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lsd2_spark.functions.arrays import let
 from lsd2_spark.functions.portable_hash import WS
 
 from lsd2_spark.functions.numeric import round6
@@ -48,13 +49,19 @@ def _char_ngrams(text_col: str, n: int) -> "F.Column":
         F.lit(" "),  # BOS pad so leading chars get context
         F.regexp_replace(F.lower(F.col(text_col)), WS, " "),
     )
-    m = F.length(t) - F.lit(n - 1)
-    return F.when(
-        m >= 1,
-        F.transform(
-            F.sequence(F.lit(1), m), lambda i: F.substring(t, i, n)
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+
+    def grams(t: "F.Column") -> "F.Column":
+        m = F.length(t) - F.lit(n - 1)
+        return F.when(
+            m >= 1,
+            F.transform(
+                F.sequence(F.lit(1), m), lambda i: F.substring(t, i, n)
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    # bound once: closed over, the normalized text would be rebuilt at
+    # every character position (quadratic in document length)
+    return let(t, grams)
 
 
 def train_char_lm(corpus: DataFrame, text_col: str, n: int = 3) -> DataFrame:

@@ -144,7 +144,13 @@ register(
          pairs AS (
            SELECT l.left_id, r.right_id,
                   {gc_dist_sql("l.ra", "l.dec", "r.ra", "r.dec")} AS d
-           FROM l CROSS JOIN r
+           -- a pair's angular distance is at least its declination
+           -- difference, so the band (widened by 1e-6 deg against
+           -- rounding) skips only pairs the d filter below rejects;
+           -- it makes this an inequality join instead of |l| x |r|
+           FROM l JOIN r
+             ON r.dec BETWEEN l.dec - {XMATCH_DTHRESH + 1e-6}
+                          AND l.dec + {XMATCH_DTHRESH + 1e-6}
          ),
          ranked AS (
            SELECT left_id, right_id, d,
