@@ -724,150 +724,159 @@ class Catalog:
             )
             .cache()
         )
-        cand = withk.withColumn(
-            "_pr", F.explode(_order_probes(F.col("_kpix"), orders, probe_order))
-        ).select(
-            *df.columns, "_p19", "_kpix", F.col("_pr.Norder").alias("Norder"),
-            F.col("_pr.Npix").alias("Npix"),
-        )
-        hit = cand.join(leaf_tbl, ["Norder", "Npix"])  # leaves partition the
-        # covered sky, so each row matches at most one leaf
-        # New leaves for rows outside the coverage open at order_k —
-        # EXCEPT where the row's order_k pixel already contains finer
-        # coverage leaves (possible after a rebalance): an order_k leaf
-        # there would spatially overlap them, and a later rebalance's
-        # dynamic overwrite of its children would clobber those cells.
-        # Such rows open their leaf at the finest descendant order
-        # instead, which is disjoint from every existing leaf by
-        # construction (no coverage exists below that order there).
-        req: dict[int, int] = {}
-        for o2 in orders:
-            if o2 <= order_k:
-                continue
-            for q in meta.hips[o2]:
-                anc = q >> (2 * (o2 - order_k))
-                req[anc] = max(req.get(anc, order_k), o2)
-        kp_at = lambda o: F.shiftright(  # noqa: E731
-            F.col("_kpix"), 2 * (probe_order - o)
-        )
-        new_order = F.lit(order_k).cast("int")
-        new_pix = kp_at(order_k)
-        if req:
-            req_tbl = F.broadcast(
-                plan_table(
-                    spark,
-                    {"_anc": list(req.keys()), "_req": list(req.values())},
-                    "_anc long, _req int",
-                )
-            )
-        missed = withk.join(
-            hit.select(meta.id_kw), meta.id_kw, "left_anti"
-        )
-        if req:
-            missed = missed.join(
-                req_tbl, kp_at(order_k) == F.col("_anc"), "left"
-            )
-            new_order = F.coalesce(F.col("_req"), F.lit(order_k)).cast("int")
-            # variable-shift: build a CASE over the few required orders
-            new_pix = kp_at(order_k)
-            for o2 in sorted({v for v in req.values()}):
-                new_pix = F.when(F.col("_req") == o2, kp_at(o2)).otherwise(new_pix)
-        missed = missed.select(
-            *df.columns, "_p19", "_kpix",
-            new_order.alias("Norder"),
-            new_pix.alias("Npix"),
-        )
-        assigned = (
-            hit.unionByName(missed)
-            .drop("_kpix")
-            .withColumn("Dir", _dir_of(F.col("Npix")))
-        ).cache()
-
-        # ONE plan-sized collect (cell → count) yields the touched-cell
-        # list, the batch row count, and — by subtracting the known leaf
-        # set — the new leaves; previously three separate driver jobs
-        # per batch, a real latency tax on streaming micro-batches.
-        cell_counts = assigned.groupBy("Norder", "Npix").count().collect()
-        touched = [(int(r["Norder"]), int(r["Npix"])) for r in cell_counts]
-        n_new = int(sum(r["count"] for r in cell_counts))
-        known = {(o, p) for o, pixs in meta.hips.items() for p in pixs}
-        new_leaves = [c for c in touched if c not in known]
-        new_set = set(new_leaves)
-
-        # merge touched cells' existing rows with the new ones: read
-        # exactly the touched leaves already on disk, never list the
-        # catalog.  A new leaf normally has no directory yet; one that
-        # does holds rows appended through a newer handle of this
-        # catalog (or a torn attempt of this batch), which the merge
-        # must keep.
-        data_cols = list(df.columns)
-        on_disk = [
-            c for c in touched
-            if c not in new_set or self._fs.isdir(self._leaf_dir(*c))
-        ]
-        existing = self._scan(on_disk).select(
-            *data_cols, "Norder", "Npix", "Dir",
-            pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER).alias("_p19"),
-        )
-        # Row-level idempotence: drop any existing rows that share an id
-        # with the batch (a broadcast anti-join — the batch id set is
-        # small relative to the catalog).  Under the globally-unique-id
-        # contract this is a no-op in normal operation; after a torn
-        # streaming commit (data overwritten, metadata not) it makes the
-        # replayed overwrite converge to the same bytes instead of
-        # duplicating the batch.
-        batch_ids = F.broadcast(df.select(meta.id_kw).distinct())
-        marked = existing.join(
-            batch_ids.withColumn("_inb", F.lit(1)), meta.id_kw, "left"
-        )
-        crow = marked.agg(
-            F.count(F.lit(1)).alias("n"), F.count("_inb").alias("r")
-        ).collect()[0]
-        disk_touched, n_replaced = int(crow["n"]), int(crow["r"])
-        existing = existing.join(batch_ids, meta.id_kw, "left_anti")
-        merged = existing.unionByName(assigned.select(*existing.columns))
-
-        # n_sources accounting must survive a torn-commit replay: after a
-        # crash between the data overwrite and the metadata commit, the
-        # batch rows are already on disk, so recounting the touched cells
-        # sees them and `n - n_replaced` would cancel the batch out of the
-        # total.  A write-ahead intent marker (atomic rename, keyed by
-        # batch_id) records the touched-cell row count BEFORE the first
-        # data write; replay reads the marker instead of trusting the
-        # (possibly torn) disk state, and
-        #   n_sources = committed + rows_after_touched - rows_before_touched
-        # is exact in every crash window.
-        meta = self._invalidate_margins(meta)
-        pre_touched = disk_touched
-        intent_path = f"{self.path}/{meta.cat_name}_append_intent.json"
-        if batch_id is not None:
-            intent = None
-            if self._fs.exists(intent_path):
-                try:
-                    intent = json.loads(self._fs.read_text(intent_path))
-                except (OSError, ValueError):
-                    intent = None
-            if intent is not None and intent.get("batch_id") == batch_id:
-                pre_touched = int(intent["pre_touched"])
-            else:
-                self._fs.publish(
-                    intent_path,
-                    json.dumps(
-                        {"batch_id": batch_id, "pre_touched": disk_touched}
-                    ),
-                )
-
-        indexed = _with_spatial_index(merged, meta.ra_kw, meta.dec_kw, p19_col="_p19")
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        assigned = None
         try:
-            (
-                indexed.write.mode("overwrite")
-                .partitionBy("Norder", "Dir", "Npix")
-                .parquet(f"{self.path}/catalog")
+            cand = withk.withColumn(
+                "_pr", F.explode(_order_probes(F.col("_kpix"), orders, probe_order))
+            ).select(
+                *df.columns, "_p19", "_kpix", F.col("_pr.Norder").alias("Norder"),
+                F.col("_pr.Npix").alias("Npix"),
             )
+            hit = cand.join(leaf_tbl, ["Norder", "Npix"])  # leaves partition the
+            # covered sky, so each row matches at most one leaf
+            # New leaves for rows outside the coverage open at order_k —
+            # EXCEPT where the row's order_k pixel already contains finer
+            # coverage leaves (possible after a rebalance): an order_k leaf
+            # there would spatially overlap them, and a later rebalance's
+            # dynamic overwrite of its children would clobber those cells.
+            # Such rows open their leaf at the finest descendant order
+            # instead, which is disjoint from every existing leaf by
+            # construction (no coverage exists below that order there).
+            req: dict[int, int] = {}
+            for o2 in orders:
+                if o2 <= order_k:
+                    continue
+                for q in meta.hips[o2]:
+                    anc = q >> (2 * (o2 - order_k))
+                    req[anc] = max(req.get(anc, order_k), o2)
+            kp_at = lambda o: F.shiftright(  # noqa: E731
+                F.col("_kpix"), 2 * (probe_order - o)
+            )
+            new_order = F.lit(order_k).cast("int")
+            new_pix = kp_at(order_k)
+            if req:
+                req_tbl = F.broadcast(
+                    plan_table(
+                        spark,
+                        {"_anc": list(req.keys()), "_req": list(req.values())},
+                        "_anc long, _req int",
+                    )
+                )
+            missed = withk.join(
+                hit.select(meta.id_kw), meta.id_kw, "left_anti"
+            )
+            if req:
+                missed = missed.join(
+                    req_tbl, kp_at(order_k) == F.col("_anc"), "left"
+                )
+                new_order = F.coalesce(F.col("_req"), F.lit(order_k)).cast("int")
+                # variable-shift: build a CASE over the few required orders
+                new_pix = kp_at(order_k)
+                for o2 in sorted({v for v in req.values()}):
+                    new_pix = F.when(F.col("_req") == o2, kp_at(o2)).otherwise(new_pix)
+            missed = missed.select(
+                *df.columns, "_p19", "_kpix",
+                new_order.alias("Norder"),
+                new_pix.alias("Npix"),
+            )
+            assigned = (
+                hit.unionByName(missed)
+                .drop("_kpix")
+                .withColumn("Dir", _dir_of(F.col("Npix")))
+            ).cache()
+
+            # ONE plan-sized collect (cell → count) yields the touched-cell
+            # list, the batch row count, and — by subtracting the known leaf
+            # set — the new leaves; previously three separate driver jobs
+            # per batch, a real latency tax on streaming micro-batches.
+            cell_counts = assigned.groupBy("Norder", "Npix").count().collect()
+            # the collect materialized ``assigned``: keep one cached copy
+            # of the batch, not two
+            withk.unpersist()
+            touched = [(int(r["Norder"]), int(r["Npix"])) for r in cell_counts]
+            n_new = int(sum(r["count"] for r in cell_counts))
+            known = {(o, p) for o, pixs in meta.hips.items() for p in pixs}
+            new_leaves = [c for c in touched if c not in known]
+            new_set = set(new_leaves)
+
+            # merge touched cells' existing rows with the new ones: read
+            # exactly the touched leaves already on disk, never list the
+            # catalog.  A new leaf normally has no directory yet; one that
+            # does holds rows appended through a newer handle of this
+            # catalog (or a torn attempt of this batch), which the merge
+            # must keep.
+            data_cols = list(df.columns)
+            on_disk = [
+                c for c in touched
+                if c not in new_set or self._fs.isdir(self._leaf_dir(*c))
+            ]
+            existing = self._scan(on_disk).select(
+                *data_cols, "Norder", "Npix", "Dir",
+                pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER).alias("_p19"),
+            )
+            # Row-level idempotence: drop any existing rows that share an id
+            # with the batch (a broadcast anti-join — the batch id set is
+            # small relative to the catalog).  Under the globally-unique-id
+            # contract this is a no-op in normal operation; after a torn
+            # streaming commit (data overwritten, metadata not) it makes the
+            # replayed overwrite converge to the same bytes instead of
+            # duplicating the batch.
+            batch_ids = F.broadcast(df.select(meta.id_kw).distinct())
+            marked = existing.join(
+                batch_ids.withColumn("_inb", F.lit(1)), meta.id_kw, "left"
+            )
+            crow = marked.agg(
+                F.count(F.lit(1)).alias("n"), F.count("_inb").alias("r")
+            ).collect()[0]
+            disk_touched, n_replaced = int(crow["n"]), int(crow["r"])
+            existing = existing.join(batch_ids, meta.id_kw, "left_anti")
+            merged = existing.unionByName(assigned.select(*existing.columns))
+
+            # n_sources accounting must survive a torn-commit replay: after a
+            # crash between the data overwrite and the metadata commit, the
+            # batch rows are already on disk, so recounting the touched cells
+            # sees them and `n - n_replaced` would cancel the batch out of the
+            # total.  A write-ahead intent marker (atomic rename, keyed by
+            # batch_id) records the touched-cell row count BEFORE the first
+            # data write; replay reads the marker instead of trusting the
+            # (possibly torn) disk state, and
+            #   n_sources = committed + rows_after_touched - rows_before_touched
+            # is exact in every crash window.
+            meta = self._invalidate_margins(meta)
+            pre_touched = disk_touched
+            intent_path = f"{self.path}/{meta.cat_name}_append_intent.json"
+            if batch_id is not None:
+                intent = None
+                if self._fs.exists(intent_path):
+                    try:
+                        intent = json.loads(self._fs.read_text(intent_path))
+                    except (OSError, ValueError):
+                        intent = None
+                if intent is not None and intent.get("batch_id") == batch_id:
+                    pre_touched = int(intent["pre_touched"])
+                else:
+                    self._fs.publish(
+                        intent_path,
+                        json.dumps(
+                            {"batch_id": batch_id, "pre_touched": disk_touched}
+                        ),
+                    )
+
+            indexed = _with_spatial_index(merged, meta.ra_kw, meta.dec_kw, p19_col="_p19")
+            prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            try:
+                (
+                    indexed.write.mode("overwrite")
+                    .partitionBy("Norder", "Dir", "Npix")
+                    .parquet(f"{self.path}/catalog")
+                )
+            finally:
+                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            withk.unpersist()
+            if assigned is not None:
+                assigned.unpersist()
 
         hips = {o: list(ps) for o, ps in meta.hips.items()}
         for o, p in new_leaves:  # distinct, and none of them known
@@ -910,8 +919,6 @@ class Catalog:
                 "split them in place",
                 stacklevel=2,
             )
-        assigned.unpersist()
-        withk.unpersist()
         return cat
 
     def _delete_intent_path(self) -> str:
@@ -1188,7 +1195,8 @@ class Catalog:
 
         Returns the rebalanced catalog (``self`` if nothing is over).
         A cell still over the threshold at ``max_order`` is left as-is
-        with a warning.
+        with a warning.  ``max_order`` above ``SPATIAL_INDEX_ORDER``
+        raises ValueError before anything is read.
 
         Like append, rebalance is not snapshot-isolated for concurrent
         readers: a pre-rebalance Catalog handle's pruning predicates
@@ -1196,6 +1204,12 @@ class Catalog:
         ``Catalog.load``/the returned catalog after a rebalance."""
         import warnings
 
+        if not 0 <= max_order <= SPATIAL_INDEX_ORDER:
+            # leaf pixels shift out of _ID, which holds order-19 pixels
+            raise ValueError(
+                f"rebalance max_order must be in [0, {SPATIAL_INDEX_ORDER}], "
+                f"got {max_order}"
+            )
         spark = self.spark
         # converge stale markers from EITHER crashed mutation first
         # (see delete(): operating on half-mutated state corrupts the

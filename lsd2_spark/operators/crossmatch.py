@@ -65,7 +65,7 @@ from pyspark.sql.types import (
 )
 
 from lsd2_spark import healpix as hpx
-from lsd2_spark.catalog import PARTITION_COLS, pixel_of_index
+from lsd2_spark.catalog import PARTITION_COLS, SPATIAL_INDEX_ORDER, pixel_of_index
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist, gnomonic_xy_np
 from lsd2_spark.plans.partition_map import align_join_cells, complete_left_cover
@@ -113,9 +113,9 @@ def _cell_tables(
         # row i of the table is cell idx[i]; pix is the probed pixel
         idx, pix, primary = np.arange(len(parr)), parr, np.ones(len(parr), np.int32)
         if with_halo:
-            nbs = hpx.neighbors(o, parr)
-            halo_idx = np.repeat(idx, [len(nb) for nb in nbs])
-            pix = np.concatenate([parr, *nbs])
+            src, nb = hpx.neighbors_flat(o, parr)
+            halo_idx = np.searchsorted(parr, src)  # parr is sorted
+            pix = np.concatenate([parr, nb])
             idx = np.concatenate([idx, halo_idx])
             primary = np.concatenate([primary, np.zeros(len(halo_idx), np.int32)])
         cols["pix"].append(pix)
@@ -144,9 +144,9 @@ def _assign(
 
     The finest-order pixel comes from ``index_col`` when the caller
     names one — a catalog's spatial index ``_ID``, from which it is a
-    JVM shift (:func:`~lsd2_spark.catalog.pixel_of_index`; plan cells
-    are never finer than the catalogs' leaves, so never finer than
-    the index order) — and from one Arrow pixelization pass otherwise
+    JVM shift (:func:`~lsd2_spark.catalog.pixel_of_index`; a plan with
+    index columns caps its cells, hot-cell splits included, at the
+    index order) — and from one Arrow pixelization pass otherwise
     (raw DataFrames).  The index column is dropped with the other plan
     columns.
     """
@@ -333,13 +333,14 @@ def _ensure_cols(cols: list[str] | None, df: DataFrame, required: Iterable[str])
 
 
 def crossmatch_cells_plan(
-    hips1: dict[int, list[int]], hips2: dict[int, list[int]], dthresh: float
+    hips1: dict[int, list[int]], hips2: dict[int, list[int]], max_cell_order: int
 ) -> list[tuple[int, int]]:
-    kj = max_cell_order_for(dthresh)
-    aligned = align_join_cells(hips1, hips2, max_cell_order=kj)
+    """Join cells for two coverage maps, none finer than
+    ``max_cell_order``."""
+    aligned = align_join_cells(hips1, hips2, max_cell_order=max_cell_order)
     # every left row must land in a cell, even where the right catalog
     # has no partitions (matches may still arrive via halos)
-    return complete_left_cover(aligned, hips1, kj)
+    return complete_left_cover(aligned, hips1, max_cell_order)
 
 
 def crossmatch_dataframes(
@@ -454,12 +455,15 @@ def _crossmatch(
             stacklevel=2,
         )
 
-    cells = crossmatch_cells_plan(hips_left, hips_right, dthresh)
+    kj = max_cell_order_for(dthresh)
+    if l_index or r_index:
+        # an index pixel exists only down to the index order; coarser
+        # cells are wider than the radius too, so halos stay valid
+        kj = min(kj, SPATIAL_INDEX_ORDER)
+    cells = crossmatch_cells_plan(hips_left, hips_right, kj)
     if max_pairs_per_cell is not None and cells:
         from lsd2_spark.operators.histogram import sky_histogram
         from lsd2_spark.plans.partition_map import refine_hot_cells
-
-        kj = max_cell_order_for(dthresh)
 
         def _hist(df, ra, dec):
             rows = sky_histogram(df, ra, dec, kj).collect()

@@ -18,9 +18,7 @@ def spark():
     s = get_spark(
         app_name="lsd2_spark_tests",
         shuffle_partitions=8,
-        extra_conf={
-            "spark.driver.memory": os.environ.get("LSD2_TEST_DRIVER_MEM", "2g")
-        },
+        extra_conf={"spark.driver.memory": "2g"},
     )
     yield s
 

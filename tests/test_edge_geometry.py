@@ -115,6 +115,35 @@ def test_bad_input_raises_value_error_not_assert(spark, tmp_path):
         Catalog.load(spark, str(tmp_path))
 
 
+def test_catalog_plans_stop_at_the_index_order(spark, tmp_path):
+    """A radius finer than an order-19 pixel with hot-cell refinement:
+    the catalog cross-match splits no cell past the index order, whose
+    pixels shift out of _ID, and still matches brute force.  Rebalance
+    rejects a max_order past the index order before it reads a row."""
+    n, dthresh = 300, 1e-6
+    left = pd.DataFrame({"sid": np.arange(n, dtype=np.int64),
+                         "ra": 10 + RNG.uniform(0, 2e-3, n),
+                         "dec": 20 + RNG.uniform(0, 2e-3, n)})
+    right = left.copy()
+    right["sid"] += 10_000
+    right["dec"] += RNG.uniform(-8e-7, 8e-7, n)
+    c1 = _cat(spark, tmp_path, "finel", left)
+    c2 = _cat(spark, tmp_path, "finer", right)
+    got = c1.cross_match(
+        c2, n_neighbors=1, dthresh=dthresh, max_pairs_per_cell=1
+    ).toPandas()
+    d = hpx.gc_dist_deg(left["ra"].to_numpy()[:, None], left["dec"].to_numpy()[:, None],
+                        right["ra"].to_numpy()[None, :], right["dec"].to_numpy()[None, :])
+    best = d.argmin(axis=1)
+    hit = d[np.arange(n), best] < dthresh
+    want = set(zip(left["sid"][hit], right["sid"].to_numpy()[best[hit]]))
+    assert len(want) > n // 2
+    assert set(zip(got["finel_sid"], got["finer_sid"])) == want
+    assert got["hips_k"].max() == 19
+    with pytest.raises(ValueError, match="max_order"):
+        c1.rebalance(max_order=20)
+
+
 def _pole_and_edge_rows(first_id: int, n_random: int) -> pd.DataFrame:
     """Both poles, the polar-cap/equatorial-belt latitude, the equator,
     face-boundary meridians and ra just below 360, plus random rows."""
