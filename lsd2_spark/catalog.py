@@ -14,7 +14,7 @@ directory, and (an extension to the reference) ``schema`` stores the
 Spark read schema.  Cone searches read only the leaf directories their
 pixel cover hits, with that schema, so a query neither lists the
 catalog nor infers a schema; ``Catalog.df`` discovers the whole root
-with the same stored schema.
+with the same stored schema once per handle and reuses that relation.
 
 Margins are an export, not maintained state: no query reads
 ``neighbor/`` (cross-match builds its halos at query time).  Ingest
@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from dataclasses import dataclass, replace
 
 import numpy as np
@@ -458,6 +459,11 @@ class Catalog:
         # (a catalog written before the metadata stored it); fsck's
         # repair persists it
         self._schema_inferred = False
+        # the root-discovery relation df() lists once and then projects
+        # (see df()); the lock keeps threads sharing the handle to one
+        # listing
+        self._full: DataFrame | None = None
+        self._full_lock = threading.Lock()
 
     # -- loading ------------------------------------------------------------
 
@@ -529,12 +535,27 @@ class Catalog:
 
     def df(self, columns: list[str] | None = None) -> DataFrame:
         """The catalog as a lazy DataFrame over every leaf on disk (root
-        discovery, so cells the metadata does not list are visible —
-        :meth:`fsck` relies on that).  The schema is the one the
-        metadata stores: data columns, then the hive partition columns
-        ``Norder`` int, ``Dir`` long, ``Npix`` long, on which filters
-        prune at the file level."""
-        return self._project(self._scan(), columns)
+        discovery, so cells the metadata does not list are visible).
+        The schema is the one the metadata stores: data columns, then
+        the hive partition columns ``Norder`` int, ``Dir`` long,
+        ``Npix`` long, on which filters prune at the file level.
+
+        The root is listed once per handle, at the first call; every
+        later call is a projection of that pinned relation, so
+        cross-match, :meth:`create_view` and :meth:`sky_map` pay no
+        listing.  Threads sharing a handle share the one listing.  A
+        handle's full reads are therefore a snapshot of the files at its
+        first call: mutations return new handles, leaves written later
+        are not visible through this one, and a leaf another writer has
+        since rewritten fails the read on its missing file — never a
+        silent mix.  Reads that must see the disk as it is now (the
+        mutations' counts, :meth:`fsck`, :meth:`export_margins`) list
+        it afresh."""
+        with self._full_lock:
+            if self._full is None:
+                self._full = self._scan()
+            full = self._full
+        return self._project(full, columns)
 
     def _meta_path(self) -> str:
         return f"{self.path}/{self.meta.cat_name}_meta.json"
@@ -567,7 +588,7 @@ class Catalog:
             return self._reconcile_delete_intent().export_margins()
         if self._fs.exists(self._compact_intent_path()):
             return self._reconcile_compact_intent().export_margins()
-        return self._export_margins(self.df().drop(*PARTITION_COLS, "_ID"))
+        return self._export_margins(self._scan().drop(*PARTITION_COLS, "_ID"))
 
     def _export_margins(self, src: DataFrame) -> "Catalog":
         """Export the halos of the source rows ``src`` (the bare input
@@ -624,17 +645,19 @@ class Catalog:
         the batch (the covered/uncovered split anti-joins on it).
 
         Concurrent readers: dynamic partition overwrite REPLACES the
-        files of touched cells, so a DataFrame resolved before an
-        append is NOT snapshot-isolated — its next action either fails
-        on the deleted files or observes post-append state (never a
-        duplicated/partial mix; the overwrite is cell-atomic per
-        partition directory).  A cone search resolves its leaf set
-        from the metadata its Catalog handle was loaded with: a
-        pre-append handle never sees the append's NEW leaves (rows
-        landing in existing leaves it does see).  Re-resolve via
-        :meth:`Catalog.load` / the returned catalog after appends; for
-        true snapshot isolation under concurrent writers at scale,
-        layer a transactional table format over the same layout.
+        files of touched cells.  A handle's full reads (:meth:`df`,
+        cross-match) use the files it listed at its first full read: on
+        a handle that read before the append (the one it was called on
+        included) such a read either fails on a rewritten cell's
+        missing files or returns the pre-append rows — never a
+        duplicated/partial mix — and never sees the append's NEW
+        leaves.  A cone search resolves its leaf
+        set from the metadata its handle was loaded with: a pre-append
+        handle never sees the NEW leaves either (rows landing in
+        existing leaves it does see).  Use the returned catalog or
+        :meth:`Catalog.load` after appends; for true snapshot isolation
+        under concurrent writers at scale, layer a transactional table
+        format over the same layout.
 
         Reads: the schema check uses the stored schema, and only the
         touched leaves that already exist are read (before the write)
@@ -961,7 +984,7 @@ class Catalog:
         ).cast("long")
         touched_pred = cell_key.isin([(o << 40) + p for o, p in touched])
         now = (
-            self.df()
+            self._scan()
             .filter(touched_pred)
             .groupBy("Norder", "Npix")
             .count()
@@ -1038,7 +1061,7 @@ class Catalog:
 
         # plan-sized: per-cell match counts -> touched cells + n_deleted
         match_counts = (
-            self.df().filter(pred_true).groupBy("Norder", "Npix").count().collect()
+            self._scan().filter(pred_true).groupBy("Norder", "Npix").count().collect()
         )
         if not match_counts:
             return self
@@ -1231,7 +1254,7 @@ class Catalog:
         if thr < 1:
             raise ValueError(f"rebalance threshold must be >= 1, got {thr}")
 
-        counts = self.df().groupBy("Norder", "Npix").count().collect()
+        counts = self._scan().groupBy("Norder", "Npix").count().collect()
         over = [
             (int(r["Norder"]), int(r["Npix"]))
             for r in counts
@@ -1613,8 +1636,12 @@ class Catalog:
         and clears a stale delete-intent marker — live catalog rows are
         never modified.  Returns the report dict; after a
         repair the report reflects the PRE-repair state plus
-        ``repaired=True``.
+        ``repaired=True``.  A repair updates this handle in place, so
+        its next :meth:`df` lists the root again.
         """
+        if repair:
+            with self._full_lock:
+                self._full = None
         if repair and self._fs.exists(self._rebalance_intent_path()):
             # a crashed rebalance must converge BEFORE anything below
             # reads disk state: rollback/roll-forward changes the cell
@@ -1639,8 +1666,11 @@ class Catalog:
         misplaced = F.expr(
             f"shiftright(_ID, {RANK_BITS} + 2 * ({SPATIAL_INDEX_ORDER} - Norder)) != Npix"
         )
+        # one fresh listing for all three aggregates: the disk as it is
+        # now, not this handle's pinned df()
+        scan = self._scan()
         disk = (
-            self.df()
+            scan
             .groupBy("Norder", "Npix")
             .agg(
                 F.count(F.lit(1)).alias("count"),
@@ -1654,14 +1684,14 @@ class Catalog:
 
         idc = F.col(meta.id_kw)
         dup_ids = int(
-            self.df([meta.id_kw])
+            scan.select(idc)
             .groupBy(idc)
             .count()
             .filter(F.col("count") > 1)
             .count()
         )
         rank_bad = int(
-            self.df()
+            scan
             .select(
                 F.shiftright(F.col("_ID"), RANK_BITS).alias("_p19"),
                 (F.col("_ID") % (1 << RANK_BITS)).alias("_r"),

@@ -35,16 +35,25 @@ catalog.py:181-191):
    query-time halos — no second dataset needs to exist, and the halo
    width always matches the query's ``dthresh``.
 4. **Cogrouped kNN kernel**: ``left.groupBy(cell) cogroup right.groupBy
-   (cell) → applyInPandas``: gnomonic-project around the cell center
-   (util.py:353-371), grid-bucket the right side at the match radius,
-   gather 3×3 candidates per left row, exact great-circle distance,
-   keep k smallest per left row under ``dthresh``.
+   (cell) → applyInArrow``: each cell's two sides arrive as Arrow
+   tables (no pandas conversion); gnomonic-project around
+   the cell center (util.py:353-371), grid-bucket the right side at the
+   match radius, gather 3×3 candidates per left row, exact great-circle
+   distance, keep k smallest per left row under ``dthresh``, and gather
+   the output columns with Arrow ``take`` so their types and nulls pass
+   through unchanged.
+
+A catalog side is read through ``Catalog.df``, which lists the catalog
+root once per handle: repeated cross-matches on the same handles plan
+without a listing.
 
 Scale notes (100 TB): the broadcast tables are plan-sized (≤ 9 entries
 per cell).  The only shuffle is the cogroup's hash partition on the
 cell key; cells are bounded by the catalogs' ``threshold`` plus halo,
-and AQE skew-join splitting handles hot cells.  The kernel is pure
-vectorized NumPy over Arrow batches.
+and hot cells are split by the coverage maps or ``max_pairs_per_cell``
+(AQE cannot split a cogroup).  The kernel is vectorized NumPy over the
+Arrow columns; it is the only Python boundary of a catalog
+cross-match.
 """
 
 from __future__ import annotations
@@ -53,9 +62,10 @@ import warnings
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -212,23 +222,24 @@ def _knn_kernel_factory(
     l_id: str | None = None,
     exclude_same_id: bool = False,
 ):
-    lpref = [f for f in out_schema.fieldNames() if f not in ("hips_k", "hips_pix", "_DIST")][
-        : len(lcols)
-    ]
-    rpref = [f for f in out_schema.fieldNames() if f not in ("hips_k", "hips_pix", "_DIST")][
-        len(lcols):
-    ]
+    """The per-cell k-NN kernel for ``cogroup(...).applyInArrow``: two
+    ``pyarrow.Table`` sides in, one table with ``out_schema`` out.
+    ra/dec/id are read as NumPy; output columns are gathered with
+    ``take``, so their types and nulls pass through unchanged."""
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def empty() -> pd.DataFrame:
-        return pd.DataFrame({f.name: pd.Series(dtype="object") for f in out_schema.fields})
+    def column(table: pa.Table, name: str) -> np.ndarray:
+        return table.column(name).to_numpy()
 
-    def kernel(key, ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if len(ldf) == 0 or len(rdf) == 0:
-            return empty()
-        cell_order, cell_pix = int(key[0]), int(key[1])
+    def kernel(key, left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0 or right.num_rows == 0:
+            return arrow_schema.empty_table()
+        cell_order, cell_pix = key[0].as_py(), key[1].as_py()
         cra, cdec = hpx.pix2ang(cell_order, np.array([cell_pix]))
-        lx, ly = gnomonic_xy_np(ldf[l_ra].to_numpy(), ldf[l_dec].to_numpy(), cra[0], cdec[0])
-        rx, ry = gnomonic_xy_np(rdf[r_ra].to_numpy(), rdf[r_dec].to_numpy(), cra[0], cdec[0])
+        lra, ldec = column(left, l_ra), column(left, l_dec)
+        rra, rdec = column(right, r_ra), column(right, r_dec)
+        lx, ly = gnomonic_xy_np(lra, ldec, cra[0], cdec[0])
+        rx, ry = gnomonic_xy_np(rra, rdec, cra[0], cdec[0])
 
         # gnomonic stretches local distances by up to 1/cos²(θ) at angle θ
         # from the tangent point; size the grid pitch so a 3×3 probe is a
@@ -264,26 +275,21 @@ def _knn_kernel_factory(
                 offs = np.arange(cum[-1]) - np.repeat(cum - lengths, lengths)
                 ri_all.append(order_r[np.repeat(i0[nz], lengths) + offs])
         if not li_all:
-            return empty()
+            return arrow_schema.empty_table()
         li = np.concatenate(li_all)
         ri = np.concatenate(ri_all)
 
-        d = hpx.gc_dist_deg(
-            ldf[l_ra].to_numpy()[li],
-            ldf[l_dec].to_numpy()[li],
-            rdf[r_ra].to_numpy()[ri],
-            rdf[r_dec].to_numpy()[ri],
-        )
+        d = hpx.gc_dist_deg(lra[li], ldec[li], rra[ri], rdec[ri])
         keep = d < dthresh
+        rids = column(right, r_id)
         if exclude_same_id and l_id is not None:
-            keep &= ldf[l_id].to_numpy()[li] != rdf[r_id].to_numpy()[ri]
+            keep &= column(left, l_id)[li] != rids[ri]
         li, ri, d = li[keep], ri[keep], d[keep]
         if li.size == 0:
-            return empty()
+            return arrow_schema.empty_table()
 
         # deterministic top-k per left row: (left, dist, right_id)
-        rid = rdf[r_id].to_numpy()[ri]
-        sel = np.lexsort((rid, d, li))
+        sel = np.lexsort((rids[ri], d, li))
         li, ri, d = li[sel], ri[sel], d[sel]
         first = np.zeros(len(li), dtype=bool)
         first[0] = True
@@ -293,15 +299,20 @@ def _knn_kernel_factory(
         keep = rank < n_neighbors
         li, ri, d = li[keep], ri[keep], d[keep]
 
-        out = {}
-        for src, dst in zip(lcols, lpref):
-            out[dst] = ldf[src].to_numpy()[li]
-        for src, dst in zip(rcols, rpref):
-            out[dst] = rdf[src].to_numpy()[ri]
-        out["hips_k"] = np.full(len(li), cell_order, dtype=np.int32)
-        out["hips_pix"] = np.full(len(li), cell_pix, dtype=np.int64)
-        out["_DIST"] = d
-        return pd.DataFrame(out)
+        cols = [left.column(c).take(li) for c in lcols]
+        cols += [right.column(c).take(ri) for c in rcols]
+        cols += [
+            pa.array(np.full(len(li), cell_order, dtype=np.int32)),
+            pa.array(np.full(len(li), cell_pix, dtype=np.int64)),
+            pa.array(d),
+        ]
+        # the sides' Arrow types can differ from the declared ones in
+        # encoding only (e.g. large_string, a timestamp's zone)
+        cols = [
+            c if c.type == f.type else c.cast(f.type)
+            for c, f in zip(cols, arrow_schema)
+        ]
+        return pa.Table.from_arrays(cols, schema=arrow_schema)
 
     return kernel
 
@@ -373,7 +384,7 @@ def crossmatch_dataframes(
     catalog.py:175-177).
 
     Cell skew: the cogroup emits ONE Arrow kernel task per join cell,
-    and AQE cannot split it (FlatMapCoGroupsInPandas is not a join
+    and AQE cannot split it (FlatMapCoGroupsInArrow is not a join
     exchange, so skew-join rewriting does not apply) — a globular-
     cluster-density cell serializes on one task.  The structural lever
     is the COVERAGE MAP: pass ``hips_left``/``hips_right`` that cover
@@ -444,7 +455,12 @@ def _crossmatch(
     left_cols = _ensure_cols(left_cols, left, [l_ra, l_dec, l_id])
     right_cols = _ensure_cols(right_cols, right, [r_ra, r_dec, r_id])
     left = left.select(*left_cols, *([l_index] if l_index else []))
-    right = right.select(*right_cols, *([r_index] if r_index else []))
+    # the sides may be one relation (a self-match, or a catalog handle's
+    # one pinned read): re-aliasing the right side's columns gives them
+    # their own attribute ids, so the cogroup's references resolve
+    right = right.select(
+        *[F.col(c).alias(c) for c in [*right_cols, *([r_index] if r_index else [])]]
+    )
 
     # reference catalog.py:237-241: wide results are usually a mistake
     if len(left_cols) + len(right_cols) + 3 > 50:
@@ -465,14 +481,23 @@ def _crossmatch(
         from lsd2_spark.operators.histogram import sky_histogram
         from lsd2_spark.plans.partition_map import refine_hot_cells
 
-        def _hist(df, ra, dec):
-            rows = sky_histogram(df, ra, dec, kj).collect()
+        def _hist(df, ra, dec, index):
+            # a side with an index column counts its pixels with a JVM
+            # shift of it; a raw DataFrame pays an Arrow pixelization
+            if index is not None:
+                hist = df.groupBy(pixel_of_index(F.col(index), kj).alias("pix")).agg(
+                    F.count(F.lit(1)).alias("cnt")
+                )
+            else:
+                hist = sky_histogram(df, ra, dec, kj)
+            rows = hist.collect()
             return (
                 np.array([r["pix"] for r in rows], dtype=np.int64),
                 np.array([r["cnt"] for r in rows], dtype=np.int64),
             )
 
-        (kl, cl), (kr, cr) = _hist(left, l_ra, l_dec), _hist(right, r_ra, r_dec)
+        kl, cl = _hist(left, l_ra, l_dec, l_index)
+        kr, cr = _hist(right, r_ra, r_dec, r_index)
         hips_cells: dict[int, list[int]] = {}
         for o, p in cells:
             hips_cells.setdefault(o, []).append(p)
@@ -503,7 +528,7 @@ def _crossmatch(
     return (
         l_assigned.groupBy(_CELL_O, _CELL_P)
         .cogroup(r_assigned.groupBy(_CELL_O, _CELL_P))
-        .applyInPandas(kernel, schema)
+        .applyInArrow(kernel, schema)
     )
 
 

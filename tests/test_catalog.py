@@ -4,6 +4,7 @@ O(n²) oracle (FIXTURES.md F1/F2/F5-style synthetic catalogs)."""
 
 from __future__ import annotations
 
+import os
 from dataclasses import replace
 
 import numpy as np
@@ -427,19 +428,90 @@ def test_crossmatch_with_column_subset_drops_the_index(cats):
 def test_catalog_crossmatch_map_side_runs_in_the_jvm(cats):
     """A catalog cross-match takes cell pixels from _ID and broadcasts
     Arrow-backed plan tables: no Python evaluation node, no RDD scan,
-    and every broadcast side is a local relation."""
+    and every broadcast side is a local relation.  The k-NN kernel is
+    the one Python boundary, and it takes Arrow tables, not pandas."""
     _, _, c1, c2 = cats
     out = c1.cross_match(c2, n_neighbors=1, dthresh=0.01)
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
-    for node in ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD"):
+    for node in ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD",
+                 "FlatMapCoGroupsInPandas"):
         assert node not in plan, plan
+    assert "FlatMapCoGroupsInArrow" in plan, plan
     lines = plan.splitlines()
     final = lines[: next(i for i, ln in enumerate(lines) if "Initial Plan" in ln)]
     broadcasts = [i for i, ln in enumerate(final) if "BroadcastExchange" in ln]
     assert len(broadcasts) == 2, plan
     for i in broadcasts:
         assert "LocalTableScan" in final[i + 1], plan
+
+
+def test_second_cross_match_on_the_same_handles_lists_nothing(cats, spark):
+    """A handle lists its catalog root once: planning a cross-match on
+    fresh handles starts a listing job (the probe sees listings), the
+    same call again starts no job at all, and both return the same
+    pairs."""
+    _, _, c1, c2 = cats
+    left = Catalog.load(spark, c1.path, "cat1")
+    right = Catalog.load(spark, c2.path, "cat2")
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1")  # every listing of the root runs as a Spark job
+    try:
+        first, jobs1 = _jobs_in_group(
+            spark, "xm-plan-1", lambda: left.cross_match(right, n_neighbors=2, dthresh=0.02)
+        )
+        second, jobs2 = _jobs_in_group(
+            spark, "xm-plan-2", lambda: left.cross_match(right, n_neighbors=2, dthresh=0.02)
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    assert jobs1 >= 1 and jobs2 == 0, (jobs1, jobs2)
+    pairs = lambda df: sorted(  # noqa: E731
+        (r["cat1_source_id"], r["cat2_source_id"]) for r in df.collect()
+    )
+    assert pairs(first) == pairs(second) and pairs(first)
+
+
+def test_hot_cell_histogram_of_a_catalog_side_shifts_its_index(cats, monkeypatch):
+    """With max_pairs_per_cell, a catalog side's density histogram
+    groups by the pixel shifted out of _ID (no Arrow UDF in its plan),
+    a raw DataFrame side's keeps the pixelization UDF, and the pair set
+    is the brute-force one."""
+    from lsd2_spark.operators.crossmatch import crossmatch_dataframes
+
+    base, partner, c1, c2 = cats
+    DataFrame = type(c1.df())
+    plans = []
+    collect = DataFrame.collect
+
+    def recording(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", recording)
+    lazy = c1.cross_match(c2, n_neighbors=2, dthresh=0.02, max_pairs_per_cell=1e3)
+    hist_plans, plans[:] = list(plans), []
+    raw = crossmatch_dataframes(
+        c1.df().drop("Norder", "Dir", "Npix", "_ID"), c2.df().drop("Norder", "Dir", "Npix", "_ID"),
+        c1.meta.hips, c2.meta.hips, "ra", "dec", "source_id", "ra", "dec", "source_id",
+        n_neighbors=2, dthresh=0.02, max_pairs_per_cell=1e3,
+    )
+    raw_plans = list(plans)
+    monkeypatch.undo()
+
+    assert len(hist_plans) == 2 and len(raw_plans) == 2, (hist_plans, raw_plans)
+    for plan in hist_plans:
+        assert "ArrowEvalPython" not in plan, plan
+    for plan in raw_plans:
+        assert "ArrowEvalPython" in plan, plan
+    got = lazy.toPandas()
+    pairs_want, _ = _brute_knn(base, partner, 2, 0.02)
+    assert set(zip(got["cat1_source_id"].astype(int), got["cat2_source_id"].astype(int))) == pairs_want
+    raw_got = raw.toPandas()
+    assert set(zip(raw_got["left_source_id"].astype(int),
+                   raw_got["right_source_id"].astype(int))) == pairs_want
 
 
 def test_crossmatch_margins_off_undermatches(cats):
@@ -764,8 +836,8 @@ def test_append_snapshot_semantics_documented(spark, tmp_path):
     DataFrame resolved before an append is not snapshot-isolated — its
     next action either fails on the deleted files or reads post-append
     state.  What it must NEVER do is silently return a half-and-half
-    mix with duplicated rows.  Readers re-resolve via Catalog.load /
-    .df() after appends."""
+    mix with duplicated rows.  Readers use the handle the append
+    returns, or Catalog.load, after appends."""
     rng = np.random.default_rng(41)
     n = 2000
     pdf = pd.DataFrame({
@@ -797,6 +869,91 @@ def test_append_snapshot_semantics_documented(spark, tmp_path):
         # if the action succeeds, it must be one of the two consistent
         # states — never duplicates / partial mixes
         assert stale in (n, n + 500), stale
+
+
+def test_old_handle_reads_its_snapshot_and_fsck_reads_the_disk(spark, tmp_path):
+    """A handle's full reads use the files it listed at its first one.
+    After ``new = old.append(batch)``, a full read through ``old``
+    returns the pre-append ids (a batch that only opens new leaves) or
+    raises (a batch that rewrites a cell ``old`` listed) — never a mix;
+    ``new.df()`` returns every id, and ``fsck()`` on ``old`` reports
+    the disk as it is now."""
+    rng = np.random.default_rng(43)
+
+    def rows(lo, n, ra0, dec0):
+        return pd.DataFrame({
+            "sid": np.arange(lo, lo + n, dtype=np.int64),
+            "ra": ra0 + rng.uniform(-1, 1, n),
+            "dec": dec0 + rng.uniform(-1, 1, n),
+        })
+
+    pdf = rows(0, 600, 40.0, 10.0)
+    old = partition_catalog(
+        spark.createDataFrame(pdf), str(tmp_path / "pinned"), "pinned",
+        ra_col="ra", dec_col="dec", id_col="sid",
+        threshold=200, order_k=4, write_margins=False,
+    )
+    ids = lambda cat: {r["sid"] for r in cat.df(["sid"]).collect()}  # noqa: E731
+    pre = set(range(600))
+    assert ids(old) == pre  # first full read: the handle lists now
+
+    far = rows(1000, 50, 200.0, -40.0)  # opens new leaves only
+    new = old.append(spark.createDataFrame(far))
+    assert ids(old) == pre
+    assert ids(new) == pre | set(range(1000, 1050))
+    rep = old.fsck()
+    assert rep["n_rows_disk"] == 650 and rep["cells_disk_only"] and not rep["consistent"]
+
+    near = rows(2000, 50, 40.0, 10.0)  # rewrites cells both handles listed
+    newer = new.append(spark.createDataFrame(near))
+    for stale in (old, new):
+        try:
+            got = ids(stale)
+        except Exception:
+            continue  # the rewritten cell's old files are gone: a loud error
+        assert got in (pre, pre | set(range(1000, 1050))), len(got)
+    assert ids(newer) == pre | set(range(1000, 1050)) | set(range(2000, 2050))
+    assert old.fsck()["n_rows_disk"] == 700
+
+
+def test_threads_sharing_a_handle_list_it_once(spark, tmp_path):
+    """More threads than cores take df() of one fresh handle at once:
+    they share one root listing, and every frame reads every row."""
+    import sys
+    import threading
+    import time
+
+    pdf = _make_catalog_pdf(500)
+    path = str(tmp_path / "shared")
+    partition_catalog(
+        spark.createDataFrame(pdf), path, "shared", ra_col="ra", dec_col="dec",
+        id_col="source_id", threshold=200, order_k=3, write_margins=False,
+    )
+    cat = Catalog.load(spark, path, "shared")
+    scans = []
+    scan = cat._scan
+
+    def slow_scan(leaves=None):
+        scans.append(leaves)
+        time.sleep(0.2)  # the other threads reach df() meanwhile
+        return scan(leaves)
+
+    cat._scan = slow_scan
+    frames = []
+    threads = [threading.Thread(target=lambda: frames.append(cat.df(["source_id"])))
+               for _ in range(4 * (os.cpu_count() or 1))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert scans == [None] and len(frames) == len(threads)
+    assert frames[0].count() == 500 and frames[-1].count() == 500
 
 
 def test_ingest_rejects_null_coordinates_clearly(spark, tmp_path):

@@ -99,6 +99,104 @@ def test_self_crossmatch(spark, tmp_path):
     assert len(got) == (d.min(axis=1) < 0.5).sum()
 
 
+def _typed_side(spark, prefix: str, ra, dec, first_id: int):
+    """A raw DataFrame whose extra columns are a nullable long and a
+    nullable string (every third row null)."""
+    from pyspark.sql.types import (
+        DoubleType, LongType, StringType, StructField, StructType,
+    )
+
+    n = len(ra)
+    rows = [
+        (first_id + i, float(ra[i]), float(dec[i]),
+         None if i % 3 == 0 else 10 * i, None if i % 3 == 1 else f"{prefix}{i}")
+        for i in range(n)
+    ]
+    schema = StructType([
+        StructField("sid", LongType()), StructField("ra", DoubleType()),
+        StructField("dec", DoubleType()), StructField("n", LongType()),
+        StructField("tag", StringType()),
+    ])
+    return spark.createDataFrame(rows, schema), pd.DataFrame(
+        rows, columns=["sid", "ra", "dec", "n", "tag"]
+    )
+
+
+def test_arrow_kernel_keeps_nullable_columns_and_types(spark):
+    """The k-NN kernel gathers output columns with Arrow ``take``:
+    nullable long and string columns on both sides come out with their
+    Spark types and their nulls in the right rows."""
+    from pyspark.sql.types import LongType, StringType
+
+    from lsd2_spark.operators.crossmatch import crossmatch_dataframes
+
+    n = 300
+    ra, dec = RNG.uniform(30, 31, n), RNG.uniform(5, 6, n)
+    left, lp = _typed_side(spark, "l", ra, dec, 0)
+    right, rp = _typed_side(
+        spark, "r", ra + RNG.uniform(-2e-3, 2e-3, n), dec + RNG.uniform(-2e-3, 2e-3, n), 10_000
+    )
+    hips = {0: list(range(12))}
+    out = crossmatch_dataframes(left, right, hips, hips, "ra", "dec", "sid",
+                                "ra", "dec", "sid", n_neighbors=1, dthresh=0.01)
+    types = {f.name: f.dataType for f in out.schema.fields}
+    assert types["left_n"] == LongType() and types["right_n"] == LongType()
+    assert types["left_tag"] == StringType() and types["right_tag"] == StringType()
+    got = out.collect()
+    d = hpx.gc_dist_deg(lp["ra"].to_numpy()[:, None], lp["dec"].to_numpy()[:, None],
+                        rp["ra"].to_numpy()[None, :], rp["dec"].to_numpy()[None, :])
+    best = d.argmin(axis=1)
+    want = {int(lp["sid"][i]): int(rp["sid"][best[i]]) for i in range(n) if d[i, best[i]] < 0.01}
+    assert {r["left_sid"]: r["right_sid"] for r in got} == want and len(got) == len(want)
+    lrow, rrow = lp.set_index("sid"), rp.set_index("sid")
+    nulls = {"left_n": 0, "left_tag": 0, "right_n": 0, "right_tag": 0}
+    for r in got:
+        for side, frame, key in (("left", lrow, r["left_sid"]), ("right", rrow, r["right_sid"])):
+            for c in ("n", "tag"):
+                v = frame.at[key, c]
+                want_v = None if pd.isna(v) else (int(v) if c == "n" else v)
+                assert r[f"{side}_{c}"] == want_v, (side, c, key)
+                nulls[f"{side}_{c}"] += want_v is None
+    assert all(nulls.values()), nulls
+
+
+def test_arrow_kernel_cell_without_right_rows_and_self_pairs(spark):
+    """A cell with left rows but no right rows returns nothing (directly
+    and through Spark), and exclude_same_id drops self pairs."""
+    import pyarrow as pa
+
+    from lsd2_spark.operators.crossmatch import (
+        _knn_kernel_factory, _prefixed_schema, crossmatch_dataframes,
+    )
+
+    n = 200
+    ra, dec = RNG.uniform(30, 31, n), RNG.uniform(5, 6, n)
+    left, lp = _typed_side(spark, "l", ra, dec, 0)
+    right, _ = _typed_side(spark, "r", ra + 180.0, -dec, 10_000)  # other side of the sky
+    hips = {0: list(range(12))}
+    cols = ["sid", "ra", "dec", "n", "tag"]
+    assert crossmatch_dataframes(left, right, hips, hips, "ra", "dec", "sid",
+                                 "ra", "dec", "sid", dthresh=0.5).count() == 0
+
+    schema = _prefixed_schema(left, right, cols, cols, "left", "right")
+    kernel = _knn_kernel_factory(cols, cols, "ra", "dec", "ra", "dec", "sid", 1, 0.5, schema)
+    ltab = pa.Table.from_pandas(lp, preserve_index=False)
+    empty = kernel((pa.scalar(0, pa.int32()), pa.scalar(4, pa.int64())), ltab, ltab.slice(0, 0))
+    assert empty.num_rows == 0 and empty.schema.names == schema.fieldNames()
+
+    same = crossmatch_dataframes(left, left, hips, hips, "ra", "dec", "sid",
+                                 "ra", "dec", "sid", n_neighbors=1, dthresh=0.5,
+                                 exclude_same_id=True).toPandas()
+    d = hpx.gc_dist_deg(ra[:, None], dec[:, None], ra[None, :], dec[None, :])
+    np.fill_diagonal(d, np.inf)
+    assert len(same) == (d.min(axis=1) < 0.5).sum() and len(same) > 0
+    assert (same["left_sid"] != same["right_sid"]).all()
+    np.testing.assert_array_equal(
+        same.sort_values("left_sid")["right_sid"].to_numpy(),
+        lp["sid"].to_numpy()[d.argmin(axis=1)][np.sort(same["left_sid"].to_numpy())],
+    )
+
+
 def test_bad_input_raises_value_error_not_assert(spark, tmp_path):
     """Input checks must survive ``python -O``, which strips asserts."""
     from lsd2_spark.operators.crossmatch import crossmatch_dataframes

@@ -1,4 +1,5 @@
-"""Cone-search and wide-append cost against catalog leaf count.
+"""Cone-search, wide-append and cross-match cost against catalog leaf
+count.
 
 Builds two catalogs from the same seeded synthetic NumPy sky (uniform
 background plus a dense Gaussian blob), one at about 150 leaves and one
@@ -9,13 +10,23 @@ are measured on each catalog:
 
 - ``cone_search``: reads only the leaf directories the cover hits, with
   the schema stored in the metadata;
-- ``root_scan``: the same pruning and distance predicates over
-  ``Catalog.df()``, which discovers every leaf under the catalog root.
+- ``root_scan``: the same pruning and distance predicates over a
+  fresh root-discovery read of the catalog (``Catalog._scan()``, which
+  ``Catalog.df()`` runs once per handle), so every query lists every
+  leaf under the catalog root.
 
 Each catalog then takes a wide append: a uniform all-sky batch that
 touches most of its leaves, appended to a fresh copy of the catalog
 ``APPEND_REPS`` times (median CPU, wall and jobs per append, plus the
 number of existing leaves the batch touches).
+
+Last, freshly loaded handles of each catalog and of a partner catalog
+(``PARTNER_ROWS`` rows near survey rows, ingested at the same
+threshold) run the same k = 2 cross-match twice in a row.  For each
+pass the report gives CPU, wall time and Spark jobs of building the
+lazy plan (``plan_*``) and of the whole operation (plan and collect).
+A handle lists its catalog once, so the plan cost of the second pass
+shows what a repeated cross-match pays for listings.
 
 CPU is user+system time of this process and all its descendants (the
 Spark JVM and the Python workers), from ``perfbench.run.CpuMeter``,
@@ -53,6 +64,9 @@ SEED = 1
 THRESHOLDS = {"~150 leaves": 1400, "~2k leaves": 94}
 APPEND_ROWS = 20_000
 APPEND_REPS = 3
+PARTNER_ROWS = 40_000
+XMATCH_K = 2
+XMATCH_DTHRESH_DEG = 0.01
 
 
 def sky(rng: np.random.Generator, n: int):
@@ -160,6 +174,36 @@ def measure_append(spark, meter, name, path, batch, warmup: int = 1) -> dict:
     return summary(cpu, wall, jobs)
 
 
+def partner_of(rng: np.random.Generator, pdf):
+    """``PARTNER_ROWS`` survey rows moved by under 0.005 deg, with new ids."""
+    part = pdf.sample(n=PARTNER_ROWS, random_state=int(rng.integers(1 << 31))).copy()
+    part["sid"] = np.arange(len(part), dtype=np.int64) + 10 * ROWS
+    part["ra"] = (part["ra"] + rng.uniform(-0.005, 0.005, len(part))) % 360.0
+    part["dec"] = np.clip(part["dec"] + rng.uniform(-0.005, 0.005, len(part)), -90, 90)
+    return part
+
+
+def measure_xmatch(spark, meter, name, path, partner_path) -> list:
+    """Two consecutive cross-matches on the same freshly loaded handles."""
+    from lsd2_spark.catalog import Catalog
+
+    cat = Catalog.load(spark, path, "sky")
+    other = Catalog.load(spark, partner_path, "partner")
+    passes = []
+    for rep in range(2):
+        lazy, pc, pw, pj = timed(
+            spark, meter, f"{name}-plan-{rep}",
+            lambda: cat.cross_match(other, n_neighbors=XMATCH_K, dthresh=XMATCH_DTHRESH_DEG),
+        )
+        rows, c, w, j = timed(spark, meter, f"{name}-run-{rep}", lazy.collect)
+        passes.append({
+            "plan_cpu_ms": round(1e3 * pc, 1), "plan_wall_ms": round(1e3 * pw, 1),
+            "plan_jobs": pj, "cpu_ms": round(1e3 * (pc + c), 1),
+            "wall_ms": round(1e3 * (pw + w), 1), "jobs": pj + j, "pairs": len(rows),
+        })
+    return passes
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--work", default=os.path.join(".bench_work", "cone_leaf_scaling"))
@@ -180,6 +224,7 @@ def main() -> None:
     qs = queries(rng, pdf, QUERIES)
     batch = pdf.iloc[ROWS // 3:ROWS // 3 + APPEND_ROWS].copy()  # uniform rows
     batch["sid"] += ROWS
+    partner = partner_of(rng, pdf)
     shutil.rmtree(args.work, ignore_errors=True)
 
     report = {}
@@ -197,7 +242,7 @@ def main() -> None:
 
         def root_scan(q, cat=cat):
             pred = cat.cone_pruning_predicate(*q)
-            df = cat.df().filter(F.lit(False) if pred is None else pred)
+            df = cat._scan().filter(F.lit(False) if pred is None else pred)
             dist = gc_dist(F.col("ra"), F.col("dec"), q[0], q[1])
             return df.withColumn("_DIST", dist).filter(F.col("_DIST") < q[2]).collect()
 
@@ -211,10 +256,20 @@ def main() -> None:
             "append_leaves_touched": leaves_touched(cat.meta.hips, batch),
             "append": measure_append(spark, meter, f"append-{threshold}", path, batch),
         }
+        partner_path = os.path.join(args.work, f"p{threshold}")
+        partition_catalog(
+            spark.createDataFrame(partner), partner_path, "partner", ra_col="ra",
+            dec_col="dec", id_col="sid", threshold=threshold, order_k=9,
+            write_margins=False,
+        )
+        report[label]["xmatch"] = measure_xmatch(
+            spark, meter, f"xmatch-{threshold}", path, partner_path
+        )
         same = report[label]["cone_search"]["rows"] == report[label]["root_scan"]["rows"]
         print(label, json.dumps(report[label]), "same rows:", same, flush=True)
     print(json.dumps({"rows": ROWS, "queries": len(qs), "seed": SEED,
-                      "append_rows": APPEND_ROWS, "load_end": os.getloadavg(),
+                      "append_rows": APPEND_ROWS, "partner_rows": PARTNER_ROWS,
+                      "load_end": os.getloadavg(),
                       "catalogs": report}))
     spark.stop()
     meter.stop()
