@@ -9,18 +9,23 @@ layout is byte-compatible with the reference:
     {path}/neighbor/Norder=...   (margin export, written by margins.py)
     {path}/{name}_meta.json
 
-The metadata JSON is the file index: its ``hips`` map names every leaf
-directory, and (an extension to the reference) ``schema`` stores the
-Spark read schema.  Cone searches read only the leaf directories their
-pixel cover hits, with that schema, so a query neither lists the
-catalog nor infers a schema; ``Catalog.df`` discovers the whole root
-with the same stored schema once per handle and reuses that relation.
+The metadata JSON is the file index: its ``files`` map names every
+leaf's Parquet files (the reference's ``hips`` leaf map is written too,
+derived from it), and (extensions to the reference) ``schema`` stores
+the Spark read schema and ``version`` counts commits.  Every read
+opens exactly the files the metadata names, with that schema, so no
+query infers a schema or reads a file no version lists: cone searches
+and other reads of a few leaves hand Spark the named files (no
+listing), and ``Catalog.df`` lists the root once per handle and keeps
+the named files.  Every write commits the same way
+(``Catalog._commit``): new files under fresh names, then one atomic
+publish of the next version, then removal of the files it superseded.
 
 Margins are an export, not maintained state: no query reads
 ``neighbor/`` (cross-match builds its halos at query time).  Ingest
 with ``write_margins=True`` or :meth:`Catalog.export_margins` writes it
-and sets ``margins_exported`` in the metadata; ``append``, ``delete``
-and ``rebalance`` clear that flag before their first data write and
+and sets ``margins_exported`` in the metadata; the commits of
+``append``, ``delete`` and ``rebalance`` clear that flag and then
 remove the directory, and :meth:`Catalog.margin_df` serves the export
 only while the committed metadata vouches for it.
 
@@ -48,9 +53,9 @@ bounded cell file.
 from __future__ import annotations
 
 import json
-import os
 import threading
 from dataclasses import dataclass, replace
+from functools import cached_property, reduce
 
 import numpy as np
 from pyspark.errors import AnalysisException
@@ -71,6 +76,7 @@ RANK_BITS = 21
 DEFAULT_ORDER_K = 8
 DEFAULT_THRESHOLD = 1_000_000  # reference default, partitioner.py:27
 DEFAULT_MARGIN_DEG = 0.1  # reference default, partitioner.py:54
+_READ_CHUNK = 32  # named files per parquet read (see Catalog._scan)
 
 
 def _dir_of(pix: Column) -> Column:
@@ -149,6 +155,16 @@ def _read_schema(schema: StructType) -> StructType:
     return StructType(data + list(PARTITION_FIELDS))
 
 
+def _leaf_rel(order: int, pix: int) -> str:
+    """A leaf's directory relative to the catalog root."""
+    return f"Norder={order}/Dir={_dir_value(pix)}/Npix={pix}"
+
+
+def _leaf_of_rel(rel: str) -> tuple[int, int]:
+    order, _, pix = (part.split("=", 1)[1] for part in rel.split("/"))
+    return int(order), int(pix)
+
+
 @dataclass
 class CatalogMetadata:
     cat_name: str
@@ -159,7 +175,11 @@ class CatalogMetadata:
     pix_threshold: int
     order_k: int
     margin_threshold: float
-    hips: dict[int, list[int]]
+    # leaf (Norder, Npix) -> the names of its Parquet files.  Every read
+    # opens exactly these, so a file the metadata does not name is never
+    # read.  Metadata written before the field existed names leaves only
+    # (its ``hips``); Catalog.load lists their files then.
+    files: dict[tuple[int, int], tuple[str, ...]]
     # High-water mark for streaming ingest: the last foreachBatch batch_id
     # whose append committed.  None for catalogs never fed by a stream.
     last_batch_id: int | None = None
@@ -171,6 +191,18 @@ class CatalogMetadata:
     # rows and leaves; a row- or leaf-changing mutation clears it.
     # Metadata written before the field existed reads as not exported.
     margins_exported: bool = False
+    # Bumped by every commit; 0 only in metadata written before the
+    # field existed.
+    version: int = 0
+
+    @cached_property
+    def hips(self) -> dict[int, list[int]]:
+        """The leaf set as ``{order: sorted pixels}`` (the reference's
+        coverage map), derived from ``files``."""
+        out: dict[int, list[int]] = {}
+        for o, p in sorted(self.files):
+            out.setdefault(o, []).append(p)
+        return out
 
     def to_json(self) -> str:
         return json.dumps(
@@ -183,7 +215,12 @@ class CatalogMetadata:
                 "pix_threshold": self.pix_threshold,
                 "order_k": self.order_k,
                 "margin_threshold": self.margin_threshold,
-                "hips": {str(k): sorted(v) for k, v in self.hips.items()},
+                "hips": {str(k): v for k, v in self.hips.items()},
+                "files": {
+                    _leaf_rel(*leaf): list(names)
+                    for leaf, names in sorted(self.files.items())
+                },
+                "version": self.version,
                 "last_batch_id": self.last_batch_id,
                 "schema": None if self.schema is None else self.schema.jsonValue(),
                 "margins_exported": self.margins_exported,
@@ -194,6 +231,10 @@ class CatalogMetadata:
     @staticmethod
     def from_json(s: str) -> "CatalogMetadata":
         d = json.loads(s)
+        if "files" in d:
+            files = {_leaf_of_rel(k): tuple(v) for k, v in d["files"].items()}
+        else:  # leaves only: Catalog.load lists their files
+            files = {(int(o), int(p)): () for o, ps in d["hips"].items() for p in ps}
         return CatalogMetadata(
             cat_name=d["cat_name"],
             ra_kw=d["ra_kw"],
@@ -203,10 +244,11 @@ class CatalogMetadata:
             pix_threshold=d["pix_threshold"],
             order_k=d["order_k"],
             margin_threshold=d.get("margin_threshold", DEFAULT_MARGIN_DEG),
-            hips={int(k): list(v) for k, v in d["hips"].items()},
+            files=files,
             last_batch_id=d.get("last_batch_id"),
             schema=StructType.fromJson(d["schema"]) if d.get("schema") else None,
             margins_exported=d.get("margins_exported", False),
+            version=d.get("version", 0),
         )
 
 
@@ -373,12 +415,12 @@ def partition_catalog(
         .withColumn("Dir", _dir_of(F.col("Npix")))
     )
     indexed = _with_spatial_index(assigned, ra_col, dec_col, p19_col="_p19")
-    (
-        indexed.write.mode("overwrite")
-        .partitionBy("Norder", "Dir", "Npix")
-        .parquet(f"{path}/catalog")
-    )
-
+    fs = fs or LOCAL_FS
+    fs.makedirs(path)
+    try:  # a re-ingest replaces the catalog committed at ``path``
+        prev = Catalog.load(spark, path, cat_name, fs=fs).meta
+    except FileNotFoundError:
+        prev = None
     meta = CatalogMetadata(
         cat_name=cat_name,
         ra_kw=ra_col,
@@ -388,14 +430,12 @@ def partition_catalog(
         pix_threshold=threshold,
         order_k=order_k,
         margin_threshold=margin_threshold,
-        hips=pm.hips,
+        files=prev.files if prev else {},
         schema=_read_schema(indexed.schema),
+        version=prev.version if prev else 0,
     )
-    fs = fs or LOCAL_FS
-    fs.makedirs(path)
-    fs.publish(f"{path}/{cat_name}_meta.json", meta.to_json())
-
-    cat = Catalog(spark, path, meta, fs=fs)
+    head = Catalog(spark, path, meta, fs=fs)
+    cat = head._commit([*pm.leaf_list(), *meta.files], indexed)
     if write_margins:
         cat = cat._export_margins(df)
     return cat
@@ -449,19 +489,19 @@ class Catalog:
         self.spark = spark
         self.path = path
         self.meta = meta
-        # the lifecycle layer's filesystem (censuses, intent markers,
-        # roll-forward moves) — injectable so object-store deployments
-        # and fault-injection tests swap the POSIX default out; the
-        # data plane (parquet scans/writes) goes through Spark's own
-        # Hadoop FileSystem regardless (sources/fs.py)
+        # the filesystem of the commit (metadata publishes, leaf listings,
+        # file removal) — injectable so object-store deployments and
+        # fault-injection tests swap the POSIX default out; the data
+        # plane (parquet scans/writes) goes through Spark's own Hadoop
+        # FileSystem regardless (sources/fs.py)
         self._fs = fs or LOCAL_FS
         # True when the schema came from the files, not the metadata
         # (a catalog written before the metadata stored it); fsck's
         # repair persists it
         self._schema_inferred = False
-        # the root-discovery relation df() lists once and then projects
-        # (see df()); the lock keeps threads sharing the handle to one
-        # listing
+        # the relation over every listed file that df() builds once and
+        # then projects (see df()); the lock keeps threads sharing the
+        # handle to one listing
         self._full: DataFrame | None = None
         self._full_lock = threading.Lock()
 
@@ -486,7 +526,12 @@ class Catalog:
             meta_file = f"{cat_name}_meta.json"
         meta = CatalogMetadata.from_json(fs.read_text(f"{path}/{meta_file}"))
         cat = Catalog(spark, path, meta, fs=fs)
-        cat._schema()  # once per load: the catalogs its mutations return carry it
+        # once per load, for metadata written before these fields existed:
+        # the catalogs its mutations return carry them, and fsck's repair
+        # stores them
+        cat._schema()
+        if meta.version == 0:
+            cat.meta = replace(cat.meta, files=cat._list(meta.files))
         return cat
 
     def _schema(self) -> StructType:
@@ -499,58 +544,106 @@ class Catalog:
         return self.meta.schema
 
     def _leaf_dir(self, order: int, pix: int) -> str:
-        return f"{self.path}/catalog/Norder={order}/Dir={_dir_value(pix)}/Npix={pix}"
+        return f"{self.path}/catalog/{_leaf_rel(order, pix)}"
 
     def _scan(self, leaves: list[tuple[int, int]] | None = None) -> DataFrame:
-        """The one catalog reader, always with the stored schema (no
-        schema-inference job).  ``leaves=None`` discovers every leaf
-        under the root; otherwise exactly the listed ``(Norder, Npix)``
-        leaf directories are read and nothing else is listed."""
+        """The one catalog reader: exactly the files the metadata lists
+        for ``leaves`` (every listed leaf when None), with the stored
+        schema — no schema is inferred.  A leaf the metadata does not
+        list contributes no rows."""
+        files = self.meta.files
         root = f"{self.path}/catalog"
         schema = self._schema()
         reader = self.spark.read.schema(schema).option("basePath", root)
-        if leaves is None:
-            return reader.parquet(root)
-        if not leaves:
+        wanted = sorted(files) if leaves is None else leaves
+        missing = [lf for lf in wanted if lf in files and not files[lf]]
+        if missing:
+            raise self._missing(missing)
+        listed = [f"{_leaf_rel(*lf)}/{n}" for lf in wanted for n in files.get(lf, ())]
+        if not listed:
             # the always-false filter folds to an empty local relation,
             # which collects without a Spark job
             return self.spark.createDataFrame([], schema).filter(F.lit(False))
-        dirs = [self._leaf_dir(o, p) for o, p in leaves]
+
+        def missing_from(on_disk: set[str]) -> list[tuple[int, int]]:
+            return [
+                lf for lf in wanted
+                if any(f"{_leaf_rel(*lf)}/{n}" not in on_disk for n in files.get(lf, ()))
+            ]
+
         try:
-            return reader.parquet(*dirs)
+            if leaves is None:
+                # every leaf: one listing of the root, then keep only the
+                # listed files (a filter on each file's path, which Spark
+                # applies to the file list, so no other file is opened):
+                # one scan, split as Spark splits a catalog, where named
+                # files would need a listing job with a task per file
+                full = reader.parquet(root)
+                on_disk = {f.rsplit("/catalog/", 1)[-1] for f in full.inputFiles()}
+                rel = F.substring_index(F.col("_metadata.file_path"), "/catalog/", -1)
+                df = full.filter(rel.isin(listed))
+            else:
+                # a few leaves: the named files themselves, at most 32 per
+                # read (Spark resolves more paths, its default
+                # spark.sql.sources.parallelPartitionDiscovery.threshold,
+                # in a listing job with a task per path)
+                df = reduce(DataFrame.union, [
+                    reader.parquet(*[f"{root}/{p}" for p in listed[i:i + _READ_CHUNK]])
+                    for i in range(0, len(listed), _READ_CHUNK)
+                ])
+                on_disk = set(listed)
         except AnalysisException as e:
-            missing = [lf for lf, d in zip(leaves, dirs) if not self._fs.isdir(d)]
+            missing = missing_from({p for p in listed if self._fs.exists(f"{root}/{p}")})
             if not missing:
                 raise
-            raise FileNotFoundError(
-                f"catalog '{self.meta.cat_name}': the metadata lists leaf "
-                f"(Norder, Npix) {missing[0]} but {self._leaf_dir(*missing[0])} "
-                f"is missing ({len(missing)} missing leaf dir(s) in this read); "
-                "run Catalog.fsck() to compare the metadata with the disk, "
-                "fsck(repair=True) to rewrite it from the disk"
-            ) from e
+            raise self._missing(missing) from e
+        missing = missing_from(on_disk)
+        if missing:
+            raise self._missing(missing)
+        return df
+
+    def _missing(self, leaves: list[tuple[int, int]]) -> FileNotFoundError:
+        """The error for a read whose listed files are gone: replaced by
+        a newer version than this handle's, or lost from the disk."""
+        try:
+            committed = self._committed_meta().version
+        except (OSError, ValueError):
+            committed = self.meta.version
+        name, version = self.meta.cat_name, self.meta.version
+        if committed > version:
+            return FileNotFoundError(
+                f"catalog '{name}': this handle reads version {version}, older "
+                f"than the committed version {committed}, which has replaced "
+                f"the files of leaf (Norder, Npix) {leaves[0]}; read through "
+                "the catalog the mutation returned, or Catalog.load it again"
+            )
+        return FileNotFoundError(
+            f"catalog '{name}': the metadata lists leaf (Norder, Npix) "
+            f"{leaves[0]} but files of it under {self._leaf_dir(*leaves[0])} "
+            f"are missing ({len(leaves)} such leaf/leaves in this read); run "
+            "Catalog.fsck() to compare the metadata with the disk, "
+            "fsck(repair=True) to drop what is missing from it"
+        )
 
     def _project(self, df: DataFrame, columns: list[str] | None) -> DataFrame:
         return df if columns is None else df.select(*self._with_required(columns))
 
     def df(self, columns: list[str] | None = None) -> DataFrame:
-        """The catalog as a lazy DataFrame over every leaf on disk (root
-        discovery, so cells the metadata does not list are visible).
-        The schema is the one the metadata stores: data columns, then
-        the hive partition columns ``Norder`` int, ``Dir`` long,
-        ``Npix`` long, on which filters prune at the file level.
+        """The catalog as a lazy DataFrame over exactly the files this
+        handle's metadata version lists.  The schema is the one the
+        metadata stores: data columns, then the hive partition columns
+        ``Norder`` int, ``Dir`` long, ``Npix`` long, on which filters
+        prune at the file level.
 
-        The root is listed once per handle, at the first call; every
-        later call is a projection of that pinned relation, so
-        cross-match, :meth:`create_view` and :meth:`sky_map` pay no
-        listing.  Threads sharing a handle share the one listing.  A
-        handle's full reads are therefore a snapshot of the files at its
-        first call: mutations return new handles, leaves written later
-        are not visible through this one, and a leaf another writer has
-        since rewritten fails the read on its missing file — never a
-        silent mix.  Reads that must see the disk as it is now (the
-        mutations' counts, :meth:`fsck`, :meth:`export_margins`) list
-        it afresh."""
+        The relation is built once per handle, at the first call (one
+        listing of the catalog root, keeping the named files); every
+        later call is a projection of it, so cross-match,
+        :meth:`create_view` and :meth:`sky_map` pay no listing.  Threads
+        sharing a handle share it.  A handle reads its own version:
+        mutations return new handles, and leaves a later version adds are
+        not visible through this one.  A file a later version has
+        replaced is deleted when that mutation returns, so a read through
+        this handle that needs it fails — never a silent mix."""
         with self._full_lock:
             if self._full is None:
                 self._full = self._scan()
@@ -564,6 +657,123 @@ class Catalog:
         """The metadata on disk, which may be newer than this handle's."""
         return CatalogMetadata.from_json(self._fs.read_text(self._meta_path()))
 
+    def _head(self) -> "Catalog":
+        """A handle on the committed version: every mutation plans from
+        it, so one run through a stale handle keeps every commit made
+        since that handle was loaded."""
+        return Catalog.load(self.spark, self.path, self.meta.cat_name, fs=self._fs)
+
+    # -- the commit ---------------------------------------------------------
+
+    def _list(self, leaves) -> dict[tuple[int, int], tuple[str, ...]]:
+        """The Parquet file names in each leaf directory (none for a
+        leaf without one)."""
+        out = {}
+        for leaf in leaves:
+            try:
+                names = self._fs.listdir(self._leaf_dir(*leaf))
+            except FileNotFoundError:
+                names = []
+            out[leaf] = tuple(sorted(n for n in names if n.endswith(".parquet")))
+        return out
+
+    def _sweep(self, meta: "CatalogMetadata", leaves) -> None:
+        """Remove the Parquet files in ``leaves`` that ``meta`` does not
+        list, with their Hadoop ``.crc`` sidecars, and the directory of
+        each leaf it lists no file for."""
+        for leaf in leaves:
+            keep = meta.files.get(leaf)
+            d = self._leaf_dir(*leaf)
+            if not keep:
+                self._fs.rmtree(d)
+                continue
+            for name in self._list([leaf])[leaf]:
+                if name not in keep:
+                    for p in (f"{d}/{name}", f"{d}/.{name}.crc"):
+                        try:
+                            self._fs.remove(p)
+                        except FileNotFoundError:
+                            pass
+
+    def _commit_meta(self, new_meta: "CatalogMetadata") -> None:
+        """Atomic metadata publish: the commit point."""
+        self._fs.publish(self._meta_path(), new_meta.to_json())
+
+    def _publish(self, meta: "CatalogMetadata") -> "CatalogMetadata":
+        """Publish ``meta`` as the version after this handle's; refused
+        when another commit has landed since this handle was loaded."""
+        try:
+            committed = self._committed_meta().version
+        except FileNotFoundError:  # a new catalog
+            committed = 0
+        if committed != self.meta.version:
+            raise RuntimeError(
+                f"catalog '{self.meta.cat_name}': version {committed} was "
+                f"committed while this mutation worked from version "
+                f"{self.meta.version}; nothing was published, run it again"
+            )
+        meta = replace(meta, version=self.meta.version + 1)
+        self._commit_meta(meta)
+        return meta
+
+    def _drop_superseded(self, leaves) -> None:
+        """After a commit: delete what it no longer lists in ``leaves``
+        (superseded files, emptied leaf directories) and, when the margin
+        export is withdrawn, ``neighbor/``."""
+        self._sweep(self.meta, leaves)
+        if not self.meta.margins_exported:
+            self._fs.rmtree(f"{self.path}/neighbor")
+
+    def _commit(self, leaves, data: DataFrame | None, **changes) -> "Catalog":
+        """The one write path.  Ingest, every mutation and the margin
+        export commit through it, on the handle of the committed version
+        they planned from (see :meth:`_head`).  ``data`` holds all the
+        rows of every leaf in ``leaves`` after the change, with the hive
+        partition columns; a leaf it has no row for leaves the catalog.
+        ``changes`` are the other metadata fields that change.
+
+        1. remove the files in ``leaves`` that the metadata does not
+           list: the leftovers of a crashed attempt;
+        2. write ``data`` in append mode: fresh file names, nothing is
+           overwritten;
+        3. list ``leaves`` to learn the new files;
+        4. publish the next version (refused if the committed version
+           has moved);
+        5. only then delete the superseded files, emptied leaf
+           directories and, when the export is withdrawn, ``neighbor/``.
+
+        Readers open only listed files, so a crash before step 4 leaves
+        this version whole and a crash after it the next one, each plus
+        unlisted files that :meth:`fsck` reports and ``repair=True`` or
+        the next mutation over those leaves removes.  One writer at a
+        time: the version check refuses a commit whose base has moved,
+        but two writes of the same leaf that overlap would list each
+        other's files."""
+        base = self.meta
+        leaves = sorted(set(leaves))
+        self._sweep(base, leaves)
+        if data is not None:
+            (
+                data.write.mode("append")
+                .partitionBy(*PARTITION_COLS)
+                .parquet(f"{self.path}/catalog")
+            )
+        files = dict(base.files)
+        for leaf, names in self._list(leaves).items():
+            new = tuple(n for n in names if n not in base.files.get(leaf, ()))
+            if new:
+                files[leaf] = new
+            else:
+                files.pop(leaf, None)
+        cat = Catalog(
+            self.spark, self.path, self._publish(replace(base, files=files, **changes)),
+            fs=self._fs,
+        )
+        cat._drop_superseded(leaves)
+        return cat
+
+    # -- margins ------------------------------------------------------------
+
     def margin_df(self) -> DataFrame | None:
         """The ``neighbor/`` margin export, or None unless the committed
         metadata vouches for it: an append, delete or rebalance since
@@ -576,49 +786,31 @@ class Catalog:
 
     def export_margins(self) -> "Catalog":
         """Write the ``neighbor/`` margin dataset (reference sink S8,
-        dask_utils.py:246-318) from the catalog's current rows and
+        dask_utils.py:246-318) from the catalog's committed rows and
         vouch for it in the metadata.  Nothing keeps the export up to
         date: ``append``, ``delete`` and ``rebalance`` withdraw it, so
-        call this again after them when a consumer needs the halos.
-        ``compact`` leaves a valid export alone (rows and leaves do not
-        change).  Returns the catalog with the flag set."""
-        if self._fs.exists(self._rebalance_intent_path()):
-            return self._reconcile_rebalance_intent().export_margins()
-        if self._fs.exists(self._delete_intent_path()):
-            return self._reconcile_delete_intent().export_margins()
-        if self._fs.exists(self._compact_intent_path()):
-            return self._reconcile_compact_intent().export_margins()
-        return self._export_margins(self._scan().drop(*PARTITION_COLS, "_ID"))
+        call this again after them when a consumer needs the halos
+        (while the committed metadata vouches for an export, this
+        returns at once).  ``compact`` leaves a valid export alone (rows
+        and leaves do not change).  Returns the catalog with the flag
+        set."""
+        head = self._head()
+        if head.meta.margins_exported:
+            return head
+        return head._export_margins(head._scan().drop(*PARTITION_COLS, "_ID"))
 
     def _export_margins(self, src: DataFrame) -> "Catalog":
         """Export the halos of the source rows ``src`` (the bare input
-        columns): withdraw any previous export, write the new one, and
-        only then publish the flag, so a crash mid-write never leaves a
-        vouched partial export."""
+        columns) of a version that vouches for no export, then commit
+        the flag: a crash mid-write leaves an export nothing vouches
+        for, which :meth:`margin_df` ignores and ``fsck(repair=True)``
+        removes."""
         from lsd2_spark.operators.margins import write_margin_dataset
 
-        meta = self._invalidate_margins(self.meta)
-        write_margin_dataset(src, self, ra_col=meta.ra_kw, dec_col=meta.dec_kw)
-        meta = replace(meta, margins_exported=True)
-        self._commit_meta(meta)
-        return Catalog(self.spark, self.path, meta, fs=self._fs)
+        write_margin_dataset(src, self, ra_col=self.meta.ra_kw, dec_col=self.meta.dec_kw)
+        return self._commit([], None, margins_exported=True)
 
-    def _invalidate_margins(self, meta: "CatalogMetadata") -> "CatalogMetadata":
-        """Withdraw the margin export before a write that changes rows
-        or leaves: clear the flag in the committed metadata (nothing
-        else in it changes), then remove ``neighbor/``.  A crash in
-        between leaves a directory no metadata vouches for, which
-        :meth:`margin_df` ignores and ``fsck(repair=True)`` removes.
-        Returns ``meta`` with the flag cleared, for the final commit."""
-        committed = self._committed_meta()
-        if committed.margins_exported:
-            self._fs.publish(
-                self._meta_path(),
-                replace(committed, margins_exported=False).to_json(),
-            )
-        self._fs.rmtree(f"{self.path}/neighbor")
-        return replace(meta, margins_exported=False)
-
+    # -- mutations ----------------------------------------------------------
     def append(self, df: DataFrame, batch_id: int | None = None) -> "Catalog":
         """Incremental ingest (extension — the reference can only
         re-import from scratch): append rows to an existing catalog.
@@ -630,81 +822,56 @@ class Catalog:
         - rows outside the original sky coverage open new leaves at
           ``order_k`` (recorded in the metadata);
         - only the touched cells are re-ranked (their existing rows are
-          re-read pruned, merged, and re-indexed so ``_ID`` stays the
-          global rank-within-pixel; their pixel comes out of the stored
-          ``_ID``) and rewritten with DYNAMIC partition
-          overwrite — untouched cells are never read or written;
-        - a margin export is withdrawn before the first data write
-          (see :meth:`export_margins`): the committed metadata stops
-          vouching for it and ``neighbor/`` is removed.
+          read from their listed files, merged, and re-indexed so
+          ``_ID`` stays the global rank-within-pixel; their pixel comes
+          out of the stored ``_ID``) and rewritten whole, one new file
+          per cell — untouched cells are never read or written;
+        - the commit withdraws a margin export (see
+          :meth:`export_margins`).
 
         Leaves are NOT re-split: a cell pushed past ``pix_threshold``
-        warns (re-import to re-balance), matching the density contract.
+        warns (run :meth:`rebalance`), matching the density contract.
 
         Contract: the incoming batch's id column must be unique within
         the batch (the covered/uncovered split anti-joins on it).
 
-        Concurrent readers: dynamic partition overwrite REPLACES the
-        files of touched cells.  A handle's full reads (:meth:`df`,
-        cross-match) use the files it listed at its first full read: on
-        a handle that read before the append (the one it was called on
-        included) such a read either fails on a rewritten cell's
-        missing files or returns the pre-append rows — never a
-        duplicated/partial mix — and never sees the append's NEW
-        leaves.  A cone search resolves its leaf
-        set from the metadata its handle was loaded with: a pre-append
-        handle never sees the NEW leaves either (rows landing in
-        existing leaves it does see).  Use the returned catalog or
-        :meth:`Catalog.load` after appends; for true snapshot isolation
-        under concurrent writers at scale, layer a transactional table
-        format over the same layout.
+        Commit and crash safety (see :meth:`_commit`): the append plans
+        from the committed version, even through a stale handle, writes
+        the touched cells' new files under fresh names and publishes the
+        next version, then deletes the superseded files.  A crash before
+        the publish leaves the previous version whole (the new files are
+        unlisted, so never read); a crash after it, the new one.
 
-        Reads: the schema check uses the stored schema, and only the
-        touched leaves that already exist are read (before the write)
-        and recounted (after it) — the catalog is never listed.
+        Concurrent readers: a handle reads the files of its own version.
+        Through a handle loaded before the append (the one it was called
+        on included), reads return the pre-append rows, or — for a read
+        that needs a touched cell, whose old files the append deleted —
+        fail with FileNotFoundError naming the newer committed version;
+        never a mix.  Use the returned catalog or :meth:`Catalog.load`
+        after appends.
 
         ``batch_id`` (streaming ingest): Structured Streaming's
         ``foreachBatch`` re-delivers the last uncommitted batch after a
         crash/restart.  Batches are applied serially with monotonically
         increasing ids, so exactly-once reduces to a high-water-mark
-        check: the last committed ``batch_id`` is persisted in the
-        catalog metadata (read from the COMMITTED on-disk file, not the
-        in-memory copy, so a fresh writer after restart still sees it)
-        and a replayed ``batch_id <= last_batch_id`` is a no-op.  The
-        metadata file is written via atomic rename, so a crash between
-        the data overwrite and the metadata commit leaves the old
-        high-water mark in place and the replayed batch re-runs the
-        same dynamic partition overwrite — the touched cells are
-        rewritten from (untouched existing ∪ batch), which converges to
-        the same bytes.  A write-ahead intent marker records the
-        pre-batch touched-cell row count so ``n_sources`` stays exact
-        even when the replay recounts cells that already contain the
-        torn-written batch.
+        check: the last committed ``batch_id`` rides the same metadata
+        commit as the batch's files, and a replayed ``batch_id <=
+        last_batch_id`` is a no-op.  A batch whose commit was lost runs
+        again from the committed version and lands once.  Rows of the
+        touched cells whose id the batch carries are replaced, not
+        duplicated, so re-sending rows under a new batch id converges
+        too.
         """
-        # Converge any crashed delete/rebalance FIRST, exactly as
-        # delete() and rebalance() do at entry: in the window after a
-        # rebalance wrote its 'done' marker but before its metadata
-        # commit, the committed coverage map still lists the split
-        # parents — an append planned against it would write the batch
-        # into parent directories that the next reconciliation rolls
-        # forward and REMOVES, silently losing the rows (and a stale
-        # delete marker's recorded committed_n_sources would stop
-        # reflecting the intervening append).
-        if self._fs.exists(self._rebalance_intent_path()):
-            return self._reconcile_rebalance_intent().append(df, batch_id=batch_id)
-        if self._fs.exists(self._delete_intent_path()):
-            return self._reconcile_delete_intent().append(df, batch_id=batch_id)
-        if self._fs.exists(self._compact_intent_path()):
-            return self._reconcile_compact_intent().append(df, batch_id=batch_id)
+        head = self._head()
+        meta = head.meta
         spark = self.spark
-        meta = self.meta
         # Fail fast on schema drift: the touched-cell rewrite writes
         # (existing ∪ batch) projected to the BATCH's columns, so a
         # batch missing a column would silently drop that column from
         # every rewritten cell, and an extra column fails later with a
         # cryptic resolve error.  Additive evolution is a re-import.
         cat_cols = [
-            f.name for f in self._schema().fields
+            f.name for f in head._schema().fields
             if f.name not in (*PARTITION_COLS, "_ID")
         ]
         missing = [c for c in cat_cols if c not in df.columns]
@@ -715,16 +882,12 @@ class Catalog:
                 f"missing columns {missing}, unexpected columns {extra}; "
                 f"expected exactly {cat_cols}"
             )
-        if batch_id is not None:
-            committed = Catalog.load(spark, self.path, meta.cat_name).meta
-            if (
-                committed.last_batch_id is not None
-                and batch_id <= committed.last_batch_id
-            ):
-                return Catalog(spark, self.path, committed, fs=self._fs)
-            # Replay after a torn commit: restart from the durable state so
-            # `existing` below reflects what is actually on disk.
-            meta = committed
+        if (
+            batch_id is not None
+            and meta.last_batch_id is not None
+            and batch_id <= meta.last_batch_id
+        ):
+            return head
         order_k = meta.order_k
         ra, dec = F.col(meta.ra_kw), F.col(meta.dec_kw)
 
@@ -761,7 +924,7 @@ class Catalog:
             # EXCEPT where the row's order_k pixel already contains finer
             # coverage leaves (possible after a rebalance): an order_k leaf
             # there would spatially overlap them, and a later rebalance's
-            # dynamic overwrite of its children would clobber those cells.
+            # rewrite of its children would collide with those cells.
             # Such rows open their leaf at the finest descendant order
             # instead, which is disjoint from every existing leaf by
             # construction (no coverage exists below that order there).
@@ -809,122 +972,43 @@ class Catalog:
             ).cache()
 
             # ONE plan-sized collect (cell → count) yields the touched-cell
-            # list, the batch row count, and — by subtracting the known leaf
-            # set — the new leaves; previously three separate driver jobs
-            # per batch, a real latency tax on streaming micro-batches.
+            # list and the batch row count (new leaves are the touched
+            # cells the metadata does not list)
             cell_counts = assigned.groupBy("Norder", "Npix").count().collect()
             # the collect materialized ``assigned``: keep one cached copy
             # of the batch, not two
             withk.unpersist()
             touched = [(int(r["Norder"]), int(r["Npix"])) for r in cell_counts]
             n_new = int(sum(r["count"] for r in cell_counts))
-            known = {(o, p) for o, pixs in meta.hips.items() for p in pixs}
-            new_leaves = [c for c in touched if c not in known]
-            new_set = set(new_leaves)
 
             # merge touched cells' existing rows with the new ones: read
-            # exactly the touched leaves already on disk, never list the
-            # catalog.  A new leaf normally has no directory yet; one that
-            # does holds rows appended through a newer handle of this
-            # catalog (or a torn attempt of this batch), which the merge
-            # must keep.
-            data_cols = list(df.columns)
-            on_disk = [
-                c for c in touched
-                if c not in new_set or self._fs.isdir(self._leaf_dir(*c))
-            ]
-            existing = self._scan(on_disk).select(
-                *data_cols, "Norder", "Npix", "Dir",
+            # exactly the listed files of the touched leaves (a new leaf
+            # has none), never list the catalog
+            existing = head._scan(touched).select(
+                *df.columns, "Norder", "Npix", "Dir",
                 pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER).alias("_p19"),
             )
-            # Row-level idempotence: drop any existing rows that share an id
-            # with the batch (a broadcast anti-join — the batch id set is
-            # small relative to the catalog).  Under the globally-unique-id
-            # contract this is a no-op in normal operation; after a torn
-            # streaming commit (data overwritten, metadata not) it makes the
-            # replayed overwrite converge to the same bytes instead of
-            # duplicating the batch.
+            # Row-level idempotence: existing rows that share an id with
+            # the batch are replaced (a broadcast anti-join — the batch id
+            # set is small relative to the catalog).  Under the
+            # globally-unique-id contract this is a no-op; rows re-sent
+            # under a new batch id converge instead of duplicating.
             batch_ids = F.broadcast(df.select(meta.id_kw).distinct())
-            marked = existing.join(
-                batch_ids.withColumn("_inb", F.lit(1)), meta.id_kw, "left"
-            )
-            crow = marked.agg(
-                F.count(F.lit(1)).alias("n"), F.count("_inb").alias("r")
-            ).collect()[0]
-            disk_touched, n_replaced = int(crow["n"]), int(crow["r"])
+            n_replaced = existing.join(batch_ids, meta.id_kw, "left_semi").count()
             existing = existing.join(batch_ids, meta.id_kw, "left_anti")
             merged = existing.unionByName(assigned.select(*existing.columns))
-
-            # n_sources accounting must survive a torn-commit replay: after a
-            # crash between the data overwrite and the metadata commit, the
-            # batch rows are already on disk, so recounting the touched cells
-            # sees them and `n - n_replaced` would cancel the batch out of the
-            # total.  A write-ahead intent marker (atomic rename, keyed by
-            # batch_id) records the touched-cell row count BEFORE the first
-            # data write; replay reads the marker instead of trusting the
-            # (possibly torn) disk state, and
-            #   n_sources = committed + rows_after_touched - rows_before_touched
-            # is exact in every crash window.
-            meta = self._invalidate_margins(meta)
-            pre_touched = disk_touched
-            intent_path = f"{self.path}/{meta.cat_name}_append_intent.json"
-            if batch_id is not None:
-                intent = None
-                if self._fs.exists(intent_path):
-                    try:
-                        intent = json.loads(self._fs.read_text(intent_path))
-                    except (OSError, ValueError):
-                        intent = None
-                if intent is not None and intent.get("batch_id") == batch_id:
-                    pre_touched = int(intent["pre_touched"])
-                else:
-                    self._fs.publish(
-                        intent_path,
-                        json.dumps(
-                            {"batch_id": batch_id, "pre_touched": disk_touched}
-                        ),
-                    )
-
             indexed = _with_spatial_index(merged, meta.ra_kw, meta.dec_kw, p19_col="_p19")
-            prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    indexed.write.mode("overwrite")
-                    .partitionBy("Norder", "Dir", "Npix")
-                    .parquet(f"{self.path}/catalog")
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            cat = head._commit(
+                touched,
+                indexed,
+                n_sources=meta.n_sources + n_new - n_replaced,
+                last_batch_id=batch_id if batch_id is not None else meta.last_batch_id,
+                margins_exported=False,
+            )
         finally:
             withk.unpersist()
             if assigned is not None:
                 assigned.unpersist()
-
-        hips = {o: list(ps) for o, ps in meta.hips.items()}
-        for o, p in new_leaves:  # distinct, and none of them known
-            hips.setdefault(o, []).append(p)
-        hips = {o: sorted(ps) for o, ps in hips.items()}
-        # rows now on disk in the touched cells = (existing - replaced) + new
-        n_after_touched = disk_touched - n_replaced + n_new
-        new_meta = replace(
-            meta,
-            n_sources=meta.n_sources + n_after_touched - pre_touched,
-            hips=hips,
-            last_batch_id=batch_id if batch_id is not None else meta.last_batch_id,
-        )
-        cat = Catalog(spark, self.path, new_meta, fs=self._fs)
-
-        # Atomic rename: the metadata file IS the commit record (it carries
-        # the streaming high-water mark), so it must never be observable
-        # half-written.  Everything above is idempotent under replay; this
-        # rename is the commit point.
-        self._commit_meta(new_meta)
-        if batch_id is not None:
-            try:
-                self._fs.remove(intent_path)
-            except FileNotFoundError:
-                pass
 
         over = (
             cat._scan(touched)
@@ -944,89 +1028,13 @@ class Catalog:
             )
         return cat
 
-    def _delete_intent_path(self) -> str:
-        return f"{self.path}/{self.meta.cat_name}_delete_intent.json"
-
-    def _commit_meta(self, new_meta: "CatalogMetadata") -> None:
-        """Atomic-rename metadata commit (the commit point)."""
-        self._fs.publish(self._meta_path(), new_meta.to_json())
-
-    def _reconcile_delete_intent(self) -> "Catalog":
-        """Converge a crashed delete.  The write-ahead intent marker
-        records the touched cells, their pre-delete row count, and the
-        committed ``n_sources``; whatever crash window the previous
-        delete died in (before, during, or after the data overwrite),
-        recounting the marker cells on disk gives
-
-            n_sources = committed + rows_now_in_cells - pre_touched
-
-        exactly — the same accounting append uses.  Emptied directories
-        and the coverage map are re-derived from the disk state; every
-        step is idempotent, so a crash during reconciliation just
-        reconciles again.  The crashed delete withdrew any margin export
-        before writing, so the commit keeps it withdrawn."""
-        spark, meta = self.spark, self.meta
-        intent_path = self._delete_intent_path()
-        try:
-            intent = json.loads(self._fs.read_text(intent_path))
-        except (OSError, ValueError):
-            try:
-                self._fs.remove(intent_path)
-            except FileNotFoundError:
-                pass
-            return self
-        touched = [(int(o), int(p)) for o, p in intent["touched"]]
-        pre_touched = int(intent["pre_touched"])
-        committed = int(intent["committed_n_sources"])
-
-        cell_key = F.col("Norder").cast("long") * F.lit(1 << 40) + F.col(
-            "Npix"
-        ).cast("long")
-        touched_pred = cell_key.isin([(o << 40) + p for o, p in touched])
-        now = (
-            self._scan()
-            .filter(touched_pred)
-            .groupBy("Norder", "Npix")
-            .count()
-            .collect()
-        )
-        after_touched = int(sum(r["count"] for r in now))
-        survivors = {(int(r["Norder"]), int(r["Npix"])) for r in now}
-
-        hips = {o: sorted(ps) for o, ps in meta.hips.items()}
-        for o, p in touched:
-            if (o, p) in survivors:
-                continue
-            self._fs.rmtree(self._leaf_dir(o, p))
-            if o in hips and p in hips[o]:
-                hips[o] = [x for x in hips[o] if x != p]
-                if not hips[o]:
-                    del hips[o]
-
-        new_meta = replace(
-            meta,
-            n_sources=committed + after_touched - pre_touched,
-            hips=hips,
-            margins_exported=False,
-        )
-        cat = Catalog(spark, self.path, new_meta, fs=self._fs)
-        cat._commit_meta(new_meta)
-        try:
-            self._fs.remove(intent_path)
-        except FileNotFoundError:
-            pass
-        return cat
-
     def delete(self, predicate: "str | Column") -> "Catalog":
         """Delete matching rows (the privacy / right-to-be-forgotten
         pass a training-data catalog needs; the reference can only
-        re-import).  Only cells containing matches are re-read,
-        re-ranked, and rewritten via dynamic partition overwrite;
-        fully-emptied cells have their partition directories removed
-        (dynamic overwrite cannot clear a partition it emits no rows
-        for) and leave the coverage map.  The kept rows are read from
-        exactly the touched leaves.  A delete that matches rows
-        withdraws any margin export before its first write (see
+        re-import).  Only cells containing matches are re-read from
+        their listed files, re-ranked and rewritten; fully-emptied cells
+        leave the coverage map and their directories are removed.  A
+        delete that matches rows withdraws any margin export (see
         :meth:`export_margins`).
 
         NULL predicate rows are KEPT (a predicate that cannot decide a
@@ -1034,164 +1042,37 @@ class Catalog:
         pred=TRUE rows and the keep filter uses NOT coalesce(pred,
         FALSE), so both sides agree.
 
-        Crash safety mirrors ``append``: a write-ahead intent marker
-        (atomic rename, written before the first data mutation) records
-        the touched cells, their pre-delete row count, and the
-        committed ``n_sources``.  The metadata rename is the commit
-        point; a crash anywhere before it leaves the marker in place,
-        and the next ``delete`` (or ``fsck(repair=True)``) replays it —
-        recounting the marker cells makes ``n_sources``, the coverage
-        map and emptied directories converge in every crash window.
+        Commit and crash safety are append's (see :meth:`_commit`): the
+        delete plans from the committed version, and a crash before its
+        publish leaves the rows undeleted, after it deleted.
         """
-        spark = self.spark
-        # a stale marker from EITHER crashed mutation must converge
-        # before this one reads disk state: a half-finished rebalance
-        # leaves rows duplicated across parent+child dirs (match counts
-        # would double), and vice versa a half-finished delete leaves
-        # n_sources accounting open
-        if self._fs.exists(self._rebalance_intent_path()):
-            return self._reconcile_rebalance_intent().delete(predicate)
-        if self._fs.exists(self._delete_intent_path()):
-            return self._reconcile_delete_intent().delete(predicate)
-        if self._fs.exists(self._compact_intent_path()):
-            return self._reconcile_compact_intent().delete(predicate)
-        meta = self.meta
+        head = self._head()
+        meta = head.meta
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         pred_true = F.coalesce(pred, F.lit(False))
 
         # plan-sized: per-cell match counts -> touched cells + n_deleted
         match_counts = (
-            self._scan().filter(pred_true).groupBy("Norder", "Npix").count().collect()
+            head._scan().filter(pred_true).groupBy("Norder", "Npix").count().collect()
         )
         if not match_counts:
-            return self
+            return head
         touched = [(int(r["Norder"]), int(r["Npix"])) for r in match_counts]
         n_deleted = int(sum(r["count"] for r in match_counts))
         # re-ranked below; pix@19 comes out of the stored _ID
         keep = (
-            self._scan(touched)
+            head._scan(touched)
             .filter(~pred_true)
             .withColumn("_p19", pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER))
             .drop("_ID")
         )
-        meta = self._invalidate_margins(meta)
-
-        # write-ahead intent: BEFORE the first mutation, so any crash
-        # below is replayable (pre_touched = keep + deleted, counted
-        # from the same snapshot the keep-plan reads)
-        intent_path = self._delete_intent_path()
-        keep_counts = keep.groupBy("Norder", "Npix").count().collect()
-        n_kept = int(sum(r["count"] for r in keep_counts))
-        self._fs.publish(
-            intent_path,
-            json.dumps(
-                {
-                    "touched": sorted(touched),
-                    "pre_touched": n_kept + n_deleted,
-                    "committed_n_sources": meta.n_sources,
-                }
-            ),
-        )
-
         indexed = _with_spatial_index(keep, meta.ra_kw, meta.dec_kw, p19_col="_p19")
-        survivors = {(int(r["Norder"]), int(r["Npix"])) for r in keep_counts}
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        return head._commit(
+            touched,
+            indexed,
+            n_sources=meta.n_sources - n_deleted,
+            margins_exported=False,
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                indexed.write.mode("overwrite")
-                .partitionBy("Norder", "Dir", "Npix")
-                .parquet(f"{self.path}/catalog")
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-        hips = {o: sorted(ps) for o, ps in meta.hips.items()}
-        for o, p in touched:
-            if (o, p) in survivors:
-                continue
-            self._fs.rmtree(self._leaf_dir(o, p))
-            if o in hips and p in hips[o]:
-                hips[o] = [x for x in hips[o] if x != p]
-                if not hips[o]:
-                    del hips[o]
-
-        new_meta = replace(meta, n_sources=meta.n_sources - n_deleted, hips=hips)
-        self._commit_meta(new_meta)
-        try:
-            self._fs.remove(intent_path)
-        except FileNotFoundError:
-            pass
-        return Catalog(spark, self.path, new_meta, fs=self._fs)
-
-    def _rebalance_intent_path(self) -> str:
-        return f"{self.path}/{self.meta.cat_name}_rebalance_intent.json"
-
-    def _rebalance_children_of(self, o: int, p: int, o2: int) -> "tuple[int, int]":
-        """Child pixel range [lo, hi) of parent (o, p) at order o2."""
-        shift = 2 * (o2 - o)
-        return p << shift, (p + 1) << shift
-
-    def _reconcile_rebalance_intent(self) -> "Catalog":
-        """Converge a crashed rebalance.  Two-phase marker protocol:
-
-        - phase ``pre`` (written before any mutation): child writes may
-          be torn → ROLL BACK: remove any child partition directories
-          under the planned splits (the parents were never touched) and
-          drop the marker.
-        - phase ``done`` (written only after the child rewrite fully
-          committed): ROLL FORWARD: remove parent data directories,
-          commit the recorded coverage (with the margin export still
-          withdrawn, as the crashed rebalance left it), drop the
-          marker.  Every step is idempotent."""
-        spark, meta = self.spark, self.meta
-        path = self._rebalance_intent_path()
-        try:
-            intent = json.loads(self._fs.read_text(path))
-        except (OSError, ValueError):
-            try:
-                self._fs.remove(path)
-            except FileNotFoundError:
-                pass
-            return self
-        splits = [(int(o), int(p)) for o, p in intent["splits"]]
-        planned = [(int(o), int(p)) for o, p in intent["child_cells"]]
-        if intent.get("phase") == "pre":
-            # rollback: drop any (possibly partial) planned child dirs —
-            # all strict descendants of the over parents, so they can
-            # never collide with a pre-existing cell directory
-            for o2, cp in planned:
-                self._fs.rmtree(self._leaf_dir(o2, cp))
-            self._fs.remove(path)
-            return Catalog(spark, self.path, meta, fs=self._fs)
-
-        # phase == done: roll forward
-        self._rebalance_finish(splits)
-        hips = {o: sorted(ps) for o, ps in meta.hips.items()}
-        for o, p in splits:
-            if o in hips and p in hips[o]:
-                hips[o] = [x for x in hips[o] if x != p]
-                if not hips[o]:
-                    del hips[o]
-        for o2, cp in planned:
-            hips.setdefault(o2, [])
-            if cp not in hips[o2]:
-                hips[o2] = sorted(hips[o2] + [cp])
-        new_meta = replace(meta, hips=hips, margins_exported=False)
-        self._commit_meta(new_meta)
-        try:
-            self._fs.remove(path)
-        except FileNotFoundError:
-            pass
-        return Catalog(spark, self.path, new_meta, fs=self._fs)
-
-    def _rebalance_finish(self, splits) -> None:
-        """Post-done-marker work (idempotent): remove the split parents'
-        data directories."""
-        for o, p in splits:
-            self._fs.rmtree(self._leaf_dir(o, p))
 
     def rebalance(
         self, threshold: int | None = None, max_order: int = 11
@@ -1204,27 +1085,23 @@ class Catalog:
         coarse, capped at ``max_order``), re-ranked,
         and rewritten; the rest of the catalog is untouched.
         Cross-match stays boundary-correct because it builds its halos
-        at query time; a margin export is withdrawn before the first
-        write (see :meth:`export_margins`), since its cells are the
-        old leaves.
+        at query time; the commit withdraws a margin export (see
+        :meth:`export_margins`), since its cells are the old leaves.
 
-        Crash safety: a two-phase write-ahead marker.  ``pre`` is
-        written before any mutation — a crash during the child rewrite
-        ROLLS BACK (partial child dirs removed, parents untouched) on
-        the next rebalance/fsck.  ``done`` is written only after the
-        child rewrite committed — a later crash ROLLS FORWARD
-        (parent removal and coverage commit are both idempotent).  ``n_sources`` never changes, so there is no
-        accounting window at all.
+        Commit and crash safety are append's (see :meth:`_commit`): one
+        publish replaces the split parents by their children, so a crash
+        leaves either the old leaves or the new ones, never both.
+        ``n_sources`` never changes.
 
-        Returns the rebalanced catalog (``self`` if nothing is over).
-        A cell still over the threshold at ``max_order`` is left as-is
-        with a warning.  ``max_order`` above ``SPATIAL_INDEX_ORDER``
-        raises ValueError before anything is read.
+        Returns the rebalanced catalog (the committed one if nothing is
+        over).  A cell still over the threshold at ``max_order`` is left
+        as-is with a warning.  ``max_order`` above
+        ``SPATIAL_INDEX_ORDER`` raises ValueError before anything is
+        read.
 
-        Like append, rebalance is not snapshot-isolated for concurrent
-        readers: a pre-rebalance Catalog handle's pruning predicates
-        still name the removed parent cells — re-resolve with
-        ``Catalog.load``/the returned catalog after a rebalance."""
+        A pre-rebalance handle's reads of a split parent fail on its
+        deleted files: re-resolve with ``Catalog.load`` or use the
+        returned catalog after a rebalance."""
         import warnings
 
         if not 0 <= max_order <= SPATIAL_INDEX_ORDER:
@@ -1233,37 +1110,20 @@ class Catalog:
                 f"rebalance max_order must be in [0, {SPATIAL_INDEX_ORDER}], "
                 f"got {max_order}"
             )
-        spark = self.spark
-        # converge stale markers from EITHER crashed mutation first
-        # (see delete(): operating on half-mutated state corrupts the
-        # per-cell counts this planning reads)
-        if self._fs.exists(self._rebalance_intent_path()):
-            return self._reconcile_rebalance_intent().rebalance(
-                threshold, max_order
-            )
-        if self._fs.exists(self._delete_intent_path()):
-            return self._reconcile_delete_intent().rebalance(
-                threshold, max_order
-            )
-        if self._fs.exists(self._compact_intent_path()):
-            return self._reconcile_compact_intent().rebalance(
-                threshold, max_order
-            )
-        meta = self.meta
+        head = self._head()
+        meta = head.meta
         thr = int(threshold) if threshold is not None else meta.pix_threshold
         if thr < 1:
             raise ValueError(f"rebalance threshold must be >= 1, got {thr}")
 
-        counts = self._scan().groupBy("Norder", "Npix").count().collect()
-        over = [
+        counts = head._scan().groupBy("Norder", "Npix").count().collect()
+        splits = sorted(
             (int(r["Norder"]), int(r["Npix"]))
             for r in counts
-            if r["count"] > thr
-        ]
-        over = [(o, p) for o, p in over if o < max_order]
-        if not over:
-            return self
-        splits = sorted(over)
+            if r["count"] > thr and r["Norder"] < max_order
+        )
+        if not splits:
+            return head
 
         # adaptive planning over the over-cells' rows (the same
         # top-down sweep ingest uses): the planner's leaves are strict
@@ -1273,7 +1133,7 @@ class Catalog:
         # rows are never re-pixelized: the histogram pixel and pix@19
         # both shift out of _ID.
         rows = (
-            self._scan(splits)
+            head._scan(splits)
             .withColumn("_p19", pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER))
             .withColumn("_kpix", pixel_of_index(F.col("_ID"), max_order))
             .drop(*PARTITION_COLS, "_ID")
@@ -1288,12 +1148,9 @@ class Catalog:
         kpix = np.array([r["kpix"] for r in hist], dtype=np.int64)
         kcnt = np.array([r["count"] for r in hist], dtype=np.int64)
         pm = compute_partition_map(kpix, kcnt, max_order, thr)
-        child_cells = sorted(
-            (int(o), int(p)) for o in pm.hips for p in pm.hips[o]
-        )
-        for o2, cp in child_cells:
+        for o2, cp in pm.leaf_list():
             if o2 == max_order:
-                c = int(kcnt[kpix == cp].sum()) if o2 == max_order else 0
+                c = int(kcnt[kpix == cp].sum())
                 if c > thr:
                     warnings.warn(
                         f"cell (Norder={o2}, Npix={cp}) still holds {c} "
@@ -1301,20 +1158,11 @@ class Catalog:
                         stacklevel=2,
                     )
 
-        meta = self._invalidate_margins(meta)
-        intent_path = self._rebalance_intent_path()
-        self._fs.publish(
-            intent_path,
-            json.dumps(
-                {"phase": "pre", "splits": splits, "child_cells": child_cells}
-            ),
-        )
-
         # leaf assignment: the same broadcast leaf-table multi-order
         # probe ingest uses (one equi-join, each row survives exactly
         # one probe)
         orders = sorted(pm.hips)
-        leaf_tbl = _leaf_table(spark, pm.hips)
+        leaf_tbl = _leaf_table(self.spark, pm.hips)
         rewritten = (
             rows.withColumn(
                 "_pr", F.explode(_order_probes(F.col("_kpix"), orders, max_order))
@@ -1331,291 +1179,76 @@ class Catalog:
         indexed = _with_spatial_index(
             rewritten, meta.ra_kw, meta.dec_kw, p19_col="_p19"
         )
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        return head._commit(
+            [*splits, *pm.leaf_list()], indexed, margins_exported=False
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                indexed.write.mode("overwrite")
-                .partitionBy("Norder", "Dir", "Npix")
-                .parquet(f"{self.path}/catalog")
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-        # child rewrite fully committed: flip the marker to done
-        self._fs.publish(
-            intent_path,
-            json.dumps(
-                {"phase": "done", "splits": splits, "child_cells": child_cells}
-            ),
-        )
-
-        self._rebalance_finish(splits)
-
-        hips = {o: sorted(ps) for o, ps in meta.hips.items()}
-        for o, p in splits:
-            if o in hips and p in hips[o]:
-                hips[o] = [x for x in hips[o] if x != p]
-                if not hips[o]:
-                    del hips[o]
-        for o2, cp in child_cells:
-            hips.setdefault(o2, [])
-            if cp not in hips[o2]:
-                hips[o2] = sorted(hips[o2] + [cp])
-        new_meta = replace(meta, hips=hips)
-        self._commit_meta(new_meta)
-        try:
-            self._fs.remove(intent_path)
-        except FileNotFoundError:
-            pass
-        return Catalog(spark, self.path, new_meta, fs=self._fs)
-
-    def _multifile_cells(
-        self, root: str, max_files: int
-    ) -> list[tuple[int, int]]:
-        """Census of cells holding more than ``max_files`` parquet
-        files, as ``(order, npix)`` tuples — a thin view over
-        :meth:`_compact_file_census` (which keeps the file names)."""
-        out = []
-        for cell_rel in self._compact_file_census(root, max_files):
-            od, _, pd_ = cell_rel.split("/")
-            out.append((int(od.split("=", 1)[1]), int(pd_.split("=", 1)[1])))
-        return sorted(out)
-
-    def _compact_file_census(
-        self, root: str, max_files: int
-    ) -> dict[str, list[str]]:
-        """Driver-side census: the parquet file NAMES per cell dir
-        holding more than ``max_files`` of them, keyed by the cell dir
-        relative to the root (``Norder=o/Dir=d/Npix=p``) — the exact
-        old-file set the compact intent marker records.  One entry per
-        CELL, so the walk is plan-sized in the same sense as the
-        coverage map.  All I/O routes through ``self._fs``
-        (sources/fs.py) — an object-store deployment swaps the listing
-        implementation (or reads the ``_metadata`` sidecar) without
-        touching this walk."""
-        out: dict[str, list[str]] = {}
-        base = os.path.join(self.path, root)
-        if not self._fs.isdir(base):
-            return out
-        for od in self._fs.listdir(base):
-            # isdir guards at every level: a stray regular file with a
-            # partition-looking name (leftover tmp, object-store marker)
-            # must not abort compact or the lifecycle-op entry that
-            # reconciles a compact intent
-            if not od.startswith("Norder=") or not self._fs.isdir(
-                os.path.join(base, od)
-            ):
-                continue
-            for dd in self._fs.listdir(os.path.join(base, od)):
-                if not dd.startswith("Dir=") or not self._fs.isdir(
-                    os.path.join(base, od, dd)
-                ):
-                    continue
-                for pd_ in self._fs.listdir(os.path.join(base, od, dd)):
-                    cell = os.path.join(base, od, dd, pd_)
-                    if not pd_.startswith("Npix=") or not self._fs.isdir(cell):
-                        continue
-                    files = sorted(
-                        f for f in self._fs.listdir(cell) if f.endswith(".parquet")
-                    )
-                    if len(files) > max_files:
-                        out[f"{od}/{dd}/{pd_}"] = files
-        return out
-
-    def _compact_intent_path(self) -> str:
-        return f"{self.path}/{self.meta.cat_name}_compact_intent.json"
-
-    def _compact_checkpoint(self, phase: str) -> None:
-        """Crash-injection seam for tests (no-op in production):
-        called with ``"staged"`` after the merged files land in the
-        staging dir but before the marker flips to done, and with
-        ``"done"`` after the flip but before the staged files move in
-        and the old files are deleted."""
-
-    def _compact_stage_dir(self, root: str) -> str:
-        # sibling of the table root, never under it: readers of
-        # catalog/ cannot see staged files
-        return f"{self.path}/{root}__compactstage"
-
-    def _write_compact_marker(self, payload: dict) -> None:
-        """fsynced atomic marker write: the marker must be durably on
-        disk BEFORE the phase it describes begins, so recovery can
-        trust a readable marker and treat an unreadable one as
-        phase-pre (see :meth:`_reconcile_compact_intent`)."""
-        self._fs.publish(self._compact_intent_path(), json.dumps(payload))
-
-    def _remove_files(self, dirpath: str, names) -> None:
-        """Remove data files AND their hidden Hadoop ``.crc`` checksum
-        sidecars (removing the file alone would leak one orphaned crc
-        per compacted file, unbounded under streaming append→compact
-        cycles); idempotent."""
-        for fname in names:
-            for p in (
-                os.path.join(dirpath, fname),
-                os.path.join(dirpath, f".{fname}.crc"),
-            ):
-                try:
-                    self._fs.remove(p)
-                except FileNotFoundError:
-                    pass
-
-    def _compact_roll_forward(self, roots: dict, staged: dict) -> None:
-        """Move each staged merged file into its live cell, then delete
-        that cell's recorded old files — strictly in that per-cell
-        order, so at every instant every cell holds at least one
-        complete copy of its rows.  Idempotent: already-moved staged
-        files are skipped, already-deleted old files are skipped."""
-        for root, cells in roots.items():
-            stage = self._compact_stage_dir(root)
-            for cell_rel, old_files in cells.items():
-                dst_dir = os.path.join(self.path, root, cell_rel)
-                for fname in staged.get(root, {}).get(cell_rel, []):
-                    src = os.path.join(stage, cell_rel, fname)
-                    if self._fs.exists(src):
-                        self._fs.makedirs(dst_dir)
-                        # rename is NOT assumed atomic (object-store
-                        # copy+delete): a crash mid-move leaves a torn
-                        # destination that this same re-run overwrites
-                        self._fs.rename(src, os.path.join(dst_dir, fname))
-                self._remove_files(dst_dir, old_files)
-            self._fs.rmtree(stage)
-
-    def _reconcile_compact_intent(self) -> "Catalog":
-        """Converge a crashed :meth:`compact`.
-
-        ``phase == "pre"`` — the merge wrote (possibly partially) into
-        the STAGING directories only; live cells were never touched:
-        roll back by removing the staging dirs.  External files that
-        landed in live cells meanwhile are never touched — rollback
-        never deletes anything inside the table roots.  ``phase ==
-        "done"`` — the merge completed and the marker records the
-        staged file names: roll forward (move staged files in, delete
-        the recorded old files + crc sidecars).
-
-        An UNREADABLE marker (torn by a crash mid-write — closed by
-        the fsync ordering of :meth:`_write_compact_marker`, so this
-        needs independent corruption) is treated as phase-pre.  That
-        is safe even against a corrupted done-marker: roll-forward
-        deletes a cell's old files only AFTER its staged file moved
-        out of staging, so removing what remains in staging can only
-        re-fragment cells, never lose their last copy."""
-        intent_path = self._compact_intent_path()
-        try:
-            intent = json.loads(self._fs.read_text(intent_path))
-            phase = intent["phase"]
-            roots = intent["roots"]
-            staged = intent.get("staged", {})
-        except (OSError, ValueError, KeyError):
-            intent = None
-        if intent is None or phase != "done":
-            self._fs.rmtree(self._compact_stage_dir("catalog"))
-        else:
-            self._compact_roll_forward(roots, staged)
-        try:
-            self._fs.remove(intent_path)
-        except FileNotFoundError:
-            pass
-        return Catalog(self.spark, self.path, self.meta, fs=self._fs)
 
     def compact(self, max_files: int = 1) -> "Catalog":
-        """Merge the small files of cells fragmented by external bulk
-        loaders writing the hive layout directly (the engine's own cell
-        rewrites are one file per cell: the rank window's per-cell
-        shuffle guarantees it).  At 100 TB per-cell file count governs
+        """Merge the files of leaves whose metadata lists more than
+        ``max_files`` of them — leaves an external bulk loader wrote
+        into and registered in the metadata (the engine's own rewrites
+        are one file per cell: the rank window's per-cell shuffle
+        guarantees it).  At 100 TB per-cell file count governs
         open/seek cost for every read.  Rows and leaves do not change,
         so a margin export stays valid and ``neighbor/`` is not touched.
 
-        Only cells holding more than
-        ``max_files`` parquet files are read — the merge scan targets
-        exactly those files, the rest of the catalog is never opened —
-        re-sorted by ``_ID`` (the storage-order contract) and coalesced
-        to one file per cell by a single shuffle on the partition key.
-
-        Crash safety is a two-phase intent marker plus a STAGING
-        directory — NOT dynamic partition overwrite, whose commit
-        deletes each existing cell dir before renaming the staged one
-        in: a crash in that gap loses the only copy of the cell.
-        Phase ``pre``: the marker (fsynced) records the exact old file
-        names per cell, then the merged replacements are written to a
-        sibling staging dir — live cells untouched, so rollback is
-        just removing staging and can never delete a file it does not
-        own (external bulk-loader files landing concurrently are
-        safe).  Phase ``done``: the marker records the staged file
-        names; each staged file is moved into its cell and only then
-        are that cell's old files (+ crc sidecars) deleted.  Recovery
-        (:meth:`_reconcile_compact_intent`) runs at entry of every
-        lifecycle op and ``fsck(repair)``.  Every intermediate state
-        holds at least one complete copy of every row; the only
-        reader-visible anomaly is transient per-cell duplication
-        between a staged file moving in and the old files going — the
-        same non-snapshot-isolation caveat delete/rebalance carry.
-        Idempotent: a second call is a no-op.
-
-        Like the other lifecycle ops it converges a crashed
-        delete/rebalance/compact first."""
+        Only the listed files of those leaves are read, re-sorted by
+        ``_ID`` (the storage-order contract) and coalesced to one file
+        per cell by a single shuffle on the partition key; the commit is
+        every mutation's (see :meth:`_commit`), so a crash leaves either
+        the old files or the merged ones listed.  Idempotent: a second
+        call is a no-op."""
         if max_files < 1:
             raise ValueError(f"max_files must be >= 1, got {max_files}")
-        if self._fs.exists(self._rebalance_intent_path()):
-            return self._reconcile_rebalance_intent().compact(max_files)
-        if self._fs.exists(self._delete_intent_path()):
-            return self._reconcile_delete_intent().compact(max_files)
-        if self._fs.exists(self._compact_intent_path()):
-            return self._reconcile_compact_intent().compact(max_files)
-        spark = self.spark
-        census = self._compact_file_census("catalog", max_files)
-        if not census:
-            return self
-        # the marker keeps the per-root layout _compact_roll_forward reads
-        plan = {"catalog": census}
-        self._write_compact_marker({"phase": "pre", "roots": plan})
+        head = self._head()
+        cells = sorted(lf for lf, names in head.meta.files.items() if len(names) > max_files)
+        if not cells:
+            return head
+        merged = (
+            head._scan(cells)
+            .repartition(*PARTITION_COLS)
+            .sortWithinPartitions(*PARTITION_COLS, "_ID")
+        )
+        return head._commit(cells, merged)
 
-        base = f"{self.path}/catalog"
-        stage = self._compact_stage_dir("catalog")
-        self._fs.rmtree(stage)
-        old_paths = [
-            os.path.join(base, cell_rel, fname)
-            for cell_rel, files in census.items()
-            for fname in files
+    def _disk_files(self) -> dict[tuple[int, int], tuple[str, ...]]:
+        """Every leaf directory under the catalog root with its Parquet
+        file names: fsck's view of the disk.  Entries that are not
+        partition directories (a stray file with a partition-looking
+        name, an object-store folder marker) are skipped."""
+        root = f"{self.path}/catalog"
+
+        def subdirs(d: str, key: str) -> list[str]:
+            try:
+                names = self._fs.listdir(d)
+            except FileNotFoundError:
+                return []
+            return [
+                f"{d}/{n}" for n in names
+                if n.startswith(f"{key}=") and self._fs.isdir(f"{d}/{n}")
+            ]
+
+        leaves = [
+            _leaf_of_rel(leaf[len(root) + 1:])
+            for od in subdirs(root, "Norder")
+            for dd in subdirs(od, "Dir")
+            for leaf in subdirs(dd, "Npix")
         ]
-        # read EXACTLY the recorded old files (basePath keeps the hive
-        # partition columns): concurrent external files are neither
-        # read nor replaced, and a replay never double-reads merged rows
-        (
-            spark.read.option("basePath", base)
-            .parquet(*old_paths)
-            .repartition("Norder", "Dir", "Npix")
-            .sortWithinPartitions("Norder", "Dir", "Npix", "_ID")
-            .write.mode("overwrite")
-            .partitionBy("Norder", "Dir", "Npix")
-            .parquet(stage)
-        )
-        staged = {"catalog": {}}
-        for cell_rel in census:
-            sdir = os.path.join(stage, cell_rel)
-            staged["catalog"][cell_rel] = (
-                sorted(f for f in self._fs.listdir(sdir) if f.endswith(".parquet"))
-                if self._fs.isdir(sdir)
-                else []
-            )
-        self._compact_checkpoint("staged")
-        self._write_compact_marker(
-            {"phase": "done", "roots": plan, "staged": staged}
-        )
-        self._compact_checkpoint("done")
-        self._compact_roll_forward(plan, staged)
-        self._fs.remove(self._compact_intent_path())
-        return Catalog(spark, self.path, self.meta, fs=self._fs)
+        return self._list(leaves)
 
     def fsck(self, repair: bool = False) -> dict:
-        """Consistency check between the metadata commit record and the
-        bytes on disk — the audit to run after a crash, a partial
-        delete, or an operator mistake.  Checks:
+        """Consistency check between the committed metadata and the
+        bytes on disk — the audit to run after a crash or an operator
+        mistake.  It checks the committed version, whichever handle it
+        runs on:
 
-        - coverage map vs on-disk partition directories (both ways);
-        - ``n_sources`` vs the actual row count;
+        - listed files missing from the disk (``missing_files``; their
+          leaves with no file left are ``cells_meta_only``) and Parquet
+          files in leaf directories that no version lists
+          (``unlisted_files``: what a crashed write left, or an external
+          loader that did not register its files; their leaves with no
+          listed file are ``cells_disk_only``) — reads never open them;
+        - ``n_sources`` vs the rows of the listed files;
         - duplicate ids;
         - spatial-index integrity: ``_ID`` ranks contiguous from 0
           within every order-19 pixel (``bad_rank_pixels``), and every
@@ -1624,52 +1257,36 @@ class Catalog:
           cross-match and the mutations take cell pixels from ``_ID``;
         - a ``neighbor/`` directory the committed metadata does not
           vouch for (``unvouched_margins``: left by a crash between a
-          mutation's withdrawal publish and its removal, or by hand);
+          mutation's publish and its removal, or by hand);
         - whether the metadata stores the read schema (``schema_inferred``:
           metadata written before it did; reads then infer it once per
           :meth:`load`).
 
-        Everything driver-side is plan-sized (cell lists, scalar
-        counts).  ``repair=True`` rewrites the metadata (atomic
-        rename) so ``n_sources`` and the coverage map match the disk
-        and the schema is stored, removes an unvouched ``neighbor/``,
-        and clears a stale delete-intent marker — live catalog rows are
-        never modified.  Returns the report dict; after a
-        repair the report reflects the PRE-repair state plus
-        ``repaired=True``.  A repair updates this handle in place, so
-        its next :meth:`df` lists the root again.
-        """
-        if repair:
-            with self._full_lock:
-                self._full = None
-        if repair and self._fs.exists(self._rebalance_intent_path()):
-            # a crashed rebalance must converge BEFORE anything below
-            # reads disk state: rollback/roll-forward changes the cell
-            # directories the recount would otherwise snapshot stale
-            healed = self._reconcile_rebalance_intent()
-            self.meta = healed.meta
-            report = self.fsck(repair=True)
-            report["repaired"] = True
-            return report
-        if repair and self._fs.exists(self._compact_intent_path()):
-            # same ordering argument: a half-compacted cell holds
-            # either a partial merged file (pre) or duplicated rows
-            # (done) — the recount below must see the converged state
-            self._reconcile_compact_intent()
-            report = self.fsck(repair=True)
-            report["repaired"] = True
-            return report
-        meta = self.meta
-        meta_cells = {(o, p) for o, ps in meta.hips.items() for p in ps}
+        Everything driver-side is plan-sized (leaf and file lists,
+        scalar counts).  ``repair=True`` publishes the next version when
+        the metadata needs it — listing only the files on disk, with
+        ``n_sources`` recounted and the schema and file lists of older
+        metadata stored — and then deletes the unlisted files, the
+        directories of leaves no version lists and an unvouched
+        ``neighbor/``; listed rows are never modified.  Returns the
+        report dict; after a repair the report reflects the PRE-repair
+        state plus ``repaired=True``.  A repair updates this handle to
+        the repaired version in place."""
+        head = self._head()
+        meta = head.meta
+        disk = self._disk_files()
+        listed = {(lf, n) for lf, ns in meta.files.items() for n in ns}
+        on_disk = {(lf, n) for lf, ns in disk.items() for n in ns}
+        readable: dict[tuple[int, int], tuple[str, ...]] = {}
+        for lf, n in sorted(listed & on_disk):
+            readable[lf] = (*readable.get(lf, ()), n)
         # the shift depends on the row's Norder, so it is a SQL
         # expression rather than pixel_of_index's fixed shift
         misplaced = F.expr(
             f"shiftright(_ID, {RANK_BITS} + 2 * ({SPATIAL_INDEX_ORDER} - Norder)) != Npix"
         )
-        # one fresh listing for all three aggregates: the disk as it is
-        # now, not this handle's pinned df()
-        scan = self._scan()
-        disk = (
+        scan = Catalog(self.spark, self.path, replace(meta, files=readable), fs=self._fs)._scan()
+        by_cell = (
             scan
             .groupBy("Norder", "Npix")
             .agg(
@@ -1678,9 +1295,8 @@ class Catalog:
             )
             .collect()
         )
-        disk_cells = {(int(r["Norder"]), int(r["Npix"])) for r in disk}
-        n_rows = int(sum(r["count"] for r in disk))
-        n_misplaced = int(sum(r["misplaced"] for r in disk))
+        n_rows = int(sum(r["count"] for r in by_cell))
+        n_misplaced = int(sum(r["misplaced"] for r in by_cell))
 
         idc = F.col(meta.id_kw)
         dup_ids = int(
@@ -1701,69 +1317,51 @@ class Catalog:
             .filter((F.col("mx") != F.col("n") - 1) | (F.col("mn") != 0))
             .count()
         )
-        vouched = self._committed_meta().margins_exported
-        unvouched = not vouched and self._fs.exists(f"{self.path}/neighbor")
+        unvouched = not meta.margins_exported and self._fs.exists(f"{self.path}/neighbor")
+
+        def rel(files):
+            return sorted(f"{_leaf_rel(*lf)}/{n}" for lf, n in files)
 
         report = {
             "n_sources_meta": meta.n_sources,
             "n_rows_disk": n_rows,
-            "cells_meta_only": sorted(meta_cells - disk_cells),
-            "cells_disk_only": sorted(disk_cells - meta_cells),
+            "cells_meta_only": sorted(set(meta.files) - set(readable)),
+            "cells_disk_only": sorted(lf for lf, ns in disk.items() if ns and lf not in meta.files),
+            "missing_files": rel(listed - on_disk),
+            "unlisted_files": rel(on_disk - listed),
             "duplicate_ids": dup_ids,
             "bad_rank_pixels": rank_bad,
             "misplaced_rows": n_misplaced,
             "unvouched_margins": unvouched,
-            "stale_delete_intent": self._fs.exists(self._delete_intent_path()),
-            "stale_rebalance_intent": self._fs.exists(
-                self._rebalance_intent_path()
-            ),
-            "stale_compact_intent": self._fs.exists(self._compact_intent_path()),
-            "schema_inferred": self._schema_inferred,
+            "schema_inferred": head._schema_inferred,
             "consistent": (
                 meta.n_sources == n_rows
-                and meta_cells == disk_cells
+                and listed == on_disk
                 and dup_ids == 0
                 and rank_bad == 0
                 and n_misplaced == 0
                 and not unvouched
-                and not self._fs.exists(self._delete_intent_path())
-                and not self._fs.exists(self._rebalance_intent_path())
-                and not self._fs.exists(self._compact_intent_path())
             ),
             "repaired": False,
         }
-        if repair and unvouched:
-            # the only files repair removes: an export no metadata
-            # vouches for describes some other state of the rows
-            self._fs.rmtree(f"{self.path}/neighbor")
-            report["repaired"] = True
-        if repair and report["stale_delete_intent"]:
-            # a crashed delete left its write-ahead marker: the disk
-            # recount below is strictly more authoritative than the
-            # marker's accounting, so the metadata rewrite supersedes
-            # it — drop the marker so the next delete doesn't replay
-            try:
-                self._fs.remove(self._delete_intent_path())
-            except FileNotFoundError:
-                pass
-            report["repaired"] = True
-        if repair and (
-            meta.n_sources != n_rows
-            or meta_cells != disk_cells
-            or self._schema_inferred
-        ):
-            hips: dict[int, list[int]] = {}
-            for o, p in sorted(disk_cells):
-                hips.setdefault(o, []).append(p)
-            new_meta = replace(
-                meta, n_sources=n_rows, hips=hips, margins_exported=vouched
+        if repair:
+            stale_meta = (
+                meta.n_sources != n_rows
+                or readable != meta.files
+                or head._schema_inferred
+                or meta.version == 0
             )
-            self._fs.publish(self._meta_path(), new_meta.to_json())
-            self.meta = new_meta
+            if stale_meta:
+                fixed = replace(meta, files=readable, n_sources=n_rows)
+                head = Catalog(self.spark, self.path, head._publish(fixed), fs=self._fs)
+            # the only files repair removes: those no version lists, and
+            # an export no metadata vouches for
+            head._drop_superseded(sorted(set(disk) | set(meta.files)))
+            report["repaired"] = stale_meta or bool(on_disk - listed) or unvouched
+            with self._full_lock:
+                self.meta, self._full = head.meta, None
             self._schema_inferred = False
-            report["repaired"] = True
         return report
-
     def create_view(self, name: str | None = None) -> str:
         """Register the catalog as a Spark SQL temp view so the full
         ``spark.sql`` surface composes with it (partition pruning on

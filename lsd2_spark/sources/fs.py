@@ -3,42 +3,35 @@
 The data plane (parquet scans/writes) already goes through Spark's
 Hadoop FileSystem machinery, so moving a catalog to ``abfss://`` is
 config-only for reads and writes (readers.py:187).  The lifecycle
-layer — compact/delete/rebalance/fsck censuses, intent markers, the
-roll-forward moves — was the one place still doing raw ``os.*`` I/O,
-which silently pinned those operations to a POSIX mount (VERDICT r8,
-"What's wrong" #3).  Everything there now routes through this
-interface; ``LocalFS`` is the default, and an object-store deployment
-implements the same contract over its own primitives (the Hadoop
-FileSystem via the JVM gateway is the natural second implementation:
-``listdir``→``listStatus``, ``publish``→create-then-rename or a
-conditional put, ``rename``→``rename``).
+layer — the metadata commit, leaf listings, removal of superseded or
+unlisted files, fsck's walk — routes through this interface instead
+of raw ``os.*`` I/O, which would pin those operations to a POSIX mount.
+``LocalFS`` is the default, and an object-store deployment implements
+the same contract over its own primitives (the Hadoop FileSystem via
+the JVM gateway is the second implementation here: ``listdir`` →
+``listStatus``, ``publish`` → create-then-rename or a conditional put).
 
 Contract notes (what callers may and may not assume):
 
-- ``publish(path, text)`` is the ONLY operation the marker protocol
-  requires to be atomic-and-durable: after it returns, a reader sees
-  either the complete new content or (on crash before return) the
-  complete previous state — never a torn file.  LocalFS implements it
-  as write-tmp + fsync + rename + directory fsync; an object store
-  uses a single conditional PUT, which is natively atomic.
-- ``rename(src, dst)`` OVERWRITES ``dst`` (``os.replace`` semantics)
-  but callers must NOT assume it is atomic or crash-free: object-store
-  "rename" is copy-then-delete.  Every lifecycle caller is therefore
-  written to be re-runnable: a crashed rename leaves either (src) or
-  (src + torn dst) or (dst), and the recovery path repeats the same
-  rename, overwriting any torn destination.  The fault-injection test
-  (tests/test_lifecycle_fs.py) drives compact recovery through a
-  non-atomic, mid-copy-crashing rename to hold this invariant.
-  The re-runnability argument holds for FILES only (a single-object
-  delete is atomic on every store): do NOT rename a DIRECTORY holding
-  the only copy of data — a multi-object delete phase interrupted
-  midway leaves source partial AND destination complete, a state no
-  marker protocol can tell apart from its mirror image without
-  per-file manifests.  Version the directory and flip a pointer via
-  ``publish`` instead (see operators/dedup_index.py's epoch scheme).
-- ``remove``/``read_text`` raise ``FileNotFoundError`` like their
-  ``os`` counterparts — the marker protocol distinguishes "absent"
-  from "unreadable" with it.
+- ``publish(path, text)`` is the ONLY operation that must be
+  atomic-and-durable: after it returns, a reader sees either the
+  complete new content or (on crash before return) the complete
+  previous state — never a torn file.  A catalog commits every change
+  with one ``publish`` of its metadata.  LocalFS implements it as
+  write-tmp + fsync + rename + directory fsync; an object store uses a
+  single conditional PUT, which is natively atomic.
+- ``remove``/``rmtree`` need not be atomic: a directory removal may
+  delete its objects one by one and crash halfway.  Callers only ever
+  remove files no committed metadata lists, so a half-done removal
+  leaves garbage that the next pass removes, never a missing row
+  (tests/test_lifecycle_fs.py crashes one to hold this).
+- There is no rename: moving data would need it to be atomic for
+  directories, which object stores cannot offer.  Write under fresh
+  names and publish a pointer to them instead (the catalog's metadata
+  names its files; see also operators/dedup_index.py's epoch scheme).
+- ``remove``/``read_text``/``listdir`` raise ``FileNotFoundError`` like
+  their ``os`` counterparts — callers tell "absent" from "unreadable"
+  with it.
 """
 
 from __future__ import annotations
@@ -71,9 +64,6 @@ class LifecycleFS:
     def rmtree(self, path: str) -> None:
         raise NotImplementedError
 
-    def rename(self, src: str, dst: str) -> None:
-        raise NotImplementedError
-
     def publish(self, path: str, text: str) -> None:
         raise NotImplementedError
 
@@ -101,9 +91,6 @@ class LocalFS(LifecycleFS):
 
     def rmtree(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
-
-    def rename(self, src: str, dst: str) -> None:
-        os.replace(src, dst)
 
     def publish(self, path: str, text: str) -> None:
         tmp = path + ".tmp"
@@ -140,14 +127,9 @@ class HadoopFS(LifecycleFS):
       ``file:`` path it degrades to the JVM's rename (still a single
       syscall).  A true object-store deployment should subclass and
       swap ``publish`` for the store's conditional PUT — S3A's rename
-      is copy-then-delete, which only the *callers'* re-runnability
-      (not publish's atomicity) is designed to survive.
-    - ``rename`` deletes an existing destination first, then renames —
-      explicitly NOT atomic, exactly the semantics every lifecycle
-      caller is fault-injection-tested against
-      (tests/test_lifecycle_fs.py).
+      is copy-then-delete, so it is not atomic there.
     - checksums are disabled on checksum-wrapping filesystems (the
-      Hadoop ``LocalFileSystem``) so lifecycle censuses never see stray
+      Hadoop ``LocalFileSystem``) so lifecycle listings never see stray
       ``.crc`` siblings.
 
     Lifetime: each instance holds PRIVATE ``FileSystem.newInstance``
@@ -253,16 +235,6 @@ class HadoopFS(LifecycleFS):
             fs.delete(self._jpath(path), True)
         except Exception:  # noqa: BLE001 — mirrors ignore_errors=True
             pass
-
-    def rename(self, src: str, dst: str) -> None:
-        fs = self._get_fs(src)
-        jdst = self._jpath(dst)
-        # os.replace semantics (overwrite), implemented non-atomically —
-        # the contract callers are written (and fault-injected) against
-        if fs.exists(jdst):
-            fs.delete(jdst, True)
-        if not self._io(src, fs.rename, self._jpath(src), jdst):
-            raise OSError(f"hadoop rename failed: {src} -> {dst}")
 
     def publish(self, path: str, text: str) -> None:
         tmp = path + ".tmp"

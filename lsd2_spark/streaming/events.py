@@ -204,18 +204,19 @@ def stream_into_catalog(
 ) -> "StreamingCatalogWriter":
     """Incremental catalog ingest: each micro-batch appends to an
     existing :class:`~lsd2_spark.catalog.Catalog` via ``foreachBatch`` →
-    ``Catalog.append`` (leaf assignment + touched-cell re-rank + dynamic
-    partition overwrite — see catalog.py).  Returns a writer whose
-    ``.catalog`` always points at the latest metadata state.
+    ``Catalog.append`` (leaf assignment + touched-cell re-rank, written
+    to new files and committed with the batch's ``batch_id`` in one
+    metadata publish — see catalog.py).  Returns a writer whose
+    ``.catalog`` always points at the latest committed version.
 
     ``auto_rebalance=True`` runs ``Catalog.rebalance()`` after every
     ``rebalance_every``-th applied batch, so a long-running stream that
     keeps densifying a region never degenerates past the density
     contract.  The cadence amortizes rebalance's per-cell count scan
-    (plan-sized rows, but a full catalog read) across batches; a crash
-    mid-rebalance converges via its two-phase marker on the next
-    attempt (append's own replay marker is unaffected — rebalance never
-    changes ``n_sources``).
+    (plan-sized rows, but a full catalog read) across batches.  A crash
+    anywhere leaves one committed version (the batch's or rebalance's
+    commit either landed or did not); a replayed batch runs again from
+    the committed version and lands once.
 
     Each batch rewrites its touched cells whole, one file per cell, so
     the stream never fragments the catalog; the first batch withdraws

@@ -216,7 +216,7 @@ def test_cone_schema_is_the_stored_schema_whatever_leaves_it_hits(cats):
     assert (types["Norder"], types["Dir"], types["Npix"]) == ("int", "bigint", "bigint")
     assert full == c1.meta.schema
     schemas = [c1.cone_search(*q).schema for q in cones]
-    no_leaves = Catalog(c1.spark, c1.path, replace(c1.meta, hips={}))
+    no_leaves = Catalog(c1.spark, c1.path, replace(c1.meta, files={}))
     schemas.append(no_leaves.cone_search(56.0, 20.0, 2.0).schema)  # empty cover
     for sch in schemas:
         assert sch == schemas[0]
@@ -258,8 +258,8 @@ def _copy_catalog(spark, cat, dst):
 
 def test_cone_never_reads_cells_the_metadata_does_not_list(cats, spark, tmp_path):
     """A cell directory on disk that the metadata does not name (here a
-    finer-order copy of a hit leaf's rows) is invisible to cone_search,
-    though a root scan sees it."""
+    finer-order copy of a hit leaf's rows) is invisible to cone_search
+    and df(), though a scan of the catalog root sees it."""
     import glob
     import os
     import shutil
@@ -275,7 +275,9 @@ def test_cone_never_reads_cells_the_metadata_does_not_list(cats, spark, tmp_path
     os.makedirs(stray)
     for f in glob.glob(f"{cat._leaf_dir(o, p)}/*.parquet"):
         shutil.copy(f, stray)
-    assert cat.df().count() > len(base)  # the stray rows are on disk
+    # the stray rows are on disk, and no read of the catalog opens them
+    assert spark.read.parquet(f"{cat.path}/catalog").count() > len(base)
+    assert cat.df().count() == len(base)
 
     got = cat.cone_search(*q).select("source_id").toPandas()["source_id"]
     d = hpx.gc_dist_deg(base["ra"].to_numpy(), base["dec"].to_numpy(), q[0], q[1])
@@ -365,8 +367,8 @@ def test_append_through_stale_handle_keeps_rows_of_new_leaves(spark, tmp_path):
     )
     cat2 = cat.append(rows(1000, 50, 200.0, -40.0))  # opens a new leaf
     assert cat2.meta.hips != cat.meta.hips
-    cat.append(rows(2000, 50, 200.0, -40.0))  # same leaf, stale metadata
-    ids = {r["sid"] for r in cat.df().select("sid").collect()}
+    cat3 = cat.append(rows(2000, 50, 200.0, -40.0))  # same leaf, stale handle
+    ids = {r["sid"] for r in cat3.df().select("sid").collect()}
     assert ids == set(range(500)) | set(range(1000, 1050)) | set(range(2000, 2050))
 
 
@@ -744,16 +746,15 @@ def test_append_replay_is_exactly_once(spark, tmp_path):
 
 
 def test_genuine_torn_commit_replay_reconciles_everything(spark, tmp_path):
-    """A REAL torn commit: the append crashes at the metadata rename of
-    its commit, AFTER the data overwrite already landed.  The committed
-    metadata then predates the batch while the batch rows are on disk —
-    the case where naive recounting cancels the batch out of n_sources.
-    Replay from the durable state must converge to exact n_sources and
-    no duplicate rows, with the margin export withdrawn throughout."""
+    """A REAL crash at the commit: the append dies in the atomic rename
+    of its metadata publish, AFTER the touched cells' new files landed.
+    The committed version predates the batch and lists none of those
+    files, so reads, ``n_sources`` and the margin export all still
+    describe the pre-batch rows.  Replay from the committed state
+    removes the crashed attempt's files first and converges to exact
+    n_sources and no duplicate rows, withdrawing the export."""
     import json
     import os as _os
-
-    import lsd2_spark.catalog as catmod
 
     rng = np.random.default_rng(47)
     n = 3000
@@ -778,35 +779,34 @@ def test_genuine_torn_commit_replay_reconciles_everything(spark, tmp_path):
     real_replace = _os.replace
 
     def crash_at_commit(src, dst):
-        # the batch's commit, not the earlier publish that withdraws the
-        # margin export (that one still carries last_batch_id None)
         if str(dst).endswith("_meta.json"):
             with open(src) as f:
                 if json.load(f)["last_batch_id"] == 1:
                     raise RuntimeError("injected crash at metadata commit")
         return real_replace(src, dst)
 
-    catmod.os.replace = crash_at_commit
+    _os.replace = crash_at_commit
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             cat.append(bdf, batch_id=1)
     finally:
-        catmod.os.replace = real_replace
+        _os.replace = real_replace
 
-    # durable state: old metadata, torn-written data, intent marker present
+    # durable state: the pre-batch version, plus the batch's unlisted files
     reloaded = Catalog.load(spark, str(tmp_path / "tc"), "tc")
-    assert reloaded.meta.last_batch_id is None
-    assert reloaded.meta.n_sources == n  # metadata predates the batch
-    assert _os.path.exists(tmp_path / "tc" / "tc_append_intent.json")
-    assert reloaded.margin_df() is None  # withdrawn before the data write
+    assert reloaded.meta == cat.meta
+    assert reloaded.df().count() == n
+    assert reloaded.margin_df() is not None  # still valid for these rows
+    rep = reloaded.fsck()
+    assert rep["unlisted_files"] and rep["n_rows_disk"] == n
 
     # replay the SAME batch from the durable state (what foreachBatch does)
     c2 = reloaded.append(bdf, batch_id=1)
     assert c2.meta.last_batch_id == 1
-    assert c2.meta.n_sources == n + n_b  # exact despite torn disk state
+    assert c2.meta.n_sources == n + n_b
     assert c2.df().count() == n + n_b
     assert c2.df().select("sid").distinct().count() == n + n_b
-    assert not _os.path.exists(tmp_path / "tc" / "tc_append_intent.json")
+    assert c2.fsck()["consistent"]
 
     assert c2.margin_df() is None
     assert not _os.path.exists(tmp_path / "tc" / "neighbor")
@@ -831,13 +831,13 @@ def test_order_k_driver_bound_guard(spark):
 
 
 def test_append_snapshot_semantics_documented(spark, tmp_path):
-    """Concurrent-reader contract (documented in Catalog.append): dynamic
-    partition overwrite REPLACES the files of touched cells, so a
-    DataFrame resolved before an append is not snapshot-isolated — its
-    next action either fails on the deleted files or reads post-append
-    state.  What it must NEVER do is silently return a half-and-half
-    mix with duplicated rows.  Readers use the handle the append
-    returns, or Catalog.load, after appends."""
+    """Concurrent-reader contract (documented in Catalog.append): an
+    append writes the touched cells' rows to new files and deletes the
+    files they replace when it returns, so a DataFrame resolved before
+    the append either fails on a deleted file or reads the pre-append
+    rows.  What it must NEVER do is silently return a half-and-half mix
+    with duplicated rows.  Readers use the handle the append returns,
+    or Catalog.load, after appends."""
     rng = np.random.default_rng(41)
     n = 2000
     pdf = pd.DataFrame({
@@ -872,12 +872,12 @@ def test_append_snapshot_semantics_documented(spark, tmp_path):
 
 
 def test_old_handle_reads_its_snapshot_and_fsck_reads_the_disk(spark, tmp_path):
-    """A handle's full reads use the files it listed at its first one.
-    After ``new = old.append(batch)``, a full read through ``old``
-    returns the pre-append ids (a batch that only opens new leaves) or
-    raises (a batch that rewrites a cell ``old`` listed) — never a mix;
-    ``new.df()`` returns every id, and ``fsck()`` on ``old`` reports
-    the disk as it is now."""
+    """A handle's full reads use the files of its own version.  After
+    ``new = old.append(batch)``, a full read through ``old`` returns
+    the pre-append ids (a batch that only opens new leaves) or raises
+    (a batch that rewrites a cell ``old`` listed) — never a mix;
+    ``new.df()`` returns every id, and ``fsck()`` on ``old`` audits the
+    committed version against the disk."""
     rng = np.random.default_rng(43)
 
     def rows(lo, n, ra0, dec0):
@@ -902,7 +902,7 @@ def test_old_handle_reads_its_snapshot_and_fsck_reads_the_disk(spark, tmp_path):
     assert ids(old) == pre
     assert ids(new) == pre | set(range(1000, 1050))
     rep = old.fsck()
-    assert rep["n_rows_disk"] == 650 and rep["cells_disk_only"] and not rep["consistent"]
+    assert rep["n_rows_disk"] == 650 and rep["consistent"]
 
     near = rows(2000, 50, 40.0, 10.0)  # rewrites cells both handles listed
     newer = new.append(spark.createDataFrame(near))
@@ -1115,12 +1115,14 @@ def test_fsck_detects_and_repairs_metadata_drift(spark, tmp_path):
     assert rep["consistent"], rep
     assert rep["n_sources_meta"] == rep["n_rows_disk"] == 2000
 
-    # corrupt the commit record: wrong count + a phantom cell
+    # corrupt the commit record: wrong count + a phantom cell whose
+    # listed file does not exist
     meta_path = f"{tmp_path}/cat/fsckcat_meta.json"
     d = json.loads(open(meta_path).read())
     d["n_sources"] = 1234
     first_order = sorted(d["hips"])[0]
     d["hips"][first_order] = d["hips"][first_order] + [999_999]
+    d["files"][f"Norder={first_order}/Dir=990000/Npix=999999"] = ["part-phantom.parquet"]
     open(meta_path, "w").write(json.dumps(d))
 
     broken = Catalog.load(spark, str(tmp_path / "cat"), "fsckcat")
@@ -1129,6 +1131,9 @@ def test_fsck_detects_and_repairs_metadata_drift(spark, tmp_path):
     assert rep2["n_sources_meta"] == 1234 and rep2["n_rows_disk"] == 2000
     assert (int(first_order), 999_999) in [
         tuple(c) for c in rep2["cells_meta_only"]
+    ]
+    assert rep2["missing_files"] == [
+        f"Norder={first_order}/Dir=990000/Npix=999999/part-phantom.parquet"
     ]
     assert rep2["duplicate_ids"] == 0 and rep2["bad_rank_pixels"] == 0
 
@@ -1141,3 +1146,119 @@ def test_fsck_detects_and_repairs_metadata_drift(spark, tmp_path):
     # data untouched by repair, and the export it vouches for kept
     assert fixed.df().count() == 2000
     assert fixed.meta.margins_exported and fixed.margin_df() is not None
+
+
+def test_mutation_through_a_stale_handle_keeps_every_commit(spark, tmp_path):
+    """Mutations plan from the committed version, not from the handle
+    they are called on: ``old.append(b)`` run after ``old.delete(p)``
+    has committed keeps the delete — its rows, n_sources and the leaf
+    it emptied — and ``old.rebalance()`` afterwards keeps both."""
+    pdf = _make_catalog_pdf(3000)
+    old = partition_catalog(
+        spark.createDataFrame(pdf), str(tmp_path / "stale"), "stale",
+        ra_col="ra", dec_col="dec", id_col="source_id",
+        threshold=600, order_k=4, write_margins=False,
+    )
+    o = min(old.meta.hips)
+    p = old.meta.hips[o][0]
+    pred = f"source_id < 300 OR (Norder = {o} AND Npix = {p})"
+    deleted = {r["source_id"] for r in old.df().filter(pred).collect()}
+    after_delete = old.delete(pred)
+    assert p not in after_delete.meta.hips.get(o, [])
+
+    batch = _make_catalog_pdf(200, hotspot=False)
+    batch["source_id"] += 1_000_000
+    out = old.append(spark.createDataFrame(batch))
+    want = (set(pdf["source_id"]) - deleted) | set(batch["source_id"])
+    assert out.meta.n_sources == len(want)
+    assert {r["source_id"] for r in out.df().select("source_id").collect()} == want
+    assert out.meta.version == after_delete.meta.version + 1
+    assert out.fsck()["consistent"]
+
+    again = old.rebalance(threshold=300)
+    assert again.meta.n_sources == len(want)
+    assert {r["source_id"] for r in again.df().select("source_id").collect()} == want
+    assert again.fsck()["consistent"]
+
+
+def test_batch_id_append_reads_the_high_water_mark_through_the_injected_fs(
+    spark, tmp_path
+):
+    """A ``batch_id`` append reads the committed metadata — the
+    streaming high-water mark — through the catalog's own filesystem.
+    The catalog here lives at a ``file://`` URI, which only the Hadoop
+    FileSystem resolves: reading it through the POSIX default fails."""
+    from lsd2_spark.sources.fs import HadoopFS
+
+    class RecordingFS(HadoopFS):
+        def __init__(self, spark):
+            super().__init__(spark)
+            self.reads = []
+
+        def read_text(self, path):
+            self.reads.append(path)
+            return super().read_text(path)
+
+    fs = RecordingFS(spark)
+    path = f"file://{tmp_path}/uri"
+    pdf = _make_catalog_pdf(800, hotspot=False)
+    cat = partition_catalog(
+        spark.createDataFrame(pdf), path, "uri",
+        ra_col="ra", dec_col="dec", id_col="source_id",
+        threshold=400, order_k=3, write_margins=False, fs=fs,
+    )
+    batch = _make_catalog_pdf(50, hotspot=False)
+    batch["source_id"] += 1_000_000
+    cat2 = cat.append(spark.createDataFrame(batch), batch_id=3)
+    assert cat2.meta.last_batch_id == 3 and cat2.meta.n_sources == 850
+
+    fs.reads.clear()
+    replay = cat.append(spark.createDataFrame(batch), batch_id=3)
+    assert f"{path}/uri_meta.json" in fs.reads
+    assert replay.meta == cat2.meta and replay._fs is fs
+    assert replay.df().count() == 850
+
+
+def test_cone_through_a_handle_older_than_an_append_returns_its_rows_or_names_the_version(
+    spark, tmp_path
+):
+    """The reader gap: a cone through a handle loaded before an append,
+    run after it, returns exactly the pre-append rows or raises
+    FileNotFoundError — never a mix.  Over a leaf the append rewrote it
+    must raise (the append deleted the files it replaced), and the
+    error names the handle's version as older than the committed one
+    instead of pointing to fsck.  Over a leaf the append did not touch
+    it returns the pre-append rows."""
+    rng = np.random.default_rng(61)
+
+    def rows(lo, n, ra0, dec0, spread):
+        return pd.DataFrame({
+            "sid": np.arange(lo, lo + n, dtype=np.int64),
+            "ra": ra0 + rng.uniform(-spread, spread, n),
+            "dec": dec0 + rng.uniform(-spread, spread, n),
+        })
+
+    base = pd.concat([rows(0, 400, 40.0, 10.0, 2.0), rows(400, 400, 200.0, -40.0, 2.0)])
+    old = partition_catalog(
+        spark.createDataFrame(base), str(tmp_path / "gap"), "gap",
+        ra_col="ra", dec_col="dec", id_col="sid",
+        threshold=10_000, order_k=3, write_margins=False,
+    )
+    ids = lambda df: {r["sid"] for r in df.select("sid").collect()}  # noqa: E731
+    near, far = (40.0, 10.0, 1.0), (200.0, -40.0, 1.0)
+    pre_near, pre_far = ids(old.cone_search(*near)), ids(old.cone_search(*far))
+    assert pre_near and pre_far
+    resolved_before = old.cone_search(*near)
+
+    new = old.append(spark.createDataFrame(rows(5000, 60, 40.0, 10.0, 0.5)))
+    assert ids(new.cone_search(*near)) > pre_near
+    assert ids(old.cone_search(*far)) == pre_far  # an untouched leaf
+    with pytest.raises(FileNotFoundError) as err:
+        old.cone_search(*near).collect()
+    msg = str(err.value)
+    assert f"version {old.meta.version}, older than the committed version " \
+        f"{new.meta.version}" in msg
+    assert "fsck" not in msg
+    # a cone resolved before the append fails in Spark on the deleted file
+    with pytest.raises(Exception):
+        resolved_before.collect()

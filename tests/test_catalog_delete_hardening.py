@@ -3,17 +3,17 @@
 1. Margin export — a delete over source columns or over the structural
    Norder/Npix columns withdraws the ``neighbor/`` export instead of
    patching it, and a re-export holds no halo row of a deleted source.
-2. Crash-safe delete — a write-ahead intent marker (append's pattern)
-   makes ``n_sources``, the coverage map and emptied directories
-   converge via the next ``delete`` call or ``fsck(repair=True)``, in
-   every crash window, with the export still withdrawn.
+2. Crash-safe delete — the delete commits by publishing the next
+   metadata version: a crash before the publish leaves the previous
+   version (rows, ``n_sources``, a vouched export) whole, a crash after
+   it the new one, and the files either leaves unlisted are removed by
+   the next ``delete`` over those leaves or by ``fsck(repair=True)``.
 3. NULL-predicate totality — rows where the predicate evaluates NULL
    are KEPT and never silently dropped from the count.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -97,62 +97,76 @@ class _Boom(RuntimeError):
 
 
 def _crash_delete(cat, predicate, crash_point):
-    """Run delete but raise at a chosen point: 'after_data' = right after
-    the catalog dynamic overwrite lands, before the emptied directories
-    are removed and the metadata commit; 'before_commit' = at the
-    metadata commit."""
+    """Run delete but raise at a chosen point: 'after_data' = right
+    after the rewritten cells' files land, before the publish;
+    'before_commit' = at the publish; 'after_commit' = right after
+    the publish, before the superseded files are deleted."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     orig_parquet = DataFrameWriter.parquet
-    orig_commit = Catalog._commit_meta
+    seam = "_drop_superseded" if crash_point == "after_commit" else "_commit_meta"
+    orig_seam = getattr(Catalog, seam)
 
     def parquet_then_boom(self, path, *a, **k):
         orig_parquet(self, path, *a, **k)
         if path == f"{cat.path}/catalog":
             raise _Boom("crash after the data write")
 
-    def commit_boom(self, *a, **k):
-        raise _Boom("crash before metadata commit")
+    def boom(self, *a, **k):
+        raise _Boom(f"crash at {seam}")
 
     if crash_point == "after_data":
         DataFrameWriter.parquet = parquet_then_boom
-    Catalog._commit_meta = commit_boom
+    setattr(Catalog, seam, boom)
     try:
         with pytest.raises(_Boom):
             cat.delete(predicate)
     finally:
         DataFrameWriter.parquet = orig_parquet
-        Catalog._commit_meta = orig_commit
+        setattr(Catalog, seam, orig_seam)
 
 
 @pytest.mark.parametrize("crash_point", ["after_data", "before_commit"])
 def test_crashed_delete_converges_via_fsck_repair(spark, tmp_path, crash_point):
+    """A crash before the publish: the committed version is the
+    pre-delete one — every row, ``n_sources`` and the vouched margin
+    export stay valid; fsck reports the rewritten cells' files as
+    unlisted and repair removes them; the retried delete then
+    applies."""
     cat = _build(spark, tmp_path, f"crashf_{crash_point}", margins=True)
     n0 = cat.meta.n_sources
     n_victims = cat.df().filter("source_id < 600").count()
 
     _crash_delete(cat, "source_id < 600", crash_point)
 
-    # torn state: data rewritten, metadata stale, marker present
     stale = Catalog.load(spark, cat.path, cat.meta.cat_name)
-    assert stale.meta.n_sources == n0  # overcounted
+    assert stale.meta == cat.meta
+    assert stale.df().count() == n0
+    assert stale.df().filter("source_id < 600").count() == n_victims
+    assert stale.margin_df() is not None  # it still describes these rows
     rep = stale.fsck()
     assert not rep["consistent"]
-    assert rep["stale_delete_intent"]
+    assert rep["unlisted_files"] and rep["n_rows_disk"] == n0
 
     rep2 = stale.fsck(repair=True)
     assert rep2["repaired"]
     healed = Catalog.load(spark, cat.path, cat.meta.cat_name)
     final = healed.fsck()
     assert final["consistent"], final
-    assert healed.meta.n_sources == n0 - n_victims
-    assert healed.df().filter("source_id < 600").count() == 0
-    assert healed.margin_df() is None  # withdrawn before the data write
+    assert healed.meta.n_sources == n0
+    assert healed.margin_df() is not None
+
+    done = healed.delete("source_id < 600")
+    assert done.meta.n_sources == n0 - n_victims
+    assert done.df().filter("source_id < 600").count() == 0
+    assert done.margin_df() is None
+    assert done.fsck()["consistent"]
 
 
 def test_crashed_delete_converges_via_next_delete(spark, tmp_path):
-    """The next delete call replays the intent marker first, so a
-    crashed delete + a later unrelated delete ends fully consistent."""
+    """The next delete over the crashed delete's cells removes its
+    leftover files before it writes, so a crashed delete, its retry and
+    a later unrelated delete end fully consistent."""
     cat = _build(spark, tmp_path, "crashd")
     n0 = cat.meta.n_sources
     n_a = cat.df().filter("source_id < 600").count()
@@ -160,57 +174,40 @@ def test_crashed_delete_converges_via_next_delete(spark, tmp_path):
     _crash_delete(cat, "source_id < 600", "after_data")
 
     stale = Catalog.load(spark, cat.path, cat.meta.cat_name)
-    n_b = stale.df().filter("mag > 21.5").count()
-    cat2 = stale.delete("mag > 21.5")
+    assert stale.fsck()["unlisted_files"]
+    retried = stale.delete("source_id < 600")
+    assert retried.meta.n_sources == n0 - n_a
+    assert retried.fsck()["consistent"]
+    n_b = retried.df().filter("mag > 21.5").count()
+    cat2 = retried.delete("mag > 21.5")
 
     assert cat2.meta.n_sources == n0 - n_a - n_b
     assert cat2.df().count() == n0 - n_a - n_b
     assert cat2.fsck()["consistent"]
-    assert not os.path.exists(cat2._delete_intent_path())
 
 
 def test_delete_replay_is_idempotent_after_partial_metadata(spark, tmp_path):
-    """Crash AFTER metadata commit but before marker removal: the
-    marker replay must be a no-op (same accounting twice)."""
+    """Crash AFTER the publish, before the superseded files are
+    deleted: the delete is committed and exact, the old files sit
+    unlisted and unread, replaying the delete is a no-op, and
+    fsck(repair=True) removes them."""
     cat = _build(spark, tmp_path, "partial")
     n0 = cat.meta.n_sources
     n_victims = cat.df().filter("source_id < 600").count()
 
-    # snapshot the marker's accounting BEFORE the delete (the real
-    # marker is written pre-mutation; df() is lazy over live disk, so
-    # these must be materialized now)
-    touched_cells = sorted(
-        (int(r["Norder"]), int(r["Npix"]))
-        for r in cat.df()
-        .filter("source_id < 600")
-        .select("Norder", "Npix")
-        .distinct()
-        .collect()
-    )
-    pre_touched = int(
-        cat.df()
-        .join(
-            cat.df()
-            .filter("source_id < 600")
-            .select("Norder", "Npix")
-            .distinct(),
-            ["Norder", "Npix"],
-            "left_semi",
-        )
-        .count()
-    )
-    cat2 = cat.delete("source_id < 600")
-    # simulate the torn window: crash AFTER metadata commit but before
-    # marker removal — re-create the marker the delete wrote
-    marker = {
-        "touched": touched_cells,
-        "pre_touched": pre_touched,
-        "committed_n_sources": n0,
-    }
-    with open(cat2._delete_intent_path(), "w") as f:
-        json.dump(marker, f)
+    _crash_delete(cat, "source_id < 600", "after_commit")
 
-    healed = cat2._reconcile_delete_intent()
+    torn = Catalog.load(spark, cat.path, cat.meta.cat_name)
+    assert torn.meta.version == cat.meta.version + 1
+    assert torn.meta.n_sources == n0 - n_victims
+    assert torn.df().count() == n0 - n_victims
+    rep = torn.fsck()
+    assert rep["unlisted_files"] and not rep["consistent"]
+
+    again = torn.delete("source_id < 600")
+    assert again.meta == torn.meta
+    assert again.fsck(repair=True)["repaired"]
+    healed = Catalog.load(spark, cat.path, cat.meta.cat_name)
     assert healed.meta.n_sources == n0 - n_victims
     assert healed.fsck()["consistent"]
 

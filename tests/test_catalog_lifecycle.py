@@ -1,30 +1,29 @@
-"""Randomized lifecycle interleaving (VERDICT r7 item 6): both real
-catalog-corruption bugs found to date (delete-vs-rebalance cross-marker
-blindness; append-over-fine-leaves) were INTERACTION defects between
-append/delete/rebalance/crash/fsck — states no single-operation test
-visits.  This property test runs a seeded random ~30-op sequence over
-{append, delete, rebalance, crash-injected variants of each, fsck} and
-asserts, after every converged state: exact row-SET equality against a
-plain-dict oracle, n_sources accounting, no duplicate ids, and
-fsck-consistency.
+"""Randomized lifecycle interleaving: the real catalog-corruption bugs
+found to date (delete-vs-rebalance interplay; append-over-fine-leaves)
+were INTERACTION defects between append/delete/rebalance/crash/fsck —
+states no single-operation test visits.  This property test runs a
+seeded random ~30-op sequence over {append, delete, rebalance, compact,
+crash-injected variants of each, fsck} and asserts, after every step:
+exact row-SET equality against a plain-dict oracle, n_sources
+accounting, no duplicate ids, and an fsck report whose only findings
+are the unlisted files of crashes since the last repair.
 
-Crash semantics mirrored in the oracle:
-- a crashed delete is APPLIED (its intent marker records the victims;
-  every reconciliation path rolls it forward);
-- a crashed rebalance is row-preserving either way (pre -> rollback,
-  done -> roll-forward; the row set never changes);
-- a crashed append is applied by REPLAYING the same batch_id to
-  completion (the streaming contract), so the oracle applies it once.
-
-A crash leaves the catalog torn until the NEXT operation (or fsck)
-converges it — exactly the cross-marker window the round-8 append fix
-closed — so assertions run on every post-convergence state, not on the
-torn intermediate.
+Every mutation commits by one metadata publish.  A crashed variant
+crashes at one of the commit's two seams, chosen at random:
+- at the publish (``_commit_meta``): the previous version stays
+  committed, so the oracle does not move — except for a crashed append,
+  which the stream replays under the same batch_id to completion, so
+  the oracle applies it once;
+- right after the publish (``_drop_superseded``): the new version is
+  committed, so the oracle applies it, and the superseded files stay
+  on disk unlisted until the next mutation over their leaves or an
+  fsck repair removes them.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -66,34 +65,29 @@ def _mkrows(rng, ids):
 N_STEPS = 30
 
 
-def _fragment_cells_on_disk(path: str, k: int = 2) -> list:
-    """Split the first k cell files in two content-identical halves
-    (ranks intact) — the external-bulk-loader fragmentation compact
-    exists for, so the compact/compact_crash ops have real work."""
-    import glob
-
+def _fragment_listed_cells(spark, path, name, fs, k=2) -> None:
+    """Split the one listed file of the first k single-file leaves in two
+    content-identical halves (ranks intact) and register the halves in
+    the metadata — the external-bulk-loader fragmentation compact exists
+    for, so the compact/compact_crash ops have real work."""
     import pyarrow.parquet as pq
 
-    done = []
-    cells = sorted(
-        {
-            os.path.dirname(f)
-            for f in glob.glob(f"{path}/catalog/Norder=*/Dir=*/Npix=*/*.parquet")
-        }
-    )
-    for cell in cells[:k]:
-        files = sorted(f for f in os.listdir(cell) if f.endswith(".parquet"))
-        if len(files) != 1:
-            continue
-        t = pq.read_table(os.path.join(cell, files[0]))
+    meta = Catalog.load(spark, path, name, fs=fs).meta
+    files = dict(meta.files)
+    for leaf in [lf for lf, ns in sorted(files.items()) if len(ns) == 1][:k]:
+        cell = Catalog(spark, path, meta)._leaf_dir(*leaf)
+        t = pq.read_table(os.path.join(cell, files[leaf][0]))
         if t.num_rows < 2:
             continue
         half = t.num_rows // 2
         pq.write_table(t.slice(0, half), os.path.join(cell, "part-ext-a.parquet"))
         pq.write_table(t.slice(half), os.path.join(cell, "part-ext-b.parquet"))
-        os.remove(os.path.join(cell, files[0]))
-        done.append(cell)
-    return done
+        os.remove(os.path.join(cell, files[leaf][0]))
+        files[leaf] = ("part-ext-a.parquet", "part-ext-b.parquet")
+    fs.publish(
+        f"{path}/{name}_meta.json",
+        replace(meta, files=files, version=meta.version + 1).to_json(),
+    )
 
 
 @pytest.fixture(params=["local", "hadoop"])
@@ -127,16 +121,22 @@ def test_randomized_lifecycle_interleaving(spark, tmp_path, lifecycle_fs):
     next_id = 10_000
     batch_id = 0
     mag_cuts = [21.0, 20.0, 19.0, 18.5]  # progressively deeper deletes
+    # set by a crash, cleared by an fsck repair: until then fsck may
+    # report the crashed attempts' unlisted files, and nothing else
+    garbage = False
 
     def check(c):
         rows = {
             int(r["source_id"]): round(float(r["mag"]), 9)
             for r in c.df().select("source_id", "mag").collect()
         }
-        assert len(rows) == c.df().count(), "duplicate source_id on disk"
+        assert len(rows) == c.df().count(), "duplicate source_id"
         assert rows == oracle
         assert c.meta.n_sources == len(oracle)
-        assert c.fsck()["consistent"]
+        rep = c.fsck()
+        assert rep["n_rows_disk"] == len(oracle) and not rep["missing_files"], rep
+        assert rep["duplicate_ids"] == rep["bad_rank_pixels"] == rep["misplaced_rows"] == 0
+        assert rep["consistent"] or (garbage and rep["unlisted_files"]), rep
         # coverage disjointness: no leaf is an ancestor of another
         leaves = [(o, p) for o, ps in c.meta.hips.items() for p in ps]
         for o1, p1 in leaves:
@@ -144,22 +144,28 @@ def test_randomized_lifecycle_interleaving(spark, tmp_path, lifecycle_fs):
                 if o1 < o2:
                     assert (p2 >> (2 * (o2 - o1))) != p1
 
+    def crash(run):
+        """Run ``run`` with a crash at a random commit seam; returns the
+        seam, or None when the op committed nothing to crash in."""
+        seam = ("_commit_meta", "_drop_superseded")[int(rng.integers(2))]
+        orig = getattr(Catalog, seam)
+        setattr(Catalog, seam, _boom)
+        try:
+            run()
+        except _Boom:
+            return seam
+        finally:
+            setattr(Catalog, seam, orig)
+        return None
+
     ops = [
         "append", "append", "delete", "rebalance", "compact",
         "append_crash", "delete_crash", "rebalance_crash",
         "compact_crash", "fsck",
     ]
-    torn = False
+    seams = set()
     for step in range(N_STEPS):
         op = ops[int(rng.integers(len(ops)))]
-        if torn and op.endswith("_crash"):
-            # converge first: injecting a crash into an already-torn
-            # catalog fires the boom inside the ENTRY reconciliation
-            # (itself a _commit_meta caller), before the op's own
-            # intent marker exists — a state whose oracle semantics
-            # differ from "op crashed mid-flight"
-            Catalog.load(spark, path, name, fs=fs).fsck(repair=True)
-            torn = False
         cat = Catalog.load(spark, path, name, fs=fs)
 
         if op in ("append", "append_crash"):
@@ -168,103 +174,69 @@ def test_randomized_lifecycle_interleaving(spark, tmp_path, lifecycle_fs):
             pdf = _mkrows(rng, ids)
             batch_id += 1
             if op == "append_crash":
-                orig = Catalog._commit_meta
-                Catalog._commit_meta = _boom
-                try:
-                    with pytest.raises(_Boom):
-                        cat.append(spark.createDataFrame(pdf), batch_id=batch_id)
-                finally:
-                    Catalog._commit_meta = orig
-                # streaming replay: same batch_id, runs to completion
-                cat = Catalog.load(spark, path, name, fs=fs).append(
+                seam = crash(
+                    lambda: cat.append(spark.createDataFrame(pdf), batch_id=batch_id)
+                )
+                seams.add(seam)
+                garbage = True
+                # streaming replay: same batch_id, runs to completion (a
+                # no-op if the crash came after the publish)
+                Catalog.load(spark, path, name, fs=fs).append(
                     spark.createDataFrame(pdf), batch_id=batch_id
                 )
             else:
-                cat = cat.append(spark.createDataFrame(pdf), batch_id=batch_id)
+                cat.append(spark.createDataFrame(pdf), batch_id=batch_id)
             for r in pdf.itertuples():
                 oracle[int(r.source_id)] = round(float(r.mag), 9)
-            torn = False
 
         elif op in ("delete", "delete_crash"):
             cut = mag_cuts[int(rng.integers(len(mag_cuts)))]
             pred = f"mag > {cut}"
             victims = [k for k, m in oracle.items() if m > cut]
-            if op == "delete_crash" and victims:
-                orig = Catalog._commit_meta
-                Catalog._commit_meta = _boom
-                try:
-                    with pytest.raises(_Boom):
-                        cat.delete(pred)
-                finally:
-                    Catalog._commit_meta = orig
-                torn = True  # converges on the next op / fsck
+            if op == "delete_crash":
+                seam = crash(lambda: cat.delete(pred))
+                seams.add(seam)
+                garbage |= seam is not None
+                applied = seam != "_commit_meta"
             else:
-                cat = cat.delete(pred)
-                torn = False
-            # a crashed delete's marker is rolled FORWARD everywhere
-            for k in victims:
-                del oracle[k]
+                cat.delete(pred)
+                applied = True
+            if applied:
+                for k in victims:
+                    del oracle[k]
 
         elif op in ("rebalance", "rebalance_crash"):
+            # row-preserving whichever side of the publish it crashes on
             if op == "rebalance_crash":
-                orig = Catalog._rebalance_finish
-                Catalog._rebalance_finish = _boom
-                try:
-                    try:
-                        cat.rebalance(threshold=600)
-                    except _Boom:
-                        torn = True
-                    else:
-                        torn = False  # nothing was over threshold
-                finally:
-                    Catalog._rebalance_finish = orig
+                seam = crash(lambda: cat.rebalance(threshold=600))
+                seams.add(seam)
+                garbage |= seam is not None
             else:
-                cat = cat.rebalance(threshold=600)
-                torn = False
+                cat.rebalance(threshold=600)
 
         elif op in ("compact", "compact_crash"):
             # content-identical by contract: the oracle doesn't move.
-            # The engine's own writers are one-file-per-cell and this
-            # fixture has no margins, so compaction would be a no-op
-            # (and the crash seam unreachable): fragment a couple of
-            # cells first, as an external bulk loader would
-            _fragment_cells_on_disk(path, k=2)
+            # The engine's own writers are one-file-per-cell, so
+            # compaction would be a no-op (and the crash seams
+            # unreachable): fragment a couple of cells first, as an
+            # external bulk loader would
+            _fragment_listed_cells(spark, path, name, fs, k=2)
+            cat = Catalog.load(spark, path, name, fs=fs)
             if op == "compact_crash":
-                # alternate which phase the crash hits: 'staged'
-                # exercises rollback, 'done' exercises roll-forward
-                phase = ("staged", "done")[int(rng.integers(2))]
-
-                def _boom_at(self, p, _phase=phase):
-                    if p == _phase:
-                        raise _Boom(p)
-
-                orig = Catalog._compact_checkpoint
-                Catalog._compact_checkpoint = _boom_at
-                try:
-                    try:
-                        cat.compact()
-                    except _Boom:
-                        torn = True
-                    else:
-                        torn = False  # nothing was fragmented
-                finally:
-                    Catalog._compact_checkpoint = orig
+                seam = crash(cat.compact)
+                seams.add(seam)
+                garbage |= seam is not None
             else:
-                cat = cat.compact()
-                torn = False
+                cat.compact()
 
         elif op == "fsck":
             cat.fsck(repair=True)
-            cat = Catalog.load(spark, path, name, fs=fs)
-            torn = False
+            garbage = False
 
-        if not torn:
-            check(Catalog.load(spark, path, name, fs=fs))
+        check(Catalog.load(spark, path, name, fs=fs))
 
-    # converge whatever the sequence ended on and do the final audit
+    assert {"_commit_meta", "_drop_superseded"} <= seams, seams
+    # the final audit: a repair leaves nothing unlisted
     Catalog.load(spark, path, name, fs=fs).fsck(repair=True)
-    final = Catalog.load(spark, path, name, fs=fs)
-    check(final)
-    assert not os.path.exists(final._delete_intent_path())
-    assert not os.path.exists(final._rebalance_intent_path())
-    assert not os.path.exists(final._compact_intent_path())
+    garbage = False
+    check(Catalog.load(spark, path, name, fs=fs))

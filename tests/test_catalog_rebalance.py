@@ -1,11 +1,12 @@
 """Catalog.rebalance: in-place splitting of over-threshold cells —
 row preservation, rank integrity, query parity (cone + boundary-correct
-cross-match), withdrawal of the margin export, idempotence, and
-two-phase crash recovery (rollback AND roll-forward)."""
+cross-match), withdrawal of the margin export, idempotence, and both
+crash windows of its commit (before the publish: the old leaves stay
+committed; after it: the children, with the parents' files left for
+fsck or the next mutation to remove)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -137,63 +138,63 @@ class _Boom(RuntimeError):
     pass
 
 
+def _crash_rebalance(cat, thr, seam):
+    """Run rebalance with a crash at ``seam``: ``_commit_meta`` (the
+    publish: the children's files are written but unlisted) or
+    ``_drop_superseded`` (right after the publish: the split parents'
+    files are unlisted but still on disk)."""
+    orig = getattr(Catalog, seam)
+
+    def boom(self, *a, **k):
+        raise _Boom(f"crash at {seam}")
+
+    setattr(Catalog, seam, boom)
+    try:
+        with pytest.raises(_Boom):
+            cat.rebalance(threshold=thr)
+    finally:
+        setattr(Catalog, seam, orig)
+
+
 def test_crash_before_done_marker_rolls_back(spark, tmp_path):
-    """Kill during the child rewrite (pre marker on disk, child dirs
-    possibly partial): the next rebalance rolls back and then completes
-    cleanly from the original state."""
+    """Kill at the publish, with the children's files written: the
+    committed version still names the parents, reads return exactly
+    the original rows, fsck reports the children's files as unlisted,
+    and the next rebalance removes them before it writes the same
+    split again."""
     cat = _build_over(spark, tmp_path, "rbc1", margins=False)
     thr = 700
+    before_cells = _cells(cat)
     before_rows = cat.df().count()
 
-    # simulate the torn window: run the planning by hand — write a pre
-    # marker and a PARTIAL child dir, as if the write died mid-job
-    over = [(o, p, c) for (o, p), c in _cells(cat).items() if c > thr]
-    o, p, _ = over[0]
-    o2 = o + 2
-    lo, _hi = cat._rebalance_children_of(o, p, o2)
-    with open(cat._rebalance_intent_path(), "w") as f:
-        json.dump(
-            {"phase": "pre", "splits": [[o, p]], "child_cells": [[o2, lo]]}, f
-        )
-    fake = f"{cat.path}/catalog/Norder={o2}/Dir=0/Npix={lo}"
-    os.makedirs(fake, exist_ok=True)
-    # a torn parquet fragment
-    spark.createDataFrame(
-        [(99_999_999, 1.0, 1.0, 11.0)], "source_id long, ra double, dec double, mag double"
-    ).coalesce(1).write.mode("overwrite").parquet(fake)
+    _crash_rebalance(cat, thr, "_commit_meta")
+    stale = Catalog.load(spark, cat.path, "rbc1")
+    assert stale.meta == cat.meta
+    assert _cells(stale) == before_cells
+    rep = stale.fsck()
+    assert rep["cells_disk_only"] and not rep["consistent"]
 
-    healed = cat.rebalance(threshold=thr)
-    assert healed.df().count() == before_rows  # the fake fragment is gone
-    assert healed.df().filter("source_id = 99999999").count() == 0
+    healed = stale.rebalance(threshold=thr)
+    assert healed.df().count() == before_rows
     assert all(c <= thr for c in _cells(healed).values())
     assert healed.fsck()["consistent"]
 
 
 def test_crash_after_done_marker_rolls_forward(spark, tmp_path):
-    """Kill after the child rewrite committed (done marker) but before
-    parent removal/metadata: fsck(repair=True) rolls forward to the
-    fully-split state with no duplicate rows."""
+    """Kill right after the publish, before the parents' files are
+    deleted: the committed version names the children only, so reads
+    see every row once; fsck(repair=True) deletes the parents' files."""
     cat = _build_over(spark, tmp_path, "rbc2", margins=False)
     thr = 700
     n0 = cat.df().count()
 
-    orig = Catalog._rebalance_finish
-
-    def boom(self, *a, **k):
-        raise _Boom("crash before finish")
-
-    Catalog._rebalance_finish = boom
-    try:
-        with pytest.raises(_Boom):
-            cat.rebalance(threshold=thr)
-    finally:
-        Catalog._rebalance_finish = orig
-
-    # torn state: children AND parents both on disk -> duplicates
+    _crash_rebalance(cat, thr, "_drop_superseded")
     stale = Catalog.load(spark, cat.path, "rbc2")
-    assert stale.df().count() > n0
+    assert stale.df().count() == n0
+    assert all(c <= thr for c in _cells(stale).values())
     rep = stale.fsck()
-    assert not rep["consistent"] and rep["stale_rebalance_intent"]
+    assert not rep["consistent"] and rep["cells_disk_only"]
+    assert rep["n_rows_disk"] == n0 and rep["duplicate_ids"] == 0
 
     rep2 = stale.fsck(repair=True)
     assert rep2["repaired"]
@@ -201,40 +202,31 @@ def test_crash_after_done_marker_rolls_forward(spark, tmp_path):
     assert healed.df().count() == n0
     assert all(c <= thr for c in _cells(healed).values())
     assert healed.fsck()["consistent"]
+    for o, p in rep["cells_disk_only"]:
+        assert not os.path.exists(healed._leaf_dir(o, p))
 
 
 def test_delete_reconciles_a_crashed_rebalance_first(spark, tmp_path):
-    """A delete on a catalog with a stale rebalance marker must NOT
-    operate on the row-duplicated torn state (parents + children both
-    on disk): it reconciles the rebalance first, so match counts and
-    n_sources stay exact."""
+    """A delete after a rebalance that crashed right after its publish
+    reads only the committed children — no row is doubled by the
+    parents' files still on disk — so its match count and n_sources
+    are exact; the parents' files wait, unread, for fsck(repair=True)."""
     cat = _build_over(spark, tmp_path, "xmark", margins=False)
     thr = 700
     n0 = cat.meta.n_sources
 
-    orig = Catalog._rebalance_finish
-
-    def boom(self, *a, **k):
-        raise _Boom("crash before finish")
-
-    Catalog._rebalance_finish = boom
-    try:
-        with pytest.raises(_Boom):
-            cat.rebalance(threshold=thr)
-    finally:
-        Catalog._rebalance_finish = orig
-
+    _crash_rebalance(cat, thr, "_drop_superseded")
     stale = Catalog.load(spark, cat.path, "xmark")
-    assert stale.df().count() > n0  # duplicated torn state
-    n_victims_true = int(
-        stale.df().dropDuplicates(["source_id"]).filter("mag > 21.5").count()
-    )
+    assert stale.df().count() == n0
+    n_victims = stale.df().filter("mag > 21.5").count()
 
     cat2 = stale.delete("mag > 21.5")
-    assert cat2.meta.n_sources == n0 - n_victims_true
-    assert cat2.df().count() == n0 - n_victims_true
+    assert cat2.meta.n_sources == n0 - n_victims
+    assert cat2.df().count() == n0 - n_victims
     assert cat2.df().filter("mag > 21.5").count() == 0
-    assert cat2.fsck()["consistent"]
+    rep = cat2.fsck(repair=True)
+    assert rep["cells_disk_only"] and rep["n_rows_disk"] == n0 - n_victims
+    assert Catalog.load(spark, cat.path, "xmark").fsck()["consistent"]
 
 
 def test_append_after_rebalance_respects_fine_leaves(spark, tmp_path):
@@ -284,36 +276,23 @@ def test_append_after_rebalance_respects_fine_leaves(spark, tmp_path):
 
 
 def test_append_reconciles_a_crashed_rebalance_first(spark, tmp_path):
-    """The round-8 advisory bug: in the crash window after rebalance
-    commits its 'done' marker but before the metadata commit, a
-    restarted stream replays its batch through append() FIRST.  An
-    append planned against the stale committed coverage (parents still
-    listed) writes the batch into parent directories that the next
-    reconciliation rolls forward and removes — permanent row loss plus
-    n_sources overcount.  append() must converge the marker at entry,
-    exactly as delete() and rebalance() do."""
+    """A restarted stream replays its batch through append() after a
+    rebalance crashed at its publish, with the children's files
+    already written.  The append plans against the committed parents
+    and writes the batch there; the children's files stay unlisted and
+    unread.  The next rebalance removes them before writing its own
+    children, so every appended row survives it once."""
     cat = _build_over(spark, tmp_path, "apx", margins=False)
     thr = 700
     n0 = cat.df().count()
 
-    orig = Catalog._rebalance_finish
-
-    def boom(self, *a, **k):
-        raise _Boom("crash after done marker, before finish")
-
-    Catalog._rebalance_finish = boom
-    try:
-        with pytest.raises(_Boom):
-            cat.rebalance(threshold=thr)
-    finally:
-        Catalog._rebalance_finish = orig
-
+    _crash_rebalance(cat, thr, "_commit_meta")
     stale = Catalog.load(spark, cat.path, "apx")
-    assert os.path.exists(stale._rebalance_intent_path())
-    assert stale.df().count() > n0  # torn: parents + children both on disk
+    assert stale.df().count() == n0
+    assert stale.fsck()["cells_disk_only"]
 
-    # the replayed batch lands squarely in the split hotspot — exactly
-    # the rows the stale parent directories would have swallowed
+    # the replayed batch lands squarely in the hotspot the crashed
+    # rebalance split
     batch = pd.DataFrame(
         {
             "source_id": np.arange(10_000, 10_200, dtype=np.int64),
@@ -323,16 +302,10 @@ def test_append_reconciles_a_crashed_rebalance_first(spark, tmp_path):
         }
     )
     cat2 = stale.append(spark.createDataFrame(batch), batch_id=7)
-
-    assert not os.path.exists(cat2._rebalance_intent_path())
     assert cat2.df().count() == n0 + 200
     assert cat2.meta.n_sources == n0 + 200
-    # every appended row survived (none written into removed parents)
     assert cat2.df().filter("source_id >= 10000").count() == 200
-    assert cat2.fsck()["consistent"]
 
-    # ...and survives a SUBSEQUENT rebalance (the window where the old
-    # behavior silently destroyed the rows)
     cat3 = cat2.rebalance(threshold=thr)
     assert cat3.df().count() == n0 + 200
     assert cat3.meta.n_sources == n0 + 200
@@ -340,7 +313,12 @@ def test_append_reconciles_a_crashed_rebalance_first(spark, tmp_path):
     assert (
         cat3.df().groupBy("source_id").count().filter("count > 1").count() == 0
     )
-    assert cat3.fsck()["consistent"]
+    # child directories of the crashed plan that the new plan split
+    # further are the only leftovers; repair removes them
+    cat3.fsck(repair=True)
+    healed = Catalog.load(spark, cat.path, "apx")
+    assert healed.df().count() == n0 + 200
+    assert healed.fsck()["consistent"]
 
 
 def test_rebalance_threshold_zero_raises(spark, tmp_path):

@@ -1,9 +1,8 @@
 """The margin export (``neighbor/``): ingest with ``write_margins=True``
 or ``Catalog.export_margins`` writes it and sets ``margins_exported`` in
-the metadata.  Append, delete and rebalance withdraw it — clear the
-flag in a metadata publish before their first data write, then remove
-the directory — and ``margin_df`` serves it only while the committed
-metadata vouches for it.  ``fsck`` reports a directory nothing vouches
+the metadata.  Append, delete and rebalance withdraw it — their commit
+clears the flag, then they remove the directory — and ``margin_df``
+serves it only while the committed metadata vouches for it.  ``fsck`` reports a directory nothing vouches
 for, and ``repair=True`` removes it."""
 
 from __future__ import annotations
@@ -118,37 +117,45 @@ def test_mutation_withdraws_margin_export(spark, cat, op):
 
 @pytest.mark.parametrize("op", ["append", "delete", "rebalance"])
 def test_crash_after_withdrawal_leaves_rows_unchanged(spark, cat, op):
-    """A crash after the withdrawal publish and before the first data
-    write: the rows are the pre-mutation rows, and the export stays
-    withdrawn (it is not served for a state it may not describe)."""
+    """The withdrawal rides the mutation's commit.  A crash at that
+    publish, after the data write: the rows are the pre-mutation rows,
+    and the export still vouched for is still valid, since it describes
+    exactly those rows.  fsck reports only the crashed write's unlisted
+    files, and repair removes them without touching the export."""
     before = _rows(cat)
-    orig = Catalog._invalidate_margins
-
-    def withdraw_then_crash(self, meta):
-        orig(self, meta)
-        raise _Boom("injected crash before the first data write")
-
-    Catalog._invalidate_margins = withdraw_then_crash
+    halo = sorted(tuple(r) for r in cat.margin_df().select("source_id", "Npix").collect())
+    orig = Catalog._commit_meta
+    Catalog._commit_meta = _boom
     try:
         with pytest.raises(_Boom):
             MUTATIONS[op](spark, cat)
     finally:
-        Catalog._invalidate_margins = orig
+        Catalog._commit_meta = orig
 
     torn = Catalog.load(spark, cat.path, NAME)
     assert _rows(torn) == before
     assert torn.meta.n_sources == len(before)
-    assert torn.margin_df() is None
-    assert not os.path.exists(f"{cat.path}/neighbor")
-    assert torn.fsck()["consistent"]
+    assert torn.meta.margins_exported
+    assert sorted(
+        tuple(r) for r in torn.margin_df().select("source_id", "Npix").collect()
+    ) == halo
+    rep = torn.fsck()
+    assert rep["unlisted_files"] and not rep["unvouched_margins"], rep
+    assert torn.fsck(repair=True)["repaired"]
+    healed = Catalog.load(spark, cat.path, NAME)
+    assert healed.fsck()["consistent"]
+    assert _rows(healed) == before and healed.margin_df() is not None
 
 
 @pytest.mark.parametrize("op", ["delete", "rebalance"])
 def test_retry_on_the_crashed_handle_keeps_the_export_withdrawn(spark, cat, op):
     """The handle a crashed mutation ran on still holds metadata that
-    vouches for the export; the retry's reconciliation of the crashed
-    mutation must not commit that vouch again."""
-    seam = "_commit_meta" if op == "delete" else "_rebalance_finish"
+    vouches for the export.  Retried through that handle, the mutation
+    plans from the committed version, so it never commits the stale
+    vouch again: the delete crashed before its publish and the retry
+    applies it; the rebalance crashed after its publish and the retry
+    finds nothing left to split."""
+    seam = "_commit_meta" if op == "delete" else "_drop_superseded"
     orig = getattr(Catalog, seam)
     setattr(Catalog, seam, _boom)
     try:
@@ -161,13 +168,15 @@ def test_retry_on_the_crashed_handle_keeps_the_export_withdrawn(spark, cat, op):
     out = MUTATIONS[op](spark, cat)
     assert not Catalog.load(spark, cat.path, NAME).meta.margins_exported
     assert out.margin_df() is None
-    assert out.fsck()["consistent"]
+    out.fsck(repair=True)  # the rebalance's superseded files, if any
+    assert Catalog.load(spark, cat.path, NAME).fsck()["consistent"]
+    assert not os.path.exists(f"{cat.path}/neighbor")
 
 
 def test_fsck_reports_and_removes_unvouched_margins(spark, cat):
-    """A crash between the withdrawal publish and the removal leaves a
-    neighbor/ directory the metadata does not vouch for: margin_df
-    ignores it, fsck reports it, and repair removes it."""
+    """A crash after a mutation's publish and before it removes
+    neighbor/ leaves a directory the metadata does not vouch for:
+    margin_df ignores it, fsck reports it, and repair removes it."""
 
     class KeepNeighborFS(LocalFS):
         def rmtree(self, path):
@@ -175,10 +184,12 @@ def test_fsck_reports_and_removes_unvouched_margins(spark, cat):
                 raise _Boom("injected crash before neighbor/ is removed")
             super().rmtree(path)
 
-    before = _rows(cat)
+    n0 = len(_rows(cat))
     with pytest.raises(_Boom):
         Catalog(spark, cat.path, cat.meta, fs=KeepNeighborFS()).append(_batch(spark))
     torn = Catalog.load(spark, cat.path, NAME)
+    after = _rows(torn)
+    assert len(after) == n0 + 300  # the append committed
     assert os.path.isdir(f"{cat.path}/neighbor")
     assert torn.margin_df() is None
     rep = torn.fsck()
@@ -188,7 +199,7 @@ def test_fsck_reports_and_removes_unvouched_margins(spark, cat):
     assert not os.path.exists(f"{cat.path}/neighbor")
     healed = Catalog.load(spark, cat.path, NAME)
     assert healed.fsck()["consistent"]
-    assert _rows(healed) == before  # repair touched no catalog row
+    assert _rows(healed) == after  # repair touched no catalog row
 
 
 def test_metadata_without_the_flag_reads_not_exported(spark, cat):

@@ -179,7 +179,7 @@ def test_near_boundary_mask_matches_the_scalar_check():
     assert (_near_boundary_mask(vals) == want).all()
 
 
-def test_gate_oracles_have_no_straddle_risk_sf001_and_sf01():
+def test_gate_oracles_have_no_straddle_risk_sf001_and_sf01(tmp_path):
     import duckdb
     import pandas as pd
 
@@ -192,6 +192,9 @@ def test_gate_oracles_have_no_straddle_risk_sf001_and_sf01():
         # and, beside the suite's Spark JVM, got processes OOM-killed.
         # Capped, it spills and stays near 3 GB resident.
         con.execute("SET memory_limit = '2GB'")
+        # spill under pytest's temporary directory, not into .tmp/ of
+        # the working directory, where a stopped run leaves it behind
+        con.execute(f"SET temp_directory = '{tmp_path}'")
         for t in TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -401,7 +401,7 @@ def test_stream_into_catalog_incremental_ingest(spark, tmp_path):
 
 def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_path):
     """END-TO-END crash recovery: the foreachBatch sink dies AFTER the
-    batch's data overwrite but BEFORE the metadata commit (injected
+    batch's files are written but BEFORE the metadata commit (injected
     exception at the metadata rename), the query fails, and a fresh
     writer restarted from the SAME checkpoint must replay the
     uncommitted batch and converge: exact n_sources, no duplicate rows,
@@ -409,7 +409,6 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
     import json
     import os as _os
 
-    import lsd2_spark.catalog as catmod
     from lsd2_spark.catalog import Catalog, partition_catalog
     from lsd2_spark.streaming import events as sev
 
@@ -451,8 +450,7 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
             .parquet(str(inbox / "*.parquet"))
         )
 
-    # run 1: allow batch 0's metadata commit, crash at batch 1's (the
-    # publish that withdraws the export carries no batch id)
+    # run 1: allow batch 0's metadata commit, crash at batch 1's
     real_replace = _os.replace
 
     def crash_second_commit(src, dst):
@@ -463,7 +461,7 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
         return real_replace(src, dst)
 
     ckpt = str(tmp_path / "ckpt")
-    catmod.os.replace = crash_second_commit
+    _os.replace = crash_second_commit
     try:
         writer = sev.stream_into_catalog(make_stream(), cat)
         q = writer.start(ckpt)
@@ -471,7 +469,7 @@ def test_stream_into_catalog_crash_mid_batch_restarts_exactly_once(spark, tmp_pa
             q.processAllAvailable()
         q.stop()
     finally:
-        catmod.os.replace = real_replace
+        _os.replace = real_replace
 
     # restart: fresh writer over the durable state, SAME checkpoint —
     # Structured Streaming redelivers the uncommitted batch

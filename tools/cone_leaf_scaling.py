@@ -8,12 +8,17 @@ seeded cone queries against both and prints, per catalog, the median
 CPU and wall time per cone and the Spark jobs per cone.  Two readers
 are measured on each catalog:
 
-- ``cone_search``: reads only the leaf directories the cover hits, with
-  the schema stored in the metadata;
+- ``cone_search``: reads only the files the metadata lists for the
+  leaves the cover hits (the leaf directories, in catalogs whose
+  metadata names no files), with the schema stored in the metadata;
 - ``root_scan``: the same pruning and distance predicates over a
-  fresh root-discovery read of the catalog (``Catalog._scan()``, which
-  ``Catalog.df()`` runs once per handle), so every query lists every
-  leaf under the catalog root.
+  fresh root-discovery read of the catalog with the stored schema, so
+  every query lists every leaf under the catalog root.
+
+Before the cones, each catalog reports the size of its metadata JSON
+and, over fresh handles, the cost of ``Catalog.load`` and of the
+handle's first ``df()`` (the relation every later ``df()``, cross-match
+and view projects; Spark resolves its files when it is built).
 
 Each catalog then takes a wide append: a uniform all-sky batch that
 touches most of its leaves, appended to a fresh copy of the catalog
@@ -121,6 +126,27 @@ def summary(cpu: list, wall: list, jobs: list) -> dict:
         "wall_ms_p50": round(1e3 * statistics.median(wall), 1),
         "jobs_mean": round(statistics.fmean(jobs), 2),
         "jobs_max": max(jobs),
+    }
+
+
+def measure_handle(spark, meter, name, path, reps: int = 5) -> dict:
+    """Metadata size; CPU, wall and jobs of ``Catalog.load`` and of the
+    first ``df()`` of the loaded handle, over ``reps`` fresh handles
+    after one warm-up."""
+    from lsd2_spark.catalog import Catalog
+
+    load, first = [], []
+    for rep in range(reps + 1):
+        cat, *lc = timed(spark, meter, f"{name}-load-{rep}",
+                         lambda: Catalog.load(spark, path, "sky"))
+        _, *dc = timed(spark, meter, f"{name}-df-{rep}", cat.df)
+        if rep:
+            load.append(lc)
+            first.append(dc)
+    return {
+        "meta_bytes": os.path.getsize(os.path.join(path, "sky_meta.json")),
+        "load": summary(*zip(*load)),
+        "first_df": summary(*zip(*first)),
     }
 
 
@@ -242,7 +268,11 @@ def main() -> None:
 
         def root_scan(q, cat=cat):
             pred = cat.cone_pruning_predicate(*q)
-            df = cat._scan().filter(F.lit(False) if pred is None else pred)
+            root = f"{cat.path}/catalog"
+            df = (
+                spark.read.schema(cat.meta.schema).option("basePath", root).parquet(root)
+                .filter(F.lit(False) if pred is None else pred)
+            )
             dist = gc_dist(F.col("ra"), F.col("dec"), q[0], q[1])
             return df.withColumn("_DIST", dist).filter(F.col("_DIST") < q[2]).collect()
 
@@ -251,6 +281,7 @@ def main() -> None:
             "leaves": sum(len(v) for v in cat.meta.hips.values()),
             "orders": sorted(cat.meta.hips),
             "ingest_s": round(ingest_s, 1),
+            "handle": measure_handle(spark, meter, f"handle-{threshold}", path),
             "cone_search": measure_cones(spark, meter, f"cone-{threshold}", leaf_read, qs),
             "root_scan": measure_cones(spark, meter, f"root-{threshold}", root_scan, qs),
             "append_leaves_touched": leaves_touched(cat.meta.hips, batch),
