@@ -67,7 +67,7 @@ from pyspark.sql.window import Window
 from lsd2_spark import healpix as hpx
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist
-from lsd2_spark.plans.partition_map import PartitionMap, compute_partition_map
+from lsd2_spark.plans.partition_map import assignment_cells, compute_partition_map
 from lsd2_spark.plans.tables import plan_table
 from lsd2_spark.sources.fs import LOCAL_FS, LifecycleFS
 
@@ -101,34 +101,46 @@ def pixel_of_index(index: Column, order: int) -> Column:
     return F.shiftright(index, RANK_BITS + 2 * (SPATIAL_INDEX_ORDER - order))
 
 
-def _leaf_table(spark: SparkSession, hips: dict[int, list[int]]) -> DataFrame:
-    """Broadcast (Norder, Npix) plan table of the leaves in ``hips``."""
-    orders = sorted(hips)
-    return F.broadcast(
-        plan_table(
-            spark,
-            {
-                "Norder": np.repeat(orders, [len(hips[o]) for o in orders]),
-                "Npix": np.array([p for o in orders for p in hips[o]], dtype=np.int64),
-            },
-            "Norder int, Npix long",
+def _leaf_cells(hips: dict[int, list[int]]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The leaves of ``hips`` as :func:`_place` cells: each is its own
+    target."""
+    orders = np.repeat(sorted(hips), [len(hips[o]) for o in sorted(hips)])
+    pixels = np.array([p for o in sorted(hips) for p in hips[o]], dtype=np.int64)
+    return orders, pixels, orders
+
+
+def _place(rows: DataFrame, cells: tuple[np.ndarray, np.ndarray, np.ndarray]) -> DataFrame:
+    """``rows`` (which carry their order-19 pixel in ``_p19``) with the
+    ``Norder``, ``Npix`` and ``Dir`` of the leaf each belongs to — the
+    one row-to-leaf assignment of ingest, append and rebalance.
+
+    ``cells`` are ``(order, pix, target_order)`` arrays of disjoint
+    cells; every row must lie in one of them (the leaves of a plan over
+    the rows, or :func:`assignment_cells`' cover of the whole sphere).
+    Each row explodes into its pixel at every cell order (a shift of
+    ``_p19``), one broadcast equi-join on the plan table keeps the probe
+    that hits its cell, and the row's leaf is its pixel at that cell's
+    target order: one explode and one join, in the JVM."""
+    order, pix, target = cells
+    table = F.broadcast(plan_table(
+        rows.sparkSession,
+        {"_o": order, "_q": pix, "Norder": target},
+        "_o int, _q long, Norder int",
+    ))
+    probes = F.array(*[
+        F.struct(
+            F.lit(o).cast("int").alias("_o"),
+            F.shiftright(F.col("_p19"), 2 * (SPATIAL_INDEX_ORDER - o)).alias("_q"),
         )
-    )
-
-
-def _order_probes(kpix_col: Column, orders: list[int], order_k: int) -> Column:
-    """One (Norder, Npix) probe struct per leaf order, derived from the
-    order-``order_k`` pixel by hierarchy shift — the shared leaf-probe
-    construct of both the initial ingest and the append path (explode
-    this array and equi-join the broadcast leaf table)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(o).cast("int").alias("Norder"),
-                F.shiftright(kpix_col, 2 * (order_k - o)).alias("Npix"),
-            )
-            for o in orders
-        ]
+        for o in sorted(set(order.tolist()))
+    ])
+    npix = F.expr(f"shiftright(_p19, 2 * ({SPATIAL_INDEX_ORDER} - Norder))")
+    return (
+        rows.withColumn("_pr", F.explode(probes))
+        .select(*rows.columns, "_pr._o", "_pr._q")
+        .join(table, ["_o", "_q"])
+        .select(*rows.columns, "Norder", npix.alias("Npix"))
+        .withColumn("Dir", _dir_of(F.col("Npix")))
     )
 
 
@@ -225,7 +237,7 @@ class CatalogMetadata:
                 "schema": None if self.schema is None else self.schema.jsonValue(),
                 "margins_exported": self.margins_exported,
             },
-            indent=2,
+            separators=(",", ":"),
         )
 
     @staticmethod
@@ -273,7 +285,7 @@ def _with_spatial_index(
     reference's lexsort, util.py:32) and leave each (Norder, Npix)
     cell's rows sorted by it, entirely in the JVM.
 
-    The rank window partitions by (Norder, Npix, pix@19); hash
+    The rank window partitions by (Norder, Dir, Npix, pix@19); hash
     partitioning on (Norder, Npix) already satisfies that clustered
     distribution, so the window shares the single write exchange —
     same shuffle count as the per-cell pandas kernel this replaces,
@@ -281,15 +293,20 @@ def _with_spatial_index(
     caller carries pix@19 in ``p19_col`` (new rows pixelize once, at
     ingest or append; stored rows shift it out of their ``_ID``).
     pix@19 never spans two cells (leaves are at most order
-    ``SPATIAL_INDEX_ORDER``), so per-cell ranking is globally correct,
-    and the window's (cell, pix, ra, dec) sort leaves each cell's rows
-    in ``_ID`` order for the partitioned write, as the kernel's lexsort
-    did."""
+    ``SPATIAL_INDEX_ORDER``), so per-cell ranking is globally correct.
+    The window's sort on (Norder, Dir, Npix, pix@19, ra, dec) is the
+    only sort of the write: it starts with the partitioned writer's
+    (Norder, Dir, Npix) ordering (``Dir`` is a function of ``Npix``, so
+    adding it splits no cell), and it leaves each cell's rows in
+    ``_ID`` order by construction.  ``Dir`` is derived from ``Npix``
+    when ``df`` lacks it."""
+    if "Dir" not in df.columns:
+        df = df.withColumn("Dir", _dir_of(F.col("Npix")))
     out_cols = [c for c in df.columns if c != p19_col]
-    w = Window.partitionBy("Norder", "Npix", p19_col).orderBy(
+    w = Window.partitionBy("Norder", "Dir", "Npix", p19_col).orderBy(
         F.col(ra_col).asc(), F.col(dec_col).asc()
     )
-    rank = F.row_number().over(w).cast("long") - 1
+    rank = F.col("_rank")
     spatial_id = F.when(
         rank < F.lit(1 << RANK_BITS),
         F.col(p19_col) * F.lit(1 << RANK_BITS) + rank,
@@ -302,6 +319,7 @@ def _with_spatial_index(
     p = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.repartition(p, "Norder", "Npix")
+        .withColumn("_rank", F.row_number().over(w).cast("long") - 1)
         .withColumn("_ID", spatial_id.cast(LongType()))
         .select(*out_cols, "_ID")
     )
@@ -379,40 +397,19 @@ def partition_catalog(
     pm = compute_partition_map(kpix, counts, order_k, threshold)
 
     # Stage 3 — per-row leaf assignment + ONE shuffled partitioned
-    # write (replaces reference EP3 stages 3-4).  Assignment uses the
-    # same multi-order probe the append path uses: broadcast only the
-    # LEAF table (one row per leaf cell), shift each row's order_k
-    # pixel up to every leaf order, and equi-join — the leaf set is
-    # orders of magnitude smaller than the kpix→leaf map (36 vs 47k at
-    # bench scale), whose per-action re-serialization from driver
-    # Python dominated ingest wall time.
-    orders = sorted(pm.hips)
-    leaf_tbl = _leaf_table(spark, pm.hips)
-    # spread the write-path scan too: the map side of the groupBy
-    # shuffle (Arrow pixelization + probe join) otherwise runs in
-    # however few tasks the input arrived as — a no-op at scale,
-    # a 10× parallelism win for few-file local inputs
-    # pixelize ONCE at the index order; the probe pixel is an exact
-    # hierarchy shift of it (the same property _order_probes uses), so
-    # the write path pays a single narrow Arrow pass and the spatial
-    # index below reuses the pixel instead of re-deriving it
-    assigned = (
-        spread_partitions(df)
-        .withColumn("_p19", ang2pix_udf(SPATIAL_INDEX_ORDER, ra, dec))
-        .withColumn(
-            "_kpix",
-            F.shiftright(F.col("_p19"), 2 * (SPATIAL_INDEX_ORDER - order_k)),
-        )
-        .withColumn("_pr", F.explode(_order_probes(F.col("_kpix"), orders, order_k)))
-        .select(
-            *df.columns,
-            "_p19",
-            F.col("_pr.Norder").alias("Norder"),
-            F.col("_pr.Npix").alias("Npix"),
-        )
-        .join(leaf_tbl, ["Norder", "Npix"])  # leaves partition the
-        # observed sky, so each row survives for exactly one probe
-        .withColumn("Dir", _dir_of(F.col("Npix")))
+    # write (replaces reference EP3 stages 3-4).  Assignment is the
+    # probe join append and rebalance use (see _place) over the LEAF
+    # table, which is orders of magnitude smaller than the kpix→leaf
+    # map (36 vs 47k at bench scale); the leaves partition the observed
+    # sky, so each row hits exactly one.  Spread the write-path scan
+    # too: the map side (Arrow pixelization + probe join) otherwise
+    # runs in however few tasks the input arrived as — a no-op at
+    # scale, a 10× parallelism win for few-file local inputs.  Rows are
+    # pixelized ONCE, at the index order: the probes shift that pixel
+    # and the spatial index below reuses it.
+    assigned = _place(
+        spread_partitions(df).withColumn("_p19", ang2pix_udf(SPATIAL_INDEX_ORDER, ra, dec)),
+        _leaf_cells(pm.hips),
     )
     indexed = _with_spatial_index(assigned, ra_col, dec_col, p19_col="_p19")
     fs = fs or LOCAL_FS
@@ -582,15 +579,8 @@ class Catalog:
                 on_disk = {f.rsplit("/catalog/", 1)[-1] for f in full.inputFiles()}
                 rel = F.substring_index(F.col("_metadata.file_path"), "/catalog/", -1)
                 df = full.filter(rel.isin(listed))
-            else:
-                # a few leaves: the named files themselves, at most 32 per
-                # read (Spark resolves more paths, its default
-                # spark.sql.sources.parallelPartitionDiscovery.threshold,
-                # in a listing job with a task per path)
-                df = reduce(DataFrame.union, [
-                    reader.parquet(*[f"{root}/{p}" for p in listed[i:i + _READ_CHUNK]])
-                    for i in range(0, len(listed), _READ_CHUNK)
-                ])
+            else:  # a few leaves: the named files themselves
+                df = self._read(listed)
                 on_disk = set(listed)
         except AnalysisException as e:
             missing = missing_from({p for p in listed if self._fs.exists(f"{root}/{p}")})
@@ -601,6 +591,29 @@ class Catalog:
         if missing:
             raise self._missing(missing)
         return df
+
+    def _read(self, rels: list[str], file_col: str | None = None) -> DataFrame:
+        """The named files (paths under the catalog root) with the stored
+        schema, and with each row's file path under the root as
+        ``file_col`` when given.  At most 32 files per read, the reads
+        unioned: Spark resolves more paths (its default
+        spark.sql.sources.parallelPartitionDiscovery.threshold) in a
+        listing job with a task per path."""
+        root = f"{self.path}/catalog"
+        reader = self.spark.read.schema(self._schema()).option("basePath", root)
+
+        def read(chunk: list[str]) -> DataFrame:
+            df = reader.parquet(*[f"{root}/{p}" for p in chunk])
+            if file_col is None:
+                return df
+            # the metadata column does not survive the union
+            return df.withColumn(
+                file_col, F.substring_index(F.col("_metadata.file_path"), "/catalog/", -1)
+            )
+
+        return reduce(DataFrame.union, [
+            read(rels[i:i + _READ_CHUNK]) for i in range(0, len(rels), _READ_CHUNK)
+        ])
 
     def _missing(self, leaves: list[tuple[int, int]]) -> FileNotFoundError:
         """The error for a read whose listed files are gone: replaced by
@@ -749,6 +762,11 @@ class Catalog:
         time: the version check refuses a commit whose base has moved,
         but two writes of the same leaf that overlap would list each
         other's files."""
+        return self._finish(leaves, self._write(leaves, data), **changes)
+
+    def _write(self, leaves, data: DataFrame | None) -> dict[tuple[int, int], tuple[str, ...]]:
+        """Steps 1-3 of :meth:`_commit`: the file map of the next
+        version, whose files in ``leaves`` are the ones ``data`` wrote."""
         base = self.meta
         leaves = sorted(set(leaves))
         self._sweep(base, leaves)
@@ -765,12 +783,33 @@ class Catalog:
                 files[leaf] = new
             else:
                 files.pop(leaf, None)
+        return files
+
+    def _finish(self, leaves, files, **changes) -> "Catalog":
+        """Steps 4-5 of :meth:`_commit`."""
         cat = Catalog(
-            self.spark, self.path, self._publish(replace(base, files=files, **changes)),
+            self.spark, self.path, self._publish(replace(self.meta, files=files, **changes)),
             fs=self._fs,
         )
-        cat._drop_superseded(leaves)
+        cat._drop_superseded(sorted(set(leaves)))
         return cat
+
+    def _file_rows(self, leaves, files) -> dict[tuple[int, int], tuple[int, int]]:
+        """Rows per leaf in this version's files and in ``files`` (a
+        written, not yet published file map that names files in every
+        leaf of ``leaves``), as ``{leaf: (old, new)}``: one Spark action
+        that reads no data column (Parquet row counts per file)."""
+        side = {
+            f"{_leaf_rel(*leaf)}/{name}": (leaf, new)
+            for leaf in leaves
+            for new, names in enumerate((self.meta.files.get(leaf, ()), files[leaf]))
+            for name in names
+        }
+        out = {leaf: [0, 0] for leaf in leaves}
+        for r in self._read(sorted(side), file_col="_f").groupBy("_f").count().collect():
+            leaf, new = side[r["_f"]]
+            out[leaf][new] += r["count"]
+        return {leaf: tuple(n) for leaf, n in out.items()}
 
     # -- margins ------------------------------------------------------------
 
@@ -815,17 +854,31 @@ class Catalog:
         """Incremental ingest (extension — the reference can only
         re-import from scratch): append rows to an existing catalog.
 
-        - new rows are pixelized once, at the spatial-index order, and
-          assigned to the EXISTING leaves via the same one-pass
-          multi-order probe the cross-match planner uses (one broadcast
-          join, no histogram re-scan);
-        - rows outside the original sky coverage open new leaves at
-          ``order_k`` (recorded in the metadata);
+        The plan is three Spark actions: a plan-sized collect, the write
+        and one recount.
+
+        - **one probe join.**  New rows are pixelized once, at the
+          spatial-index order, and placed by one explode and one
+          broadcast join (see :func:`_place`) on a plan table that
+          covers the whole sphere: the leaves plus the nested-MOC
+          complement of their coverage (:func:`assignment_cells`).  A
+          row inside a leaf joins it; a row outside the coverage joins
+          a complement cell, which names the order of the new leaf it
+          opens: ``order_k``, or, where its order-``order_k`` pixel
+          already holds finer leaves (after a :meth:`rebalance`), the
+          finest order of those, so no new leaf overlaps an old one.
+          The placed batch is cached, and one plan-sized collect of its
+          per-cell counts gives the touched cells;
         - only the touched cells are re-ranked (their existing rows are
           read from their listed files, merged, and re-indexed so
           ``_ID`` stays the global rank-within-pixel; their pixel comes
           out of the stored ``_ID``) and rewritten whole, one new file
           per cell — untouched cells are never read or written;
+        - **one recount.**  After the write and before the publish, one
+          count of the touched leaves' old and new files (Parquet row
+          counts, no data column read) gives ``n_sources`` (old total,
+          minus the old rows of those leaves, plus their new rows) and
+          the new per-leaf counts the over-threshold warning reads;
         - the commit withdraws a margin export (see
           :meth:`export_margins`).
 
@@ -833,7 +886,7 @@ class Catalog:
         warns (run :meth:`rebalance`), matching the density contract.
 
         Contract: the incoming batch's id column must be unique within
-        the batch (the covered/uncovered split anti-joins on it).
+        the batch.
 
         Commit and crash safety (see :meth:`_commit`): the append plans
         from the committed version, even through a stale handle, writes
@@ -859,12 +912,11 @@ class Catalog:
         last_batch_id`` is a no-op.  A batch whose commit was lost runs
         again from the committed version and lands once.  Rows of the
         touched cells whose id the batch carries are replaced, not
-        duplicated, so re-sending rows under a new batch id converges
-        too.
+        duplicated (a broadcast anti-join on the batch's ids), so
+        re-sending rows under a new batch id converges too.
         """
         head = self._head()
         meta = head.meta
-        spark = self.spark
         # Fail fast on schema drift: the touched-cell rewrite writes
         # (existing ∪ batch) projected to the BATCH's columns, so a
         # batch missing a column would silently drop that column from
@@ -888,135 +940,52 @@ class Catalog:
             and batch_id <= meta.last_batch_id
         ):
             return head
-        order_k = meta.order_k
-        ra, dec = F.col(meta.ra_kw), F.col(meta.dec_kw)
 
-        orders = sorted(meta.hips)
-        # probe at the FINEST coverage order: rebalance can leave leaves
-        # finer than order_k, and _order_probes only shifts DOWN (a
-        # negative shift would be masked mod 64 into garbage and the
-        # fine leaves would silently never match)
-        probe_order = max([order_k, *orders])
-        leaf_tbl = _leaf_table(spark, meta.hips)
-        # pixelize each new row ONCE, at the index order: the probe
-        # pixel is a hierarchy shift of it and the spatial index below
-        # reuses it.  Cached because the hit and missed branches both
-        # read it, so the Arrow pass runs once per row, not per branch.
-        withk = (
-            df.withColumn("_p19", ang2pix_udf(SPATIAL_INDEX_ORDER, ra, dec))
-            .withColumn(
-                "_kpix",
-                F.shiftright(F.col("_p19"), 2 * (SPATIAL_INDEX_ORDER - probe_order)),
-            )
-            .cache()
-        )
-        assigned = None
+        p19 = ang2pix_udf(SPATIAL_INDEX_ORDER, F.col(meta.ra_kw), F.col(meta.dec_kw))
+        # a row without coordinates has no pixel and would join no cell
+        p19 = F.coalesce(p19, F.raise_error(F.lit(
+            f"append: a row has NULL {meta.ra_kw}/{meta.dec_kw}; spatial "
+            "ingest requires coordinates"
+        ))).cast(LongType())
+        assigned = _place(
+            df.withColumn("_p19", p19), assignment_cells(meta.hips, meta.order_k)
+        ).cache()
         try:
-            cand = withk.withColumn(
-                "_pr", F.explode(_order_probes(F.col("_kpix"), orders, probe_order))
-            ).select(
-                *df.columns, "_p19", "_kpix", F.col("_pr.Norder").alias("Norder"),
-                F.col("_pr.Npix").alias("Npix"),
-            )
-            hit = cand.join(leaf_tbl, ["Norder", "Npix"])  # leaves partition the
-            # covered sky, so each row matches at most one leaf
-            # New leaves for rows outside the coverage open at order_k —
-            # EXCEPT where the row's order_k pixel already contains finer
-            # coverage leaves (possible after a rebalance): an order_k leaf
-            # there would spatially overlap them, and a later rebalance's
-            # rewrite of its children would collide with those cells.
-            # Such rows open their leaf at the finest descendant order
-            # instead, which is disjoint from every existing leaf by
-            # construction (no coverage exists below that order there).
-            req: dict[int, int] = {}
-            for o2 in orders:
-                if o2 <= order_k:
-                    continue
-                for q in meta.hips[o2]:
-                    anc = q >> (2 * (o2 - order_k))
-                    req[anc] = max(req.get(anc, order_k), o2)
-            kp_at = lambda o: F.shiftright(  # noqa: E731
-                F.col("_kpix"), 2 * (probe_order - o)
-            )
-            new_order = F.lit(order_k).cast("int")
-            new_pix = kp_at(order_k)
-            if req:
-                req_tbl = F.broadcast(
-                    plan_table(
-                        spark,
-                        {"_anc": list(req.keys()), "_req": list(req.values())},
-                        "_anc long, _req int",
-                    )
-                )
-            missed = withk.join(
-                hit.select(meta.id_kw), meta.id_kw, "left_anti"
-            )
-            if req:
-                missed = missed.join(
-                    req_tbl, kp_at(order_k) == F.col("_anc"), "left"
-                )
-                new_order = F.coalesce(F.col("_req"), F.lit(order_k)).cast("int")
-                # variable-shift: build a CASE over the few required orders
-                new_pix = kp_at(order_k)
-                for o2 in sorted({v for v in req.values()}):
-                    new_pix = F.when(F.col("_req") == o2, kp_at(o2)).otherwise(new_pix)
-            missed = missed.select(
-                *df.columns, "_p19", "_kpix",
-                new_order.alias("Norder"),
-                new_pix.alias("Npix"),
-            )
-            assigned = (
-                hit.unionByName(missed)
-                .drop("_kpix")
-                .withColumn("Dir", _dir_of(F.col("Npix")))
-            ).cache()
-
-            # ONE plan-sized collect (cell → count) yields the touched-cell
-            # list and the batch row count (new leaves are the touched
-            # cells the metadata does not list)
-            cell_counts = assigned.groupBy("Norder", "Npix").count().collect()
-            # the collect materialized ``assigned``: keep one cached copy
-            # of the batch, not two
-            withk.unpersist()
-            touched = [(int(r["Norder"]), int(r["Npix"])) for r in cell_counts]
-            n_new = int(sum(r["count"] for r in cell_counts))
-
+            # ONE plan-sized collect (cell → count) yields the touched
+            # cells (new leaves are those the metadata does not list)
+            touched = [
+                (int(r["Norder"]), int(r["Npix"]))
+                for r in assigned.groupBy("Norder", "Npix").count().collect()
+            ]
             # merge touched cells' existing rows with the new ones: read
             # exactly the listed files of the touched leaves (a new leaf
-            # has none), never list the catalog
-            existing = head._scan(touched).select(
-                *df.columns, "Norder", "Npix", "Dir",
-                pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER).alias("_p19"),
+            # has none), never list the catalog.  Existing rows that
+            # share an id with the batch are replaced.  The ids come from
+            # the batch, not the cache: the anti-join is pushed into each
+            # ≤32-file read of the union, and the broadcasts of a cached
+            # relation were not reused across them (one job per read).
+            existing = (
+                head._scan(touched)
+                .select(
+                    *df.columns, "Norder", "Npix", "Dir",
+                    pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER).alias("_p19"),
+                )
+                .join(F.broadcast(df.select(meta.id_kw)), meta.id_kw, "left_anti")
             )
-            # Row-level idempotence: existing rows that share an id with
-            # the batch are replaced (a broadcast anti-join — the batch id
-            # set is small relative to the catalog).  Under the
-            # globally-unique-id contract this is a no-op; rows re-sent
-            # under a new batch id converge instead of duplicating.
-            batch_ids = F.broadcast(df.select(meta.id_kw).distinct())
-            n_replaced = existing.join(batch_ids, meta.id_kw, "left_semi").count()
-            existing = existing.join(batch_ids, meta.id_kw, "left_anti")
             merged = existing.unionByName(assigned.select(*existing.columns))
             indexed = _with_spatial_index(merged, meta.ra_kw, meta.dec_kw, p19_col="_p19")
-            cat = head._commit(
-                touched,
-                indexed,
-                n_sources=meta.n_sources + n_new - n_replaced,
-                last_batch_id=batch_id if batch_id is not None else meta.last_batch_id,
-                margins_exported=False,
-            )
+            files = head._write(touched, indexed)
         finally:
-            withk.unpersist()
-            if assigned is not None:
-                assigned.unpersist()
-
-        over = (
-            cat._scan(touched)
-            .groupBy("Norder", "Npix")
-            .count()
-            .filter(F.col("count") > meta.pix_threshold)
-            .count()
+            assigned.unpersist()
+        rows = head._file_rows(touched, files)
+        cat = head._finish(
+            touched,
+            files,
+            n_sources=meta.n_sources + sum(new - old for old, new in rows.values()),
+            last_batch_id=batch_id if batch_id is not None else meta.last_batch_id,
+            margins_exported=False,
         )
+        over = sum(1 for _, new in rows.values() if new > meta.pix_threshold)
         if over:
             import warnings
 
@@ -1135,12 +1104,12 @@ class Catalog:
         rows = (
             head._scan(splits)
             .withColumn("_p19", pixel_of_index(F.col("_ID"), SPATIAL_INDEX_ORDER))
-            .withColumn("_kpix", pixel_of_index(F.col("_ID"), max_order))
             .drop(*PARTITION_COLS, "_ID")
         )
-        data_cols = [c for c in rows.columns if c not in ("_p19", "_kpix")]
         hist = (
-            rows.select(F.col("_kpix").alias("kpix"))
+            rows.select(
+                F.shiftright("_p19", 2 * (SPATIAL_INDEX_ORDER - max_order)).alias("kpix")
+            )
             .groupBy("kpix")
             .count()
             .collect()
@@ -1158,24 +1127,9 @@ class Catalog:
                         stacklevel=2,
                     )
 
-        # leaf assignment: the same broadcast leaf-table multi-order
-        # probe ingest uses (one equi-join, each row survives exactly
-        # one probe)
-        orders = sorted(pm.hips)
-        leaf_tbl = _leaf_table(self.spark, pm.hips)
-        rewritten = (
-            rows.withColumn(
-                "_pr", F.explode(_order_probes(F.col("_kpix"), orders, max_order))
-            )
-            .select(
-                *data_cols,
-                "_p19",
-                F.col("_pr.Norder").alias("Norder"),
-                F.col("_pr.Npix").alias("Npix"),
-            )
-            .join(leaf_tbl, ["Norder", "Npix"])
-            .withColumn("Dir", _dir_of(F.col("Npix")))
-        )
+        # leaf assignment: the probe join ingest and append use; the
+        # planner's leaves partition the over cells' rows
+        rewritten = _place(rows, _leaf_cells(pm.hips))
         indexed = _with_spatial_index(
             rewritten, meta.ra_kw, meta.dec_kw, p19_col="_p19"
         )

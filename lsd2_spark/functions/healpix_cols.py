@@ -111,7 +111,11 @@ def _ang2pix_kernel(order: pd.Series, ra: pd.Series, dec: pd.Series) -> pd.Serie
         return pd.Series([], dtype="Int64")
     k = int(order.iloc[0])  # constant within a call (passed as lit)
     valid = ra.notna() & dec.notna()
-    out = pd.Series([pd.NA] * len(ra), dtype="Int64")
+    if valid.all():  # no NULL coordinate: the pixels as they come
+        return pd.Series(
+            hpx.ang2pix(k, ra.to_numpy(dtype="float64"), dec.to_numpy(dtype="float64"))
+        )
+    out = pd.Series(pd.NA, index=range(len(ra)), dtype="Int64")
     if valid.any():
         out[valid] = hpx.ang2pix(
             k, ra[valid].to_numpy(dtype="float64"), dec[valid].to_numpy(dtype="float64")

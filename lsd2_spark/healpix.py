@@ -399,9 +399,15 @@ def neighbors(order: int, pix, eps: float = 0.05) -> list[np.ndarray]:
     pole/face-corner pixels have 7).  Reference analogue:
     healpy.get_all_neighbours used at hipscat/margin_utils.py:174-199.
     """
-    pix = np.asarray(pix, dtype=np.int64).ravel()
+    counts, flat = _neighbor_runs(order, np.asarray(pix, dtype=np.int64).ravel(), eps)
+    return np.split(flat, np.cumsum(counts)[:-1]) if len(counts) else []
+
+
+def _neighbor_runs(order: int, pix: np.ndarray, eps: float = 0.05) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`neighbors` as one flat array of every pixel's neighbours,
+    in input order, and the number each pixel has."""
     if pix.size == 0:
-        return []
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     cra, cdec = pix2ang(order, pix)
     c = _radec_to_vec(cra, cdec)  # (N, 3)
 
@@ -433,18 +439,14 @@ def neighbors(order: int, pix, eps: float = 0.05) -> list[np.ndarray]:
     keep = np.ones(s.shape, dtype=bool)
     keep[:, 1:] = s[:, 1:] != s[:, :-1]
     keep &= s != pix[:, None]
-    counts = keep.sum(axis=1)
-    flat = s[keep]
-    return np.split(flat, np.cumsum(counts)[:-1]) if len(pix) else []
+    return keep.sum(axis=1), s[keep]
 
 
 def neighbors_flat(order: int, pix) -> tuple[np.ndarray, np.ndarray]:
     """Flattened (src_pix, neighbor_pix) pairs for a batch of pixels."""
-    nb = neighbors(order, pix)
     pix = np.asarray(pix, dtype=np.int64).ravel()
-    src = np.repeat(pix, [len(a) for a in nb])
-    dst = np.concatenate(nb) if nb else np.empty(0, dtype=np.int64)
-    return src, dst
+    counts, dst = _neighbor_runs(order, pix)
+    return np.repeat(pix, counts), dst
 
 
 # ---------------------------------------------------------------------------

@@ -54,8 +54,9 @@ def margin_ring_order(margin_deg: float) -> int:
     return ka
 
 
-def _border_children(pix: int, depth: int) -> np.ndarray:
-    """Order-(o+depth) children of ``pix`` on the pixel's border."""
+def _border_children(pix: np.ndarray, depth: int) -> np.ndarray:
+    """Order-(o+depth) children on the border of each pixel of ``pix``:
+    one row per pixel."""
     n = 1 << depth
     ix = np.arange(n)
     edge = np.unique(
@@ -72,7 +73,64 @@ def _border_children(pix: int, depth: int) -> np.ndarray:
     local = (hpx._spread_bits(edge[:, 0]) | (hpx._spread_bits(edge[:, 1]) << np.uint64(1))).astype(
         np.int64
     )
-    return (np.int64(pix) << np.int64(2 * depth)) + local
+    return (np.asarray(pix, dtype=np.int64)[:, None] << np.int64(2 * depth)) + local
+
+
+def _samples_within(
+    cra: np.ndarray,
+    cdec: np.ndarray,
+    owner: np.ndarray,
+    reach: np.ndarray,
+    bra: np.ndarray,
+    bdec: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The boundary samples within ``reach[e]`` degrees of ring centre
+    ``e``, among the samples of its owner ``owner[e]`` (row
+    ``owner[e]`` of ``bra``/``bdec``): ``(entry, sample)`` index pairs,
+    ``sample`` indexing the flattened sample arrays, grouped by entry in
+    ascending order (within an entry, in declination order).
+
+    No entry-by-sample distance matrix: each owner's samples are sorted
+    by declination, and a sample more than ``reach`` away in declination
+    is more than ``reach`` away on the sphere, so two binary searches
+    bound each entry's candidates to one declination band (widened by
+    ``_BAND_SLACK`` against rounding).  The band's pairs are decided by
+    the dot product of their unit vectors against ``cos(reach)``, and
+    the few within ``_COS_SLACK`` of it by the haversine, so the result
+    is the haversine test's on every pair."""
+    n_own, n_s = bdec.shape
+    order = np.argsort(bdec, axis=1, kind="stable")
+    # one ascending key over all owners: owner ``i``'s declinations
+    # (shifted into [0, 180]) sit in [i * 360, i * 360 + 180]
+    key = (np.arange(n_own)[:, None] * 360.0 + np.take_along_axis(bdec, order, 1) + 90.0).ravel()
+    centre = owner * 360.0 + cdec + 90.0
+    lo = np.searchsorted(key, centre - reach - _BAND_SLACK, "left")
+    hi = np.searchsorted(key, centre + reach + _BAND_SLACK, "right")
+    entry = np.repeat(np.arange(len(cra)), hi - lo)
+    pos = np.arange(len(entry)) - np.repeat(np.cumsum(hi - lo) - (hi - lo), hi - lo) + lo[entry]
+    # a band wider than 180 deg would reach into the next owner's keys
+    inside = pos // n_s == owner[entry]
+    entry, sample = entry[inside], owner[entry[inside]] * n_s + order.ravel()[pos[inside]]
+    # three products per pair instead of the haversine's trigonometry
+    bv = hpx._radec_to_vec(bra.ravel(), bdec.ravel())
+    cv = hpx._radec_to_vec(cra, cdec)
+    dot = np.einsum("ij,ij->i", cv[entry], bv[sample])
+    cos_reach = np.cos(np.radians(reach))[entry]
+    sure = dot > cos_reach + _COS_SLACK
+    open_ = ~sure & (dot > cos_reach - _COS_SLACK)
+    e, s = entry[open_], sample[open_]
+    sure[open_] = hpx.gc_dist_deg(cra[e], cdec[e], bra.ravel()[s], bdec.ravel()[s]) <= reach[e]
+    return entry[sure], sample[sure]
+
+
+# declination slack of _samples_within's band, in degrees: far above the
+# rounding of its keys (owner index * 360 + dec: under 1e-7 deg below a
+# million owners per order) and far below a sample spacing
+_BAND_SLACK = 1e-6
+# cosine slack of its dot-product test: far above the rounding of a dot
+# product of unit vectors, so a pair it decides, the haversine decides the
+# same way
+_COS_SLACK = 1e-9
 
 
 _RING_DDL = (
@@ -108,19 +166,14 @@ def margin_candidate_entries(
             under_covered = True
         # batch all border children of every partition at this order
         # into one vectorized neighbors() call
-        borders = [_border_children(p, kf - o) for p in pixels]
-        flat = np.concatenate(borders) if borders else np.empty(0, dtype=np.int64)
-        owners = np.repeat(
-            np.array(pixels, dtype=np.int64), [len(b) for b in borders]
-        )
-        nbs = hpx.neighbors(kf, flat)
-        ring_pix = np.concatenate(nbs) if nbs else np.empty(0, dtype=np.int64)
-        ring_owner = np.repeat(owners, [len(a) for a in nbs])
+        child, ring_pix = hpx.neighbors_flat(kf, _border_children(pixels, kf - o).ravel())
+        ring_owner = child >> (2 * (kf - o))
         keep = (ring_pix >> (2 * (kf - o))) != ring_owner
-        pairs = np.unique(np.stack([ring_pix[keep], ring_owner[keep]], 1), axis=0)
+        # (owner, ring pixel) pairs, sorted by owner then pixel
+        pairs = np.unique(np.stack([ring_owner[keep], ring_pix[keep]], 1), axis=0)
         if len(pairs) == 0:
             continue
-        ring_pix, ring_owner = pairs[:, 0], pairs[:, 1]
+        ring_owner, ring_pix = pairs[:, 0], pairs[:, 1]
 
         # dense owner boundary (samples every ~margin/2 of arc; gap and
         # eps are MEASURED, so tightness — never correctness — depends
@@ -131,26 +184,21 @@ def margin_candidate_entries(
         gaps = hpx.gc_dist_deg(bra, bdec, np.roll(bra, -1, 1), np.roll(bdec, -1, 1))
         gap_max = gaps.max(axis=1)
         cra, cdec = hpx.pix2ang(kf, ring_pix)
-        window = margin_deg + hpx.max_pixrad(kf)
+        owner = np.searchsorted(uowners, ring_owner)
+        reach = margin_deg + hpx.max_pixrad(kf) + gap_max[owner]
+        entry, sample = _samples_within(cra, cdec, owner, reach, bra, bdec)
 
         acc = parts.setdefault(
             kf,
             {k: [] for k in ("ring_pix", "Norder", "Npix", "_n", "_b_ra", "_b_dec", "_b_eps")},
         )
-        for i, ow in enumerate(uowners.tolist()):
-            sel = np.nonzero(ring_owner == ow)[0]
-            d = hpx.gc_dist_deg(
-                cra[sel][:, None], cdec[sel][:, None], bra[i][None, :], bdec[i][None, :]
-            )
-            # row k of `local` marks the samples ring entry sel[k] keeps
-            local = d <= window + gap_max[i]
-            acc["ring_pix"].append(ring_pix[sel])
-            acc["Norder"].append(np.full(len(sel), o))
-            acc["Npix"].append(np.full(len(sel), ow))
-            acc["_n"].append(local.sum(axis=1))
-            acc["_b_ra"].append(np.broadcast_to(bra[i], local.shape)[local])
-            acc["_b_dec"].append(np.broadcast_to(bdec[i], local.shape)[local])
-            acc["_b_eps"].append(np.full(len(sel), gap_max[i] / 2.0))
+        acc["ring_pix"].append(ring_pix)
+        acc["Norder"].append(np.full(len(ring_pix), o))
+        acc["Npix"].append(ring_owner)
+        acc["_n"].append(np.bincount(entry, minlength=len(ring_pix)))
+        acc["_b_ra"].append(bra.ravel()[sample])
+        acc["_b_dec"].append(bdec.ravel()[sample])
+        acc["_b_eps"].append(gap_max[owner] / 2.0)
     if under_covered:
         warnings.warn(
             "margin_threshold exceeds the pixel size of the deepest "

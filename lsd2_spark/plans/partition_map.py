@@ -272,6 +272,53 @@ def refine_hot_cells(
     return refined
 
 
+def assignment_cells(
+    hips: dict[int, list[int]], order_k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Cells that partition the whole sphere, each with the order of
+    the leaf a row inside it belongs to: ``(order, pix, target_order)``
+    arrays.
+
+    The cells are the leaves of ``hips`` (target: the leaf's own order)
+    plus their complement as a nested MOC: the largest cells holding no
+    leaf, found by descending from the 12 base pixels only into cells
+    that are strict ancestors of a leaf.  A row in a complement cell
+    opens a new leaf at ``order_k`` when the cell is at ``order_k`` or
+    coarser (no leaf lies inside that row's order-``order_k`` pixel);
+    a complement cell finer than ``order_k`` lies in an order-``order_k``
+    pixel that holds finer leaves, and its rows open their leaf at the
+    finest order of those leaves, so the new leaf is disjoint from every
+    existing one.  The target pixel of a row is its pixel at the target
+    order, which lies inside the cell because the target order is never
+    coarser than the cell."""
+    leaves = {o: np.asarray(ps, dtype=np.int64) for o, ps in hips.items()}
+    empty = np.empty(0, dtype=np.int64)
+    top = max([order_k, *leaves])
+    # the finest order of the leaves inside each order-k pixel that holds
+    # leaves finer than order_k
+    finest: dict[int, int] = {}
+    for o, ps in sorted(leaves.items()):
+        if o > order_k:
+            finest.update(dict.fromkeys((ps >> (2 * (o - order_k))).tolist(), o))
+    cells = []
+    frontier = np.arange(12, dtype=np.int64)
+    for o in range(top + 1):
+        leaf = np.isin(frontier, leaves.get(o, empty))
+        inner = ~leaf & np.isin(frontier, np.concatenate(
+            [empty, *(p >> (2 * (o2 - o)) for o2, p in leaves.items() if o2 > o)]
+        ))
+        comp = frontier[~leaf & ~inner]
+        target = ([order_k] * len(comp) if o <= order_k
+                  else [finest[a] for a in (comp >> (2 * (o - order_k))).tolist()])
+        cells += [(o, frontier[leaf], o), (o, comp, target)]
+        frontier = ((frontier[inner] << 2)[:, None] + np.arange(4)).ravel()
+    return (
+        np.concatenate([np.full(len(p), o) for o, p, _ in cells]).astype(np.int32),
+        np.concatenate([p for _, p, _ in cells]),
+        np.concatenate([np.broadcast_to(t, len(p)) for _, p, t in cells]).astype(np.int32),
+    )
+
+
 def cell_assignment_tables(cells: list[tuple[int, int]]) -> dict[int, np.ndarray]:
     """Group join cells by order → sorted pixel arrays, for per-order
     row assignment (row joins on ang2pix at that order)."""

@@ -149,3 +149,35 @@ def test_ang2pix_native_matches_numpy_including_negative_ra(spark):
         .to_numpy()
     )
     assert (got == expected).all()
+
+
+def test_ang2pix_udf_fast_path_and_null_propagation(spark):
+    """The Arrow kernel returns ``hpx.ang2pix``'s pixels as they come
+    when a batch has no NULL coordinate, and NULL for a NULL coordinate
+    otherwise — both called directly and through Spark."""
+    from pyspark.sql import functions as F
+
+    from lsd2_spark.functions.healpix_cols import _ang2pix_kernel, ang2pix_udf
+
+    ra, dec = _random_points(2_000)
+    kernel = _ang2pix_kernel.func
+    order = pd.Series(np.full(len(ra), 12))
+    fast = kernel(order, pd.Series(ra), pd.Series(dec))
+    assert fast.dtype == np.int64
+    assert (fast.to_numpy() == hpx.ang2pix(12, ra, dec)).all()
+    holed = pd.Series(ra).where(np.arange(len(ra)) % 7 != 3)
+    masked = kernel(order, holed, pd.Series(dec))
+    assert masked.isna().to_numpy().tolist() == holed.isna().to_numpy().tolist()
+    keep = holed.notna().to_numpy()
+    assert (masked[keep].to_numpy(dtype=np.int64) == hpx.ang2pix(12, ra[keep], dec[keep])).all()
+
+    pdf = pd.DataFrame({"i": np.arange(6), "ra": ra[:6], "dec": dec[:6]})
+    df = spark.createDataFrame(pdf).selectExpr(
+        "i", "CASE WHEN i = 4 THEN NULL ELSE ra END AS ra", "dec")
+    got = (
+        df.select("i", ang2pix_udf(12, F.col("ra"), F.col("dec")).alias("pix"))
+        .toPandas().sort_values("i")["pix"].tolist()
+    )
+    want = hpx.ang2pix(12, ra[:6], dec[:6]).tolist()
+    assert got[4] is None or pd.isna(got[4])
+    assert [g for i, g in enumerate(got) if i != 4] == [w for i, w in enumerate(want) if i != 4]

@@ -214,3 +214,42 @@ def test_metadata_without_the_flag_reads_not_exported(spark, cat):
     legacy = Catalog.load(spark, cat.path, NAME)
     assert legacy.margin_df() is None
     assert legacy.fsck()["unvouched_margins"]
+
+
+@pytest.mark.parametrize("margin", [0.1, 0.5])
+def test_margin_plan_keeps_the_samples_of_the_dense_distance_test(margin):
+    """The ring table's local boundary samples are exactly those a dense
+    ring-entry-by-sample distance test keeps (the superset argument
+    rests on that test), on a plan with leaves from order 1 to 8."""
+    import warnings
+
+    import lsd2_spark.healpix as hpx
+    from lsd2_spark.operators.margins import margin_candidate_entries, margin_ring_order
+
+    hips = {1: [3, 40], 3: [100, 101, 700], 5: [11_267, 9000], 8: [9001 * 64 + 5, 40_000]}
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # the order-8 leaves are near the margin scale
+        got = margin_candidate_entries(hips, margin)
+    ka = margin_ring_order(margin)
+    for o, pixels in hips.items():
+        kf = max(o + 1, ka)
+        tbl = got[kf]
+        mine = np.asarray(tbl["Norder"]) == o
+        owners = np.asarray(tbl["Npix"])[mine]
+        rings = np.asarray(tbl["ring_pix"])[mine]
+        samples_ra = tbl["_b_ra"].to_pylist()
+        samples_dec = tbl["_b_dec"].to_pylist()
+        rows = np.nonzero(mine)[0]
+        n_pe = int(np.clip(np.ceil(4.0 * hpx.max_pixrad(o) / margin), 4, 4096))
+        assert set(owners.tolist()) == set(pixels)
+        for ow in pixels:
+            bra, bdec = hpx.boundary_samples(o, [ow], n_per_edge=n_pe)
+            gap = hpx.gc_dist_deg(bra, bdec, np.roll(bra, -1, 1), np.roll(bdec, -1, 1)).max()
+            sel = owners == ow
+            cra, cdec = hpx.pix2ang(kf, rings[sel])
+            d = hpx.gc_dist_deg(cra[:, None], cdec[:, None], bra, bdec)
+            keep = d <= margin + hpx.max_pixrad(kf) + gap
+            for row, k in zip(rows[sel], keep):
+                want = sorted(zip(bra[0][k], bdec[0][k]))
+                assert sorted(zip(samples_ra[row], samples_dec[row])) == want
+            assert np.allclose(np.asarray(tbl["_b_eps"])[rows[sel]], gap / 2.0)

@@ -20,10 +20,18 @@ and, over fresh handles, the cost of ``Catalog.load`` and of the
 handle's first ``df()`` (the relation every later ``df()``, cross-match
 and view projects; Spark resolves its files when it is built).
 
-Each catalog then takes a wide append: a uniform all-sky batch that
-touches most of its leaves, appended to a fresh copy of the catalog
-``APPEND_REPS`` times (median CPU, wall and jobs per append, plus the
-number of existing leaves the batch touches).
+Each catalog then takes two appends, each to a fresh copy of the
+catalog ``APPEND_REPS`` times after one warm-up (median CPU, wall and
+jobs per append, plus the number of existing leaves the batch
+touches): a wide one, a uniform all-sky batch that touches most of its
+leaves, and a narrow one, ``NARROW_ROWS`` rows in one field of
+``NARROW_RADIUS_DEG`` (one night's field, as the benchmark's ingest
+workload appends).
+
+The margin export's driver-side planning
+(``margins.margin_candidate_entries`` over the catalog's leaves) is
+timed too: median CPU of this Python process over ``MARGIN_REPS``
+runs, with the ring entries and boundary samples it broadcasts.
 
 Last, freshly loaded handles of each catalog and of a partner catalog
 (``PARTNER_ROWS`` rows near survey rows, ingested at the same
@@ -69,6 +77,11 @@ SEED = 1
 THRESHOLDS = {"~150 leaves": 1400, "~2k leaves": 94}
 APPEND_ROWS = 20_000
 APPEND_REPS = 3
+NARROW_ROWS = 1_000
+NARROW_CENTRE = (200.0, 30.0)
+NARROW_RADIUS_DEG = 1.0
+MARGIN_REPS = 3
+MARGIN_DEG = 0.1
 PARTNER_ROWS = 40_000
 XMATCH_K = 2
 XMATCH_DTHRESH_DEG = 0.01
@@ -200,6 +213,44 @@ def measure_append(spark, meter, name, path, batch, warmup: int = 1) -> dict:
     return summary(cpu, wall, jobs)
 
 
+def narrow_field(rng: np.random.Generator, first_id: int):
+    """``NARROW_ROWS`` rows uniform in a disc of ``NARROW_RADIUS_DEG``
+    around ``NARROW_CENTRE``, with ids from ``first_id``."""
+    import pandas as pd
+
+    ra0, dec0 = NARROW_CENTRE
+    r = NARROW_RADIUS_DEG * np.sqrt(rng.uniform(0, 1, NARROW_ROWS))
+    t = rng.uniform(0, 2 * np.pi, NARROW_ROWS)
+    dec = dec0 + r * np.sin(t)
+    return pd.DataFrame({
+        "sid": np.arange(first_id, first_id + NARROW_ROWS, dtype=np.int64),
+        "ra": (ra0 + r * np.cos(t) / np.cos(np.radians(dec))) % 360.0,
+        "dec": dec,
+        "mag": rng.uniform(10, 22, NARROW_ROWS),
+    })
+
+
+def measure_margin_plan(hips: dict) -> dict:
+    """CPU of ``margin_candidate_entries`` in this process, and the
+    size of the table it plans."""
+    import warnings
+
+    from lsd2_spark.operators.margins import margin_candidate_entries
+
+    cpu = []
+    for _ in range(MARGIN_REPS):
+        c0 = time.process_time()
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            entries = margin_candidate_entries(hips, MARGIN_DEG)
+        cpu.append(time.process_time() - c0)
+    return {
+        "cpu_ms_p50": round(1e3 * statistics.median(cpu), 1),
+        "entries": sum(len(t["ring_pix"]) for t in entries.values()),
+        "samples": sum(len(t["_b_ra"].values) for t in entries.values()),
+    }
+
+
 def partner_of(rng: np.random.Generator, pdf):
     """``PARTNER_ROWS`` survey rows moved by under 0.005 deg, with new ids."""
     part = pdf.sample(n=PARTNER_ROWS, random_state=int(rng.integers(1 << 31))).copy()
@@ -251,6 +302,7 @@ def main() -> None:
     batch = pdf.iloc[ROWS // 3:ROWS // 3 + APPEND_ROWS].copy()  # uniform rows
     batch["sid"] += ROWS
     partner = partner_of(rng, pdf)
+    narrow = narrow_field(rng, 2 * ROWS)
     shutil.rmtree(args.work, ignore_errors=True)
 
     report = {}
@@ -286,6 +338,9 @@ def main() -> None:
             "root_scan": measure_cones(spark, meter, f"root-{threshold}", root_scan, qs),
             "append_leaves_touched": leaves_touched(cat.meta.hips, batch),
             "append": measure_append(spark, meter, f"append-{threshold}", path, batch),
+            "narrow_append_leaves_touched": leaves_touched(cat.meta.hips, narrow),
+            "narrow_append": measure_append(spark, meter, f"narrow-{threshold}", path, narrow),
+            "margin_plan": measure_margin_plan(cat.meta.hips),
         }
         partner_path = os.path.join(args.work, f"p{threshold}")
         partition_catalog(
@@ -299,7 +354,8 @@ def main() -> None:
         same = report[label]["cone_search"]["rows"] == report[label]["root_scan"]["rows"]
         print(label, json.dumps(report[label]), "same rows:", same, flush=True)
     print(json.dumps({"rows": ROWS, "queries": len(qs), "seed": SEED,
-                      "append_rows": APPEND_ROWS, "partner_rows": PARTNER_ROWS,
+                      "append_rows": APPEND_ROWS, "narrow_rows": NARROW_ROWS,
+                      "partner_rows": PARTNER_ROWS,
                       "load_end": os.getloadavg(),
                       "catalogs": report}))
     spark.stop()
