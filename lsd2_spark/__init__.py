@@ -5,6 +5,10 @@ machinery), plus large-scale training-data-pipeline operators
 (dedup, similarity search, text analysis, multimodal columns).
 """
 
+from lsd2_spark import pyworker
 from lsd2_spark.session import get_spark  # noqa: F401
+
+# inside a PySpark Python worker: stop re-reading pyspark.zip per task
+pyworker.install()
 
 __version__ = "0.1.0"

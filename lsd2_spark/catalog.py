@@ -101,6 +101,19 @@ def pixel_of_index(index: Column, order: int) -> Column:
     return F.shiftright(index, RANK_BITS + 2 * (SPATIAL_INDEX_ORDER - order))
 
 
+def leaf_predicate(leaves: dict[int, list[int]]) -> Column | None:
+    """``(Norder, Npix)`` IN ``leaves`` as a predicate on the partition
+    columns, which Spark applies to a scan's file index (static
+    partition pruning: no file of another leaf is opened, and no
+    listing runs).  None when ``leaves`` is empty.  Built as SQL text:
+    one call into the JVM, where ``Column.isin`` makes one per pixel."""
+    clauses = [
+        f"(Norder = {int(o)} AND Npix IN ({', '.join(str(int(p)) for p in ps)}))"
+        for o, ps in sorted(leaves.items()) if len(ps)
+    ]
+    return F.expr(" OR ".join(clauses)) if clauses else None
+
+
 def _leaf_cells(hips: dict[int, list[int]]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """The leaves of ``hips`` as :func:`_place` cells: each is its own
     target."""
@@ -1402,20 +1415,15 @@ class Catalog:
         Returns None when the cone misses the catalog entirely.  The
         leaves the cover hits are appended to ``_hit`` when given, so
         :meth:`cone_search` reads them without computing the cover twice."""
-        clauses = []
+        leaves = {}
         for order, pixels in self.meta.hips.items():
             cover = hpx.cone_cover(order, ra, dec, radius)
             hit = [int(p) for p in np.intersect1d(cover, np.array(pixels, dtype=np.int64))]
             if hit:
-                clauses.append((F.col("Norder") == order) & F.col("Npix").isin(hit))
+                leaves[order] = hit
                 if _hit is not None:
                     _hit.extend((order, p) for p in hit)
-        if not clauses:
-            return None
-        pred = clauses[0]
-        for c in clauses[1:]:
-            pred = pred | c
-        return pred
+        return leaf_predicate(leaves)
 
     def cone_search(
         self,

@@ -11,18 +11,35 @@ by (distance, right id) and truncated at min(k, candidates).
 Spark-first plan (replaces the reference's driver-built file-pair plan,
 catalog.py:181-191):
 
-1. **Join cells** (driver): the sky overlap of both catalogs, each cell
-   the finer of the two covering partitions (util.py:87-183 semantics),
-   clamped so no cell is narrower than the match radius — this keeps
-   boundary handling to a single neighbor ring.
+1. **Join cells within reach** (driver, planned once per call): the sky
+   overlap of both catalogs, each cell the finer of the two covering
+   partitions (util.py:87-183 semantics), clamped so no cell is
+   narrower than the match radius — this keeps boundary handling to a
+   single neighbor ring — and completed to the left catalog's whole
+   sky (``complete_left_cover``).  A cell is then kept only if a right
+   leaf overlaps it or, with ``evaluate_margins``, one of its
+   same-order neighbors (``cells_within_reach``): a right row within
+   the radius of a left row lies in the row's cell or a neighbor of
+   it, so a cell that fails holds no pair.  A catalog cross-match reads
+   only the leaves those cells need — on the left the leaves that
+   overlap a kept cell, on the right those that overlap a kept cell or
+   its ring — with a ``(Norder, Npix)`` predicate on the handle's
+   pinned read, which Spark applies to the file index it already holds
+   (no listing, no job).  A deep field matched against an all-sky
+   survey reads the survey's leaves next to the field's leaves, not
+   the survey.
 2. **Left assignment**: rows equi-join a broadcast (pixel → cell)
    table on their pixel at the cell's order.  For a catalog that pixel
    is one ``shiftright`` of the stored spatial index
    (``_ID = pix19 << 21 | rank``), so the map side runs in the JVM and
    no row is pixelized again; a raw DataFrame pays one Arrow
    pixelization pass at the finest plan order.  The table is an
-   Arrow-backed local relation (``plans.tables.plan_table``), so its
-   broadcast is a ``LocalTableScan``: no Spark job, no Python worker.
+   Arrow-backed local relation (``plans.tables.plan_table``), so no
+   Python worker unpickles it; its broadcast runs one small Spark job
+   (``LocalTableScan`` rows collected by ``defaultParallelism`` tasks).
+   Pixels and cells are keyed by their NUNIQ number
+   ``4^(order+1) + pix``, one long that carries the order in its
+   leading bits, so the join and the cogroup each have one key column.
    ``_ID`` is dropped once rows have their cell.  Left rows are never
    duplicated — each is matched exactly once (reference
    dask_utils.py:407: margins are drawn from the right side only).
@@ -36,10 +53,11 @@ catalog.py:181-191):
    width always matches the query's ``dthresh``.
 4. **Cogrouped kNN kernel**: ``left.groupBy(cell) cogroup right.groupBy
    (cell) → applyInArrow``: each cell's two sides arrive as Arrow
-   tables (no pandas conversion); gnomonic-project around
-   the cell center (util.py:353-371), grid-bucket the right side at the
-   match radius, gather 3×3 candidates per left row, exact great-circle
-   distance, keep k smallest per left row under ``dthresh``, and gather
+   tables (no pandas conversion); the kernel decodes the cell's order
+   and pixel from the key, gnomonic-projects around
+   the cell center (util.py:353-371), grid-buckets the right side at the
+   match radius, gathers 3×3 candidates per left row, exact great-circle
+   distance, keeps k smallest per left row under ``dthresh``, and gathers
    the output columns with Arrow ``take`` so their types and nulls pass
    through unchanged.
 
@@ -48,7 +66,10 @@ root once per handle: repeated cross-matches on the same handles plan
 without a listing.
 
 Scale notes (100 TB): the broadcast tables are plan-sized (≤ 9 entries
-per cell).  The only shuffle is the cogroup's hash partition on the
+per cell), and so are the leaf predicates.  What a cross-match reads,
+shuffles and ships to Python grows with the sky the two catalogs
+share (plus one ring of cells), not with either catalog's footprint.
+The only shuffle is the cogroup's hash partition on the
 cell key; cells are bounded by the catalogs' ``threshold`` plus halo,
 and hot cells are split by the coverage maps or ``max_pairs_per_cell``
 (AQE cannot split a cogroup).  The kernel is vectorized NumPy over the
@@ -63,7 +84,7 @@ from typing import Iterable
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -75,16 +96,32 @@ from pyspark.sql.types import (
 )
 
 from lsd2_spark import healpix as hpx
-from lsd2_spark.catalog import PARTITION_COLS, SPATIAL_INDEX_ORDER, pixel_of_index
+from lsd2_spark.catalog import (
+    PARTITION_COLS, SPATIAL_INDEX_ORDER, leaf_predicate, pixel_of_index,
+)
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist, gnomonic_xy_np
-from lsd2_spark.plans.partition_map import align_join_cells, complete_left_cover
+from lsd2_spark.plans.partition_map import (
+    align_join_cells, cells_within_reach, complete_left_cover, leaves_overlapping,
+)
 from lsd2_spark.plans.tables import plan_table
 
 __all__ = ["crossmatch_catalogs", "crossmatch_dataframes", "max_cell_order_for"]
 
-_CELL_O = "_cell_order"
-_CELL_P = "_cell_pix"
+_CELL = "_cell"
+
+
+def _uniq(order: int, pix):
+    """The NUNIQ number ``4^(order+1) + pix`` of nested pixels at
+    ``order``: unique across orders, with the order in the leading
+    bits."""
+    return (4 << 2 * order) + pix
+
+
+def _cell_of(uniq: int) -> tuple[int, int]:
+    """(order, pix) of a NUNIQ number: inverse of :func:`_uniq`."""
+    order = (uniq.bit_length() - 3) // 2
+    return order, uniq - (4 << 2 * order)
 
 
 def max_cell_order_for(dthresh: float) -> int:
@@ -97,8 +134,7 @@ def max_cell_order_for(dthresh: float) -> int:
 
 
 _CELL_DDL = (
-    f"pix long, {_CELL_O} int, {_CELL_P} long, _c_ra double, _c_dec double, "
-    "_c_rad double, _primary int"
+    f"_probe long, {_CELL} long, _c_ra double, _c_dec double, _c_rad double, _primary int"
 )
 
 
@@ -106,15 +142,16 @@ def _cell_tables(
     cells: list[tuple[int, int]], dthresh: float, with_halo: bool
 ) -> dict[str, np.ndarray]:
     """The (pixel → cell) assignment plan table, as columns (see
-    ``_CELL_DDL``), built with ONE vectorized neighbors/pix2ang call
-    per order, so plan time stays vectorized as the cell count grows.
+    ``_CELL_DDL``; pixels and cells as :func:`_uniq` numbers), built
+    with ONE vectorized neighbors/pix2ang call per order, so plan time
+    stays vectorized as the cell count grows.
 
     Primary entry: (pixel == cell pixel) → cell, no distance filter.
     Halo entry (right side only): (neighbor pixel → cell) with the
     cell's center + conservative radius for the distance prefilter.
     """
     cols: dict[str, list[np.ndarray]] = {
-        k: [] for k in ("pix", _CELL_O, _CELL_P, "_c_ra", "_c_dec", "_c_rad", "_primary")
+        k: [] for k in ("_probe", _CELL, "_c_ra", "_c_dec", "_c_rad", "_primary")
     }
     arr = np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
     for o in np.unique(arr[:, 0]).tolist():
@@ -128,9 +165,8 @@ def _cell_tables(
             pix = np.concatenate([parr, nb])
             idx = np.concatenate([idx, halo_idx])
             primary = np.concatenate([primary, np.zeros(len(halo_idx), np.int32)])
-        cols["pix"].append(pix)
-        cols[_CELL_O].append(np.full(len(idx), o, np.int32))
-        cols[_CELL_P].append(parr[idx])
+        cols["_probe"].append(_uniq(o, pix))
+        cols[_CELL].append(_uniq(o, parr[idx]))
         cols["_c_ra"].append(cra[idx])
         cols["_c_dec"].append(cdec[idx])
         cols["_c_rad"].append(np.full(len(idx), hpx.max_pixrad(o) + dthresh))
@@ -139,15 +175,18 @@ def _cell_tables(
 
 
 def _assign(
-    df: DataFrame, ra_col: str, dec_col: str, table: dict[str, np.ndarray],
-    index_col: str | None = None,
+    df: DataFrame, ra_col: str, dec_col: str, cells: list[tuple[int, int]],
+    dthresh: float, with_halo: bool, index_col: str | None = None,
 ) -> DataFrame:
-    """Assign rows to plan cells in ONE pass over the input.
+    """Assign rows to plan ``cells`` (a ``_cell`` column) in ONE pass
+    over the input, duplicating rows into neighbor cells' halos when
+    ``with_halo``.
 
     Take each row's pixel once at the finest plan order, derive each
     coarser order's pixel with ``shiftright`` (nested-scheme
     hierarchy), and probe a single combined broadcast table keyed on
-    (cell order, pixel).  The per-order explode multiplies rows only
+    the pixel's :func:`_uniq` number, which tells the orders apart.
+    The per-order explode multiplies rows only
     transiently inside the broadcast-hash-join stage (pipelined, no
     shuffle); the previous form re-scanned and re-pixelized the whole
     input once per distinct order — ~5 scans on adaptive catalogs.
@@ -160,10 +199,12 @@ def _assign(
     (raw DataFrames).  The index column is dropped with the other plan
     columns.
     """
-    orders = np.unique(table[_CELL_O]).tolist()
+    orders = sorted({o for o, _ in cells})
     kmax = orders[-1]
-    tbl = F.broadcast(plan_table(df.sparkSession, table, _CELL_DDL))
-    plan_cols = ["pix", "_c_ra", "_c_dec", "_c_rad", "_primary"]
+    tbl = F.broadcast(
+        plan_table(df.sparkSession, _cell_tables(cells, dthresh, with_halo), _CELL_DDL)
+    )
+    plan_cols = ["_probe", "_c_ra", "_c_dec", "_c_rad", "_primary"]
     if index_col is not None:
         pixk = pixel_of_index(F.col(index_col), kmax)
         plan_cols.append(index_col)
@@ -173,32 +214,21 @@ def _assign(
         # pushed below this projection, running the Arrow pixelization
         # twice per row on every assign side (observed in the q21 plan)
         pixk = ang2pix_udf(kmax, F.col(ra_col), F.col(dec_col), deterministic=False)
+
+    def probe(pix: Column, o: int) -> Column:
+        return _uniq(o, F.shiftright(pix, 2 * (kmax - o)))
+
     if len(orders) == 1:
-        # single-order plan: no probe explode, and the order column can
-        # stay out of the join key (it is constant; the broadcast table
-        # supplies it) — measured ~30% cheaper than the general path on
-        # the q21 bench
-        withpix = df.withColumn("pix", pixk)
-        keys = ["pix"]
+        # single-order plan: no probe explode — measured ~30% cheaper
+        # than the general path on the q21 bench
+        withpix = df.withColumn("_probe", probe(pixk, kmax))
     else:
-        probes = F.array(
-            *[
-                F.struct(
-                    F.lit(o).cast("int").alias("o"),
-                    F.shiftright(F.col("_pixk"), 2 * (kmax - o)).alias("pix"),
-                )
-                for o in orders
-            ]
-        )
         withpix = (
             df.withColumn("_pixk", pixk)
-            .withColumn("_probe", F.explode(probes))
-            .withColumn("pix", F.col("_probe.pix"))
-            .withColumn(_CELL_O, F.col("_probe.o"))
-            .drop("_pixk", "_probe")
+            .withColumn("_probe", F.explode(F.array(*[probe(F.col("_pixk"), o) for o in orders])))
+            .drop("_pixk")
         )
-        keys = ["pix", _CELL_O]
-    j = withpix.join(tbl, keys).filter(
+    j = withpix.join(tbl, "_probe").filter(
         (F.col("_primary") == 1)
         | (
             gc_dist(F.col(ra_col), F.col(dec_col), F.col("_c_ra"), F.col("_c_dec"))
@@ -234,7 +264,7 @@ def _knn_kernel_factory(
     def kernel(key, left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return arrow_schema.empty_table()
-        cell_order, cell_pix = key[0].as_py(), key[1].as_py()
+        cell_order, cell_pix = _cell_of(key[0].as_py())
         cra, cdec = hpx.pix2ang(cell_order, np.array([cell_pix]))
         lra, ldec = column(left, l_ra), column(left, l_dec)
         rra, rdec = column(right, r_ra), column(right, r_dec)
@@ -344,14 +374,46 @@ def _ensure_cols(cols: list[str] | None, df: DataFrame, required: Iterable[str])
 
 
 def crossmatch_cells_plan(
-    hips1: dict[int, list[int]], hips2: dict[int, list[int]], max_cell_order: int
+    hips1: dict[int, list[int]],
+    hips2: dict[int, list[int]],
+    max_cell_order: int,
+    ring: bool = True,
 ) -> list[tuple[int, int]]:
     """Join cells for two coverage maps, none finer than
-    ``max_cell_order``."""
+    ``max_cell_order``: the cells of the left sky (``hips1``) that a
+    right leaf overlaps, or, with ``ring``, overlaps one of their
+    neighbors — the only cells that can hold a pair."""
     aligned = align_join_cells(hips1, hips2, max_cell_order=max_cell_order)
     # every left row must land in a cell, even where the right catalog
-    # has no partitions (matches may still arrive via halos)
-    return complete_left_cover(aligned, hips1, max_cell_order)
+    # has no partitions (matches may still arrive via halos) ...
+    cover = complete_left_cover(aligned, hips1, max_cell_order)
+    # ... but only where a right leaf is near enough to send one
+    return cells_within_reach(cover, hips2, ring)
+
+
+def _plan(
+    hips_left: dict[int, list[int]],
+    hips_right: dict[int, list[int]],
+    n_neighbors: int,
+    dthresh: float,
+    evaluate_margins: bool,
+    indexed: bool,
+) -> tuple[int, list[tuple[int, int]]]:
+    """Check the match parameters; return the plan order and the join
+    cells.  ``indexed``: a side takes its pixels from a spatial index,
+    which holds pixels only down to the index order."""
+    if n_neighbors < 1:
+        raise ValueError(f"n_neighbors must be >= 1, got {n_neighbors}")
+    if not 0 < dthresh <= hpx.min_pixwidth(0):
+        raise ValueError(
+            f"dthresh must be positive and at most the base-pixel width "
+            f"{hpx.min_pixwidth(0):.4g} deg, got {dthresh}"
+        )
+    kj = max_cell_order_for(dthresh)
+    if indexed:
+        # coarser cells are wider than the radius too, so halos stay valid
+        kj = min(kj, SPATIAL_INDEX_ORDER)
+    return kj, crossmatch_cells_plan(hips_left, hips_right, kj, evaluate_margins)
 
 
 def crossmatch_dataframes(
@@ -377,6 +439,11 @@ def crossmatch_dataframes(
     debug: bool = False,
 ) -> DataFrame:
     """kNN spatial join of two DataFrames with known sky coverage maps.
+
+    Each map must cover its side's rows (every row lies in a listed
+    pixel, as a catalog's ``hips`` does): the plan keeps only cells
+    that ``hips_right`` reaches, so a right row outside its map can be
+    missed.
 
     ``exclude_same_id`` drops candidate pairs whose left and right ids
     are equal (self-match mode).  ``debug=True`` truncates the cell
@@ -405,8 +472,11 @@ def crossmatch_dataframes(
     are pair-set identical (bench ``crossmatch_skew`` ``auto_*``
     fields); splits never exceed ``max_cell_order_for(dthresh)``, so
     halos stay valid by the same argument as above."""
+    kj, cells = _plan(
+        hips_left, hips_right, n_neighbors, dthresh, evaluate_margins, indexed=False
+    )
     return _crossmatch(
-        left, right, hips_left, hips_right, l_ra, l_dec, l_id, r_ra, r_dec, r_id,
+        left, right, cells, kj, hips_right, l_ra, l_dec, l_id, r_ra, r_dec, r_id,
         n_neighbors=n_neighbors, dthresh=dthresh, left_name=left_name,
         right_name=right_name, left_cols=left_cols, right_cols=right_cols,
         evaluate_margins=evaluate_margins, exclude_same_id=exclude_same_id,
@@ -417,7 +487,8 @@ def crossmatch_dataframes(
 def _crossmatch(
     left: DataFrame,
     right: DataFrame,
-    hips_left: dict[int, list[int]],
+    cells: list[tuple[int, int]],
+    kj: int,
     hips_right: dict[int, list[int]],
     l_ra: str,
     l_dec: str,
@@ -439,19 +510,13 @@ def _crossmatch(
     l_index: str | None = None,
     r_index: str | None = None,
 ) -> DataFrame:
-    """:func:`crossmatch_dataframes`, where each side may name a
+    """:func:`crossmatch_dataframes` over the join ``cells`` that
+    :func:`_plan` made at plan order ``kj``, where each side may name a
     spatial-index column (``l_index``/``r_index``, a catalog's ``_ID``)
     from which :func:`_assign` shifts the cell pixel instead of
     pixelizing the row.  The index column is not an output column: it
     is left out of ``left_cols``/``right_cols`` and dropped before the
     kernel."""
-    if n_neighbors < 1:
-        raise ValueError(f"n_neighbors must be >= 1, got {n_neighbors}")
-    if not 0 < dthresh <= hpx.min_pixwidth(0):
-        raise ValueError(
-            f"dthresh must be positive and at most the base-pixel width "
-            f"{hpx.min_pixwidth(0):.4g} deg, got {dthresh}"
-        )
     left_cols = _ensure_cols(left_cols, left, [l_ra, l_dec, l_id])
     right_cols = _ensure_cols(right_cols, right, [r_ra, r_dec, r_id])
     left = left.select(*left_cols, *([l_index] if l_index else []))
@@ -471,12 +536,6 @@ def _crossmatch(
             stacklevel=2,
         )
 
-    kj = max_cell_order_for(dthresh)
-    if l_index or r_index:
-        # an index pixel exists only down to the index order; coarser
-        # cells are wider than the radius too, so halos stay valid
-        kj = min(kj, SPATIAL_INDEX_ORDER)
-    cells = crossmatch_cells_plan(hips_left, hips_right, kj)
     if max_pairs_per_cell is not None and cells:
         from lsd2_spark.operators.histogram import sky_histogram
         from lsd2_spark.plans.partition_map import refine_hot_cells
@@ -507,7 +566,10 @@ def _crossmatch(
             max_pairs_per_cell=max_pairs_per_cell,
             max_cell_order=kj,
         )
-        cells = sorted((o, p) for o in refined for p in refined[o])
+        # a split cell's children face the same test as the cells
+        cells = cells_within_reach(
+            [(o, p) for o in refined for p in refined[o]], hips_right, evaluate_margins
+        )
     if debug and len(cells) > 5:
         warnings.warn("debug=True: truncating the plan to 5 cells", stacklevel=2)
         cells = cells[:5]
@@ -515,10 +577,8 @@ def _crossmatch(
         schema = _prefixed_schema(left, right, left_cols, right_cols, left_name, right_name)
         return plan_table(left.sparkSession, {f.name: [] for f in schema.fields}, schema)
 
-    l_assigned = _assign(left, l_ra, l_dec, _cell_tables(cells, dthresh, False), l_index)
-    r_assigned = _assign(
-        right, r_ra, r_dec, _cell_tables(cells, dthresh, evaluate_margins), r_index
-    )
+    l_assigned = _assign(left, l_ra, l_dec, cells, dthresh, False, l_index)
+    r_assigned = _assign(right, r_ra, r_dec, cells, dthresh, evaluate_margins, r_index)
 
     schema = _prefixed_schema(left, right, left_cols, right_cols, left_name, right_name)
     kernel = _knn_kernel_factory(
@@ -526,8 +586,8 @@ def _crossmatch(
         schema, l_id=l_id, exclude_same_id=exclude_same_id,
     )
     return (
-        l_assigned.groupBy(_CELL_O, _CELL_P)
-        .cogroup(r_assigned.groupBy(_CELL_O, _CELL_P))
+        l_assigned.groupBy(_CELL)
+        .cogroup(r_assigned.groupBy(_CELL))
         .applyInArrow(kernel, schema)
     )
 
@@ -554,15 +614,24 @@ def crossmatch_catalogs(
     refinement (see :func:`crossmatch_dataframes`).
     """
     m1, m2 = cat1.meta, cat2.meta
-    # _ID stays until the cell assignment, which shifts each row's cell
-    # pixel out of it: neither side is pixelized again
-    left = cat1.df(columns).drop(*PARTITION_COLS)
-    right = cat2.df(other_columns).drop(*PARTITION_COLS)
+    kj, cells = _plan(m1.hips, m2.hips, n_neighbors, dthresh, evaluate_margins, indexed=True)
+
+    def reach(cat, columns, ring):
+        # the leaves the cells need, pruned from the handle's pinned
+        # read; _ID stays until the cell assignment, which shifts each
+        # row's cell pixel out of it: neither side is pixelized again
+        pred = leaf_predicate(leaves_overlapping(cat.meta.hips, cells, ring))
+        df = cat.df(columns)
+        return df.filter(F.lit(False) if pred is None else pred).drop(*PARTITION_COLS)
+
+    left = reach(cat1, columns, False)
+    right = reach(cat2, other_columns, evaluate_margins)
     rname = m2.cat_name if m2.cat_name != m1.cat_name else f"{m2.cat_name}_2"
     return _crossmatch(
         left,
         right,
-        m1.hips,
+        cells,
+        kj,
         m2.hips,
         l_ra=m1.ra_kw,
         l_dec=m1.dec_kw,

@@ -165,6 +165,11 @@ def complete_left_cover(
     regions become cells of their own; they hold no right *partitions*
     (only halo rows from adjacent cells), so they add no memory risk.
     Output cells remain disjoint.
+
+    This is the candidate cover, not the sky a cross-match reads:
+    :func:`cells_within_reach` then drops every cell with no right leaf
+    in it or in its neighbour ring, and only the leaves of the cells
+    that remain are read.
     """
     cellset = set(cells)
     # cells indexed by every (order, ancestor) for interior tests
@@ -193,6 +198,66 @@ def complete_left_cover(
                     cellset.add((oo, pp))
                     out.append((oo, pp))
     return sorted(set(out))
+
+
+def _overlaps(order: int, pix: np.ndarray, hips: dict[int, list[int]]) -> np.ndarray:
+    """Which of the order-``order`` pixels ``pix`` overlap a leaf of
+    ``hips``: the leaf is the pixel, an ancestor of it, or inside it."""
+    hit = np.zeros(len(pix), dtype=bool)
+    for o, leaves in hips.items():
+        arr = np.sort(np.asarray(leaves, dtype=np.int64))
+        if o <= order:
+            hit |= np.isin(pix >> (2 * (order - o)), arr)
+        else:
+            d = 2 * (o - order)
+            hit |= np.searchsorted(arr, pix << d) < np.searchsorted(arr, (pix + 1) << d)
+    return hit
+
+
+def cells_within_reach(
+    cells: list[tuple[int, int]], hips: dict[int, list[int]], ring: bool
+) -> list[tuple[int, int]]:
+    """The cells a leaf of ``hips`` (the right catalog) overlaps, or,
+    with ``ring``, overlaps one of the cell's same-order neighbours.
+
+    Exact for a cross-match whose cells are no narrower than its radius
+    (``max_cell_order_for``): a right row within the radius of a left
+    row lies in the left row's cell or in one of its neighbours, and a
+    right leaf overlaps that pixel.  A cell that fails the test can
+    produce no pair, so neither its left rows nor its halo are read."""
+    arr = np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
+    keep = np.zeros(len(arr), dtype=bool)
+    for o in np.unique(arr[:, 0]).tolist():
+        rows = np.flatnonzero(arr[:, 0] == o)
+        parr = arr[rows, 1]
+        hit = _overlaps(o, parr, hips)
+        if ring:
+            src, nb = hpx.neighbors_flat(o, parr)
+            hit |= np.isin(parr, src[_overlaps(o, nb, hips)])
+        keep[rows] = hit
+    return [(int(o), int(p)) for o, p in arr[keep]]
+
+
+def leaves_overlapping(
+    hips: dict[int, list[int]], cells: list[tuple[int, int]], ring: bool
+) -> dict[int, list[int]]:
+    """The leaves of ``hips`` that overlap one of ``cells``, or, with
+    ``ring``, one of the cells' same-order neighbours: the leaves that
+    hold every row a cross-match over ``cells`` can assign."""
+    arr = np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
+    pixels: dict[int, np.ndarray] = {}
+    for o in np.unique(arr[:, 0]).tolist():
+        parr = arr[arr[:, 0] == o, 1]
+        if ring:
+            parr = np.union1d(parr, hpx.neighbors_flat(o, parr)[1])
+        pixels[o] = parr
+    out: dict[int, list[int]] = {}
+    for o, leaves in sorted(hips.items()):
+        leaf = np.asarray(leaves, dtype=np.int64)
+        keep = _overlaps(o, leaf, pixels)
+        if keep.any():
+            out[o] = leaf[keep].tolist()
+    return out
 
 
 def refine_hot_cells(

@@ -3,10 +3,14 @@ halo rings) as Spark relations.
 
 A plan table is built from columns into a ``pyarrow.Table``, which
 ``createDataFrame`` turns into a ``LocalRelation``: the rows travel
-inside the query plan, so broadcasting the table is a
-``LocalTableScan`` with no Spark job and no Python worker.  A Python
-row list would instead become a ``LogicalRDD``, and every broadcast of
-it would run a Spark job whose Python workers unpickle the rows.
+inside the query plan, so no Python worker ever sees them.
+Broadcasting the table is a ``LocalTableScan`` under a
+``BroadcastExchange``, which still collects the rows with one Spark job
+of ``defaultParallelism`` tasks (a ``spark.range`` joined to a 100-row
+plan table runs 2 jobs per ``collect`` where the scan alone runs 1).
+A Python row list would instead become a ``LogicalRDD``, and every
+broadcast of it would run a Spark job whose Python workers unpickle the
+rows.
 
 The table is handed over as Arrow, not as a pandas frame: the pandas
 route silently falls back to the row-list path when its Arrow

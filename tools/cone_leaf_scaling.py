@@ -41,6 +41,13 @@ lazy plan (``plan_*``) and of the whole operation (plan and collect).
 A handle lists its catalog once, so the plan cost of the second pass
 shows what a repeated cross-match pays for listings.
 
+The survey is also cross-matched against a deep field of
+``FIELD_RADIUS_DEG`` around ``FIELD_CENTRE`` (the survey rows there,
+moved, plus ``FIELD_ROWS`` more, ingested at the same threshold), on
+handles whose reads are pinned, once after one warm-up: the join cells,
+the files each side's scan reads (one per leaf: each catalog is one
+ingest), the Spark jobs and tasks, and CPU and wall time.
+
 CPU is user+system time of this process and all its descendants (the
 Spark JVM and the Python workers), from ``perfbench.run.CpuMeter``,
 which keeps the CPU of workers that exit.  Everything is local; no
@@ -85,6 +92,9 @@ MARGIN_DEG = 0.1
 PARTNER_ROWS = 40_000
 XMATCH_K = 2
 XMATCH_DTHRESH_DEG = 0.01
+FIELD_CENTRE = (200.0, 30.0)
+FIELD_RADIUS_DEG = 3.0
+FIELD_ROWS = 2_000
 
 
 def sky(rng: np.random.Generator, n: int):
@@ -213,21 +223,41 @@ def measure_append(spark, meter, name, path, batch, warmup: int = 1) -> dict:
     return summary(cpu, wall, jobs)
 
 
-def narrow_field(rng: np.random.Generator, first_id: int):
-    """``NARROW_ROWS`` rows uniform in a disc of ``NARROW_RADIUS_DEG``
-    around ``NARROW_CENTRE``, with ids from ``first_id``."""
+def disc(rng: np.random.Generator, first_id: int, n: int, centre, radius: float):
+    """``n`` rows uniform in a disc of ``radius`` deg around ``centre``,
+    with ids from ``first_id``."""
     import pandas as pd
 
-    ra0, dec0 = NARROW_CENTRE
-    r = NARROW_RADIUS_DEG * np.sqrt(rng.uniform(0, 1, NARROW_ROWS))
-    t = rng.uniform(0, 2 * np.pi, NARROW_ROWS)
+    ra0, dec0 = centre
+    r = radius * np.sqrt(rng.uniform(0, 1, n))
+    t = rng.uniform(0, 2 * np.pi, n)
     dec = dec0 + r * np.sin(t)
     return pd.DataFrame({
-        "sid": np.arange(first_id, first_id + NARROW_ROWS, dtype=np.int64),
+        "sid": np.arange(first_id, first_id + n, dtype=np.int64),
         "ra": (ra0 + r * np.cos(t) / np.cos(np.radians(dec))) % 360.0,
         "dec": dec,
-        "mag": rng.uniform(10, 22, NARROW_ROWS),
+        "mag": rng.uniform(10, 22, n),
     })
+
+
+def narrow_field(rng: np.random.Generator, first_id: int):
+    """``NARROW_ROWS`` rows in a disc of ``NARROW_RADIUS_DEG`` around
+    ``NARROW_CENTRE`` (one night's field)."""
+    return disc(rng, first_id, NARROW_ROWS, NARROW_CENTRE, NARROW_RADIUS_DEG)
+
+
+def deep_field(rng: np.random.Generator, pdf):
+    """The survey rows within ``FIELD_RADIUS_DEG`` of ``FIELD_CENTRE``,
+    moved by under 0.005 deg, and ``FIELD_ROWS`` more rows in the disc."""
+    import pandas as pd
+
+    from lsd2_spark.healpix import gc_dist_deg
+
+    near = pdf[gc_dist_deg(pdf.ra.values, pdf.dec.values, *FIELD_CENTRE) < FIELD_RADIUS_DEG].copy()
+    near["sid"] += 20 * ROWS
+    near["dec"] += rng.uniform(-0.005, 0.005, len(near))
+    more = disc(rng, 30 * ROWS, FIELD_ROWS, FIELD_CENTRE, FIELD_RADIUS_DEG)
+    return pd.concat([near, more], ignore_index=True)
 
 
 def measure_margin_plan(hips: dict) -> dict:
@@ -281,6 +311,67 @@ def measure_xmatch(spark, meter, name, path, partner_path) -> list:
     return passes
 
 
+def files_read(df) -> dict[str, int]:
+    """Catalog root → the "number of files read" metric of its scans in
+    the executed (final adaptive) plan of the collected ``df``."""
+    out: dict[str, int] = {}
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if name == "FileSourceScanExec":
+            root = node.relation().location().rootPaths().head().toString()
+            out[root] = out.get(root, 0) + node.metrics().get("numFiles").get().value()
+            return
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def measure_field_xmatch(spark, meter, name, path, field_path) -> dict:
+    """The survey (left) against the deep field (right), on pinned
+    handles, after one warm-up."""
+    from lsd2_spark.catalog import Catalog
+    from lsd2_spark.operators.crossmatch import crossmatch_cells_plan, max_cell_order_for
+
+    cat = Catalog.load(spark, path, "sky")
+    field = Catalog.load(spark, field_path, "field")
+    cat.df(), field.df()
+    tracker = spark.sparkContext.statusTracker()
+    for rep in range(2):
+        group = f"{name}-{rep}"
+        lazy, pc, pw, pj = timed(
+            spark, meter, f"{group}-plan",
+            lambda: cat.cross_match(field, n_neighbors=XMATCH_K, dthresh=XMATCH_DTHRESH_DEG),
+        )
+        rows, c, w, j = timed(spark, meter, group, lazy.collect)
+    tasks = sum(
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    )
+    read = files_read(lazy)
+    return {
+        "cells": len(crossmatch_cells_plan(
+            cat.meta.hips, field.meta.hips, max_cell_order_for(XMATCH_DTHRESH_DEG)
+        )),
+        "left_leaves": sum(len(v) for v in cat.meta.hips.values()),
+        "left_files_read": read.get(f"file:{os.path.abspath(path)}/catalog", 0),
+        "right_leaves": sum(len(v) for v in field.meta.hips.values()),
+        "right_files_read": read.get(f"file:{os.path.abspath(field_path)}/catalog", 0),
+        "jobs": pj + j, "tasks": tasks,
+        "cpu_ms": round(1e3 * (pc + c), 1), "wall_ms": round(1e3 * (pw + w), 1),
+        "pairs": len(rows),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--work", default=os.path.join(".bench_work", "cone_leaf_scaling"))
@@ -303,6 +394,7 @@ def main() -> None:
     batch["sid"] += ROWS
     partner = partner_of(rng, pdf)
     narrow = narrow_field(rng, 2 * ROWS)
+    field = deep_field(rng, pdf)
     shutil.rmtree(args.work, ignore_errors=True)
 
     report = {}
@@ -351,11 +443,20 @@ def main() -> None:
         report[label]["xmatch"] = measure_xmatch(
             spark, meter, f"xmatch-{threshold}", path, partner_path
         )
+        field_path = os.path.join(args.work, f"f{threshold}")
+        partition_catalog(
+            spark.createDataFrame(field), field_path, "field", ra_col="ra",
+            dec_col="dec", id_col="sid", threshold=threshold, order_k=9,
+            write_margins=False,
+        )
+        report[label]["field_xmatch"] = measure_field_xmatch(
+            spark, meter, f"field-{threshold}", path, field_path
+        )
         same = report[label]["cone_search"]["rows"] == report[label]["root_scan"]["rows"]
         print(label, json.dumps(report[label]), "same rows:", same, flush=True)
     print(json.dumps({"rows": ROWS, "queries": len(qs), "seed": SEED,
                       "append_rows": APPEND_ROWS, "narrow_rows": NARROW_ROWS,
-                      "partner_rows": PARTNER_ROWS,
+                      "partner_rows": PARTNER_ROWS, "field_rows": len(field),
                       "load_end": os.getloadavg(),
                       "catalogs": report}))
     spark.stop()
