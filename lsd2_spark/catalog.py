@@ -68,7 +68,7 @@ from lsd2_spark import healpix as hpx
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist
 from lsd2_spark.plans.partition_map import assignment_cells, compute_partition_map
-from lsd2_spark.plans.tables import plan_table
+from lsd2_spark.plans.tables import probe_join
 from lsd2_spark.sources.fs import LOCAL_FS, LifecycleFS
 
 SPATIAL_INDEX_ORDER = 19
@@ -130,28 +130,14 @@ def _place(rows: DataFrame, cells: tuple[np.ndarray, np.ndarray, np.ndarray]) ->
     ``cells`` are ``(order, pix, target_order)`` arrays of disjoint
     cells; every row must lie in one of them (the leaves of a plan over
     the rows, or :func:`assignment_cells`' cover of the whole sphere).
-    Each row explodes into its pixel at every cell order (a shift of
-    ``_p19``), one broadcast equi-join on the plan table keeps the probe
-    that hits its cell, and the row's leaf is its pixel at that cell's
-    target order: one explode and one join, in the JVM."""
+    The probe join (:func:`~lsd2_spark.plans.tables.probe_join`) on
+    ``_p19`` finds each row's cell, and the row's leaf is its pixel at
+    that cell's target order: in the JVM, with no Python worker."""
     order, pix, target = cells
-    table = F.broadcast(plan_table(
-        rows.sparkSession,
-        {"_o": order, "_q": pix, "Norder": target},
-        "_o int, _q long, Norder int",
-    ))
-    probes = F.array(*[
-        F.struct(
-            F.lit(o).cast("int").alias("_o"),
-            F.shiftright(F.col("_p19"), 2 * (SPATIAL_INDEX_ORDER - o)).alias("_q"),
-        )
-        for o in sorted(set(order.tolist()))
-    ])
     npix = F.expr(f"shiftright(_p19, 2 * ({SPATIAL_INDEX_ORDER} - Norder))")
     return (
-        rows.withColumn("_pr", F.explode(probes))
-        .select(*rows.columns, "_pr._o", "_pr._q")
-        .join(table, ["_o", "_q"])
+        probe_join(rows, F.col("_p19"), SPATIAL_INDEX_ORDER, (order, pix),
+                   {"Norder": target}, "Norder int")
         .select(*rows.columns, "Norder", npix.alias("Npix"))
         .withColumn("Dir", _dir_of(F.col("Npix")))
     )
@@ -275,20 +261,6 @@ class CatalogMetadata:
             margins_exported=d.get("margins_exported", False),
             version=d.get("version", 0),
         )
-
-
-def spatial_index_col(order: int, ra: Column, dec: Column) -> Column:
-    """Signed-safe spatial index: pix@19 << RANK_BITS + rank-within-pixel.
-
-    Reference analogue: hipscat/util.py:14-69 (``compute_index``).
-    Standalone Column form (its own window shuffle on pix@19); the
-    ingest path instead piggybacks the rank window on the write
-    exchange (see ``_with_spatial_index``) to avoid a second exchange.
-    """
-    pix = ang2pix_udf(SPATIAL_INDEX_ORDER, ra, dec)
-    w = Window.partitionBy(pix).orderBy(ra.asc(), dec.asc())
-    rank = F.row_number().over(w).cast("long") - 1
-    return (pix * (1 << RANK_BITS) + rank).cast(LongType())
 
 
 def _with_spatial_index(
@@ -849,11 +821,12 @@ class Catalog:
         head = self._head()
         if head.meta.margins_exported:
             return head
-        return head._export_margins(head._scan().drop(*PARTITION_COLS, "_ID"))
+        return head._export_margins(head._scan().drop(*PARTITION_COLS))
 
     def _export_margins(self, src: DataFrame) -> "Catalog":
-        """Export the halos of the source rows ``src`` (the bare input
-        columns) of a version that vouches for no export, then commit
+        """Export the halos of the source rows ``src`` (the input
+        columns, with ``_ID`` when they are the catalog's stored rows)
+        of a version that vouches for no export, then commit
         the flag: a crash mid-write leaves an export nothing vouches
         for, which :meth:`margin_df` ignores and ``fsck(repair=True)``
         removes."""
@@ -1353,10 +1326,11 @@ class Catalog:
         """Per-pixel source counts at ``order`` with pixel centers —
         the data behind the reference's sky visualizations
         (catalog.py plot helpers + lsd2_io.py:163-194 FITS maps).
-        Persist with sources.sinks.write_sky_map."""
-        from lsd2_spark.operators.histogram import sky_histogram
-
-        hist = sky_histogram(self.df(), self.meta.ra_kw, self.meta.dec_kw, order)
+        Each row's pixel is a shift of its ``_ID``, so ``order`` above
+        ``SPATIAL_INDEX_ORDER`` raises ValueError.  Persist with
+        sources.sinks.write_sky_map."""
+        pix = pixel_of_index(F.col("_ID"), order)  # raises before any read
+        hist = self.df().groupBy(pix.alias("pix")).agg(F.count(F.lit(1)).alias("cnt"))
 
         import pandas as pd
         from pyspark.sql.types import DoubleType

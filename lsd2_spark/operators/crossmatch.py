@@ -28,21 +28,23 @@ catalog.py:181-191):
    (no listing, no job).  A deep field matched against an all-sky
    survey reads the survey's leaves next to the field's leaves, not
    the survey.
-2. **Left assignment**: rows equi-join a broadcast (pixel → cell)
-   table on their pixel at the cell's order.  For a catalog that pixel
-   is one ``shiftright`` of the stored spatial index
-   (``_ID = pix19 << 21 | rank``), so the map side runs in the JVM and
-   no row is pixelized again; a raw DataFrame pays one Arrow
-   pixelization pass at the finest plan order.  The table is an
-   Arrow-backed local relation (``plans.tables.plan_table``), so no
-   Python worker unpickles it; its broadcast runs one small Spark job
+2. **Left assignment**: rows join a broadcast (pixel → cell) table
+   by the engine's one row-to-cell assignment,
+   ``plans.tables.probe_join``, on their pixel at the finest plan
+   order.  For a catalog that pixel is one ``shiftright`` of the
+   stored spatial index (``_ID = pix19 << 21 | rank``), so the map
+   side runs in the JVM and no row is pixelized again; a raw DataFrame
+   pays one Arrow pixelization pass.  The table is an Arrow-backed
+   local relation (``plans.tables.plan_table``), so no Python worker
+   unpickles it; its broadcast runs one small Spark job
    (``LocalTableScan`` rows collected by ``defaultParallelism`` tasks).
    Pixels and cells are keyed by their NUNIQ number
-   ``4^(order+1) + pix``, one long that carries the order in its
-   leading bits, so the join and the cogroup each have one key column.
-   ``_ID`` is dropped once rows have their cell.  Left rows are never
-   duplicated — each is matched exactly once (reference
-   dask_utils.py:407: margins are drawn from the right side only).
+   ``4^(order+1) + pix`` (``plans.tables.uniq``), one long that
+   carries the order in its leading bits, so the join and the cogroup
+   each have one key column.  ``_ID`` is dropped once rows have their
+   cell.  Left rows are never duplicated — each is matched exactly
+   once (reference dask_utils.py:407: margins are drawn from the right
+   side only).
 3. **Right assignment + halo duplication**: the same pixel source and
    the same kind of table, which for the right side also contains
    each cell's neighbor pixels, so right rows
@@ -84,7 +86,7 @@ from typing import Iterable
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -104,24 +106,11 @@ from lsd2_spark.functions.spherical import gc_dist, gnomonic_xy_np
 from lsd2_spark.plans.partition_map import (
     align_join_cells, cells_within_reach, complete_left_cover, leaves_overlapping,
 )
-from lsd2_spark.plans.tables import plan_table
+from lsd2_spark.plans.tables import plan_table, probe_join, uniq, uniq_cell
 
 __all__ = ["crossmatch_catalogs", "crossmatch_dataframes", "max_cell_order_for"]
 
 _CELL = "_cell"
-
-
-def _uniq(order: int, pix):
-    """The NUNIQ number ``4^(order+1) + pix`` of nested pixels at
-    ``order``: unique across orders, with the order in the leading
-    bits."""
-    return (4 << 2 * order) + pix
-
-
-def _cell_of(uniq: int) -> tuple[int, int]:
-    """(order, pix) of a NUNIQ number: inverse of :func:`_uniq`."""
-    order = (uniq.bit_length() - 3) // 2
-    return order, uniq - (4 << 2 * order)
 
 
 def max_cell_order_for(dthresh: float) -> int:
@@ -133,16 +122,15 @@ def max_cell_order_for(dthresh: float) -> int:
     return o
 
 
-_CELL_DDL = (
-    f"_probe long, {_CELL} long, _c_ra double, _c_dec double, _c_rad double, _primary int"
-)
+_CELL_DDL = f"{_CELL} long, _c_ra double, _c_dec double, _c_rad double, _primary int"
 
 
 def _cell_tables(
     cells: list[tuple[int, int]], dthresh: float, with_halo: bool
-) -> dict[str, np.ndarray]:
-    """The (pixel → cell) assignment plan table, as columns (see
-    ``_CELL_DDL``; pixels and cells as :func:`_uniq` numbers), built
+) -> tuple[tuple[np.ndarray, np.ndarray], dict[str, np.ndarray]]:
+    """The (pixel → cell) assignment plan table: the probed pixels as
+    ``(order, pix)`` arrays and the payload columns (see ``_CELL_DDL``;
+    cells as :func:`~lsd2_spark.plans.tables.uniq` numbers), built
     with ONE vectorized neighbors/pix2ang call per order, so plan time
     stays vectorized as the cell count grows.
 
@@ -151,7 +139,7 @@ def _cell_tables(
     cell's center + conservative radius for the distance prefilter.
     """
     cols: dict[str, list[np.ndarray]] = {
-        k: [] for k in ("_probe", _CELL, "_c_ra", "_c_dec", "_c_rad", "_primary")
+        k: [] for k in ("_order", "_pix", _CELL, "_c_ra", "_c_dec", "_c_rad", "_primary")
     }
     arr = np.array(sorted(cells), dtype=np.int64).reshape(-1, 2)
     for o in np.unique(arr[:, 0]).tolist():
@@ -165,13 +153,15 @@ def _cell_tables(
             pix = np.concatenate([parr, nb])
             idx = np.concatenate([idx, halo_idx])
             primary = np.concatenate([primary, np.zeros(len(halo_idx), np.int32)])
-        cols["_probe"].append(_uniq(o, pix))
-        cols[_CELL].append(_uniq(o, parr[idx]))
+        cols["_order"].append(np.full(len(pix), o))
+        cols["_pix"].append(pix)
+        cols[_CELL].append(uniq(o, parr[idx]))
         cols["_c_ra"].append(cra[idx])
         cols["_c_dec"].append(cdec[idx])
         cols["_c_rad"].append(np.full(len(idx), hpx.max_pixrad(o) + dthresh))
         cols["_primary"].append(primary)
-    return {k: np.concatenate(v) for k, v in cols.items()}
+    out = {k: np.concatenate(v) for k, v in cols.items()}
+    return (out.pop("_order"), out.pop("_pix")), out
 
 
 def _assign(
@@ -180,55 +170,30 @@ def _assign(
 ) -> DataFrame:
     """Assign rows to plan ``cells`` (a ``_cell`` column) in ONE pass
     over the input, duplicating rows into neighbor cells' halos when
-    ``with_halo``.
+    ``with_halo``: the probe join
+    (:func:`~lsd2_spark.plans.tables.probe_join`) on each row's pixel
+    at the finest plan order, then the halo's distance prefilter.
 
-    Take each row's pixel once at the finest plan order, derive each
-    coarser order's pixel with ``shiftright`` (nested-scheme
-    hierarchy), and probe a single combined broadcast table keyed on
-    the pixel's :func:`_uniq` number, which tells the orders apart.
-    The per-order explode multiplies rows only
-    transiently inside the broadcast-hash-join stage (pipelined, no
-    shuffle); the previous form re-scanned and re-pixelized the whole
-    input once per distinct order — ~5 scans on adaptive catalogs.
-
-    The finest-order pixel comes from ``index_col`` when the caller
-    names one — a catalog's spatial index ``_ID``, from which it is a
-    JVM shift (:func:`~lsd2_spark.catalog.pixel_of_index`; a plan with
-    index columns caps its cells, hot-cell splits included, at the
-    index order) — and from one Arrow pixelization pass otherwise
-    (raw DataFrames).  The index column is dropped with the other plan
-    columns.
+    The pixel comes from ``index_col`` when the caller names one — a
+    catalog's spatial index ``_ID``, from which it is a JVM shift
+    (:func:`~lsd2_spark.catalog.pixel_of_index`; a plan with index
+    columns caps its cells, hot-cell splits included, at the index
+    order) — and from one Arrow pixelization pass otherwise (raw
+    DataFrames).  The index column is dropped with the plan columns.
     """
-    orders = sorted({o for o, _ in cells})
-    kmax = orders[-1]
-    tbl = F.broadcast(
-        plan_table(df.sparkSession, _cell_tables(cells, dthresh, with_halo), _CELL_DDL)
-    )
-    plan_cols = ["_probe", "_c_ra", "_c_dec", "_c_rad", "_primary"]
+    kmax = max(o for o, _ in cells)
+    plan_cols = ["_c_ra", "_c_dec", "_c_rad", "_primary"]
     if index_col is not None:
-        pixk = pixel_of_index(F.col(index_col), kmax)
+        pix = pixel_of_index(F.col(index_col), kmax)
         plan_cols.append(index_col)
     else:
         # deterministic=False: the pixel feeds the broadcast-join key,
         # and the inferred IsNotNull(pix) constraint would otherwise be
         # pushed below this projection, running the Arrow pixelization
         # twice per row on every assign side (observed in the q21 plan)
-        pixk = ang2pix_udf(kmax, F.col(ra_col), F.col(dec_col), deterministic=False)
-
-    def probe(pix: Column, o: int) -> Column:
-        return _uniq(o, F.shiftright(pix, 2 * (kmax - o)))
-
-    if len(orders) == 1:
-        # single-order plan: no probe explode — measured ~30% cheaper
-        # than the general path on the q21 bench
-        withpix = df.withColumn("_probe", probe(pixk, kmax))
-    else:
-        withpix = (
-            df.withColumn("_pixk", pixk)
-            .withColumn("_probe", F.explode(F.array(*[probe(F.col("_pixk"), o) for o in orders])))
-            .drop("_pixk")
-        )
-    j = withpix.join(tbl, "_probe").filter(
+        pix = ang2pix_udf(kmax, F.col(ra_col), F.col(dec_col), deterministic=False)
+    probes, payload = _cell_tables(cells, dthresh, with_halo)
+    j = probe_join(df, pix, kmax, probes, payload, _CELL_DDL).filter(
         (F.col("_primary") == 1)
         | (
             gc_dist(F.col(ra_col), F.col(dec_col), F.col("_c_ra"), F.col("_c_dec"))
@@ -264,7 +229,7 @@ def _knn_kernel_factory(
     def kernel(key, left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return arrow_schema.empty_table()
-        cell_order, cell_pix = _cell_of(key[0].as_py())
+        cell_order, cell_pix = uniq_cell(key[0].as_py())
         cra, cdec = hpx.pix2ang(cell_order, np.array([cell_pix]))
         lra, ldec = column(left, l_ra), column(left, l_dec)
         rra, rdec = column(right, r_ra), column(right, r_dec)

@@ -8,24 +8,32 @@ dask_utils.py:246-318, hipscat/margin_utils.py).
 Spark-first construction (no per-file task farm):
 
 1. **Driver plan**: for each partition P at order ``o`` pick a ring
-   order ``kf = max(o+1, KA)`` where KA is the coarsest order whose
-   pixels are at least ``margin`` wide.  The candidate set is the ring
-   of order-``kf`` pixels just outside P (border children's neighbors
-   minus P's own children).  For partitions coarser than KA the ring
-   covers the full margin width; for partitions near/below the margin
-   scale the ring is one child-pixel wide — the same resolution limit
-   the reference warns about (partitioner.py:259-261), surfaced here as
-   a warning too.
-2. **Broadcast join**: rows compute their pixel at each distinct ``kf``
-   and join the candidate table → (row, owner partition P) pairs.
-3. **Containment drop**: rows already inside P are excluded with pure
-   bit-shift arithmetic on the ring pixel (no second UDF pass).
+   order ``kf = min(max(o+1, KA), 19)`` where KA is the coarsest order
+   whose pixels are at least ``margin`` wide, and 19 the spatial-index
+   order (a coarser ring holds the finer ring's pixels, so the halo
+   stays a superset).  The candidate set is the ring of order-``kf``
+   pixels just outside P (border children's neighbors minus P's own
+   children).  For partitions coarser than KA the ring covers the full
+   margin width; for partitions near/below the margin scale the ring
+   is one child-pixel wide — the same resolution limit the reference
+   warns about (partitioner.py:259-261), surfaced here as a warning
+   too.
+2. **One probe join**: each row takes its pixel once, at the finest
+   ring order — a shift of the stored ``_ID`` for a catalog's rows,
+   one Arrow pass for raw input — and probes ONE broadcast table that
+   holds the ring entries of every ring order, keyed by NUNIQ number
+   (``plans.tables.probe_join``) → (row, owner partition P) pairs.
+   Rows inside P match no entry: ring pixels exclude P's children.
+3. **Boundary clip**: a pair survives only within ``margin + eps`` of
+   P's boundary samples near the ring pixel, which ride the same
+   broadcast table (a Column expression; no second join).
 4. One ``partitionBy`` write under ``{path}/neighbor/`` mirroring the
    catalog layout.
 
 The halo is a conservative **superset** of the exact 0.1°-boundary set
-(ring pixels are kept whole rather than polygon-clipped as in
-margin_utils.py:209-305); supersets preserve join correctness and the
+(distance to boundary samples, with the samples' slack, rather than
+the polygon clip of margin_utils.py:209-305); supersets preserve join
+correctness and the
 exact ``dthresh`` filter in the kNN kernel keeps results exact.
 """
 
@@ -39,9 +47,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsd2_spark import healpix as hpx
+from lsd2_spark.catalog import SPATIAL_INDEX_ORDER, pixel_of_index
 from lsd2_spark.functions.healpix_cols import ang2pix_udf
 from lsd2_spark.functions.spherical import gc_dist
-from lsd2_spark.plans.tables import plan_table
+from lsd2_spark.plans.tables import probe_join
 
 __all__ = ["margin_candidate_entries", "write_margin_dataset", "margin_ring_order"]
 
@@ -133,19 +142,17 @@ _BAND_SLACK = 1e-6
 _COS_SLACK = 1e-9
 
 
-_RING_DDL = (
-    "ring_pix long, Norder int, Npix long, "
-    "_b_ra array<double>, _b_dec array<double>, _b_eps double"
-)
+_RING_DDL = "Norder int, Npix long, _b_ra array<double>, _b_dec array<double>, _b_eps double"
 
 
 def margin_candidate_entries(
     hips: dict[int, list[int]], margin_deg: float
 ) -> dict[int, dict[str, object]]:
-    """Candidate ring table with local boundary geometry, as plan-table
-    columns per ring order (see ``_RING_DDL``):
-    ``{ring_order: {"ring_pix", "Norder", "Npix", "_b_ra", "_b_dec",
-    "_b_eps"}}``, where ``_b_ra``/``_b_dec`` are Arrow list arrays.
+    """Candidate ring table with local boundary geometry, as columns
+    per ring order: ``{ring_order: {"ring_pix", "Norder", "Npix",
+    "_b_ra", "_b_dec", "_b_eps"}}`` (the ring pixel, then the plan-table
+    payload of ``_RING_DDL``), where ``_b_ra``/``_b_dec`` are Arrow list
+    arrays.
 
     ``b_ra``/``b_dec`` are the owner-boundary samples within reach of
     the ring pixel (dense at ~margin/2 arc spacing, but only the local
@@ -161,7 +168,9 @@ def margin_candidate_entries(
     parts: dict[int, dict[str, list[np.ndarray]]] = {}
     under_covered = False
     for o, pixels in sorted(hips.items()):
-        kf = max(o + 1, ka)
+        # capped at the index order, so stored rows shift their ring
+        # pixel out of _ID; a coarser ring holds the finer one's pixels
+        kf = min(max(o + 1, ka), SPATIAL_INDEX_ORDER)
         if hpx.min_pixwidth(kf) < margin_deg:
             under_covered = True
         # batch all border children of every partition at this order
@@ -216,22 +225,24 @@ def margin_candidate_entries(
     return out
 
 
-def margin_rows(
-    df: DataFrame, cat, ra_col: str, dec_col: str, refine: bool = True
-) -> DataFrame | None:
+def margin_rows(df: DataFrame, cat, ra_col: str, dec_col: str) -> DataFrame | None:
     """(row ∪ owner-partition) pairs for every halo membership.
 
-    With ``refine=True`` (default) ring-pixel candidates are clipped by
-    boundary distance: a row survives only if it is within
-    ``margin + eps`` of the owner's locally-sampled boundary (see
-    ``margin_candidate_entries``) — a guaranteed superset of the exact
-    margin set, but without the ring-pixel interior bulk (measured ~78%
-    halo-row reduction on a coarse-partition fixture, where ring pixels
-    are much wider than the margin).  The distance test is a pure
-    Column expression (``zip_with`` + ``array_min``) over the per-entry
-    local samples riding the same broadcast table — no extra join, no
-    shuffle."""
-    clash = {"Norder", "Npix", "ring_pix"} & set(df.columns)
+    Rows are assigned to the ring entries of every ring order by ONE
+    probe join (:func:`~lsd2_spark.plans.tables.probe_join`) on their
+    pixel at the finest ring order: a shift of ``_ID`` when ``df``
+    carries the catalog's spatial index (the index column is dropped),
+    one Arrow pixelization pass otherwise.  The ring-pixel candidates
+    are then clipped by boundary distance: a row survives only if it is
+    within ``margin + eps`` of the owner's locally-sampled boundary
+    (see ``margin_candidate_entries``) — a guaranteed superset of the
+    exact margin set, but without the ring-pixel interior bulk
+    (measured ~78% halo-row reduction on a coarse-partition fixture,
+    where ring pixels are much wider than the margin).  The distance
+    test is a pure Column expression (``zip_with`` + ``array_min``)
+    over the per-entry local samples riding the same broadcast table —
+    no extra join, no shuffle."""
+    clash = {"Norder", "Npix"} & set(df.columns)
     if clash:
         # the owner-partition columns this emits would be shadowed by
         # (or ambiguous with) same-named input columns — e.g. a catalog
@@ -241,42 +252,37 @@ def margin_rows(
             f"margin_rows input must not carry {sorted(clash)} — drop the "
             "catalog partition columns and pass the bare source frame"
         )
-    spark = df.sparkSession
     entries = margin_candidate_entries(cat.meta.hips, cat.meta.margin_threshold)
     if not entries:
         return None
+    kmax = max(entries)
+    if "_ID" in df.columns:
+        pix = pixel_of_index(F.col("_ID"), kmax)
+    else:
+        # deterministic=False: the pixel feeds the join key (see
+        # crossmatch._assign)
+        pix = ang2pix_udf(kmax, F.col(ra_col), F.col(dec_col), deterministic=False)
+
+    def column(k: str):  # one column over every ring order
+        parts = [t[k] for t in entries.values()]
+        return pa.concat_arrays(parts) if k in ("_b_ra", "_b_dec") else np.concatenate(parts)
+
+    order = np.concatenate([np.full(len(t["ring_pix"]), kf) for kf, t in entries.items()])
+    payload = {k: column(k) for k in ("Norder", "Npix", "_b_ra", "_b_dec", "_b_eps")}
+    joined = probe_join(df, pix, kmax, (order, column("ring_pix")), payload, _RING_DDL)
+    # containment drop is implicit: ring pixels exclude P's children,
+    # so any row whose ring pixel matched is outside P by construction.
+    dists = F.zip_with(
+        F.col("_b_ra"),
+        F.col("_b_dec"),
+        lambda a, d: gc_dist(F.col(ra_col), F.col(dec_col), a, d),
+    )
     margin = float(cat.meta.margin_threshold)
-    parts = []
-    for kf, cols in entries.items():
-        tbl = F.broadcast(plan_table(spark, cols, _RING_DDL))
-        if not refine:
-            tbl = tbl.drop("_b_ra", "_b_dec", "_b_eps").dropDuplicates(
-                ["ring_pix", "Norder", "Npix"]
-            )
-        with_pix = df.withColumn("ring_pix", ang2pix_udf(kf, F.col(ra_col), F.col(dec_col)))
-        joined = with_pix.join(tbl, "ring_pix")
-        # containment drop is implicit: ring pixels exclude P's children,
-        # so any row whose ring_pix matched is outside P by construction.
-        if refine:
-            dists = F.zip_with(
-                F.col("_b_ra"),
-                F.col("_b_dec"),
-                lambda a, d: gc_dist(F.col(ra_col), F.col(dec_col), a, d),
-            )
-            joined = joined.filter(
-                # empty local segment (shouldn't happen — rings touch the
-                # boundary) conservatively keeps the row
-                F.coalesce(
-                    F.array_min(dists) <= F.lit(margin) + F.col("_b_eps"), F.lit(True)
-                )
-            ).drop("_b_ra", "_b_dec", "_b_eps")
-        parts.append(joined.drop("ring_pix"))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return joined.filter(
+        # empty local segment (shouldn't happen — rings touch the
+        # boundary) conservatively keeps the row
+        F.coalesce(F.array_min(dists) <= F.lit(margin) + F.col("_b_eps"), F.lit(True))
+    ).drop("_b_ra", "_b_dec", "_b_eps", "_ID")
 
 
 def write_margin_dataset(df: DataFrame, cat, ra_col: str, dec_col: str) -> None:

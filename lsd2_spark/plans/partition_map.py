@@ -383,46 +383,3 @@ def assignment_cells(
         np.concatenate([np.broadcast_to(t, len(p)) for _, p, t in cells]).astype(np.int32),
     )
 
-
-def cell_assignment_tables(cells: list[tuple[int, int]]) -> dict[int, np.ndarray]:
-    """Group join cells by order → sorted pixel arrays, for per-order
-    row assignment (row joins on ang2pix at that order)."""
-    by_order: dict[int, list[int]] = {}
-    for o, p in cells:
-        by_order.setdefault(o, []).append(p)
-    return {o: np.array(sorted(ps), dtype=np.int64) for o, ps in by_order.items()}
-
-
-def cell_adjacency(cells: list[tuple[int, int]]) -> list[tuple[int, int, int, int]]:
-    """(cell_order, cell_pix, adj_order, adj_pix) for every pair of
-    adjacent cells — used to duplicate right-side rows into neighboring
-    cells for boundary-correct matching (replaces the reference's
-    materialized ``neighbor/`` union at query time,
-    dask_utils.py:404-428).
-
-    Cells may have heterogeneous orders; adjacency is resolved through
-    ancestors/descendants of same-order pixel neighbors.
-    """
-    cell_set = set(cells)
-    by_ancestor: dict[tuple[int, int], list[tuple[int, int]]] = {}
-    for o, p in cells:
-        for oo in range(0, o + 1):
-            by_ancestor.setdefault((oo, p >> (2 * (o - oo))), []).append((o, p))
-
-    out: set[tuple[int, int, int, int]] = set()
-    for o, p in cells:
-        for n in hpx.neighbors(o, np.array([p]))[0].tolist():
-            # coarser-or-equal cell covering the neighbor pixel
-            found = False
-            for oo in range(o, -1, -1):
-                anc = n >> (2 * (o - oo))
-                if (oo, anc) in cell_set:
-                    if (oo, anc) != (o, p):
-                        out.add((o, p, oo, anc))
-                    found = True
-                    break
-            if not found:
-                # finer cells inside the neighbor pixel
-                for oo, pp in by_ancestor.get((o, n), []):
-                    out.add((o, p, oo, pp))
-    return sorted(out)

@@ -575,16 +575,37 @@ def test_margin_dataset_exists_and_is_superset_of_boundary(cats, request, which)
 
 
 def test_margin_refinement_shrinks_halo_but_keeps_superset(cats):
-    """Boundary-distance refinement must materially shrink the halo
-    (ring pixels are wider than the margin) while the superset test
-    above still passes with refinement on (the default)."""
-    from lsd2_spark.operators.margins import margin_rows
+    """Boundary-distance refinement must materially shrink the halo:
+    the export holds fewer rows than the ring-pixel candidates (rows in
+    a ring pixel of a foreign leaf, counted in NumPy from the ring
+    table), while the superset test above passes on the same export."""
+    from lsd2_spark.operators.margins import margin_candidate_entries
 
     base, _, c1, _ = cats
-    src = c1.df().drop("Norder", "Dir", "Npix", "_ID")
-    full = margin_rows(src, c1, c1.meta.ra_kw, c1.meta.dec_kw, refine=False).count()
-    refined = margin_rows(src, c1, c1.meta.ra_kw, c1.meta.dec_kw, refine=True).count()
-    assert refined < full, (refined, full)
+    ra, dec = base["ra"].to_numpy(), base["dec"].to_numpy()
+    candidates = 0
+    for kf, tbl in margin_candidate_entries(c1.meta.hips, c1.meta.margin_threshold).items():
+        pix, n = np.unique(hpx.ang2pix(kf, ra, dec), return_counts=True)
+        hit = np.searchsorted(pix, tbl["ring_pix"]).clip(max=len(pix) - 1)
+        candidates += int(np.where(pix[hit] == tbl["ring_pix"], n[hit], 0).sum())
+    exported = c1.margin_df().count()
+    assert 0 < exported < candidates, (exported, candidates)
+
+
+def test_sky_map_counts_equal_a_numpy_histogram(cats):
+    """sky_map counts each stored row at the pixel its ``_ID`` holds:
+    the counts of a NumPy histogram of the input positions, with the
+    pixel centres; orders past the spatial index are refused."""
+    base, _, c1, _ = cats
+    got = c1.sky_map(6).toPandas().sort_values("pix")
+    pix, n = np.unique(hpx.ang2pix(6, base["ra"].to_numpy(), base["dec"].to_numpy()),
+                       return_counts=True)
+    assert got["pix"].tolist() == pix.tolist()
+    assert got["cnt"].tolist() == n.tolist()
+    ra, dec = hpx.pix2ang(6, pix)
+    assert np.allclose(got["ra"], ra) and np.allclose(got["dec"], dec)
+    with pytest.raises(ValueError, match="outside"):
+        c1.sky_map(20)
 
 
 def test_sql_view_surface(cats):

@@ -216,7 +216,7 @@ def test_append_is_one_probe_join_and_one_recount(spark, rebalanced):
     for nodes in (place, write):
         # every cached relation read holds the placed batch: one probe
         # join under each cache scan
-        assert _count(nodes, "InMemoryTableScan") == _count(nodes, "BroadcastHashJoin", "_o#")
+        assert _count(nodes, "InMemoryTableScan") == _count(nodes, "BroadcastHashJoin", "_probe#")
     for nodes, _ in runs:
         assert _count(nodes, "SortMergeJoin") == 0
         assert _count(nodes, "BroadcastHashJoin", "LeftSemi") == 0
@@ -225,7 +225,7 @@ def test_append_is_one_probe_join_and_one_recount(spark, rebalanced):
     # re-sent ids (one per union branch of the touched cells' read)
     assert _count(write, "BroadcastHashJoin", "LeftAnti") >= 1
     assert _count(write, "BroadcastHashJoin") == (
-        _count(write, "BroadcastHashJoin", "_o#") + _count(write, "BroadcastHashJoin", "LeftAnti")
+        _count(write, "BroadcastHashJoin", "_probe#") + _count(write, "BroadcastHashJoin", "LeftAnti")
     )
     scans = [d for _, d in recount if d.startswith("FileScan parquet")]
     assert scans and all("ReadSchema: struct<>" in d for d in scans), scans

@@ -119,38 +119,6 @@ def test_ra_wraparound_and_poles():
         assert (p_n >= 0).all() and (p_s < hpx.npix(order)).all()
 
 
-def test_ang2pix_native_matches_numpy_including_negative_ra(spark):
-    """The pure-Column ang2pix must equal the NumPy implementation on
-    random points AND on negative RA (Spark's % keeps the dividend's
-    sign; the Column path must pmod-normalize like np.mod does)."""
-    from pyspark.sql import functions as F
-
-    from lsd2_spark.functions.healpix_cols import ang2pix_native
-
-    n = 5_000
-    ra = np.concatenate(
-        [RNG.uniform(0, 360, n), RNG.uniform(-360, 0, n), np.array([-0.0001, -359.9999, -90.0])]
-    )
-    dec = np.concatenate(
-        [
-            np.degrees(np.arcsin(RNG.uniform(-1, 1, n))),
-            np.degrees(np.arcsin(RNG.uniform(-1, 1, n))),
-            np.array([45.0, -45.0, 0.0]),
-        ]
-    )
-    order = 10
-    expected = hpx.ang2pix(order, np.mod(ra, 360.0), dec)
-    pdf = pd.DataFrame({"i": np.arange(len(ra)), "ra": ra, "dec": dec})
-    df = spark.createDataFrame(pdf)
-    got = (
-        df.select("i", ang2pix_native(order, F.col("ra"), F.col("dec")).alias("pix"))
-        .toPandas()
-        .sort_values("i")["pix"]
-        .to_numpy()
-    )
-    assert (got == expected).all()
-
-
 def test_ang2pix_udf_fast_path_and_null_propagation(spark):
     """The Arrow kernel returns ``hpx.ang2pix``'s pixels as they come
     when a batch has no NULL coordinate, and NULL for a NULL coordinate

@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -17,6 +18,7 @@ import pytest
 
 from lsd2_spark.catalog import Catalog, CatalogMetadata, partition_catalog
 from lsd2_spark.sources.fs import LocalFS
+from tests.test_catalog_append import _executions_of
 
 NAME = "mx"
 
@@ -253,3 +255,137 @@ def test_margin_plan_keeps_the_samples_of_the_dense_distance_test(margin):
                 want = sorted(zip(bra[0][k], bdec[0][k]))
                 assert sorted(zip(samples_ra[row], samples_dec[row])) == want
             assert np.allclose(np.asarray(tbl["_b_eps"])[rows[sel]], gap / 2.0)
+
+
+# -- the export's one probe join ---------------------------------------------
+
+
+def _halo(cat):
+    return {
+        (int(r["Norder"]), int(r["Npix"]), int(r["source_id"]))
+        for r in cat.margin_df().select("Norder", "Npix", "source_id").collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def multi_ring(spark, tmp_path_factory):
+    """A catalog whose leaves span four ring orders at a 0.5 deg margin
+    (leaves at orders 5 to 7 ring at orders 6 to 8, coarser leaves at
+    5), exported from its stored rows: the rows, the catalog and the
+    plan node names of the export."""
+    pdf = _pdf(6000, start=7)
+    cat = partition_catalog(
+        spark.createDataFrame(pdf), str(tmp_path_factory.mktemp("multi_ring") / NAME), NAME,
+        ra_col="ra", dec_col="dec", id_col="source_id",
+        threshold=200, order_k=7, margin_threshold=0.5, write_margins=False,
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # leaves finer than the margin scale
+        cat, runs = _executions_of(spark, cat.export_margins)
+    return pdf, cat, [name for nodes, _ in runs for name, _ in nodes]
+
+
+def test_export_from_stored_rows_runs_no_python(multi_ring):
+    """The export shifts each row's ring pixel out of ``_ID``: its plan
+    has no Arrow pixelization, and one probe join over every ring
+    order."""
+    _, _, nodes = multi_ring
+    assert "ArrowEvalPython" not in nodes, nodes
+    assert nodes.count("BroadcastHashJoin") == 1, nodes
+    assert nodes.count("Generate") == 1, nodes
+
+
+def test_export_over_ring_orders_equals_a_per_order_reference(multi_ring):
+    """The one join over all ring orders keeps exactly the pairs a
+    per-order NumPy reference keeps: rows whose pixel at the ring order
+    is a ring entry's pixel, within ``margin + eps`` of the entry's
+    boundary samples."""
+    import lsd2_spark.healpix as hpx
+    from lsd2_spark.operators.margins import margin_candidate_entries
+
+    pdf, cat, _ = multi_ring
+    margin = cat.meta.margin_threshold
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        entries = margin_candidate_entries(cat.meta.hips, margin)
+    assert len(entries) >= 2, sorted(entries)
+    ra, dec, ids = (pdf[c].to_numpy() for c in ("ra", "dec", "source_id"))
+    want, near = set(), set()
+    for kf, tbl in entries.items():
+        pix = hpx.ang2pix(kf, ra, dec)
+        by_pix = np.argsort(pix, kind="stable")
+        lo = np.searchsorted(pix[by_pix], tbl["ring_pix"], "left")
+        hi = np.searchsorted(pix[by_pix], tbl["ring_pix"], "right")
+        b_ra, b_dec = tbl["_b_ra"].to_pylist(), tbl["_b_dec"].to_pylist()
+        for e in np.nonzero(hi > lo)[0]:
+            rows = by_pix[lo[e]:hi[e]]
+            key = [(int(tbl["Norder"][e]), int(tbl["Npix"][e]), int(i)) for i in ids[rows]]
+            d = hpx.gc_dist_deg(
+                ra[rows, None], dec[rows, None], np.array(b_ra[e])[None], np.array(b_dec[e])[None]
+            ).min(axis=1)
+            thr = margin + tbl["_b_eps"][e]
+            want |= {k for k, x in zip(key, d) if x <= thr}
+            near |= {k for k, x in zip(key, d) if abs(x - thr) < 1e-9}
+    got = _halo(cat)
+    assert want and (got ^ want) <= near, (len(got), len(want), len(got ^ want))
+
+
+def test_export_below_the_index_pixel_scale(spark, tmp_path):
+    """A margin narrower than an order-19 pixel asks for ring orders
+    past the spatial index; the rings stop at order 19 (a coarser ring
+    holds the finer one's pixels), so the export still shifts ``_ID``
+    and keeps every row within the margin of a foreign leaf: here rows
+    planted on the leaves' boundaries."""
+    import lsd2_spark.healpix as hpx
+    from lsd2_spark.operators.margins import margin_ring_order
+
+    margin = 1e-6
+    assert margin_ring_order(margin) > 19
+    rng = np.random.default_rng(3)
+    r = 0.3 * np.sqrt(rng.uniform(0, 1, 800))
+    t = rng.uniform(0, 2 * np.pi, 800)
+    patch = pd.DataFrame({
+        "source_id": np.arange(800, dtype=np.int64),
+        "ra": 45 + r * np.cos(t) / np.cos(np.radians(10)),
+        "dec": 10 + r * np.sin(t),
+        "mag": rng.uniform(10, 22, 800),
+    })
+    cat = partition_catalog(
+        spark.createDataFrame(patch), str(tmp_path / NAME), NAME,
+        ra_col="ra", dec_col="dec", id_col="source_id",
+        threshold=100, order_k=9, margin_threshold=margin, write_margins=False,
+    )
+    hips = cat.meta.hips
+    leaves = [(o, p) for o, ps in hips.items() for p in ps]
+    samples = [hpx.boundary_samples(o, [p], n_per_edge=16) for o, p in leaves]
+    # boundary samples of one leaf that lie in another: rows the halo of
+    # the first must hold
+    owner = np.repeat(np.arange(len(leaves)), [b.size for b, _ in samples])
+    s_ra = np.concatenate([b.ravel() for b, _ in samples])
+    s_dec = np.concatenate([d.ravel() for _, d in samples])
+    home = np.full(len(s_ra), -1)
+    for i, (o, p) in enumerate(leaves):
+        home[hpx.ang2pix(o, s_ra, s_dec) == p] = i
+    planted = (home >= 0) & (home != owner)
+    assert planted.any()
+    extra = pd.DataFrame({
+        "source_id": np.arange(10_000, 10_000 + planted.sum(), dtype=np.int64),
+        "ra": s_ra[planted],
+        "dec": s_dec[planted],
+        "mag": 15.0,
+    })
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # leaves over the threshold
+        cat = cat.append(spark.createDataFrame(extra))
+    assert cat.meta.hips == hips
+    got = _halo(cat.export_margins())
+    rows = pd.concat([patch, extra], ignore_index=True)
+    ra, dec = rows["ra"].to_numpy(), rows["dec"].to_numpy()
+    need = 0
+    for (o, p), (bra, bdec) in zip(leaves, samples):
+        inside = hpx.ang2pix(o, ra, dec) == p
+        d = hpx.gc_dist_deg(ra[:, None], dec[:, None], bra.ravel()[None], bdec.ravel()[None])
+        for sid in rows.loc[(d.min(axis=1) < margin * 0.9) & ~inside, "source_id"]:
+            need += 1
+            assert (o, p, int(sid)) in got, (o, p, sid)
+    assert need >= planted.sum()

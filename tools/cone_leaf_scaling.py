@@ -31,7 +31,10 @@ workload appends).
 The margin export's driver-side planning
 (``margins.margin_candidate_entries`` over the catalog's leaves) is
 timed too: median CPU of this Python process over ``MARGIN_REPS``
-runs, with the ring entries and boundary samples it broadcasts.
+runs, with the ring entries (per ring order) and boundary samples it
+broadcasts.  So is a whole ``Catalog.export_margins()``, on a fresh
+copy of the catalog ``MARGIN_REPS`` times after one warm-up (median
+CPU, wall and jobs, and the halo rows it writes).
 
 Last, freshly loaded handles of each catalog and of a partner catalog
 (``PARTNER_ROWS`` rows near survey rows, ingested at the same
@@ -277,8 +280,34 @@ def measure_margin_plan(hips: dict) -> dict:
     return {
         "cpu_ms_p50": round(1e3 * statistics.median(cpu), 1),
         "entries": sum(len(t["ring_pix"]) for t in entries.values()),
+        "ring_orders": {kf: len(t["ring_pix"]) for kf, t in sorted(entries.items())},
         "samples": sum(len(t["_b_ra"].values) for t in entries.values()),
     }
+
+
+def measure_margin_export(spark, meter, name, path, warmup: int = 1) -> dict:
+    """A whole ``export_margins()`` on ``warmup + MARGIN_REPS`` fresh
+    copies of the catalog at ``path``, which has no export."""
+    import warnings
+
+    from lsd2_spark.catalog import Catalog
+
+    cpu, wall, jobs = [], [], []
+    copy = f"{path}_margins"
+    for rep in range(warmup + MARGIN_REPS):
+        shutil.rmtree(copy, ignore_errors=True)
+        shutil.copytree(path, copy)
+        cat = Catalog.load(spark, copy, "sky")
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")  # leaves near the margin scale
+            cat, c, w, j = timed(spark, meter, f"{name}-{rep}", cat.export_margins)
+        if rep >= warmup:
+            cpu.append(c)
+            wall.append(w)
+            jobs.append(j)
+    rows = cat.margin_df().count()
+    shutil.rmtree(copy, ignore_errors=True)
+    return {**summary(cpu, wall, jobs), "halo_rows": rows}
 
 
 def partner_of(rng: np.random.Generator, pdf):
@@ -433,6 +462,7 @@ def main() -> None:
             "narrow_append_leaves_touched": leaves_touched(cat.meta.hips, narrow),
             "narrow_append": measure_append(spark, meter, f"narrow-{threshold}", path, narrow),
             "margin_plan": measure_margin_plan(cat.meta.hips),
+            "margin_export": measure_margin_export(spark, meter, f"margins-{threshold}", path),
         }
         partner_path = os.path.join(args.work, f"p{threshold}")
         partition_catalog(
